@@ -140,35 +140,13 @@ object Curation {
     * sequences of exactly `seqLen` ids — the final sequence may be
     * short (callers pad or drop it; `n_tokens` says which). Output one
     * row per sequence: (seq_id, ids, n_tokens, n_docs — how many docs
-    * contributed at least one token).
+    * contributed at least one token). `idCol` must be row-unique.
     *
-    * Scale shape: the only global coordination is the per-DOC offset —
-    * [[graft.core.Ops.globalExclusivePrefixSum]] over doc COUNTS (range
-    * repartition + triangular offsets, no single-partition exchange);
-    * tokens then explode with position and hash-shuffle once on seq_id.
-    * Corpus-linear — the honest cost of materializing training shards —
-    * with nothing driver-side and no skew (every seq_id key holds
-    * exactly `seqLen` rows).
+    * [[packTokenIdsWithSpans]] without its `spans` column — one kernel.
     */
   def packTokenIds(df: DataFrame, idCol: String, idsCol: String,
-                   seqLen: Int, eosId: Int): DataFrame = {
-    require(seqLen >= 1, s"packTokenIds: seqLen ($seqLen) >= 1")
-    val withEos = df.select(col(idCol).as("__doc"),
-        concat(col(idsCol), array(lit(eosId))).as("__ids"))
-      .withColumn("__n", size(col("__ids")).cast("long"))
-    val offs = graft.core.Ops.globalExclusivePrefixSum(withEos,
-      Seq(col("__doc")), "__n", "__goff")
-    offs.select(col("__doc"), col("__goff"),
-        posexplode(col("__ids")).as(Seq("__p", "__tok")))
-      .withColumn("__gpos", col("__goff") + col("__p"))
-      .withColumn("seq_id", floor(col("__gpos") / seqLen).cast("long"))
-      .groupBy("seq_id")
-      .agg(transform(
-          array_sort(collect_list(struct(col("__gpos"), col("__tok")))),
-          s => s.getField("__tok")).as("ids"),
-        count(lit(1)).as("n_tokens"),
-        countDistinct(col("__doc")).as("n_docs"))
-  }
+                   seqLen: Int, eosId: Int): DataFrame =
+    packTokenIdsWithSpans(df, idCol, idsCol, seqLen, eosId).drop("spans")
 
   /** [[packTokenIds]] plus PER-SEQUENCE DOC-SPAN ATTRIBUTION: a
     * `spans` column — array of (doc_id, start, len) structs ordered by
@@ -177,44 +155,53 @@ object Curation {
     * training shard carries for attention masking across document
     * boundaries and for provenance (which docs fed which sequence — the
     * right-to-be-forgotten query [[graft.pipeline.Shards.retract]]
-    * serves from). Token stream and the shared columns are identical to
-    * [[packTokenIds]] (docs are contiguous in a sequence by the global
-    * layout, so `ids` rebuilds as the concatenation of per-doc
-    * segments); the aggregation is two-level (per (seq, doc), then per
-    * seq) — the same shuffle count with SMALLER collect groups.
+    * serves from). Docs are contiguous in a sequence by the global
+    * layout, so `ids` is the concatenation of the sequence's per-doc
+    * segments in `start` order.
+    *
+    * Scale shape: the only global coordination is the per-DOC offset —
+    * [[graft.core.Ops.globalExclusivePrefixSum]] over doc COUNTS (range
+    * repartition + triangular offsets, no single-partition exchange).
+    * The heavy rows are then DOC SEGMENTS, not tokens: each doc row
+    * explodes once per sequence it touches, `slice` cuts its piece, and
+    * one hash shuffle on seq_id rebuilds every sequence from about
+    * (docs + sequences) rows. Corpus-linear — the honest cost of
+    * materializing training shards — with nothing driver-side and no
+    * skew (a seq_id key holds at most `seqLen` tokens).
     */
   def packTokenIdsWithSpans(df: DataFrame, idCol: String, idsCol: String,
                             seqLen: Int, eosId: Int): DataFrame = {
-    require(seqLen >= 1, s"packTokenIdsWithSpans: seqLen ($seqLen) >= 1")
+    require(seqLen >= 1, s"packTokenIds: seqLen ($seqLen) >= 1")
     val withEos = df.select(col(idCol).as("__doc"),
         concat(col(idsCol), array(lit(eosId))).as("__ids"))
       .withColumn("__n", size(col("__ids")).cast("long"))
     val offs = graft.core.Ops.globalExclusivePrefixSum(withEos,
       Seq(col("__doc")), "__n", "__goff")
-    val segs = offs.select(col("__doc"), col("__goff"),
-        posexplode(col("__ids")).as(Seq("__p", "__tok")))
-      .withColumn("__gpos", col("__goff") + col("__p"))
-      .withColumn("seq_id", floor(col("__gpos") / seqLen).cast("long"))
-      .groupBy("seq_id", "__doc")
-      .agg(transform(
-          array_sort(collect_list(struct(col("__gpos"), col("__tok")))),
-          s => s.getField("__tok")).as("__seg"),
-        min(col("__gpos")).as("__g0"),
-        count(lit(1)).as("__len"))
+    val goff = col("__goff")
+    val gend = goff + col("__n") // exclusive
+    // one segment per sequence the doc touches: global start g0, len
+    val segs = offs.select(col("__doc"), explode(transform(
+        sequence(floor(goff / seqLen), floor((gend - 1) / seqLen)),
+        s => {
+          val g0 = greatest(s * seqLen, goff)
+          val len = least((s + 1) * seqLen, gend) - g0
+          struct(s.as("seq_id"), g0.as("g0"), len.as("len"),
+            slice(col("__ids"), (g0 - goff + 1).cast("int"),
+              len.cast("int")).as("seg"))
+        })).as("__s"))
+      .select(col("__doc"), col("__s.*"))
     segs.groupBy("seq_id")
-      .agg(
-        flatten(transform(
-          array_sort(collect_list(struct(col("__g0"), col("__seg")))),
-          s => s.getField("__seg"))).as("ids"),
-        transform(
-          array_sort(collect_list(struct(col("__g0"), col("__doc"),
-            col("__len")))),
-          s => struct(s.getField("__doc").as("doc_id"),
-            (s.getField("__g0") - col("seq_id") * seqLen).cast("long")
-              .as("start"),
-            s.getField("__len").as("len"))).as("spans"),
-        coalesce(sum(col("__len")), lit(0L)).as("n_tokens"),
-        count(lit(1)).as("n_docs"))
+      .agg(array_sort(collect_list(struct(col("g0"), col("__doc"),
+        col("len"), col("seg")))).as("__segs"))
+      .select(col("seq_id"),
+        flatten(transform(col("__segs"), s => s.getField("seg"))).as("ids"),
+        transform(col("__segs"), s => struct(
+          s.getField("__doc").as("doc_id"),
+          (s.getField("g0") - col("seq_id") * seqLen).as("start"),
+          s.getField("len").as("len"))).as("spans"),
+        aggregate(col("__segs"), lit(0L),
+          (acc, s) => acc + s.getField("len")).as("n_tokens"),
+        size(col("__segs")).cast("long").as("n_docs"))
   }
 
   /** [[packTokenIds]] with the full special-token discipline a real

@@ -462,18 +462,19 @@ object Dedup {
         .join(labels.select(col("id").as("dst"), col("label")), Seq("dst"))
         .groupBy(col("src").as("id"))
         .agg(min(col("label")).as("nlabel"))
+      // the round's frame carries the previous label, so the change
+      // count scans the checkpoint instead of joining the old labels
       val updated = truncated(labels
         .join(nbrMin, Seq("id"), "left_outer")
         .select(col("id"),
           least(col("label"), coalesce(col("nlabel"), col("label")))
-            .as("label")))
-      val changed = updated
-        .join(labels.select(col("id"), col("label").as("prev")), Seq("id"))
-        .filter(col("label") < col("prev")).count()
+            .as("label"),
+          col("label").as("prev")))
+      val changed = updated.filter(col("label") < col("prev")).count()
       // (no unpersist: localCheckpoint blocks aren't CacheManager entries;
       // the ContextCleaner reclaims each round's as its RDD drops out of
       // reference — the standard iterative pattern)
-      labels = updated
+      labels = updated.drop("prev")
       converged = changed == 0
       iters += 1
     }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.operators.{Curation, Dedup, TextStats}
@@ -268,24 +268,15 @@ object Curate {
     else resolved.map(spark.read.parquet(_)).reduce(_ unionByName _)
   }
 
-  def run(docs: DataFrame, idCol: String, textCol: String,
-          benchmark: DataFrame, benchTextCol: String,
-          cfg: CurateConfig = CurateConfig(),
-          // target-domain exemplar docs (same textCol) for the optional
-          // DSIR selection stage; None = stage off
-          dsirTarget: Option[DataFrame] = None,
-          // trained quality-classifier model (Classifier.train on labeled
-          // exemplars — the GPT-3/LLaMA CommonCrawl-filter shape) for the
-          // optional classifier gate; None = stage off
-          classifierModel: Option[graft.operators.Classifier.Model] = None,
-          // external ARPA/KenLM reference model (TextStats.parseArpa on
-          // the model file) for the optional maxArpaE4 gate; None =
-          // stage off
-          arpaModel: Option[graft.operators.TextStats.ArpaModel] = None)
-      : CurateResult = {
+  /** Per-stage funnel bookkeeping shared by [[funnel]] and [[run]]'s
+    * tail: the row count and count-to-count wall time of each stage, and
+    * the stage-checkpoint store (cfg.stageCheckpointDir).
+    */
+  private[pipeline] final class StageLog(sess: SparkSession,
+                                         cfg: CurateConfig) {
     val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     val times = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    var tPrev = System.nanoTime()
+    private var tPrev = System.nanoTime()
     def stage(name: String, c: => Long): Unit = {
       val v = c
       val now = System.nanoTime()
@@ -299,7 +290,6 @@ object Curate {
     // closures are BY-NAME so a resolved stage never constructs its
     // operators (several construct EAGERLY: connected components,
     // percentile cuts, suffix descents).
-    val sess = docs.sparkSession
     object ck {
       private val whOpt = cfg.stageCheckpointDir
       def on: Boolean = whOpt.nonEmpty
@@ -343,6 +333,90 @@ object Curate {
           (!cfg.emitLedger ||
             pieceName.forall(p => resolved(s"ledger_$p")))
     }
+  }
+
+  /** What [[funnel]] hands back: `survivors` — the PERSISTED admitted
+    * frame (idCol, textCol) carrying each doc's FINAL text (post
+    * C4/line/window/exact-substr rewrites; the caller unpersists it);
+    * `log` — the stage counts and seconds through `decontaminated`;
+    * `ledgerPieces` — under `cfg.emitLedger`, the materialized rejection
+    * pieces (empty otherwise).
+    */
+  private[pipeline] case class Funnel(survivors: DataFrame, log: StageLog,
+                                      ledgerPieces: Seq[DataFrame])
+
+  /** The full curation run: the gate [[funnel]], then the count-based
+    * chunk → pack/shard report tail and the ledger assembly.
+    */
+  def run(docs: DataFrame, idCol: String, textCol: String,
+          benchmark: DataFrame, benchTextCol: String,
+          cfg: CurateConfig = CurateConfig(),
+          // target-domain exemplar docs (same textCol) for the optional
+          // DSIR selection stage; None = stage off
+          dsirTarget: Option[DataFrame] = None,
+          // trained quality-classifier model (Classifier.train on labeled
+          // exemplars — the GPT-3/LLaMA CommonCrawl-filter shape) for the
+          // optional classifier gate; None = stage off
+          classifierModel: Option[graft.operators.Classifier.Model] = None,
+          // external ARPA/KenLM reference model (TextStats.parseArpa on
+          // the model file) for the optional maxArpaE4 gate; None =
+          // stage off
+          arpaModel: Option[graft.operators.TextStats.ArpaModel] = None)
+      : CurateResult = {
+    val f = funnel(docs, idCol, textCol, benchmark, benchTextCol, cfg,
+      dsirTarget, classifierModel, arpaModel)
+    import f.log.{ck, stage}
+    val clean = f.survivors
+
+    // ---- chunk → pack/shard --------------------------------------------
+    // pack order key: (doc, chunk) folded into one monotonic long — docs
+    // stay contiguous inside a shard, chunks stay in document order
+    val packed = ck.barrierOpt("chunks") {
+      val chunks = Curation.chunkByTokens(clean, idCol, textCol,
+          cfg.chunkTokens, cfg.chunkOverlap)
+        .withColumn("__ck", col(idCol) * lit(1000000L) + col("chunk_id"))
+      (if (cfg.packBestFit)
+          Curation.packSequencesBestFit(chunks, "__ck", col("n_tokens"),
+            Curation.shardAssign(col(idCol)), cfg.packBudget)
+        else
+          Curation.packSequences(chunks, "__ck", col("n_tokens"),
+            Curation.shardAssign(col(idCol)), cfg.packBudget))
+        .drop("__ck", "toks")
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    stage("chunks", packed.count())
+    val ledger =
+      if (!cfg.emitLedger) None
+      else {
+        val admitted = clean
+          .select(col(idCol).cast("long").as("id"), lit(true).as("admitted"),
+            lit("admitted").as("reason"), col(idCol).cast("long").as("dup_of"))
+        Some((f.ledgerPieces :+ admitted).reduce(_ unionByName _)
+          .localCheckpoint(true))
+      }
+    val admittedDocs =
+      if (!cfg.keepAdmitted) None
+      else Some(clean.select(col(idCol), col(textCol))
+        .localCheckpoint(eager = true))
+    clean.unpersist()
+
+    CurateResult(packed, f.log.counts.toSeq, f.log.times.toSeq, ledger,
+      admittedDocs)
+  }
+
+  /** The gate funnel of [[run]], ingest through benchmark
+    * decontamination — everything a consumer of the admitted docs needs
+    * and nothing only the report tail reads ([[TrainData.buildShards]]
+    * tokenizes `survivors` directly). Parameters as in [[run]].
+    */
+  private[pipeline] def funnel(docs: DataFrame, idCol: String,
+      textCol: String, benchmark: DataFrame, benchTextCol: String,
+      cfg: CurateConfig,
+      dsirTarget: Option[DataFrame],
+      classifierModel: Option[graft.operators.Classifier.Model],
+      arpaModel: Option[graft.operators.TextStats.ArpaModel]): Funnel = {
+    val sess = docs.sparkSession
+    val log = new StageLog(sess, cfg)
+    import log.{ck, stage}
     // config fingerprint guard (ADVICE r14): resolved stages are only
     // honored when the store was committed under the SAME stage-relevant
     // config — a resume with changed thresholds or a different stage set
@@ -692,7 +766,7 @@ object Curate {
     val clean = ck.barrierOpt("decontaminated")(deduped
         .join(flags.filter(!col("contaminated")).select(col(idCol)),
           Seq(idCol)))
-      .persist(StorageLevel.MEMORY_AND_DISK) // consumers: count + chunking
+      .persist(StorageLevel.MEMORY_AND_DISK) // consumers: count + caller
     stage("decontaminated", clean.count())
     rejectDup("decontaminated")(flags.filter(col("contaminated"))
       .select(col(idCol).cast("long").as("id"), lit(false).as("admitted"),
@@ -700,36 +774,6 @@ object Curate {
         col(idCol).cast("long").as("dup_of")))
     deduped.unpersist()
 
-    // ---- chunk → pack/shard --------------------------------------------
-    // pack order key: (doc, chunk) folded into one monotonic long — docs
-    // stay contiguous inside a shard, chunks stay in document order
-    val packed = ck.barrierOpt("chunks") {
-      val chunks = Curation.chunkByTokens(clean, idCol, textCol,
-          cfg.chunkTokens, cfg.chunkOverlap)
-        .withColumn("__ck", col(idCol) * lit(1000000L) + col("chunk_id"))
-      (if (cfg.packBestFit)
-          Curation.packSequencesBestFit(chunks, "__ck", col("n_tokens"),
-            Curation.shardAssign(col(idCol)), cfg.packBudget)
-        else
-          Curation.packSequences(chunks, "__ck", col("n_tokens"),
-            Curation.shardAssign(col(idCol)), cfg.packBudget))
-        .drop("__ck", "toks")
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    stage("chunks", packed.count())
-    val ledger =
-      if (!cfg.emitLedger) None
-      else {
-        val admitted = clean
-          .select(col(idCol).cast("long").as("id"), lit(true).as("admitted"),
-            lit("admitted").as("reason"), col(idCol).cast("long").as("dup_of"))
-        Some((led :+ admitted).reduce(_ unionByName _).localCheckpoint(true))
-      }
-    val admittedDocs =
-      if (!cfg.keepAdmitted) None
-      else Some(clean.select(col(idCol), col(textCol))
-        .localCheckpoint(eager = true))
-    clean.unpersist()
-
-    CurateResult(packed, counts.toSeq, times.toSeq, ledger, admittedDocs)
+    Funnel(clean, log, led.toSeq)
   }
 }

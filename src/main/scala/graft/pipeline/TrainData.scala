@@ -7,20 +7,23 @@ import org.apache.spark.sql.functions._
   * composition of the pipeline's pieces, wired the way a pretraining
   * data drop actually ships:
   *
-  *   [[Curate.run]] (the full gate funnel, ledger on) → admitted docs →
+  *   [[Curate.funnel]] (the gate funnel, ingest through
+  *   decontamination) → survivors with their FINAL text →
   *   [[graft.operators.Bpe.encodeCorpusGpt2]] (GPT-2 pretokens,
   *   byte-level BPE under the SHIPPED merge table) →
-  *   [[graft.operators.Curation.packTokenIds]] (EOS-separated
-  *   fixed-length id sequences) → [[Shards.writePackedShards]]
-  *   (round-robin balanced, meta commit marker).
+  *   [[graft.operators.Curation.packTokenIdsWithSpans]] (EOS-separated
+  *   fixed-length id sequences with doc spans) →
+  *   [[Shards.writePackedShards]] (round-robin balanced, meta commit
+  *   marker).
   *
   * Nothing new is computed here — composition only, so every stage keeps
   * its own spec/oracle coverage and its own scale argument (the funnel's
   * gates are bucketed equi joins, the tokenizer pass is shuffle-free,
   * packing's only coordination is the bounded triangular offset join,
-  * the shard write is one hash shuffle). The funnel's own count-based
-  * `chunks` packing still runs (it is the funnel's report artifact);
-  * the id-level path here is what the training job reads.
+  * the shard write is one hash shuffle). Only what the shards read runs:
+  * no forced rejection ledger, no re-join against the input docs, and
+  * not [[Curate.run]]'s count-based `chunks` report tail — `stageCounts`
+  * ends at `decontaminated`.
   */
 object TrainData {
 
@@ -41,31 +44,25 @@ object TrainData {
   def buildShards(docs: DataFrame, idCol: String, textCol: String,
                   benchmark: DataFrame, benchTextCol: String,
                   dir: String, cfg: ShardBuildConfig): ShardBuildResult = {
-    val spark = docs.sparkSession
     val eos = if (cfg.eosId >= 0) cfg.eosId else 256 + cfg.merges.length
-    val cur = Curate.run(docs, idCol, textCol, benchmark, benchTextCol,
-      cfg.curate.copy(emitLedger = true))
-    val admittedIds = cur.ledger.get.filter(col("admitted"))
-      .select(col("id"))
-    val admitted = graft.core.Ops.widen(docs)
-      .select(col(idCol).cast("long").as("id"), col(textCol))
-      .join(admittedIds, Seq("id"), "left_semi")
-    val enc = graft.operators.Bpe.encodeCorpusGpt2(admitted, "id",
-      textCol, cfg.merges)
-    // spans variant: shipped shards carry doc-span attribution — the
-    // attention-mask boundary info AND the provenance the
-    // right-to-be-forgotten sweep ([[Shards.retract]]) serves from
-    val packed = graft.operators.Curation.packTokenIdsWithSpans(enc,
-        "id", "ids", cfg.seqLen, eos)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val f = Curate.funnel(docs, idCol, textCol, benchmark, benchTextCol,
+      cfg.curate, None, None, None)
     try {
-      Shards.writePackedShards(packed, dir, cfg.numShards, cfg.batchId)
-      val agg = packed.agg(count(lit(1)).as("ns"),
-        coalesce(sum("n_tokens"), lit(0L)).as("nt")).head()
-      ShardBuildResult(cur.stageCounts, agg.getLong(0), agg.getLong(1))
-    } finally {
-      packed.unpersist()
-      cur.chunks.unpersist()
-    }
+      val enc = graft.operators.Bpe.encodeCorpusGpt2(f.survivors
+        .select(col(idCol).cast("long").as("id"), col(textCol)), "id",
+        textCol, cfg.merges)
+      // spans variant: shipped shards carry doc-span attribution — the
+      // attention-mask boundary info AND the provenance the
+      // right-to-be-forgotten sweep ([[Shards.retract]]) serves from
+      val packed = graft.operators.Curation.packTokenIdsWithSpans(enc,
+          "id", "ids", cfg.seqLen, eos)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        Shards.writePackedShards(packed, dir, cfg.numShards, cfg.batchId)
+        val agg = packed.agg(count(lit(1)).as("ns"),
+          coalesce(sum("n_tokens"), lit(0L)).as("nt")).head()
+        ShardBuildResult(f.log.counts.toSeq, agg.getLong(0), agg.getLong(1))
+      } finally packed.unpersist()
+    } finally f.survivors.unpersist()
   }
 }

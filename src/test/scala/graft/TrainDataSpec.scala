@@ -16,6 +16,22 @@ class TrainDataSpec extends SparkSpec {
     s"the table row scan key " +
       (1 to 24).map(i => s"$salt$i").mkString(" ") + " the a"
 
+  private val merges = Bpe.DemoByteMerges
+  private val eos = 256 + merges.length
+
+  private def encLocal(t: String): Seq[Int] = {
+    val table = merges.toVector
+    val ranks = table.zipWithIndex.map { case (m, i) => m -> i }.toMap
+    val vocab = Bpe.byteVocabIds(merges)
+    Bpe.gpt2PretokensLocal(t).flatMap(w =>
+      Bpe.encodeOneSeeded(Bpe.byteSymbols(w), table, ranks).map(vocab))
+  }
+
+  private def readStream(dir: String): Seq[Int] =
+    Shards.readPackedShards(spark, dir)
+      .select("seq_id", "ids").as[(Long, Seq[Int])].collect()
+      .sortBy(_._1).flatMap(_._2).toSeq
+
   test("buildShards: admitted docs only, exact token stream, committed " +
       "read-back") {
     // 1 admitted; 2 exact-dup of 1 (dropped); 3 admitted; 5 too short
@@ -24,7 +40,6 @@ class TrainDataSpec extends SparkSpec {
       3L -> goodText("two"), 5L -> "junk").toDF("doc_id", "text")
     val dir = java.nio.file.Files
       .createTempDirectory("graft_traindata").toString
-    val merges = Bpe.DemoByteMerges
     val cfg = ShardBuildConfig(merges, seqLen = 7, numShards = 4,
       curate = CurateConfig())
     val res = TrainData.buildShards(docs, "doc_id", "text",
@@ -34,13 +49,6 @@ class TrainDataSpec extends SparkSpec {
     assert(res.stageCounts.toMap.apply("exact_dedup") == 2L)
     // the shard store's stream = encode(doc1) ++ EOS ++ encode(doc3)
     // ++ EOS, cut at seqLen
-    val eos = 256 + merges.length
-    val table = merges.toVector
-    val ranks = table.zipWithIndex.map { case (m, i) => m -> i }.toMap
-    val vocab = Bpe.byteVocabIds(merges)
-    def encLocal(t: String): Seq[Int] =
-      Bpe.gpt2PretokensLocal(t).flatMap(w =>
-        Bpe.encodeOneSeeded(Bpe.byteSymbols(w), table, ranks).map(vocab))
     val want = encLocal(goodText("one")) ++ Seq(eos) ++
       encLocal(goodText("two")) ++ Seq(eos)
     assert(res.nTokens == want.length.toLong)
@@ -50,5 +58,29 @@ class TrainDataSpec extends SparkSpec {
     assert(back.length == res.nSequences)
     assert(back.flatMap(_._2).toSeq == want)
     back.dropRight(1).foreach(s => assert(s._2.length == 7))
+  }
+
+  test("buildShards: shards carry the funnel's FINAL text, not the " +
+      "input's (a line the C4 rule drops is not tokenized)") {
+    def c4Line(salt: String): String = goodText(salt) + "."
+    val cleaned1 = Seq("one", "two", "three").map(c4Line).mkString("\n")
+    // "Accept all cookies" has no terminal punctuation: C4 drops the line
+    val raw1 = Seq(c4Line("one"), c4Line("two"), "Accept all cookies",
+      c4Line("three")).mkString("\n")
+    val text3 = Seq("four", "five", "six").map(c4Line).mkString("\n")
+    val docs = Seq(1L -> raw1, 3L -> text3).toDF("doc_id", "text")
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_traindata_c4").toString
+    val res = TrainData.buildShards(docs, "doc_id", "text",
+      Seq.empty[(Long, String)].toDF("doc_id", "text"), "text", dir,
+      ShardBuildConfig(merges, seqLen = 11, numShards = 4,
+        curate = CurateConfig(c4Clean = true)))
+    assert(res.stageCounts.toMap.apply("decontaminated") == 2L)
+    val want = encLocal(cleaned1) ++ Seq(eos) ++ encLocal(text3) ++ Seq(eos)
+    assert(encLocal(raw1) != encLocal(cleaned1))
+    assert(res.nTokens == want.length.toLong)
+    assert(readStream(dir) == want)
+    // the report-only chunk/pack tail does not run
+    assert(res.stageCounts.last._1 == "decontaminated")
   }
 }
