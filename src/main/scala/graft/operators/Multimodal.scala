@@ -722,11 +722,8 @@ object Multimodal {
     * excluded at write — they can never pair.
     */
   def writePhashIndex(ds: Dataset[MediaRecord], dir: String,
-                      nBands: Int = 4): Unit = {
-    require(nBands > 0 && 64 % nBands == 0,
-      s"writePhashIndex: band count ($nBands) must divide 64")
+                      nBands: Int = 4): Unit =
     writePhashParts(ds, dir, nBands, overwrite = true, batchId = "base")
-  }
 
   /** Fold a new batch's signatures into an existing index (append — no
     * old data read or rewritten). Caller contract: batch ids disjoint
@@ -818,6 +815,8 @@ object Multimodal {
                                  batchId: String): Unit = {
     require(batchId.nonEmpty && batchId != "__HIVE_DEFAULT_PARTITION__",
       s"phash index: invalid batch id '$batchId'")
+    require(nBands > 0 && 64 % nBands == 0,
+      s"phash index: band count ($nBands) must divide 64")
     // overwrite mode pinned per-write (the minhash-writer discipline): a
     // session-global dynamic mode must not turn a rebuild into a
     // base-only replace that leaves stale batch partitions live
@@ -2220,12 +2219,9 @@ object Multimodal {
     * write — they can never pair.
     */
   def writeVideoIndex(ds: Dataset[MediaRecord], dir: String,
-                      nBands: Int = 4): Unit = {
-    require(nBands > 0 && 64 % nBands == 0,
-      s"writeVideoIndex: band count ($nBands) must divide 64")
+                      nBands: Int = 4): Unit =
     writeVideoFrameParts(validVideoFrames(ds), ds.sparkSession, dir,
       nBands, overwrite = true, batchId = "base")
-  }
 
   /** Fold a new batch's keyframe hashes into an existing index (append —
     * no old data read or rewritten). Caller contract: batch ids disjoint
@@ -2267,6 +2263,8 @@ object Multimodal {
                                    batchId: String): Unit = {
     require(batchId.nonEmpty && batchId != "__HIVE_DEFAULT_PARTITION__",
       s"video index: invalid batch id '$batchId'")
+    require(nBands > 0 && 64 % nBands == 0,
+      s"video index: band count ($nBands) must divide 64")
     def writer(d: DataFrame) =
       d.withColumn("batch_id", lit(batchId))
         .write.mode("overwrite").partitionBy("batch_id")

@@ -1,9 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.operators.{Curation, Dedup, TextStats}
+import graft.operators.{Curation, Dedup, Multimodal, TextStats}
+import graft.operators.Multimodal.MediaRecord
 
 /** Configuration for [[Increment.curateIncrement]] — the gate dials
   * shared with the batch funnel ([[CurateConfig]]) and the streaming
@@ -150,6 +151,23 @@ case class IncrementResult(ledger: DataFrame, admitted: DataFrame,
   * dup_of is the smallest matching old id, the stream's min-parent
   * rule — then within-batch components with min-id canonicals).
   * Rejected docs never enter state (the stream invariant).
+  *
+  * One skeleton, five families. A state root belongs to ONE family,
+  * named by its `_family` sentinel (the sub-index whose meta is the
+  * commit marker: `minhash`, `phash`, `audio`, `video` or `sem`); an
+  * increment or seed of any other family refuses the root. The image,
+  * audio, video and embedding increments are thin bindings of a
+  * private `MediaFamily` value built from their config — decode, the
+  * near-dup join against committed state, the within-batch edges, the
+  * embedding and the index writers — and ONE driver runs any of them:
+  * decode → exact dedup (state, then batch) → near-dup vs state →
+  * within-batch components → optional semantic stage → commit. The
+  * text increment keeps its stateless gates and MinHash funnel but
+  * shares the rest with the driver: the prologue (batch-id validation,
+  * folded-batch guard, family claim), the ledger builder (one verdict
+  * row per batch doc, checked loudly), the semantic stage and the
+  * commit sequence (keys → ledger → metrics → sem sub-state → family
+  * index, whose meta is the marker, LAST).
   */
 object Increment {
 
@@ -157,24 +175,50 @@ object Increment {
     new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The state root's OWNING family — which sub-index's meta is the
-    * increment's authoritative commit marker. Written as a one-word
-    * `_family` sentinel file by the FIRST increment touching the root,
-    * BEFORE any state write, so even the earliest torn bootstrap is
+  /** A small sentinel file at a state root, read to EOF — a single
+    * read() may return short on remote filesystems, which would
+    * truncate a family name and make the marker path silently miss.
+    * None when absent.
+    */
+  private def readRootFile(spark: SparkSession, stateDir: String,
+                           name: String): Option[String] = {
+    val f = fs(spark, stateDir)
+    val p = new org.apache.hadoop.fs.Path(s"$stateDir/$name")
+    if (!f.exists(p)) None
+    else {
+      val in = f.open(p)
+      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+    }
+  }
+
+  private def writeRootFile(spark: SparkSession, stateDir: String,
+                            name: String, content: String): Unit = {
+    val out = fs(spark, stateDir).create(
+      new org.apache.hadoop.fs.Path(s"$stateDir/$name"), true)
+    try out.write(content.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** Claim `stateDir` for `family` — which sub-index's meta is the
+    * increment's authoritative commit marker — BEFORE any state write.
+    * The root's one-word `_family` sentinel must be absent (a fresh or
+    * pre-sentinel root, which this call then stamps) or name `family`
+    * already. Stamping first makes even the earliest torn bootstrap
     * attributable: without it, a text increment that died between its
     * sem sub-state write and its minhash marker would be mistaken for a
     * committed standalone embedding state by the marker-discovery
-    * fallback, and its torn ledger would read as committed.
+    * fallback, and its torn ledger would read as committed. A root
+    * another family owns is refused: every family writes the same
+    * `ledger`, `exact/keys` and `metrics` paths, so a second family's
+    * dynamic-overwrite commit would replace the owner's committed
+    * partitions for the same batch id.
     */
-  private def writeFamilySentinel(spark: SparkSession, stateDir: String,
-                                  family: String): Unit = {
-    val f = fs(spark, stateDir)
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/_family")
-    if (!f.exists(p)) {
-      val out = f.create(p, true)
-      out.write(family.getBytes("UTF-8"))
-      out.close()
-    }
+  private def claimFamily(spark: SparkSession, stateDir: String,
+                          family: String, caller: String): Unit = {
+    val owner = stateFamily(spark, stateDir)
+    require(owner.forall(_ == family),
+      s"$caller: state root $stateDir belongs to the " +
+        s"'${owner.getOrElse("")}' family, not '$family'")
+    if (owner.isEmpty) writeRootFile(spark, stateDir, "_family", family)
   }
 
   /** The `_family` sentinel at an increment state root (None for any
@@ -184,27 +228,7 @@ object Increment {
     * decisions under such a root advisory-only.
     */
   def stateFamily(spark: SparkSession, stateDir: String): Option[String] =
-    readFamilySentinel(spark, stateDir)
-
-  private def readFamilySentinel(spark: SparkSession,
-                                 stateDir: String): Option[String] = {
-    val f = fs(spark, stateDir)
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/_family")
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try {
-        // loop to EOF: a single read() may return short on remote
-        // filesystems, which would truncate the family name and make
-        // the marker path silently miss
-        val out = new java.io.ByteArrayOutputStream(64)
-        val buf = new Array[Byte](64)
-        var n = in.read(buf)
-        while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-        Some(new String(out.toByteArray, "UTF-8").trim)
-      } finally in.close()
-    }
-  }
+    readRootFile(spark, stateDir, "_family").map(_.trim)
 
   /** Batch ids whose state rows were folded under `base` by
     * [[compactStateTo]] — a one-id-per-line `_folded` sentinel at the
@@ -215,32 +239,10 @@ object Increment {
     * entry points read this set and refuse such retries loudly; retries
     * against a non-compacted state keep the documented contract.
     */
-  private def writeFoldedSentinel(spark: SparkSession, destDir: String,
-                                  ids: Seq[String]): Unit = {
-    val f = fs(spark, destDir)
-    val out = f.create(
-      new org.apache.hadoop.fs.Path(s"$destDir/_folded"), true)
-    out.write(ids.sorted.mkString("\n").getBytes("UTF-8"))
-    out.close()
-  }
-
   private def readFoldedSentinel(spark: SparkSession,
-                                 stateDir: String): Set[String] = {
-    val f = fs(spark, stateDir)
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/_folded")
-    if (!f.exists(p)) Set.empty
-    else {
-      val in = f.open(p)
-      try {
-        val out = new java.io.ByteArrayOutputStream(256)
-        val buf = new Array[Byte](4096)
-        var n = in.read(buf)
-        while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-        new String(out.toByteArray, "UTF-8").linesIterator
-          .map(_.trim).filter(_.nonEmpty).toSet
-      } finally in.close()
-    }
-  }
+                                 stateDir: String): Set[String] =
+    readRootFile(spark, stateDir, "_folded").fold(Set.empty[String])(
+      _.linesIterator.map(_.trim).filter(_.nonEmpty).toSet)
 
   private def requireBatchNotFolded(spark: SparkSession, stateDir: String,
                                     batchId: String,
@@ -251,10 +253,55 @@ object Increment {
         "unsupported against a compacted state (rerun under a NEW " +
         "batch id, or retry against the pre-compaction root)")
 
+  private def markerExists(spark: SparkSession, stateDir: String,
+                           marker: String): Boolean =
+    fs(spark, stateDir).exists(
+      new org.apache.hadoop.fs.Path(s"$stateDir/$marker/meta"))
+
+  /** The batch ids `marker`'s meta has committed — the set every state
+    * read semi-joins, so a torn increment's rows never serve.
+    */
+  private def committedBatches(spark: SparkSession, stateDir: String,
+                               marker: String): DataFrame =
+    spark.read.parquet(s"$stateDir/$marker/meta").select("batch_id")
+      .distinct()
+
   /** State exists iff the minhash index has a meta commit marker. */
   def stateExists(spark: SparkSession, stateDir: String): Boolean =
-    fs(spark, stateDir).exists(
-      new org.apache.hadoop.fs.Path(s"$stateDir/minhash/meta"))
+    markerExists(spark, stateDir, TextLayout.marker)
+
+  /** One state family's on-disk shape: the sub-index whose meta is the
+    * commit marker, the heavy batch_id-partitioned tables it
+    * accumulates one partition per increment in (besides the shared
+    * `exact/keys`) — the compaction fold targets — and the trees
+    * compaction copies VERBATIM besides the audit tables (`ledger`,
+    * `metrics`, which keep their batch ids) and `decontam/` (the
+    * benchmark family owns its OWN meta marker and its batch ids are
+    * eval-set registrations, not increments — folding them would
+    * destroy the per-benchmark retraction provenance). A funnel
+    * family's `sem/` SUB-state copies whole: its own meta ∩ the
+    * marker's committed set governs serving, and both survive because
+    * the compacted marker keeps every original batch id; an embedding
+    * root folds its `sem/assigned` and copies its unpartitioned
+    * centroid table.
+    */
+  private case class StateLayout(marker: String, heavy: Seq[String],
+                                 verbatim: Seq[String])
+
+  private val TextLayout = StateLayout("minhash",
+    Seq("windows", "minhash/bands", "minhash/shingles"), Seq("sem"))
+  private val ImageLayout = StateLayout("phash", Seq("phash/sigs"),
+    Seq("sem"))
+  private val AudioLayout = StateLayout("audio",
+    Seq("audio/fps", "audio/sizes"), Seq("sem"))
+  private val VideoLayout = StateLayout("video",
+    Seq("video/frames", "video/sizes"), Seq("sem"))
+  private val EmbeddingLayout = StateLayout("sem", Seq("sem/assigned"),
+    Seq("sem/centroids"))
+
+  /** Every family, in the legacy (pre-sentinel) marker-discovery order. */
+  private val Layouts = Seq(TextLayout, ImageLayout, AudioLayout,
+    VideoLayout, EmbeddingLayout)
 
   /** Seed the state from an ALREADY-CURATED corpus (e.g. the admitted
     * output of a [[Curate.run]] over the historical pool): exact keys +
@@ -268,37 +315,43 @@ object Increment {
                            claimsW: Option[Int] = None): Unit = {
     require(!stateExists(spark, stateDir),
       s"initStateFromCurated: state already exists at $stateDir")
-    writeFamilySentinel(spark, stateDir, "minhash")
-    val docs = graft.core.Ops.widen(curated)
-      .select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
+    claimFamily(spark, stateDir, TextLayout.marker, "initStateFromCurated")
+    val docs = textCorpus(curated, idCol, textCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      writeExactKeys(docs, s"$stateDir/exact", "base")
+      writeExactKeyRows(docs.select(md5(col("text")).as("key"), col("id")),
+        stateDir, "base")
       // seed window claims when the state will run the substring-dedup
       // stage — without them, passages of the seeded corpus would be
       // invisible to cfg.dedupWindowsW until re-claimed by an increment
       for (w <- claimsW)
-        Curation.windowClaims(docs, "id", "text", w)
-          .withColumn("batch_id", lit("base"))
-          .write.mode("overwrite").partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(s"$stateDir/windows")
+        writeBatch(Curation.windowClaims(docs, "id", "text", w),
+          s"$stateDir/windows", "base")
       Dedup.writeMinhashParts(docs, "id", "text", s"$stateDir/minhash",
         bands, rowsPerBand, overwrite = true, batchId = "base")
     } finally docs.unpersist()
   }
 
-  private def writeExactKeys(docs: DataFrame, dir: String,
-                             batchId: String): Unit =
-    writeExactKeyRows(docs.select(md5(col("text")).as("key"), col("id")),
-      dir, batchId)
+  /** A caller's text corpus as (id: long, text). */
+  private def textCorpus(df: DataFrame, idCol: String,
+                         textCol: String): DataFrame =
+    graft.core.Ops.widen(df)
+      .select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
 
-  private def writeExactKeyRows(keys: DataFrame, dir: String,
-                                batchId: String): Unit =
-    keys.select(col("key"), col("id"), lit(batchId).as("batch_id"))
+  /** Write `df` as `batchId`'s partition of a batch_id-partitioned
+    * state table — dynamic overwrite, so a retry replaces the partition
+    * and never doubles it.
+    */
+  private def writeBatch(df: DataFrame, path: String,
+                         batchId: String): Unit =
+    df.withColumn("batch_id", lit(batchId))
       .write.mode("overwrite").partitionBy("batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(s"$dir/keys")
+      .option("partitionOverwriteMode", "dynamic").parquet(path)
+
+  private def writeExactKeyRows(keys: DataFrame, stateDir: String,
+                                batchId: String): Unit =
+    writeBatch(keys.select(col("key"), col("id")),
+      s"$stateDir/exact/keys", batchId)
 
   /** Bloom-prune `state` rows by `stateKey` against the batch-side key
     * set when `bits` is set — the [[graft.core.Bloom.pruneByKeys]]
@@ -311,39 +364,16 @@ object Increment {
     bits.map(m => graft.core.Bloom.pruneByKeys(state, stateKey,
       batchKeys, batchKey, m)).getOrElse(state)
 
-  /** The auto-dial behind [[IncrementConfig.stateBloomAuto]]: Bloom
-    * pruning pays one filter-build job per pruned family plus a probe
-    * filter per state row, and saves (1 − selectivity) of the
-    * state-side shuffle — net-positive only when the committed state
-    * is much larger than the batch. The r17 paired sweeps pin the
-    * crossover as ABSOLUTE state volume, not the state/batch ratio
-    * (both sides scale together in a steady-state ingest, so the
-    * ratio is flat): the r17 paired sweeps measured break-even around
-    * ~100 MB of heavy tables; the r18 past-floor grid (SCALE.md
-    * round-18) then showed the byte floor alone is NOT sufficient —
-    * with a broadcastable batch the state side never shuffles and
-    * bloom lost 27–45% at every measured cell up to 350 MB of state,
-    * so the dial additionally requires `minBatchRows` (see
-    * [[StateBloomMinBatchRows]] — the shuffle-regime condition). Rule:
-    * enable iff batch rows ≥ `minBatchRows` AND committed heavy-table
-    * bytes ≥ `minStateBytes` (default 256 MiB) AND ≥
-    * `minStateBytesPerBatchRow` (default 4 KiB) per batch row (the
-    * huge-batch-tiny-state guard). Filter sized at ~16 bits per batch
-    * row, clamped to [2^20, 2^27] (<1% fpp, ≤16 MiB literal).
-    * Heavy-table bytes come from one bounded `getContentSummary` walk
-    * — no Spark job. Returns the bits to use, or None = keep bloom
-    * off.
-    */
   /** Every family's heavy data tables, relative to a state root —
     * absent paths contribute nothing, so one list serves text AND the
     * modality increments. Shared with the
     * [[graft.pipeline.Maintain.decideAll]] bloom ADVISORY so the
     * operational report can never silently drift from what the
-    * increments' auto dial actually measures.
+    * increments' auto dial actually measures; [[retract]] sweeps the
+    * same list.
     */
-  val StateBloomHeavyTables: Seq[String] = Seq("exact/keys", "windows",
-    "minhash/bands", "minhash/shingles", "sem/assigned", "phash/sigs",
-    "audio/fps", "audio/sizes", "video/frames", "video/sizes")
+  val StateBloomHeavyTables: Seq[String] =
+    "exact/keys" +: Layouts.flatMap(_.heavy)
 
   /** [[decideStateBloom]]'s default activation floor (absolute
     * committed heavy-table bytes) and per-batch-row guard — the single
@@ -382,6 +412,30 @@ object Increment {
       .sum
   }
 
+
+  /** The auto-dial behind [[IncrementConfig.stateBloomAuto]]: Bloom
+    * pruning pays one filter-build job per pruned family plus a probe
+    * filter per state row, and saves (1 − selectivity) of the
+    * state-side shuffle — net-positive only when the committed state
+    * is much larger than the batch. The r17 paired sweeps pin the
+    * crossover as ABSOLUTE state volume, not the state/batch ratio
+    * (both sides scale together in a steady-state ingest, so the
+    * ratio is flat): the r17 paired sweeps measured break-even around
+    * ~100 MB of heavy tables; the r18 past-floor grid (SCALE.md
+    * round-18) then showed the byte floor alone is NOT sufficient —
+    * with a broadcastable batch the state side never shuffles and
+    * bloom lost 27–45% at every measured cell up to 350 MB of state,
+    * so the dial additionally requires `minBatchRows` (see
+    * [[StateBloomMinBatchRows]] — the shuffle-regime condition). Rule:
+    * enable iff batch rows ≥ `minBatchRows` AND committed heavy-table
+    * bytes ≥ `minStateBytes` (default 256 MiB) AND ≥
+    * `minStateBytesPerBatchRow` (default 4 KiB) per batch row (the
+    * huge-batch-tiny-state guard). Filter sized at ~16 bits per batch
+    * row, clamped to [2^20, 2^27] (<1% fpp, ≤16 MiB literal).
+    * Heavy-table bytes come from one bounded `getContentSummary` walk
+    * — no Spark job. Returns the bits to use, or None = keep bloom
+    * off.
+    */
   def decideStateBloom(spark: SparkSession, stateDir: String,
                        batchRows: Long,
                        minStateBytes: Long = StateBloomMinStateBytes,
@@ -402,37 +456,48 @@ object Increment {
     }
   }
 
-  /** Committed exact keys (key, id), excluding `excludeBatch` — the
-    * committed set is the MINHASH meta's (keys commit before the
-    * marker, so a torn increment's keys never read). Keys canonicalize
-    * to min(id): under the contract a key is admitted once ever, so
-    * this is a no-op — it pins ONE dup_of per key even if a seeded
-    * corpus violated the curated-input contract.
+  /** Exact dedup of a keyed pool (id, __md5, …): against the committed
+    * keys of the family whose marker is `marker` first, then within the
+    * batch (min id per key). Returns the survivors, checkpointed, with
+    * the pool's columns. The state side reads committed batches only
+    * (keys commit before the marker, so a torn increment's keys never
+    * read) minus the batch's own partitions; `prune` is its Bloom prune
+    * (identity when off). State keys canonicalize to min(id): under the
+    * contract a key is admitted once ever, so this is a no-op — it pins
+    * ONE dup_of per key even if a seeded corpus violated the
+    * curated-input contract.
     */
-  private def readExactKeys(spark: SparkSession, stateDir: String,
-                            excludeBatch: String,
-                            batchHashes: Option[(DataFrame, Long)] = None,
-                            // prebuilt filter (the buildMany shared
-                            // pass) — takes precedence over batchHashes
-                            prebuilt: Option[(Array[Long], Long)] = None)
-      : DataFrame = {
-    val committed = Dedup.minhashCommitted(spark, s"$stateDir/minhash")
-      .filter(col("batch_id") =!= excludeBatch)
-    val keys = spark.read.parquet(s"$stateDir/exact/keys")
-    // prune BEFORE the per-key min aggregate: dropping every row of a
-    // key the batch cannot carry leaves surviving keys' groups intact,
-    // so min(id) per surviving key — the only keys the exact join can
-    // hit — is unchanged
-    val pruned = (prebuilt, batchHashes) match {
-      case (Some((fl, m)), _) =>
-        graft.core.Bloom.pruneByFilter(keys, col("key"), fl, m)
-      case (None, Some((b, m))) => bloomPrune(keys, col("key"), b,
-        col("__h"), Some(m))
-      case _ => keys
-    }
-    pruned
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
-      .groupBy("key").agg(min(col("id")).as("id"))
+  private def exactDedup(led: LedgerBuilder, run: Run, marker: String,
+                         pool: DataFrame,
+                         prune: DataFrame => DataFrame): DataFrame = {
+    val afterState =
+      if (!run.haveState) pool
+      else {
+        val committed = committedBatches(run.spark, run.stateDir, marker)
+          .filter(col("batch_id") =!= run.batchId)
+        // prune BEFORE the per-key min aggregate: dropping every row of
+        // a key the batch cannot carry leaves surviving keys' groups
+        // intact, so min(id) per surviving key — the only keys the exact
+        // join can hit — is unchanged
+        val stateKeys = prune(run.spark.read.parquet(run.path("exact/keys")))
+          .join(broadcast(committed), Seq("batch_id"), "left_semi")
+          .groupBy(col("key").as("__md5"))
+          .agg(min(col("id")).as("__dup_of"))
+        val hits = pool.join(stateKeys, Seq("__md5"))
+          .localCheckpoint(eager = true)
+        led.reject(hits.select(col("id"), col("__dup_of")), "exact_dup")
+        pool.join(hits.select("id"), Seq("id"), "left_anti")
+      }
+    val withKeep = afterState.join(afterState.groupBy("__md5")
+        .agg(min(col("id")).as("__keep")), Seq("__md5"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    led.reject(withKeep.filter(col("id") =!= col("__keep"))
+      .select(col("id"), col("__keep").as("__dup_of")), "exact_dup")
+    val exact = withKeep.filter(col("id") === col("__keep")).drop("__keep")
+      .localCheckpoint(eager = true)
+    withKeep.unpersist()
+    led.stage("exact_dedup", exact.count())
+    exact
   }
 
   /** Accumulated window claims visible to a (re)run of `excludeBatch`:
@@ -507,13 +572,9 @@ object Increment {
     require(batchId.nonEmpty && batchId != "__HIVE_DEFAULT_PARTITION__",
       s"writeDecontamState: invalid batch id '$batchId'")
     import spark.implicits._
-    def w(df: DataFrame, path: String): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic").parquet(path)
-    w(decontamGramRows(benchmark, benchTextCol, n),
-      s"$stateDir/decontam/grams")
-    w(Seq(n).toDF("n"), s"$stateDir/decontam/meta")
+    writeBatch(decontamGramRows(benchmark, benchTextCol, n),
+      s"$stateDir/decontam/grams", batchId)
+    writeBatch(Seq(n).toDF("n"), s"$stateDir/decontam/meta", batchId)
   }
 
   /** Read-side schema for `decontam/grams` — explicit so a ZERO-ROW
@@ -593,6 +654,236 @@ object Increment {
     } finally hit.unpersist()
   }
 
+
+  // ---- the increment skeleton every family shares -----------------------
+
+  /** One increment run as its stages see it: the state root, the batch
+    * id every write lands under, whether the family's commit marker
+    * exists (false = this run bootstraps the state) and the effective
+    * Bloom dial.
+    */
+  private case class Run(spark: SparkSession, stateDir: String,
+                         batchId: String, haveState: Boolean,
+                         bloomBits: Option[Long]) {
+    def path(sub: String): String = s"$stateDir/$sub"
+  }
+
+  /** What every increment checks before it reads or writes state: a
+    * writable batch id, no retry of a batch id folded by
+    * [[compactStateTo]], and the root's family claim. Returns whether
+    * the family's commit marker exists.
+    */
+  private def prologue(spark: SparkSession, stateDir: String,
+                       batchId: String, marker: String,
+                       caller: String): Boolean = {
+    require(batchId.nonEmpty && batchId != "base" &&
+        batchId != "__HIVE_DEFAULT_PARTITION__",
+      s"$caller: invalid batch id '$batchId'")
+    requireBatchNotFolded(spark, stateDir, batchId, caller)
+    claimFamily(spark, stateDir, marker, caller)
+    markerExists(spark, stateDir, marker)
+  }
+
+  /** The effective Bloom dial: manual bits win; otherwise the auto
+    * decision from committed-state bytes vs batch rows (r16 #3).
+    */
+  private def bloomDial(spark: SparkSession, stateDir: String,
+                        haveState: Boolean, manual: Option[Long],
+                        auto: Boolean, batchRows: Long): Option[Long] =
+    manual.orElse(
+      if (auto && haveState) decideStateBloom(spark, stateDir, batchRows)
+      else None)
+
+  /** One increment's verdict ledger and stage counts. Reject pieces
+    * checkpoint as each stage decides them; [[admit]] adds the admitted
+    * rows and checks — loudly, not assumed — that the ledger holds one
+    * row per batch doc.
+    */
+  private final class LedgerBuilder(val caller: String) {
+    private val counts =
+      scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    private val pieces = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+
+    def stage(name: String, rows: Long): Unit = counts += ((name, rows))
+    def stageCounts: Seq[(String, Long)] = counts.toSeq
+    /** The batch size: the first stage is always `ingest`. */
+    def ingested: Long = counts.head._2
+
+    /** Reject `ids` (id, __dup_of; a null dup_of names the doc itself). */
+    def reject(ids: DataFrame, reason: String): Unit =
+      pieces += ids.select(col("id").cast("long").as("id"),
+          lit(false).as("admitted"), lit(reason).as("reason"),
+          coalesce(col("__dup_of"), col("id")).cast("long").as("dup_of"))
+        .localCheckpoint(eager = true)
+
+    /** Reject the docs of `prev` that a gate dropped from `next`. */
+    def rejectAnti(prev: DataFrame, next: DataFrame,
+                   reason: String): Unit =
+      reject(prev.select(col("id"))
+        .join(next.select(col("id")), Seq("id"), "left_anti")
+        .withColumn("__dup_of", lit(null).cast("long")), reason)
+
+    /** Dedup against state: every pool doc with a match in `pairs`
+      * (id_new, id_old) is rejected as a dup of its smallest old match
+      * (the stream's min-parent rule). `release` frees the pairs'
+      * inputs once the hits are checkpointed. Returns the survivors.
+      */
+    def dropMatches(pool: DataFrame, pairs: DataFrame, reason: String,
+                    release: () => Unit = () => ()): DataFrame = {
+      val hits = pairs
+        .groupBy("id_new").agg(min(col("id_old")).as("__dup_of"))
+        .select(col("id_new").as("id"), col("__dup_of"))
+        .localCheckpoint(eager = true)
+      release()
+      reject(hits, reason)
+      pool.join(hits.select("id"), Seq("id"), "left_anti")
+        .localCheckpoint(eager = true)
+    }
+
+    /** Dedup within the batch: connected components over `edges`
+      * (idA, idB), every member but the component's min id rejected as
+      * its dup. `release` frees the edges' inputs once the victims are
+      * checkpointed. Returns the survivors.
+      */
+    def dropComponents(pool: DataFrame, edges: DataFrame, reason: String,
+                       release: () => Unit): DataFrame = {
+      val cm = Dedup.connectedComponentsManaged(edges)
+      val victims = cm.df.filter(col("id") =!= col("label"))
+        .select(col("id"), col("label").as("__dup_of"))
+        .localCheckpoint(eager = true)
+      cm.close(); release()
+      reject(victims, reason)
+      pool.join(victims.select("id"), Seq("id"), "left_anti")
+        .localCheckpoint(eager = true)
+    }
+
+    /** Admit `admitted` and return the whole ledger (id, admitted,
+      * reason, dup_of), one row per batch doc.
+      */
+    def admit(admitted: DataFrame): DataFrame = {
+      pieces += admitted.select(col("id"), lit(true).as("admitted"),
+          lit("admitted").as("reason"), col("id").as("dup_of"))
+        .localCheckpoint(eager = true)
+      val ledger = pieces.reduce(_ unionByName _)
+        .select(col("id"), col("admitted"), col("reason"), col("dup_of"))
+        .localCheckpoint(eager = true)
+      val nLed = ledger.count()
+      require(nLed == ingested,
+        s"$caller: ledger rows $nLed != batch docs $ingested")
+      ledger
+    }
+  }
+
+  /** Rows whose vector `v` has a non-zero norm. Cosine is undefined for
+    * the rest: they can never pair and are never indexed.
+    */
+  private def nonzeroVectors(df: DataFrame): DataFrame =
+    df.filter(expr("aggregate(v, 0D, (a, x) -> a + x * x)") > lit(0.0))
+
+  /** A sem index's frozen centroid set as (id, v). */
+  private def storedCentroids(spark: SparkSession,
+                              semDir: String): DataFrame =
+    spark.read.parquet(s"$semDir/centroids")
+      .select(col("cid").as("id"), col("cv").as("v"))
+
+  /** The semantic stage's output: the survivors, the pool's non-zero
+    * vectors and the centroid set (both needed by the commit), whether
+    * the sem sub-state existed, and the dials a bootstrap pins.
+    */
+  private case class SemPieces(admitted: DataFrame, vectors: DataFrame,
+                               centroids: DataFrame, haveSem: Boolean,
+                               centroidEvery: Int, nassign: Int)
+
+  /** The optional SEMANTIC stage (the batch funnel's sem_dup gate):
+    * SemDeDup of `pool`'s embeddings against the `sem/` SUB-state, then
+    * within the batch over the frozen centroid set. Sub-state reads are
+    * restricted to batches `marker` committed — the increment's one
+    * authoritative marker — so a torn increment's sem rows never serve.
+    * `embed` maps the pool to (id, v) vectors of dimension `dim`
+    * (`dimLabel` names the caller's dial in the mismatch error).
+    */
+  private def semanticStage(led: LedgerBuilder, run: Run, marker: String,
+                            pool: DataFrame,
+                            thresholdE4: Long, dim: Int, dimLabel: String,
+                            centroidEvery: Int, nassign: Int)(
+      embed: DataFrame => DataFrame): SemPieces = {
+    val semDir = run.path("sem")
+    // the sem sub-state counts as existing only when the AUTHORITATIVE
+    // marker does too: a first increment that died between its sem
+    // write and its marker must RE-BOOTSTRAP on retry (static overwrite
+    // replaces the torn sem partitions) — reading the torn sub-state
+    // would crash on the missing marker path
+    val haveSem = run.haveState && semStateExists(run.spark, run.stateDir)
+    // dial consistency: an existing sem sub-state PINS its dials — the
+    // within-batch stage must use the same (centroid_every, nassign)
+    // [and dim] as the against-state reads, or a caller passing a
+    // different cfg would get silently inconsistent within-batch vs
+    // against-state recall (the banding path's loud-mismatch rule,
+    // applied here)
+    val (ce, na) =
+      if (!haveSem) (centroidEvery, nassign)
+      else {
+        val (pce, pna, pdim) = Curation.readSemMeta(run.spark, semDir)
+        require(pdim == 0 || pdim == dim,
+          s"${led.caller}: $dimLabel != pinned sem sub-state dim $pdim " +
+            s"at $semDir")
+        (pce, pna)
+      }
+    val vectors = nonzeroVectors(embed(pool)).localCheckpoint(eager = true)
+    val centroids =
+      if (haveSem) storedCentroids(run.spark, semDir)
+      else Curation.semCentroidSample(vectors.select("id", "v"), ce)
+        .localCheckpoint(eager = true)
+    val afterState =
+      if (!haveSem) pool
+      else led.dropMatches(pool, Curation.semNearDupAgainstIndex(run.spark,
+          semDir, vectors.select("id", "v"), thresholdE4,
+          excludeBatch = Some(run.batchId),
+          restrictTo = Some(committedBatches(run.spark, run.stateDir,
+            marker)),
+          bloomBits = run.bloomBits), "sem_dup")
+    val pm = graft.operators.Similarity.ivfNearDupPairsManaged(
+      vectors.join(afterState.select("id"), Seq("id"), "left_semi")
+        .select("id", "v"),
+      centroids, thresholdE4 / 10000.0, na)
+    val admitted = led.dropComponents(afterState,
+      pm.df.select("idA", "idB"), "sem_dup", () => pm.close())
+    led.stage("semantic", admitted.count())
+    SemPieces(admitted, vectors, centroids, haveSem, centroidEvery,
+      nassign)
+  }
+
+  /** The commit sequence: exact keys → ledger → metrics → sem sub-state
+    * → `writeIndex`, which writes the family index whose meta partition
+    * is the increment's commit marker, LAST. A bootstrap that admitted
+    * nothing writes nothing (the state stays absent).
+    */
+  private def commit(run: Run, admitted: DataFrame, keys: DataFrame,
+                     ledger: DataFrame, stageCounts: Seq[(String, Long)],
+                     sem: Option[SemPieces])(writeIndex: => Unit): Unit = {
+    import run.spark.implicits._
+    if (run.haveState || admitted.head(1).nonEmpty) {
+      writeExactKeyRows(keys, run.stateDir, run.batchId)
+      writeBatch(ledger, run.path("ledger"), run.batchId)
+      writeBatch(stageCounts.toDF("stage", "rows"), run.path("metrics"),
+        run.batchId)
+      for (p <- sem) {
+        // semi-join the FINAL admitted set, not the sem stage's: a doc
+        // rejected after sem must not leave vectors in the state
+        val vecs = p.vectors
+          .join(admitted.select("id"), Seq("id"), "left_semi")
+          .select("id", "v")
+        if (p.haveSem)
+          Curation.appendSemVectors(run.spark, run.path("sem"), vecs,
+            run.batchId)
+        else
+          Curation.writeSemIndex(vecs, p.centroids, run.path("sem"),
+            p.centroidEvery, p.nassign, run.batchId)
+      }
+      writeIndex
+    }
+  }
+
   def curateIncrement(batch: DataFrame, idCol: String, textCol: String,
                       stateDir: String, batchId: String,
                       cfg: IncrementConfig = IncrementConfig(),
@@ -607,47 +898,26 @@ object Increment {
                         graft.operators.TextStats.ArpaModel] = None,
                       benchmark: Option[(DataFrame, String)] = None)
       : IncrementResult = {
-    require(batchId.nonEmpty && batchId != "base" &&
-        batchId != "__HIVE_DEFAULT_PARTITION__",
-      s"curateIncrement: invalid batch id '$batchId'")
     val spark = batch.sparkSession
-    requireBatchNotFolded(spark, stateDir, batchId, "curateIncrement")
-    import spark.implicits._
-    writeFamilySentinel(spark, stateDir, "minhash")
-    val haveState = stateExists(spark, stateDir)
-    val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val led = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def stage(name: String, c: Long): Unit = counts += ((name, c))
-    def rejectPiece(ids: DataFrame, reason: String): Unit =
-      led += ids.select(col("id").cast("long").as("id"),
-          lit(false).as("admitted"), lit(reason).as("reason"),
-          coalesce(col("__dup_of"), col("id")).cast("long").as("dup_of"))
-        .localCheckpoint(eager = true)
-    def rejectAnti(prev: DataFrame, next: DataFrame,
-                   reason: String): Unit =
-      rejectPiece(prev.select(col("id"))
-        .join(next.select(col("id")), Seq("id"), "left_anti")
-        .withColumn("__dup_of", lit(null).cast("long")), reason)
+    val haveState = prologue(spark, stateDir, batchId, TextLayout.marker,
+      "curateIncrement")
+    val led = new LedgerBuilder("curateIncrement")
 
     // ---- stateless gates (the batch funnel's exprs verbatim) -----------
-    var input = graft.core.Ops.widen(batch)
-      .select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
+    var input = textCorpus(batch, idCol, textCol)
       .localCheckpoint(eager = true)
-    stage("ingest", input.count())
-    // effective Bloom dial: manual bits win; otherwise the auto
-    // decision from committed-state bytes vs batch rows (r16 #3)
-    val effBloomBits = cfg.stateBloomBits.orElse(
-      if (cfg.stateBloomAuto && haveState)
-        decideStateBloom(spark, stateDir, counts.head._2)
-      else None)
+    led.stage("ingest", input.count())
+    val run = Run(spark, stateDir, batchId, haveState,
+      bloomDial(spark, stateDir, haveState, cfg.stateBloomBits,
+        cfg.stateBloomAuto, led.ingested))
     if (cfg.c4Clean) {
       val pre = input
       input = Curation.c4Clean(input, "id", "text")
         .filter(col("keep"))
         .select(col("id"), col("cleaned_text").as("text"))
         .localCheckpoint(eager = true)
-      stage("c4_clean", input.count())
-      rejectAnti(pre, input, "c4")
+      led.stage("c4_clean", input.count())
+      led.rejectAnti(pre, input, "c4")
     }
     cfg.langIdModel.foreach(m => require(
       cfg.keepLangs.subsetOf(m.langs.toSet),
@@ -669,45 +939,39 @@ object Increment {
     var filtered = quality
       .select(col("id"), col("text"))
       .localCheckpoint(eager = true)
-    stage("quality", filtered.count())
-    rejectAnti(input, filtered, "quality")
-    for (rc <- cfg.repetition) {
+    led.stage("quality", filtered.count())
+    led.rejectAnti(input, filtered, "quality")
+    // a keep-by-id gate: the docs `keepIds` returns survive, the rest
+    // reject as `reason`
+    def gate(stageName: String, reason: String)(
+        keepIds: DataFrame => DataFrame): Unit = {
       val pre = filtered
-      filtered = pre.join(
-          TextStats.repetitionSignals(pre, "id", "text", rc)
-            .filter(col("rep_pass")).select(col("id")), Seq("id"))
+      filtered = pre.join(keepIds(pre), Seq("id"))
         .localCheckpoint(eager = true)
-      stage("repetition", filtered.count())
-      rejectAnti(pre, filtered, "repetition")
+      led.stage(stageName, filtered.count())
+      led.rejectAnti(pre, filtered, reason)
     }
+    for (rc <- cfg.repetition)
+      gate("repetition", "repetition")(pre =>
+        TextStats.repetitionSignals(pre, "id", "text", rc)
+          .filter(col("rep_pass")).select(col("id")))
     // ---- the funnel's external-model gates, in its stage order ---------
-    for (m <- classifierModel) {
-      val pre = filtered
-      filtered = pre.join(
-          graft.operators.Classifier.score(pre, "id", "text", m)
-            .filter(col("p_e6") >= cfg.minClassifierPE6)
-            .select(col("id")), Seq("id"))
-        .localCheckpoint(eager = true)
-      stage("classifier_gate", filtered.count())
-      rejectAnti(pre, filtered, "classifier")
-    }
+    for (m <- classifierModel)
+      gate("classifier_gate", "classifier")(pre =>
+        graft.operators.Classifier.score(pre, "id", "text", m)
+          .filter(col("p_e6") >= cfg.minClassifierPE6).select(col("id")))
     for (bound <- cfg.maxArpaE4; m <- arpaModel) {
-      val pre = filtered
       val tabs = TextStats.arpaTablesN(spark, m)
-      filtered = pre.join(
-          TextStats.arpaCrossEntropyN(pre, "id", "text", tabs, m.unkLp)
-            .filter(col("arpa_e4") <= bound)
-            .select(col("id")), Seq("id"))
-        .localCheckpoint(eager = true)
-      stage("arpa_gate", filtered.count())
-      rejectAnti(pre, filtered, "arpa")
+      gate("arpa_gate", "arpa")(pre =>
+        TextStats.arpaCrossEntropyN(pre, "id", "text", tabs, m.unkLp)
+          .filter(col("arpa_e4") <= bound).select(col("id")))
     }
     // ---- optional intra-doc line dedup (rewrite, never a reject) --------
     if (cfg.dedupLinesWithinDocs) {
       filtered = Curation.dedupLines(filtered, "id", "text")
         .select(col("id"), col("cleaned_text").as("text"))
         .localCheckpoint(eager = true)
-      stage("line_dedup", filtered.count())
+      led.stage("line_dedup", filtered.count())
     }
 
     // ---- optional SUBSTRING-DEDUP stage (the funnel's window_dedup,
@@ -719,7 +983,7 @@ object Increment {
       val claims =
         if (!haveState) None
         else Some(readWindowClaims(spark, stateDir, batchId,
-          effBloomBits.map(m =>
+          run.bloomBits.map(m =>
             (Curation.windowClaims(filtered, "id", "text", w)
               .select("h"), m))))
       val cleaned = claims match {
@@ -732,11 +996,11 @@ object Increment {
       filtered = cleaned
         .select(col("id"), col("cleaned_text").as("text"))
         .localCheckpoint(eager = true)
-      stage("window_dedup", filtered.count())
+      led.stage("window_dedup", filtered.count())
     }
 
     // ---- exact dedup: against state, then within batch -----------------
-    val hashed = filtered.withColumn("__h", md5(col("text")))
+    val hashed = filtered.withColumn("__md5", md5(col("text")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // ONE shared filter-build pass for the exact-key AND band-key
     // prunes (r16 #3's amortization): both key sets derive from the
@@ -746,7 +1010,7 @@ object Increment {
     // conservative-correct. The window-claims filter above cannot
     // join this pass (its keys hash the PRE-rewrite text).
     val sharedFilters: Option[(Map[String, Array[Long]], Long)] =
-      effBloomBits.filter(_ => haveState).map { m =>
+      run.bloomBits.filter(_ => haveState).map { m =>
         val (sb, srp) = Dedup.readMinhashMeta(spark,
           s"$stateDir/minhash")
         // normalizeWords PROJECTED as its own attribute before the
@@ -756,37 +1020,20 @@ object Increment {
         // would re-evaluate the normalization per shingle element —
         // the O(len²)-per-row trap shingleSets documents
         val keyed = hashed
-          .select(col("__h"), Dedup.normalizeWords(col("text")).as("__w"))
-          .select(array(col("__h")).as("__ek"),
+          .select(col("__md5"), Dedup.normalizeWords(col("text")).as("__w"))
+          .select(array(col("__md5")).as("__ek"),
             Dedup.shingleHashes(Dedup.shingles3(col("__w"))).as("__hv"))
           .select(col("__ek"),
             Dedup.bandKeyArrayFromHv(col("__hv"), sb, srp).as("__bk"))
         (graft.core.Bloom.buildMany(keyed,
           Seq("exact" -> col("__ek"), "bands" -> col("__bk")), m), m)
       }
-    val afterExact =
-      if (!haveState) hashed
-      else {
-        val stateKeys = readExactKeys(spark, stateDir, batchId,
-          prebuilt = sharedFilters.map { case (fm, m) =>
-            (fm("exact"), m) })
-        val hits = hashed.join(
-            stateKeys.select(col("key").as("__h"),
-              col("id").as("__dup_of")), Seq("__h"))
-          .localCheckpoint(eager = true)
-        rejectPiece(hits.select(col("id"), col("__dup_of")), "exact_dup")
-        hashed.join(hits.select("id"), Seq("id"), "left_anti")
-      }
-    val keptH = graft.core.Ops
-      .latestPerGroup(afterExact, Seq("__h"), Seq(col("id").asc))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    rejectPiece(afterExact.select(col("id"), col("__h"))
-      .join(keptH.select(col("__h"), col("id").as("__dup_of")), Seq("__h"))
-      .filter(col("id") =!= col("__dup_of"))
-      .select(col("id"), col("__dup_of")), "exact_dup")
-    val kept = keptH.drop("__h").localCheckpoint(eager = true)
-    stage("exact_dedup", kept.count())
-    hashed.unpersist(); keptH.unpersist()
+    val kept = exactDedup(led, run, TextLayout.marker, hashed,
+        keys => sharedFilters.fold(keys) { case (fm, m) =>
+          graft.core.Bloom.pruneByFilter(keys, col("key"), fm("exact"), m)
+        })
+      .drop("__md5")
+    hashed.unpersist()
 
     // ---- near-dup: against state (min old parent), then within batch ---
     val afterOld =
@@ -795,112 +1042,32 @@ object Increment {
         val pairsM = Dedup.nearDupAgainstIndex(spark,
           s"$stateDir/minhash", kept, "id", "text",
           excludeBatch = Some(batchId),
-          bloomBits = effBloomBits,
+          bloomBits = run.bloomBits,
           bandFilter = sharedFilters.map(_._1("bands")))
-        val hits = pairsM.df
-          .filter(col("jacc_e4") >= cfg.nearDupThresholdE4)
-          .groupBy("id_new").agg(min(col("id_old")).as("__dup_of"))
-          .select(col("id_new").as("id"), col("__dup_of"))
-          .localCheckpoint(eager = true)
-        pairsM.close()
-        rejectPiece(hits, "near_dup")
-        kept.join(hits.select("id"), Seq("id"), "left_anti")
-          .localCheckpoint(eager = true)
+        led.dropMatches(kept,
+          pairsM.df.filter(col("jacc_e4") >= cfg.nearDupThresholdE4),
+          "near_dup", () => pairsM.close())
       }
     val (pairsM, bandRows) =
       Dedup.minhashNearDupPairsBanded(afterOld, "id", "text")
-    val edges = pairsM.df.filter(col("jacc_e4") >= cfg.nearDupThresholdE4)
-    val compM = Dedup.connectedComponentsManaged(edges)
-    val victims = compM.df.filter(col("id") =!= col("label"))
-      .select(col("id"), col("label").as("__dup_of"))
-      .localCheckpoint(eager = true)
     // band-bucket skew metric (VERDICT r17 #7): the hottest LSH bucket
     // population among the batch's own band rows — read off the pairs
-    // job's already-persisted bands before close(), one cheap
-    // aggregate, no plan change. A mass-duplicated boilerplate band
-    // shows here as max ≈ batch size BEFORE it skews a corpus-scale
-    // shuffle; the funnel-rate time series carries it per batch.
+    // job's persisted bands before close(), one cheap aggregate, no
+    // plan change. A mass-duplicated boilerplate band shows here as
+    // max ≈ batch size BEFORE it skews a corpus-scale shuffle; the
+    // funnel-rate time series carries it per batch.
     val bandMax = Dedup.bandBucketStats(bandRows)
       .select(col("max_bucket")).head().getLong(0)
-    compM.close(); pairsM.close()
-    rejectPiece(victims, "near_dup")
-    val afterMh = afterOld
-      .join(victims.select("id"), Seq("id"), "left_anti")
-      .localCheckpoint(eager = true)
-    stage("near_dup", afterMh.count())
-    stage("band_bucket_max", bandMax)
+    val afterMh = led.dropComponents(afterOld,
+      pairsM.df.filter(col("jacc_e4") >= cfg.nearDupThresholdE4),
+      "near_dup", () => pairsM.close())
+    led.stage("near_dup", afterMh.count())
+    led.stage("band_bucket_max", bandMax)
 
-    // ---- optional SEMANTIC stage (the batch funnel's sem_dup gate) ------
-    // against the sem SUB-state (reads restricted to minhash-committed
-    // batches — the increment's one authoritative marker), then within
-    // batch over the frozen centroid set
-    val semPieces = cfg.semDedupThresholdE4.map { th =>
-      val semDir = s"$stateDir/sem"
-      // the sem sub-state counts as existing only when the AUTHORITATIVE
-      // minhash marker does too: a first increment that died between its
-      // sem write and its minhash marker must RE-BOOTSTRAP on retry
-      // (static overwrite replaces the torn sem partitions) — reading
-      // the torn sub-state would crash on the missing minhash path
-      val haveSem = haveState && semStateExists(spark, stateDir)
-      // dial consistency: an existing sem sub-state PINS its dials — the
-      // within-batch stage must use the same (centroid_every, nassign)
-      // [and dim] as the against-state reads, or a caller passing a
-      // different cfg would get silently inconsistent within-batch vs
-      // against-state recall (the banding path's loud-mismatch rule,
-      // applied here)
-      val (semCe, semNa) =
-        if (!haveSem) (cfg.semCentroidEvery, cfg.semNassign)
-        else {
-          val (ce, na, dim) = Curation.readSemMeta(spark, s"$stateDir/sem")
-          require(dim == 0 || dim == cfg.semDim,
-            s"curateIncrement: semDim ${cfg.semDim} != pinned sem " +
-              s"sub-state dim $dim at $stateDir/sem")
-          (ce, na)
-        }
-      val nonzero = TextStats.hashEmbedVectors(afterMh, "id", "text",
-          cfg.semDim)
-        .filter(expr("aggregate(v, 0D, (a, x) -> a + x * x)") > lit(0.0))
-        .localCheckpoint(eager = true)
-      val centroids =
-        if (haveSem)
-          spark.read.parquet(s"$semDir/centroids")
-            .select(col("cid").as("id"), col("cv").as("v"))
-        else Curation.semCentroidSample(nonzero.select("id", "v"),
-          semCe).localCheckpoint(eager = true)
-      val afterSemState =
-        if (!haveSem) afterMh
-        else {
-          val restrict = Dedup
-            .minhashCommitted(spark, s"$stateDir/minhash")
-          val hits = Curation.semNearDupAgainstIndex(spark, semDir,
-              nonzero.select("id", "v"), th,
-              excludeBatch = Some(batchId), restrictTo = Some(restrict),
-              bloomBits = effBloomBits)
-            .groupBy("id_new").agg(min(col("id_old")).as("__dup_of"))
-            .select(col("id_new").as("id"), col("__dup_of"))
-            .localCheckpoint(eager = true)
-          rejectPiece(hits, "sem_dup")
-          afterMh.join(hits.select("id"), Seq("id"), "left_anti")
-            .localCheckpoint(eager = true)
-        }
-      val survNonzero = nonzero
-        .join(afterSemState.select("id"), Seq("id"), "left_semi")
-      val pm = graft.operators.Similarity.ivfNearDupPairsManaged(
-        survNonzero.select("id", "v"), centroids, th / 10000.0,
-        semNa)
-      val cm = Dedup.connectedComponentsManaged(
-        pm.df.select("idA", "idB"))
-      val svict = cm.df.filter(col("id") =!= col("label"))
-        .select(col("id"), col("label").as("__dup_of"))
-        .localCheckpoint(eager = true)
-      cm.close(); pm.close()
-      rejectPiece(svict, "sem_dup")
-      val adm = afterSemState
-        .join(svict.select("id"), Seq("id"), "left_anti")
-        .localCheckpoint(eager = true)
-      stage("semantic", adm.count())
-      (adm, nonzero, centroids, haveSem)
-    }
+    val sem = cfg.semDedupThresholdE4.map(th =>
+      semanticStage(led, run, TextLayout.marker, afterMh, th, cfg.semDim,
+        s"semDim ${cfg.semDim}", cfg.semCentroidEvery, cfg.semNassign)(
+        TextStats.hashEmbedVectors(_, "id", "text", cfg.semDim)))
     // ---- benchmark decontamination (the funnel's terminal gate, same
     // position: after every dedup stage, before admission). Gram
     // source, in precedence order: the CALLER's benchmark frame when
@@ -910,16 +1077,16 @@ object Increment {
     // content the funnel rejected (r17 verdict #1; the q176-pinned gap,
     // now closed by default whenever the state carries the family).
     // Neither present = gate off.
-    val afterSem = semPieces.map(_._1).getOrElse(afterMh)
+    val afterSem = sem.fold(afterMh)(_.admitted)
     def gateDecontam(flags: DataFrame): DataFrame = {
       val clean = afterSem.join(
           flags.filter(!col("contaminated")).select(col("id")),
           Seq("id"))
         .localCheckpoint(eager = true)
-      rejectPiece(flags.filter(col("contaminated")).select(col("id"))
+      led.reject(flags.filter(col("contaminated")).select(col("id"))
         .withColumn("__dup_of", lit(null).cast("long")),
         "decontaminated")
-      stage("decontaminated", clean.count())
+      led.stage("decontaminated", clean.count())
       clean
     }
     val admitted = benchmark match {
@@ -934,47 +1101,18 @@ object Increment {
               "id", "text", grams, n))
         }
     }
-    led += admitted.select(col("id"), lit(true).as("admitted"),
-        lit("admitted").as("reason"), col("id").as("dup_of"))
-      .localCheckpoint(eager = true)
+    val ledger = led.admit(admitted)
 
-    // ---- persist: keys → ledger → metrics → (sem sub-state) →
-    // minhash META (the marker, LAST) --------------------------------------
-    val ledger = led.reduce(_ unionByName _)
-      .select(col("id"), col("admitted"), col("reason"), col("dup_of"))
-      .localCheckpoint(eager = true)
-    // one ledger row per input doc — loud, not assumed
-    val nLed = ledger.count()
-    val nIn = counts.head._2
-    require(nLed == nIn,
-      s"curateIncrement: ledger rows $nLed != batch docs $nIn")
-    def writer(df: DataFrame, path: String): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic").parquet(path)
-    if (haveState || admitted.head(1).nonEmpty) {
-      writeExactKeys(admitted, s"$stateDir/exact", batchId)
-      writer(ledger, s"$stateDir/ledger")
-      writer(counts.toSeq.toDF("stage", "rows"), s"$stateDir/metrics")
-      semPieces.foreach { case (_, nonzero, centroids, haveSem) =>
-        // semi-join the FINAL admitted set, not the sem stage's: a doc
-        // decontaminated after sem must not leave vectors in the state
-        val admNonzero = nonzero
-          .join(admitted.select("id"), Seq("id"), "left_semi")
-          .select("id", "v")
-        if (haveSem)
-          Curation.appendSemVectors(spark, s"$stateDir/sem", admNonzero,
-            batchId)
-        else
-          Curation.writeSemIndex(admNonzero, centroids, s"$stateDir/sem",
-            cfg.semCentroidEvery, cfg.semNassign, batchId)
-      }
+    // ---- persist: keys → ledger → metrics → (sem sub-state) → window
+    // claims → minhash META (the marker, LAST) ---------------------------
+    commit(run, admitted, admitted.select(md5(col("text")).as("key"),
+        col("id")), ledger, led.stageCounts, sem) {
       // window claims of the admitted docs' FINAL text — exactly the
       // content entering the corpus; lands BEFORE the minhash marker
       // (same dynamic-partition retry contract as every state table)
       for (w <- cfg.dedupWindowsW)
-        writer(Curation.windowClaims(admitted, "id", "text", w),
-          s"$stateDir/windows")
+        writeBatch(Curation.windowClaims(admitted, "id", "text", w),
+          s"$stateDir/windows", batchId)
       if (haveState)
         Dedup.appendToMinhashIndex(spark, s"$stateDir/minhash", admitted,
           "id", "text", batchId)
@@ -983,7 +1121,7 @@ object Increment {
           s"$stateDir/minhash", cfg.bands, cfg.rowsPerBand,
           overwrite = true, batchId = batchId)
     }
-    IncrementResult(ledger, admitted, counts.toSeq)
+    IncrementResult(ledger, admitted, led.stageCounts)
   }
 
   /** The committed per-batch verdict ledger (batch_id, id, admitted,
@@ -999,35 +1137,32 @@ object Increment {
     committedTable(spark, stateDir, "metrics")
 
   /** A state table restricted to committed batches — the commit-marker
-    * index is whichever modality's lives here (text: minhash meta;
-    * image: phash meta; audio: audio meta; video: video meta).
+    * index is whichever family's lives here (text: minhash meta;
+    * image: phash meta; audio: audio meta; video: video meta;
+    * embedding: sem meta).
     */
   private def committedTable(spark: SparkSession, stateDir: String,
                              sub: String): DataFrame = {
-    val f = fs(spark, stateDir)
-    val marker = readFamilySentinel(spark, stateDir) match {
+    val marker = stateFamily(spark, stateDir) match {
       case Some(fam) =>
         // the sentinel names the authoritative family; its meta absent
         // means NOTHING is committed yet (a torn bootstrap) — serve the
         // empty committed set, never another family's marker
-        val p = s"$stateDir/$fam/meta"
-        if (f.exists(new org.apache.hadoop.fs.Path(p))) Some(p) else None
+        Some(fam).filter(markerExists(spark, stateDir, _))
       case None =>
         // legacy states (pre-sentinel): marker-discovery order
-        Some(Seq("minhash", "phash", "audio", "video", "sem")
-          .map(m => s"$stateDir/$m/meta")
-          .find(p => f.exists(new org.apache.hadoop.fs.Path(p)))
+        Some(Layouts.map(_.marker)
+          .find(markerExists(spark, stateDir, _))
           .getOrElse(throw new IllegalStateException(
-            s"no increment state (minhash/phash/audio/video/sem meta) " +
-              s"at $stateDir")))
+            s"no increment state (" +
+              Layouts.map(_.marker).mkString("/") + s" meta) at $stateDir")))
     }
     val tbl = spark.read.parquet(s"$stateDir/$sub")
     marker match {
       case None => tbl.limit(0)
       case Some(m) =>
-        val committed = spark.read.parquet(m)
-          .select("batch_id").distinct()
-        tbl.join(broadcast(committed), Seq("batch_id"), "left_semi")
+        tbl.join(broadcast(committedBatches(spark, stateDir, m)),
+          Seq("batch_id"), "left_semi")
     }
   }
 
@@ -1061,442 +1196,7 @@ object Increment {
 
   /** Image state exists iff the pHash index has a meta commit marker. */
   def imageStateExists(spark: SparkSession, stateDir: String): Boolean =
-    fs(spark, stateDir).exists(
-      new org.apache.hadoop.fs.Path(s"$stateDir/phash/meta"))
-
-  /** Seed image state from an ALREADY-CURATED media corpus: exact
-    * payload-md5 keys + pHash index under batch id "base" (undecodable
-    * payloads excluded — they can never pair), plus the sem sub-state
-    * when `cfg` enables the semantic stage.
-    */
-  def initImageStateFromCurated(spark: SparkSession, stateDir: String,
-                                curated: org.apache.spark.sql.Dataset[
-                                  graft.operators.Multimodal.MediaRecord],
-                                cfg: ImageIncrementConfig =
-                                  ImageIncrementConfig()): Unit = {
-    require(!imageStateExists(spark, stateDir),
-      s"initImageStateFromCurated: state already exists at $stateDir")
-    writeFamilySentinel(spark, stateDir, "phash")
-    val hashed = hashAndSign(curated, cfg.maxPixels)
-      .filter(col("phash") =!= -1L)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      writeExactKeyRows(hashed.select(col("__md5").as("key"), col("id")),
-        s"$stateDir/exact", "base")
-      for (_ <- cfg.semDedupThresholdE4) {
-        val nonzero = graft.operators.Multimodal
-          .imageEmbeddings(curated, cfg.semGrid,
-            maxPixels = cfg.maxPixels)
-          .filter(expr("aggregate(v, 0D, (a, x) -> a + x * x)") >
-            lit(0.0))
-          .localCheckpoint(eager = true)
-        Curation.writeSemIndex(nonzero,
-          Curation.semCentroidSample(nonzero, cfg.semCentroidEvery),
-          s"$stateDir/sem", cfg.semCentroidEvery, cfg.semNassign, "base")
-      }
-      // pHash index LAST — its meta is the family marker
-      graft.operators.Multimodal.writePhashIndex(curated,
-        s"$stateDir/phash", cfg.nBands)
-    } finally hashed.unpersist()
-  }
-
-  /** Seed AUDIO state from an ALREADY-CURATED media corpus — the audio
-    * member of the [[initStateFromCurated]] family (r16 verdict #2's
-    * "generalize"): exact payload-md5 keys + fingerprint index under
-    * batch id "base" (unprintable clips excluded — they can never
-    * pair), plus the sem sub-state when the config enables the
-    * semantic stage, so the first [[curateAudioIncrement]] against the
-    * seeded root dedups semantically against the full history. The
-    * caller asserts the corpus is internally deduplicated.
-    */
-  def initAudioStateFromCurated(spark: SparkSession, stateDir: String,
-                                curated: org.apache.spark.sql.Dataset[
-                                  graft.operators.Multimodal.MediaRecord],
-                                cfg: AudioIncrementConfig =
-                                  AudioIncrementConfig()): Unit = {
-    import spark.implicits._
-    require(!audioStateExists(spark, stateDir),
-      s"initAudioStateFromCurated: state already exists at $stateDir")
-    writeFamilySentinel(spark, stateDir, "audio")
-    val printable = graft.operators.Multimodal
-      .audioFingerprints(curated, cfg.windowFrames, cfg.k, cfg.stride,
-        cfg.quantE4).toDF()
-      .select(col("media_id").as("id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val keys = curated.mapPartitions { it =>
-          val dg = java.security.MessageDigest.getInstance("MD5")
-          it.map { r =>
-            dg.reset()
-            (r.media_id,
-              dg.digest(r.media).map(b => f"${b & 0xff}%02x").mkString)
-          }
-        }.toDF("id", "key")
-        .join(printable, Seq("id"), "left_semi")
-      writeExactKeyRows(keys.select(col("key"), col("id")),
-        s"$stateDir/exact", "base")
-      for (_ <- cfg.semDedupThresholdE4) {
-        val nonzero = graft.operators.Multimodal
-          .audioEmbeddings(curated, cfg.semDim, cfg.windowFrames)
-          .filter(expr("aggregate(v, 0D, (a, x) -> a + x * x)") >
-            lit(0.0))
-          .localCheckpoint(eager = true)
-        Curation.writeSemIndex(nonzero,
-          Curation.semCentroidSample(nonzero, cfg.semCentroidEvery),
-          s"$stateDir/sem", cfg.semCentroidEvery, cfg.semNassign, "base")
-      }
-      // fingerprint index LAST — its meta is the family marker
-      graft.operators.Multimodal.writeAudioIndex(curated,
-        s"$stateDir/audio", cfg.windowFrames, cfg.k, cfg.stride,
-        cfg.quantE4)
-    } finally printable.unpersist()
-  }
-
-  /** Seed VIDEO state from an ALREADY-CURATED media corpus — the video
-    * member of the [[initStateFromCurated]] family: exact payload-md5
-    * keys + keyframe index under batch id "base" (frameless clips
-    * excluded), plus the sem sub-state when enabled.
-    */
-  def initVideoStateFromCurated(spark: SparkSession, stateDir: String,
-                                curated: org.apache.spark.sql.Dataset[
-                                  graft.operators.Multimodal.MediaRecord],
-                                cfg: VideoIncrementConfig =
-                                  VideoIncrementConfig()): Unit = {
-    import spark.implicits._
-    require(!videoStateExists(spark, stateDir),
-      s"initVideoStateFromCurated: state already exists at $stateDir")
-    writeFamilySentinel(spark, stateDir, "video")
-    val framed = graft.operators.Multimodal.videoKeyframePhash(curated)
-      .toDF()
-      .filter(col("phash") =!= -1L && col("frame_idx") >= 0L)
-      .select(col("media_id").as("id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val keys = curated.mapPartitions { it =>
-          val dg = java.security.MessageDigest.getInstance("MD5")
-          it.map { r =>
-            dg.reset()
-            (r.media_id,
-              dg.digest(r.media).map(b => f"${b & 0xff}%02x").mkString)
-          }
-        }.toDF("id", "key")
-        .join(framed, Seq("id"), "left_semi")
-      writeExactKeyRows(keys.select(col("key"), col("id")),
-        s"$stateDir/exact", "base")
-      for (_ <- cfg.semDedupThresholdE4) {
-        val nonzero = graft.operators.Multimodal
-          .videoEmbeddings(curated, cfg.semGrid)
-          .filter(expr("aggregate(v, 0D, (a, x) -> a + x * x)") >
-            lit(0.0))
-          .localCheckpoint(eager = true)
-        Curation.writeSemIndex(nonzero,
-          Curation.semCentroidSample(nonzero, cfg.semCentroidEvery),
-          s"$stateDir/sem", cfg.semCentroidEvery, cfg.semNassign, "base")
-      }
-      // keyframe index LAST — its meta is the family marker
-      graft.operators.Multimodal.writeVideoIndex(curated,
-        s"$stateDir/video", cfg.nBands)
-    } finally framed.unpersist()
-  }
-
-  /** Seed EMBEDDING state from an ALREADY-CURATED (id, v) corpus — the
-    * semantic member of the [[initStateFromCurated]] family: e6
-    * fixed-point exact keys + the sem index (centroids drawn by the
-    * replayable md5 rule from the corpus's non-zero vectors, pinned
-    * for every later [[curateEmbeddingIncrement]]) under batch "base".
-    */
-  def initSemStateFromCurated(spark: SparkSession, stateDir: String,
-                              curated: DataFrame,
-                              cfg: EmbeddingIncrementConfig =
-                                EmbeddingIncrementConfig()): Unit = {
-    require(!semStateExists(spark, stateDir),
-      s"initSemStateFromCurated: state already exists at $stateDir")
-    writeFamilySentinel(spark, stateDir, "sem")
-    val keyed = graft.core.Ops.widen(curated)
-      .select(col("id").cast("long").as("id"), col("v"))
-      .withColumn("__md5", md5(concat_ws(",",
-        transform(col("v"),
-          x => graft.core.Ops.fixedPoint(x, 6).cast("string")))))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      writeExactKeyRows(
-        keyed.select(col("__md5").as("key"), col("id")),
-        s"$stateDir/exact", "base")
-      val nonzero = keyed
-        .filter(expr("aggregate(v, 0D, (a, x) -> a + x * x)") > lit(0.0))
-        .select("id", "v")
-        .localCheckpoint(eager = true)
-      // sem index LAST — its meta is the family marker
-      Curation.writeSemIndex(nonzero,
-        Curation.semCentroidSample(nonzero, cfg.centroidEvery),
-        s"$stateDir/sem", cfg.centroidEvery, cfg.nassign, "base")
-    } finally keyed.unpersist()
-  }
-
-  /** One decode pass: (id, __md5 of payload bytes, phash). */
-  private def hashAndSign(media: org.apache.spark.sql.Dataset[
-      graft.operators.Multimodal.MediaRecord], maxPixels: Long)
-      : DataFrame = {
-    val sess = media.sparkSession
-    import sess.implicits._
-    media.mapPartitions { it =>
-        val d = java.security.MessageDigest.getInstance("MD5")
-        it.map { r =>
-          d.reset()
-          (r.media_id,
-            d.digest(r.media).map(b => f"${b & 0xff}%02x").mkString)
-        }
-      }.toDF("id", "__md5")
-      .join(graft.operators.Multimodal
-          .imagePHash(media, maxPixels = maxPixels).toDF()
-          .select(col("media_id").as("id"), col("phash")),
-        Seq("id"))
-  }
-
-  /** The image increment: a new media batch curated against the
-    * accumulated pHash + exact-payload state — decode ONCE, verdicts in
-    * the [[CurateImages.run]] order (undecodable → exact vs state →
-    * exact within batch → pHash near-dup vs state with min-old-parent →
-    * within-batch components), admitted signatures appended under
-    * `batchId` with the pHash META partition as the increment's commit
-    * marker (keys/ledger/metrics commit before it). Retry contract and
-    * torn-increment invisibility as in [[curateIncrement]].
-    */
-  def curateImageIncrement(batch: org.apache.spark.sql.Dataset[
-        graft.operators.Multimodal.MediaRecord],
-      stateDir: String, batchId: String,
-      cfg: ImageIncrementConfig = ImageIncrementConfig())
-      : IncrementResult = {
-    require(batchId.nonEmpty && batchId != "base" &&
-        batchId != "__HIVE_DEFAULT_PARTITION__",
-      s"curateImageIncrement: invalid batch id '$batchId'")
-    val spark = batch.sparkSession
-    requireBatchNotFolded(spark, stateDir, batchId, "curateImageIncrement")
-    import spark.implicits._
-    writeFamilySentinel(spark, stateDir, "phash")
-    val haveState = imageStateExists(spark, stateDir)
-    val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val led = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def stage(name: String, c: Long): Unit = counts += ((name, c))
-    def rejectPiece(ids: DataFrame, reason: String): Unit =
-      led += ids.select(col("id").cast("long").as("id"),
-          lit(false).as("admitted"), lit(reason).as("reason"),
-          coalesce(col("__dup_of"), col("id")).cast("long").as("dup_of"))
-        .localCheckpoint(eager = true)
-
-    val hashed = hashAndSign(batch, cfg.maxPixels)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    stage("ingest", hashed.count())
-    // effective Bloom dial (manual bits win; see IncrementConfig)
-    val effBloomBits = cfg.stateBloomBits.orElse(
-      if (cfg.stateBloomAuto && haveState)
-        decideStateBloom(spark, stateDir, counts.head._2)
-      else None)
-    rejectPiece(hashed.filter(col("phash") === -1L)
-      .select(col("id"), lit(null).cast("long").as("__dup_of")),
-      "undecodable")
-    val decoded = hashed.filter(col("phash") =!= -1L)
-    stage("decode", decoded.count())
-
-    // exact payload dedup: against state, then within batch
-    val afterExactState =
-      if (!haveState) decoded
-      else {
-        val stateKeys = readImageExactKeys(spark, stateDir, batchId,
-          effBloomBits.map(m => (decoded.select("__md5"), m)))
-        val hits = decoded.join(
-            stateKeys.select(col("key").as("__md5"),
-              col("id").as("__dup_of")), Seq("__md5"))
-          .localCheckpoint(eager = true)
-        rejectPiece(hits.select(col("id"), col("__dup_of")), "exact_dup")
-        decoded.join(hits.select("id"), Seq("id"), "left_anti")
-      }
-    val keeper = afterExactState.groupBy("__md5")
-      .agg(min(col("id")).as("__keep"))
-    val withKeep = afterExactState.join(keeper, Seq("__md5"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    rejectPiece(withKeep.filter(col("id") =!= col("__keep"))
-      .select(col("id"), col("__keep").as("__dup_of")), "exact_dup")
-    val exact = withKeep.filter(col("id") === col("__keep"))
-      .select("id", "__md5", "phash").localCheckpoint(eager = true)
-    stage("exact_dedup", exact.count())
-    hashed.unpersist(); withKeep.unpersist()
-
-    // pHash near-dup: against state (min old parent), then within batch
-    val afterOld =
-      if (!haveState) exact
-      else {
-        val hits = graft.operators.Multimodal
-          .phashSigsNearDupAgainstIndex(spark, s"$stateDir/phash",
-            exact.select(col("id").as("id_new"), col("phash")),
-            cfg.maxHamming, excludeBatch = Some(batchId),
-            bloomBits = effBloomBits)
-          .groupBy("id_new").agg(min(col("id_old")).as("__dup_of"))
-          .select(col("id_new").as("id"), col("__dup_of"))
-          .localCheckpoint(eager = true)
-        rejectPiece(hits, "near_dup")
-        exact.join(hits.select("id"), Seq("id"), "left_anti")
-          .localCheckpoint(eager = true)
-      }
-    val pairsM = graft.operators.Multimodal.phashBandNearDupPairsOf(
-      afterOld.select(col("id").as("media_id"), col("phash").as("ahash")),
-      cfg.maxHamming, cfg.nBands)
-    val compM = Dedup.connectedComponentsManaged(
-      pairsM.df.select(col("idA"), col("idB")))
-    val victims = compM.df.filter(col("id") =!= col("label"))
-      .select(col("id"), col("label").as("__dup_of"))
-      .localCheckpoint(eager = true)
-    compM.close(); pairsM.close()
-    rejectPiece(victims, "near_dup")
-    val afterMh = afterOld
-      .join(victims.select("id"), Seq("id"), "left_anti")
-      .localCheckpoint(eager = true)
-    stage("near_dup", afterMh.count())
-
-    // ---- optional SEMANTIC stage: SemDeDup over block-mean embeddings
-    // against a sem SUB-state (reads restricted to pHash-committed
-    // batches — the increment's one authoritative marker), then within
-    // batch — the text increment's sem pattern, image modality
-    val semPieces = cfg.semDedupThresholdE4.map { th =>
-      val semDir = s"$stateDir/sem"
-      val haveSem = haveState && fs(spark, stateDir).exists(
-        new org.apache.hadoop.fs.Path(s"$semDir/meta"))
-      val dim = cfg.semGrid * cfg.semGrid
-      val (semCe, semNa) =
-        if (!haveSem) (cfg.semCentroidEvery, cfg.semNassign)
-        else {
-          val (ce, na, pdim) = Curation.readSemMeta(spark, semDir)
-          require(pdim == 0 || pdim == dim,
-            s"curateImageIncrement: semGrid ${cfg.semGrid} (dim $dim) " +
-              s"!= pinned sem sub-state dim $pdim at $semDir")
-          (ce, na)
-        }
-      // embed ONLY the surviving pool (never re-decode rejects)
-      val survRecs = batch.toDF()
-        .join(afterMh.select(col("id").as("media_id")), Seq("media_id"),
-          "left_semi")
-        .as[graft.operators.Multimodal.MediaRecord]
-      val nonzero = graft.operators.Multimodal
-        .imageEmbeddings(survRecs, cfg.semGrid, maxPixels = cfg.maxPixels)
-        .filter(expr("aggregate(v, 0D, (a, x) -> a + x * x)") > lit(0.0))
-        .localCheckpoint(eager = true)
-      val centroids =
-        if (haveSem)
-          spark.read.parquet(s"$semDir/centroids")
-            .select(col("cid").as("id"), col("cv").as("v"))
-        else Curation.semCentroidSample(nonzero.select("id", "v"),
-          semCe).localCheckpoint(eager = true)
-      val afterSemState =
-        if (!haveSem) afterMh
-        else {
-          val restrict = spark.read.parquet(s"$stateDir/phash/meta")
-            .select("batch_id").distinct()
-          val hits = Curation.semNearDupAgainstIndex(spark, semDir,
-              nonzero.select("id", "v"), th,
-              excludeBatch = Some(batchId), restrictTo = Some(restrict),
-              bloomBits = effBloomBits)
-            .groupBy("id_new").agg(min(col("id_old")).as("__dup_of"))
-            .select(col("id_new").as("id"), col("__dup_of"))
-            .localCheckpoint(eager = true)
-          rejectPiece(hits, "sem_dup")
-          afterMh.join(hits.select("id"), Seq("id"), "left_anti")
-            .localCheckpoint(eager = true)
-        }
-      val survNonzero = nonzero
-        .join(afterSemState.select("id"), Seq("id"), "left_semi")
-      val pm = graft.operators.Similarity.ivfNearDupPairsManaged(
-        survNonzero.select("id", "v"), centroids, th / 10000.0, semNa)
-      val cm = Dedup.connectedComponentsManaged(
-        pm.df.select("idA", "idB"))
-      val svict = cm.df.filter(col("id") =!= col("label"))
-        .select(col("id"), col("label").as("__dup_of"))
-        .localCheckpoint(eager = true)
-      cm.close(); pm.close()
-      rejectPiece(svict, "sem_dup")
-      val adm = afterSemState
-        .join(svict.select("id"), Seq("id"), "left_anti")
-        .localCheckpoint(eager = true)
-      stage("semantic", adm.count())
-      (adm, nonzero, centroids, haveSem)
-    }
-    val admitted = semPieces.map(_._1).getOrElse(afterMh)
-    led += admitted.select(col("id"), lit(true).as("admitted"),
-        lit("admitted").as("reason"), col("id").as("dup_of"))
-      .localCheckpoint(eager = true)
-
-    // persist: keys → ledger → metrics → (sem sub-state) →
-    // pHash META (the marker)
-    val ledger = led.reduce(_ unionByName _)
-      .select(col("id"), col("admitted"), col("reason"), col("dup_of"))
-      .localCheckpoint(eager = true)
-    val nLed = ledger.count()
-    require(nLed == counts.head._2,
-      s"curateImageIncrement: ledger rows $nLed != batch ${counts.head._2}")
-    def writer(df: DataFrame, path: String): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic").parquet(path)
-    if (haveState || admitted.head(1).nonEmpty) {
-      writeExactKeyRows(admitted.select(col("__md5").as("key"), col("id")),
-        s"$stateDir/exact", batchId)
-      writer(ledger, s"$stateDir/ledger")
-      writer(counts.toSeq.toDF("stage", "rows"), s"$stateDir/metrics")
-      semPieces.foreach { case (_, nonzero, centroids, haveSem) =>
-        val admNonzero = nonzero
-          .join(admitted.select("id"), Seq("id"), "left_semi")
-          .select("id", "v")
-        if (haveSem)
-          Curation.appendSemVectors(spark, s"$stateDir/sem", admNonzero,
-            batchId)
-        else
-          Curation.writeSemIndex(admNonzero, centroids, s"$stateDir/sem",
-            cfg.semCentroidEvery, cfg.semNassign, batchId)
-      }
-      if (haveState)
-        graft.operators.Multimodal.appendPhashSigs(spark,
-          s"$stateDir/phash", admitted.select("id", "phash"), batchId)
-      else
-        // bootstrap: the batch's admitted signatures become the index,
-        // stored under this batch id (static overwrite — fresh state)
-        graft.operators.Multimodal.writePhashSigIndex(spark,
-          admitted.select("id", "phash"), s"$stateDir/phash", cfg.nBands,
-          batchId)
-    }
-    IncrementResult(ledger, admitted.select("id", "phash"), counts.toSeq)
-  }
-
-  /** Committed image exact keys, excluding `excludeBatch` — the
-    * committed set is the pHash meta's.
-    */
-  private def readImageExactKeys(spark: SparkSession, stateDir: String,
-                                 excludeBatch: String,
-                                 batchHashes: Option[(DataFrame, Long)] =
-                                   None): DataFrame =
-    readMarkedExactKeys(spark, stateDir, "phash", excludeBatch,
-      batchHashes)
-
-  private def readMarkedExactKeys(spark: SparkSession, stateDir: String,
-                                  markerSub: String,
-                                  excludeBatch: String,
-                                  batchHashes: Option[(DataFrame, Long)] =
-                                    None): DataFrame = {
-    val committed = spark.read.parquet(s"$stateDir/$markerSub/meta")
-      .select("batch_id").distinct()
-      .filter(col("batch_id") =!= excludeBatch)
-    val keys = spark.read.parquet(s"$stateDir/exact/keys")
-    // see readExactKeys: pruning whole keys the batch cannot carry
-    // leaves surviving keys' min(id) unchanged
-    val pruned = batchHashes match {
-      case Some((b, m)) => bloomPrune(keys, col("key"), b, col("__md5"),
-        Some(m))
-      case None => keys
-    }
-    pruned
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
-      .groupBy("key").agg(min(col("id")).as("id"))
-  }
-
-  // ---- the AUDIO twin: batch vs persisted fingerprint + exact state ------
+    markerExists(spark, stateDir, ImageLayout.marker)
 
   /** The audio gate dials ([[graft.operators.Multimodal
     * .audioNearDupPairs]] parameters).
@@ -1530,253 +1230,7 @@ object Increment {
 
   /** Audio state exists iff the fingerprint index has its meta marker. */
   def audioStateExists(spark: SparkSession, stateDir: String): Boolean =
-    fs(spark, stateDir).exists(
-      new org.apache.hadoop.fs.Path(s"$stateDir/audio/meta"))
-
-  /** The audio increment — the third modality twin of
-    * [[curateIncrement]]/[[curateImageIncrement]]: decode + fingerprint
-    * ONCE, verdict order no_fingerprint (undecodable or shorter than
-    * k+1 windows — such clips can never pair) → exact payload key vs
-    * state then within batch → fingerprint near-dup vs committed state
-    * with min-old-parent → within-batch pairs + components; admitted
-    * fingerprints append under `batchId` with the audio META partition
-    * as the increment's commit marker. Retry/torn contracts as in the
-    * siblings.
-    */
-  def curateAudioIncrement(batch: org.apache.spark.sql.Dataset[
-        graft.operators.Multimodal.MediaRecord],
-      stateDir: String, batchId: String,
-      cfg: AudioIncrementConfig = AudioIncrementConfig())
-      : IncrementResult = {
-    require(batchId.nonEmpty && batchId != "base" &&
-        batchId != "__HIVE_DEFAULT_PARTITION__",
-      s"curateAudioIncrement: invalid batch id '$batchId'")
-    val spark = batch.sparkSession
-    requireBatchNotFolded(spark, stateDir, batchId, "curateAudioIncrement")
-    import spark.implicits._
-    writeFamilySentinel(spark, stateDir, "audio")
-    val haveState = audioStateExists(spark, stateDir)
-    val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val led = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def stage(name: String, c: Long): Unit = counts += ((name, c))
-    def rejectPiece(ids: DataFrame, reason: String): Unit =
-      led += ids.select(col("id").cast("long").as("id"),
-          lit(false).as("admitted"), lit(reason).as("reason"),
-          coalesce(col("__dup_of"), col("id")).cast("long").as("dup_of"))
-        .localCheckpoint(eager = true)
-
-    // one pass over payload bytes: md5 key + fingerprints
-    val keys = batch.mapPartitions { it =>
-        val d = java.security.MessageDigest.getInstance("MD5")
-        it.map { r =>
-          d.reset()
-          (r.media_id,
-            d.digest(r.media).map(b => f"${b & 0xff}%02x").mkString)
-        }
-      }.toDF("id", "__md5").localCheckpoint(eager = true)
-    stage("ingest", keys.count())
-    // effective Bloom dial (manual bits win; see IncrementConfig)
-    val effBloomBits = cfg.stateBloomBits.orElse(
-      if (cfg.stateBloomAuto && haveState)
-        decideStateBloom(spark, stateDir, counts.head._2)
-      else None)
-    val fps = graft.operators.Multimodal
-      .audioFingerprints(batch, cfg.windowFrames, cfg.k, cfg.stride,
-        cfg.quantE4).toDF()
-      .select(col("media_id").as("id"), col("fp")).distinct()
-      .localCheckpoint(eager = true)
-    val printable = fps.select("id").distinct()
-    val decoded = keys.join(printable, Seq("id"), "left_semi")
-      .localCheckpoint(eager = true)
-    stage("fingerprint", decoded.count())
-    rejectPiece(keys.join(printable, Seq("id"), "left_anti")
-      .select(col("id"), lit(null).cast("long").as("__dup_of")),
-      "no_fingerprint")
-
-    // exact payload dedup: against state, then within batch
-    val afterExactState =
-      if (!haveState) decoded
-      else {
-        val stateKeys = readMarkedExactKeys(spark, stateDir, "audio",
-          batchId,
-          effBloomBits.map(m => (decoded.select("__md5"), m)))
-        val hits = decoded.join(
-            stateKeys.select(col("key").as("__md5"),
-              col("id").as("__dup_of")), Seq("__md5"))
-          .localCheckpoint(eager = true)
-        rejectPiece(hits.select(col("id"), col("__dup_of")), "exact_dup")
-        decoded.join(hits.select("id"), Seq("id"), "left_anti")
-      }
-    val keeper = afterExactState.groupBy("__md5")
-      .agg(min(col("id")).as("__keep"))
-    val withKeep = afterExactState.join(keeper, Seq("__md5"))
-      .localCheckpoint(eager = true)
-    rejectPiece(withKeep.filter(col("id") =!= col("__keep"))
-      .select(col("id"), col("__keep").as("__dup_of")), "exact_dup")
-    val exact = withKeep.filter(col("id") === col("__keep"))
-      .select("id", "__md5").localCheckpoint(eager = true)
-    stage("exact_dedup", exact.count())
-    val exactFps = fps.join(exact.select("id"), Seq("id"), "left_semi")
-      .localCheckpoint(eager = true)
-
-    // fingerprint near-dup: against state, then within batch
-    val afterOld =
-      if (!haveState) exact
-      else {
-        val hits = graft.operators.Multimodal
-          .audioSigsNearDupAgainstIndex(spark, s"$stateDir/audio",
-            exactFps.select(col("id").as("id_new"), col("fp")),
-            cfg.minMatchE4, cfg.maxFpDocFreq,
-            excludeBatch = Some(batchId),
-            bloomBits = effBloomBits)
-          .groupBy("id_new").agg(min(col("id_old")).as("__dup_of"))
-          .select(col("id_new").as("id"), col("__dup_of"))
-          .localCheckpoint(eager = true)
-        rejectPiece(hits, "near_dup")
-        exact.join(hits.select("id"), Seq("id"), "left_anti")
-          .localCheckpoint(eager = true)
-      }
-    // within-batch pairs from the SAME fingerprints (decode-once): the
-    // audioNearDupPairs algebra on the survivor subset
-    val sfps = exactFps.join(afterOld.select("id"), Seq("id"), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sizes = sfps.groupBy("id").agg(count(lit(1)).as("nfp"))
-    val keep = sfps.groupBy("fp").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= cfg.maxFpDocFreq).select("fp")
-    val fk = sfps.join(keep, Seq("fp"), "left_semi")
-    val edges = fk.select(col("id").as("idA"), col("fp"))
-      .join(fk.select(col("id").as("idB"), col("fp")), Seq("fp"))
-      .filter(col("idA") < col("idB"))
-      .groupBy("idA", "idB").agg(count(lit(1)).as("ninter"))
-      .join(sizes.select(col("id").as("idA"), col("nfp").as("na")), "idA")
-      .join(sizes.select(col("id").as("idB"), col("nfp").as("nb")), "idB")
-      .filter(graft.core.Ops.fixedPoint(col("ninter") * lit(1.0) /
-        (col("na") + col("nb") - col("ninter")), 4) >= cfg.minMatchE4)
-      .select("idA", "idB")
-    val compM = Dedup.connectedComponentsManaged(edges)
-    val victims = compM.df.filter(col("id") =!= col("label"))
-      .select(col("id"), col("label").as("__dup_of"))
-      .localCheckpoint(eager = true)
-    compM.close(); sfps.unpersist()
-    rejectPiece(victims, "near_dup")
-    val afterMh = afterOld
-      .join(victims.select("id"), Seq("id"), "left_anti")
-      .localCheckpoint(eager = true)
-    stage("near_dup", afterMh.count())
-
-    // ---- optional SEMANTIC stage: SemDeDup over pooled energy-profile
-    // embeddings against a sem SUB-state (reads restricted to
-    // audio-committed batches — the increment's one authoritative
-    // marker), then within batch — the image increment's sem pattern,
-    // audio modality (r16 #1)
-    val semPieces = cfg.semDedupThresholdE4.map { th =>
-      val semDir = s"$stateDir/sem"
-      val haveSem = haveState && fs(spark, stateDir).exists(
-        new org.apache.hadoop.fs.Path(s"$semDir/meta"))
-      val (semCe, semNa) =
-        if (!haveSem) (cfg.semCentroidEvery, cfg.semNassign)
-        else {
-          val (ce, na, pdim) = Curation.readSemMeta(spark, semDir)
-          require(pdim == 0 || pdim == cfg.semDim,
-            s"curateAudioIncrement: semDim ${cfg.semDim} " +
-              s"!= pinned sem sub-state dim $pdim at $semDir")
-          (ce, na)
-        }
-      // embed ONLY the surviving pool (never re-decode rejects)
-      val survRecs = batch.toDF()
-        .join(afterMh.select(col("id").as("media_id")), Seq("media_id"),
-          "left_semi")
-        .as[graft.operators.Multimodal.MediaRecord]
-      val nonzero = graft.operators.Multimodal
-        .audioEmbeddings(survRecs, cfg.semDim, cfg.windowFrames)
-        .filter(expr("aggregate(v, 0D, (a, x) -> a + x * x)") > lit(0.0))
-        .localCheckpoint(eager = true)
-      val centroids =
-        if (haveSem)
-          spark.read.parquet(s"$semDir/centroids")
-            .select(col("cid").as("id"), col("cv").as("v"))
-        else Curation.semCentroidSample(nonzero.select("id", "v"),
-          semCe).localCheckpoint(eager = true)
-      val afterSemState =
-        if (!haveSem) afterMh
-        else {
-          val restrict = spark.read.parquet(s"$stateDir/audio/meta")
-            .select("batch_id").distinct()
-          val hits = Curation.semNearDupAgainstIndex(spark, semDir,
-              nonzero.select("id", "v"), th,
-              excludeBatch = Some(batchId), restrictTo = Some(restrict),
-              bloomBits = effBloomBits)
-            .groupBy("id_new").agg(min(col("id_old")).as("__dup_of"))
-            .select(col("id_new").as("id"), col("__dup_of"))
-            .localCheckpoint(eager = true)
-          rejectPiece(hits, "sem_dup")
-          afterMh.join(hits.select("id"), Seq("id"), "left_anti")
-            .localCheckpoint(eager = true)
-        }
-      val survNonzero = nonzero
-        .join(afterSemState.select("id"), Seq("id"), "left_semi")
-      val pm = graft.operators.Similarity.ivfNearDupPairsManaged(
-        survNonzero.select("id", "v"), centroids, th / 10000.0, semNa)
-      val cm = Dedup.connectedComponentsManaged(
-        pm.df.select("idA", "idB"))
-      val svict = cm.df.filter(col("id") =!= col("label"))
-        .select(col("id"), col("label").as("__dup_of"))
-        .localCheckpoint(eager = true)
-      cm.close(); pm.close()
-      rejectPiece(svict, "sem_dup")
-      val adm = afterSemState
-        .join(svict.select("id"), Seq("id"), "left_anti")
-        .localCheckpoint(eager = true)
-      stage("semantic", adm.count())
-      (adm, nonzero, centroids, haveSem)
-    }
-    val admitted = semPieces.map(_._1).getOrElse(afterMh)
-    led += admitted.select(col("id"), lit(true).as("admitted"),
-        lit("admitted").as("reason"), col("id").as("dup_of"))
-      .localCheckpoint(eager = true)
-
-    // persist: keys → ledger → metrics → (sem sub-state) →
-    // audio META (the marker)
-    val ledger = led.reduce(_ unionByName _)
-      .select(col("id"), col("admitted"), col("reason"), col("dup_of"))
-      .localCheckpoint(eager = true)
-    val nLed = ledger.count()
-    require(nLed == counts.head._2,
-      s"curateAudioIncrement: ledger rows $nLed != batch ${counts.head._2}")
-    def writer(df: DataFrame, path: String): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic").parquet(path)
-    if (haveState || admitted.head(1).nonEmpty) {
-      writeExactKeyRows(admitted.select(col("__md5").as("key"), col("id")),
-        s"$stateDir/exact", batchId)
-      writer(ledger, s"$stateDir/ledger")
-      writer(counts.toSeq.toDF("stage", "rows"), s"$stateDir/metrics")
-      semPieces.foreach { case (_, nonzero, centroids, haveSem) =>
-        val admNonzero = nonzero
-          .join(admitted.select("id"), Seq("id"), "left_semi")
-          .select("id", "v")
-        if (haveSem)
-          Curation.appendSemVectors(spark, s"$stateDir/sem", admNonzero,
-            batchId)
-        else
-          Curation.writeSemIndex(admNonzero, centroids, s"$stateDir/sem",
-            cfg.semCentroidEvery, cfg.semNassign, batchId)
-      }
-      val admFps = exactFps.join(admitted.select("id"), Seq("id"),
-        "left_semi")
-      if (haveState)
-        graft.operators.Multimodal.appendAudioFps(spark,
-          s"$stateDir/audio", admFps, batchId)
-      else
-        graft.operators.Multimodal.writeAudioFpIndex(spark, admFps,
-          s"$stateDir/audio", cfg.windowFrames, cfg.k, cfg.stride,
-          cfg.quantE4, batchId)
-    }
-    IncrementResult(ledger, admitted.select("id"), counts.toSeq)
-  }
-
-  // ---- the VIDEO twin: batch vs persisted keyframe + exact state ---------
+    markerExists(spark, stateDir, AudioLayout.marker)
 
   /** The video gate dials ([[graft.operators.Multimodal
     * .videoNearDupPairs]] parameters).
@@ -1806,371 +1260,7 @@ object Increment {
 
   /** Video state exists iff the keyframe index has its meta marker. */
   def videoStateExists(spark: SparkSession, stateDir: String): Boolean =
-    fs(spark, stateDir).exists(
-      new org.apache.hadoop.fs.Path(s"$stateDir/video/meta"))
-
-  // ---- media sem backfill: [[semBackfill]]'s image/audio/video twins -----
-
-  /** Retroactive semantic coverage for an IMAGE state whose earlier
-    * increments ran without the semantic stage — [[semBackfill]]'s
-    * image twin: embeds every already-admitted image from the supplied
-    * payload corpus and seeds/completes the sem sub-state per
-    * committed batch, so the next [[curateImageIncrement]] with
-    * `semDedupThresholdE4` set dedups against the FULL history instead
-    * of post-enablement batches only. Idempotent per batch (already-
-    * present sem batches are skipped); a torn backfill completes on
-    * rerun. Returns the number of vectors indexed.
-    */
-  def imageSemBackfill(spark: SparkSession, stateDir: String,
-                       corpus: org.apache.spark.sql.Dataset[
-                         graft.operators.Multimodal.MediaRecord],
-                       cfg: ImageIncrementConfig = ImageIncrementConfig())
-      : Long =
-    mediaSemBackfill(spark, stateDir, "phash",
-      recs => graft.operators.Multimodal.imageEmbeddings(recs,
-        cfg.semGrid, maxPixels = cfg.maxPixels),
-      cfg.semGrid * cfg.semGrid, cfg.semCentroidEvery, cfg.semNassign,
-      corpus)
-
-  /** [[imageSemBackfill]] for an AUDIO state (pooled energy-profile
-    * embeddings, [[graft.operators.Multimodal.audioEmbeddings]]).
-    */
-  def audioSemBackfill(spark: SparkSession, stateDir: String,
-                       corpus: org.apache.spark.sql.Dataset[
-                         graft.operators.Multimodal.MediaRecord],
-                       cfg: AudioIncrementConfig = AudioIncrementConfig())
-      : Long =
-    mediaSemBackfill(spark, stateDir, "audio",
-      recs => graft.operators.Multimodal.audioEmbeddings(recs,
-        cfg.semDim, cfg.windowFrames),
-      cfg.semDim, cfg.semCentroidEvery, cfg.semNassign, corpus)
-
-  /** [[imageSemBackfill]] for a VIDEO state (pooled keyframe block-mean
-    * embeddings, [[graft.operators.Multimodal.videoEmbeddings]]).
-    */
-  def videoSemBackfill(spark: SparkSession, stateDir: String,
-                       corpus: org.apache.spark.sql.Dataset[
-                         graft.operators.Multimodal.MediaRecord],
-                       cfg: VideoIncrementConfig = VideoIncrementConfig())
-      : Long =
-    mediaSemBackfill(spark, stateDir, "video",
-      recs => graft.operators.Multimodal.videoEmbeddings(recs,
-        cfg.semGrid),
-      cfg.semGrid * cfg.semGrid, cfg.semCentroidEvery, cfg.semNassign,
-      corpus)
-
-  private def mediaSemBackfill(spark: SparkSession, stateDir: String,
-      family: String,
-      embed: org.apache.spark.sql.Dataset[
-        graft.operators.Multimodal.MediaRecord] => DataFrame,
-      semDim: Int, semCentroidEvery: Int, semNassign: Int,
-      corpus: org.apache.spark.sql.Dataset[
-        graft.operators.Multimodal.MediaRecord]): Long = {
-    import spark.implicits._
-    val pinned = readFamilySentinel(spark, stateDir)
-    require(pinned.contains(family),
-      s"mediaSemBackfill: state at $stateDir is " +
-        s"'${pinned.getOrElse("<none>")}', expected '$family'")
-    require(fs(spark, stateDir).exists(
-        new org.apache.hadoop.fs.Path(s"$stateDir/$family/meta")),
-      s"mediaSemBackfill: no committed $family state at $stateDir")
-    val committed = spark.read.parquet(s"$stateDir/$family/meta")
-      .select("batch_id").distinct()
-    val admittedIds = spark.read.parquet(s"$stateDir/ledger")
-      .filter(col("admitted"))
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
-      .select(col("id"), col("batch_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val ids = corpus.toDF().select(col("media_id").as("id"))
-      val missing = admittedIds.join(ids, Seq("id"), "left_anti").count()
-      require(missing == 0L,
-        s"mediaSemBackfill: $missing admitted ids absent from the " +
-          "supplied corpus — backfill needs the full admitted history")
-      // dials: an existing (partial) sub-state pins them
-      val (ce, na) =
-        if (!fs(spark, stateDir).exists(
-            new org.apache.hadoop.fs.Path(s"$stateDir/sem/meta")))
-          (semCentroidEvery, semNassign)
-        else {
-          val (pce, pna, dim) = Curation.readSemMeta(spark,
-            s"$stateDir/sem")
-          require(dim == 0 || dim == semDim,
-            s"mediaSemBackfill: semDim $semDim != pinned dim $dim")
-          (pce, pna)
-        }
-      def haveSem = fs(spark, stateDir).exists(
-        new org.apache.hadoop.fs.Path(s"$stateDir/sem/meta"))
-      val nonzero = embed(corpus)
-        .filter(expr("aggregate(v, 0D, (a, x) -> a + x * x)") > lit(0.0))
-        .join(admittedIds, Seq("id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        nonzero.count()
-        // bounded: ledger batch ids (compaction keeps this small)
-        val batches = admittedIds.select("batch_id").distinct()
-          .as[String].collect().sorted
-        val done: Set[String] =
-          if (!haveSem) Set.empty
-          else spark.read.parquet(s"$stateDir/sem/meta")
-            .select("batch_id").distinct().as[String].collect().toSet
-        var indexed = 0L
-        batches.filterNot(done).foreach { b =>
-          val vecs = nonzero.filter(col("batch_id") === b)
-            .select("id", "v")
-          if (!haveSem) {
-            val cents = Curation.semCentroidSample(
-              nonzero.select("id", "v"), ce)
-            Curation.writeSemIndex(vecs, cents, s"$stateDir/sem", ce,
-              na, batchId = b)
-          } else Curation.appendSemVectors(spark, s"$stateDir/sem",
-            vecs, b)
-          indexed += vecs.count()
-        }
-        indexed
-      } finally nonzero.unpersist()
-    } finally admittedIds.unpersist()
-  }
-
-  /** The video increment — the FOURTH modality twin of
-    * [[curateIncrement]]/[[curateImageIncrement]]/
-    * [[curateAudioIncrement]], completing the batch-vs-accumulated-state
-    * symmetry: parse + keyframe-hash ONCE, verdict order no_frames
-    * (unparseable MP4 or zero decodable keyframes — such payloads can
-    * never pair) → exact payload key vs state then within batch →
-    * keyframe near-dup (temporal Jaccard over banded frame matches) vs
-    * committed state with min-old-parent → within-batch pairs +
-    * components; admitted frame rows append under `batchId` with the
-    * video META partition as the increment's commit marker. Retry/torn
-    * contracts as in the siblings: every against-state read excludes the
-    * batch's own partitions (the pre-batch view), so a retry recomputes
-    * identical verdicts and replaces its partitions bit-identically.
-    */
-  def curateVideoIncrement(batch: org.apache.spark.sql.Dataset[
-        graft.operators.Multimodal.MediaRecord],
-      stateDir: String, batchId: String,
-      cfg: VideoIncrementConfig = VideoIncrementConfig())
-      : IncrementResult = {
-    require(batchId.nonEmpty && batchId != "base" &&
-        batchId != "__HIVE_DEFAULT_PARTITION__",
-      s"curateVideoIncrement: invalid batch id '$batchId'")
-    val spark = batch.sparkSession
-    requireBatchNotFolded(spark, stateDir, batchId, "curateVideoIncrement")
-    import spark.implicits._
-    writeFamilySentinel(spark, stateDir, "video")
-    val haveState = videoStateExists(spark, stateDir)
-    val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val led = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def stage(name: String, c: Long): Unit = counts += ((name, c))
-    def rejectPiece(ids: DataFrame, reason: String): Unit =
-      led += ids.select(col("id").cast("long").as("id"),
-          lit(false).as("admitted"), lit(reason).as("reason"),
-          coalesce(col("__dup_of"), col("id")).cast("long").as("dup_of"))
-        .localCheckpoint(eager = true)
-
-    // one pass over payload bytes: md5 key + keyframe hashes
-    val keys = batch.mapPartitions { it =>
-        val d = java.security.MessageDigest.getInstance("MD5")
-        it.map { r =>
-          d.reset()
-          (r.media_id,
-            d.digest(r.media).map(b => f"${b & 0xff}%02x").mkString)
-        }
-      }.toDF("id", "__md5").localCheckpoint(eager = true)
-    stage("ingest", keys.count())
-    // effective Bloom dial (manual bits win; see IncrementConfig)
-    val effBloomBits = cfg.stateBloomBits.orElse(
-      if (cfg.stateBloomAuto && haveState)
-        decideStateBloom(spark, stateDir, counts.head._2)
-      else None)
-    val frames = graft.operators.Multimodal.videoKeyframePhash(batch).toDF()
-      .filter(col("phash") =!= -1L && col("frame_idx") >= 0L)
-      .select(col("media_id").as("id"), col("frame_idx"), col("phash"))
-      .localCheckpoint(eager = true)
-    val framed = frames.select("id").distinct()
-    val decoded = keys.join(framed, Seq("id"), "left_semi")
-      .localCheckpoint(eager = true)
-    stage("keyframes", decoded.count())
-    rejectPiece(keys.join(framed, Seq("id"), "left_anti")
-      .select(col("id"), lit(null).cast("long").as("__dup_of")),
-      "no_frames")
-
-    // exact payload dedup: against state, then within batch
-    val afterExactState =
-      if (!haveState) decoded
-      else {
-        val stateKeys = readMarkedExactKeys(spark, stateDir, "video",
-          batchId,
-          effBloomBits.map(m => (decoded.select("__md5"), m)))
-        val hits = decoded.join(
-            stateKeys.select(col("key").as("__md5"),
-              col("id").as("__dup_of")), Seq("__md5"))
-          .localCheckpoint(eager = true)
-        rejectPiece(hits.select(col("id"), col("__dup_of")), "exact_dup")
-        decoded.join(hits.select("id"), Seq("id"), "left_anti")
-      }
-    val keeper = afterExactState.groupBy("__md5")
-      .agg(min(col("id")).as("__keep"))
-    val withKeep = afterExactState.join(keeper, Seq("__md5"))
-      .localCheckpoint(eager = true)
-    rejectPiece(withKeep.filter(col("id") =!= col("__keep"))
-      .select(col("id"), col("__keep").as("__dup_of")), "exact_dup")
-    val exact = withKeep.filter(col("id") === col("__keep"))
-      .select("id", "__md5").localCheckpoint(eager = true)
-    stage("exact_dedup", exact.count())
-    val exactFrames = frames.join(exact.select("id"), Seq("id"), "left_semi")
-      .localCheckpoint(eager = true)
-
-    // keyframe near-dup: against state, then within batch
-    val afterOld =
-      if (!haveState) exact
-      else {
-        val hits = graft.operators.Multimodal
-          .videoFramesNearDupAgainstIndex(spark, s"$stateDir/video",
-            exactFrames.select(col("id").as("id_new"), col("frame_idx"),
-              col("phash")),
-            cfg.maxHamming, cfg.minSimE4, excludeBatch = Some(batchId),
-            bloomBits = effBloomBits)
-          .groupBy("id_new").agg(min(col("id_old")).as("__dup_of"))
-          .select(col("id_new").as("id"), col("__dup_of"))
-          .localCheckpoint(eager = true)
-        rejectPiece(hits, "near_dup")
-        exact.join(hits.select("id"), Seq("id"), "left_anti")
-          .localCheckpoint(eager = true)
-      }
-    // within-batch pairs from the SAME frame hashes (decode-once): the
-    // videoNearDupPairs algebra on the survivor subset
-    val sframes = exactFrames
-      .join(afterOld.select("id"), Seq("id"), "left_semi")
-      .select(col("id").as("media_id"), col("frame_idx"), col("phash"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = graft.operators.Multimodal.videoFramesNearDupPairs(
-        sframes, cfg.maxHamming, cfg.nBands, cfg.minSimE4)
-      .select("idA", "idB")
-    val compM = Dedup.connectedComponentsManaged(edges)
-    val victims = compM.df.filter(col("id") =!= col("label"))
-      .select(col("id"), col("label").as("__dup_of"))
-      .localCheckpoint(eager = true)
-    compM.close(); sframes.unpersist()
-    rejectPiece(victims, "near_dup")
-    val afterMh = afterOld
-      .join(victims.select("id"), Seq("id"), "left_anti")
-      .localCheckpoint(eager = true)
-    stage("near_dup", afterMh.count())
-
-    // ---- optional SEMANTIC stage: SemDeDup over pooled keyframe
-    // block-mean embeddings against a sem SUB-state (reads restricted
-    // to video-committed batches — the increment's one authoritative
-    // marker), then within batch — the image increment's sem pattern,
-    // video modality (r16 #1)
-    val semPieces = cfg.semDedupThresholdE4.map { th =>
-      val semDir = s"$stateDir/sem"
-      val haveSem = haveState && fs(spark, stateDir).exists(
-        new org.apache.hadoop.fs.Path(s"$semDir/meta"))
-      val dim = cfg.semGrid * cfg.semGrid
-      val (semCe, semNa) =
-        if (!haveSem) (cfg.semCentroidEvery, cfg.semNassign)
-        else {
-          val (ce, na, pdim) = Curation.readSemMeta(spark, semDir)
-          require(pdim == 0 || pdim == dim,
-            s"curateVideoIncrement: semGrid ${cfg.semGrid} (dim $dim) " +
-              s"!= pinned sem sub-state dim $pdim at $semDir")
-          (ce, na)
-        }
-      // embed ONLY the surviving pool (never re-decode rejects)
-      val survRecs = batch.toDF()
-        .join(afterMh.select(col("id").as("media_id")), Seq("media_id"),
-          "left_semi")
-        .as[graft.operators.Multimodal.MediaRecord]
-      val nonzero = graft.operators.Multimodal
-        .videoEmbeddings(survRecs, cfg.semGrid)
-        .filter(expr("aggregate(v, 0D, (a, x) -> a + x * x)") > lit(0.0))
-        .localCheckpoint(eager = true)
-      val centroids =
-        if (haveSem)
-          spark.read.parquet(s"$semDir/centroids")
-            .select(col("cid").as("id"), col("cv").as("v"))
-        else Curation.semCentroidSample(nonzero.select("id", "v"),
-          semCe).localCheckpoint(eager = true)
-      val afterSemState =
-        if (!haveSem) afterMh
-        else {
-          val restrict = spark.read.parquet(s"$stateDir/video/meta")
-            .select("batch_id").distinct()
-          val hits = Curation.semNearDupAgainstIndex(spark, semDir,
-              nonzero.select("id", "v"), th,
-              excludeBatch = Some(batchId), restrictTo = Some(restrict),
-              bloomBits = effBloomBits)
-            .groupBy("id_new").agg(min(col("id_old")).as("__dup_of"))
-            .select(col("id_new").as("id"), col("__dup_of"))
-            .localCheckpoint(eager = true)
-          rejectPiece(hits, "sem_dup")
-          afterMh.join(hits.select("id"), Seq("id"), "left_anti")
-            .localCheckpoint(eager = true)
-        }
-      val survNonzero = nonzero
-        .join(afterSemState.select("id"), Seq("id"), "left_semi")
-      val pm = graft.operators.Similarity.ivfNearDupPairsManaged(
-        survNonzero.select("id", "v"), centroids, th / 10000.0, semNa)
-      val cm = Dedup.connectedComponentsManaged(
-        pm.df.select("idA", "idB"))
-      val svict = cm.df.filter(col("id") =!= col("label"))
-        .select(col("id"), col("label").as("__dup_of"))
-        .localCheckpoint(eager = true)
-      cm.close(); pm.close()
-      rejectPiece(svict, "sem_dup")
-      val adm = afterSemState
-        .join(svict.select("id"), Seq("id"), "left_anti")
-        .localCheckpoint(eager = true)
-      stage("semantic", adm.count())
-      (adm, nonzero, centroids, haveSem)
-    }
-    val admitted = semPieces.map(_._1).getOrElse(afterMh)
-    led += admitted.select(col("id"), lit(true).as("admitted"),
-        lit("admitted").as("reason"), col("id").as("dup_of"))
-      .localCheckpoint(eager = true)
-
-    // persist: keys → ledger → metrics → (sem sub-state) →
-    // video META (the marker)
-    val ledger = led.reduce(_ unionByName _)
-      .select(col("id"), col("admitted"), col("reason"), col("dup_of"))
-      .localCheckpoint(eager = true)
-    val nLed = ledger.count()
-    require(nLed == counts.head._2,
-      s"curateVideoIncrement: ledger rows $nLed != batch ${counts.head._2}")
-    def writer(df: DataFrame, path: String): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic").parquet(path)
-    if (haveState || admitted.head(1).nonEmpty) {
-      writeExactKeyRows(admitted.select(col("__md5").as("key"), col("id")),
-        s"$stateDir/exact", batchId)
-      writer(ledger, s"$stateDir/ledger")
-      writer(counts.toSeq.toDF("stage", "rows"), s"$stateDir/metrics")
-      semPieces.foreach { case (_, nonzero, centroids, haveSem) =>
-        val admNonzero = nonzero
-          .join(admitted.select("id"), Seq("id"), "left_semi")
-          .select("id", "v")
-        if (haveSem)
-          Curation.appendSemVectors(spark, s"$stateDir/sem", admNonzero,
-            batchId)
-        else
-          Curation.writeSemIndex(admNonzero, centroids, s"$stateDir/sem",
-            cfg.semCentroidEvery, cfg.semNassign, batchId)
-      }
-      val admFrames = exactFrames.join(admitted.select("id"), Seq("id"),
-        "left_semi")
-      if (haveState)
-        graft.operators.Multimodal.appendVideoFrames(spark,
-          s"$stateDir/video", admFrames, batchId)
-      else
-        graft.operators.Multimodal.writeVideoFrameIndex(spark, admFrames,
-          s"$stateDir/video", cfg.nBands, batchId)
-    }
-    IncrementResult(ledger, admitted.select("id"), counts.toSeq)
-  }
-
-  // ---- the EMBEDDING twin: batch vs persisted semantic state -------------
+    markerExists(spark, stateDir, VideoLayout.marker)
 
   /** The semantic gate dials ([[graft.operators.Curation
     * .semDedupVictimsFromVectorsManaged]] parameters).
@@ -2187,8 +1277,560 @@ object Increment {
 
   /** Semantic state exists iff the sem index has its meta marker. */
   def semStateExists(spark: SparkSession, stateDir: String): Boolean =
-    fs(spark, stateDir).exists(
-      new org.apache.hadoop.fs.Path(s"$stateDir/sem/meta"))
+    markerExists(spark, stateDir, EmbeddingLayout.marker)
+
+  // ---- the media-family driver: image, audio, video and embedding -------
+
+  /** Everything that differs between the image, audio, video and
+    * embedding increments; [[runFamily]] runs any of them and
+    * [[seedFamily]] seeds any of them. Built from the family's config.
+    *  - `decode`: the batch → (keys (id, __md5, __signed, …) of every
+    *    row, materialized in one decode of the payloads — `__signed`
+    *    false = the row has no signature, further columns ride along
+    *    with the pool; `signatures`: a pool of signed rows → its
+    *    signature rows (id, …));
+    *  - `unsigned`: the stage name and reject reason for a row without
+    *    a signature (None: no such gate — every row is signed);
+    *  - `nearVsState`: (id_new, id_old) matches of the exact survivors'
+    *    signatures against the committed index;
+    *  - `within`: within-batch edges (idA, idB) among the survivors'
+    *    signatures, and what to release once components are taken;
+    *  - `semantic`: the optional embedding stage;
+    *  - `writeIndex`: the family index write (bootstrap or append) of
+    *    the admitted signature rows — its meta is the commit marker —
+    *    given also the exact survivors' signature rows;
+    *  - `project`: what [[IncrementResult.admitted]] returns of the
+    *    admitted pool.
+    */
+  private case class MediaFamily(
+      layout: StateLayout,
+      unsigned: Option[(String, String)],
+      decode: DataFrame => (DataFrame, DataFrame => DataFrame),
+      nearVsState: (Run, DataFrame) => DataFrame,
+      within: (Run, DataFrame) => (DataFrame, () => Unit),
+      semantic: Option[Semantic],
+      writeIndex: (Run, DataFrame, DataFrame) => Unit,
+      project: DataFrame => DataFrame,
+      bloomBits: Option[Long], bloomAuto: Boolean)
+
+  /** A media family's embedding for the semantic stage, seeding and
+    * backfill: `embed` maps payloads to (id, v) vectors of dimension
+    * `dim` (`dimLabel` names the config dial in errors). The increment
+    * stage runs when `thresholdE4` is set.
+    */
+  private case class Semantic(thresholdE4: Option[Long],
+                              embed: Dataset[MediaRecord] => DataFrame,
+                              dim: Int, dimLabel: String,
+                              centroidEvery: Int, nassign: Int)
+
+  private def asMedia(df: DataFrame): Dataset[MediaRecord] = {
+    val sess = df.sparkSession
+    import sess.implicits._
+    df.as[MediaRecord]
+  }
+
+  /** (id, __md5): each payload's byte md5, the media exact-dedup key. */
+  private def payloadKeys(media: Dataset[MediaRecord]): DataFrame = {
+    val sess = media.sparkSession
+    import sess.implicits._
+    media.mapPartitions { it =>
+        val d = java.security.MessageDigest.getInstance("MD5")
+        it.map { r =>
+          d.reset()
+          (r.media_id,
+            d.digest(r.media).map(b => f"${b & 0xff}%02x").mkString)
+        }
+      }.toDF("id", "__md5")
+  }
+
+  /** `keys` with the `__signed` flag: whether the row has a signature
+    * row in `sigs`.
+    */
+  private def flagSigned(keys: DataFrame, sigs: DataFrame): DataFrame =
+    keys.join(sigs.select("id").distinct().withColumn("__signed", lit(true)),
+        Seq("id"), "left_outer")
+      .na.fill(false, Seq("__signed"))
+
+  private def imageSemantic(cfg: ImageIncrementConfig): Semantic =
+    Semantic(cfg.semDedupThresholdE4,
+      Multimodal.imageEmbeddings(_, cfg.semGrid, maxPixels = cfg.maxPixels),
+      cfg.semGrid * cfg.semGrid,
+      s"semGrid ${cfg.semGrid} (dim ${cfg.semGrid * cfg.semGrid})",
+      cfg.semCentroidEvery, cfg.semNassign)
+
+  /** Image: one decode gives the payload key and the pHash (−1 =
+    * undecodable); near-dup is pHash hamming ≤ maxHamming over bands.
+    */
+  private def imageFamily(cfg: ImageIncrementConfig): MediaFamily =
+    MediaFamily(ImageLayout, Some(("decode", "undecodable")),
+      decode = batch => {
+        val media = asMedia(batch)
+        val keys = payloadKeys(media)
+          .join(Multimodal.imagePHash(media, maxPixels = cfg.maxPixels)
+              .toDF().select(col("media_id").as("id"), col("phash")),
+            Seq("id"))
+          .withColumn("__signed", col("phash") =!= -1L)
+          .localCheckpoint(eager = true)
+        (keys, _.select("id", "phash"))
+      },
+      nearVsState = (run, sigs) =>
+        Multimodal.phashSigsNearDupAgainstIndex(run.spark,
+          run.path("phash"),
+          sigs.select(col("id").as("id_new"), col("phash")),
+          cfg.maxHamming, excludeBatch = Some(run.batchId),
+          bloomBits = run.bloomBits),
+      within = (_, sigs) => {
+        val pm = Multimodal.phashBandNearDupPairsOf(
+          sigs.select(col("id").as("media_id"), col("phash").as("ahash")),
+          cfg.maxHamming, cfg.nBands)
+        (pm.df.select("idA", "idB"), () => pm.close())
+      },
+      semantic = Some(imageSemantic(cfg)),
+      writeIndex = (run, adm, _) =>
+        if (run.haveState)
+          Multimodal.appendPhashSigs(run.spark, run.path("phash"), adm,
+            run.batchId)
+        else
+          Multimodal.writePhashSigIndex(run.spark, adm, run.path("phash"),
+            cfg.nBands, run.batchId),
+      project = _.select("id", "phash"),
+      cfg.stateBloomBits, cfg.stateBloomAuto)
+
+  private def audioSemantic(cfg: AudioIncrementConfig): Semantic =
+    Semantic(cfg.semDedupThresholdE4,
+      Multimodal.audioEmbeddings(_, cfg.semDim, cfg.windowFrames),
+      cfg.semDim, s"semDim ${cfg.semDim}", cfg.semCentroidEvery,
+      cfg.semNassign)
+
+  /** Audio: distinct banded energy fingerprints per clip (none =
+    * undecodable or shorter than k+1 windows — such clips can never
+    * pair); near-dup is fingerprint-set Jaccard ≥ minMatchE4.
+    */
+  private def audioFamily(cfg: AudioIncrementConfig): MediaFamily =
+    MediaFamily(AudioLayout, Some(("fingerprint", "no_fingerprint")),
+      decode = batch => {
+        val media = asMedia(batch)
+        val fps = Multimodal.audioFingerprints(media, cfg.windowFrames,
+            cfg.k, cfg.stride, cfg.quantE4).toDF()
+          .select(col("media_id").as("id"), col("fp")).distinct()
+          .localCheckpoint(eager = true)
+        (flagSigned(payloadKeys(media), fps).localCheckpoint(eager = true),
+          fps.join(_, Seq("id"), "left_semi"))
+      },
+      nearVsState = (run, fps) =>
+        Multimodal.audioSigsNearDupAgainstIndex(run.spark,
+          run.path("audio"), fps.select(col("id").as("id_new"), col("fp")),
+          cfg.minMatchE4, cfg.maxFpDocFreq,
+          excludeBatch = Some(run.batchId), bloomBits = run.bloomBits),
+      within = (_, fps) => {
+        // the audioNearDupPairs algebra on the survivors' fingerprints
+        val sfps = fps.persist(StorageLevel.MEMORY_AND_DISK)
+        val sizes = sfps.groupBy("id").agg(count(lit(1)).as("nfp"))
+        val keep = sfps.groupBy("fp").agg(count(lit(1)).as("df"))
+          .filter(col("df") <= cfg.maxFpDocFreq).select("fp")
+        val fk = sfps.join(keep, Seq("fp"), "left_semi")
+        val edges = fk.select(col("id").as("idA"), col("fp"))
+          .join(fk.select(col("id").as("idB"), col("fp")), Seq("fp"))
+          .filter(col("idA") < col("idB"))
+          .groupBy("idA", "idB").agg(count(lit(1)).as("ninter"))
+          .join(sizes.select(col("id").as("idA"), col("nfp").as("na")),
+            "idA")
+          .join(sizes.select(col("id").as("idB"), col("nfp").as("nb")),
+            "idB")
+          .filter(graft.core.Ops.fixedPoint(col("ninter") * lit(1.0) /
+            (col("na") + col("nb") - col("ninter")), 4) >= cfg.minMatchE4)
+          .select("idA", "idB")
+        (edges, () => sfps.unpersist(): Unit)
+      },
+      semantic = Some(audioSemantic(cfg)),
+      writeIndex = (run, adm, _) =>
+        if (run.haveState)
+          Multimodal.appendAudioFps(run.spark, run.path("audio"), adm,
+            run.batchId)
+        else
+          Multimodal.writeAudioFpIndex(run.spark, adm, run.path("audio"),
+            cfg.windowFrames, cfg.k, cfg.stride, cfg.quantE4, run.batchId),
+      project = _.select("id"),
+      cfg.stateBloomBits, cfg.stateBloomAuto)
+
+  private def videoSemantic(cfg: VideoIncrementConfig): Semantic =
+    Semantic(cfg.semDedupThresholdE4,
+      Multimodal.videoEmbeddings(_, cfg.semGrid),
+      cfg.semGrid * cfg.semGrid,
+      s"semGrid ${cfg.semGrid} (dim ${cfg.semGrid * cfg.semGrid})",
+      cfg.semCentroidEvery, cfg.semNassign)
+
+  /** Video: decodable keyframe pHashes per clip (none = unparseable MP4
+    * or zero decodable keyframes); near-dup is temporal Jaccard over
+    * banded frame matches ≥ minSimE4.
+    */
+  private def videoFamily(cfg: VideoIncrementConfig): MediaFamily =
+    MediaFamily(VideoLayout, Some(("keyframes", "no_frames")),
+      decode = batch => {
+        val media = asMedia(batch)
+        val frames = Multimodal.videoKeyframePhash(media).toDF()
+          .filter(col("phash") =!= -1L && col("frame_idx") >= 0L)
+          .select(col("media_id").as("id"), col("frame_idx"), col("phash"))
+          .localCheckpoint(eager = true)
+        (flagSigned(payloadKeys(media), frames).localCheckpoint(eager = true),
+          frames.join(_, Seq("id"), "left_semi"))
+      },
+      nearVsState = (run, frames) =>
+        Multimodal.videoFramesNearDupAgainstIndex(run.spark,
+          run.path("video"),
+          frames.select(col("id").as("id_new"), col("frame_idx"),
+            col("phash")),
+          cfg.maxHamming, cfg.minSimE4, excludeBatch = Some(run.batchId),
+          bloomBits = run.bloomBits),
+      within = (_, frames) => {
+        // the videoNearDupPairs algebra on the survivors' frame hashes
+        val sframes = frames.select(col("id").as("media_id"),
+            col("frame_idx"), col("phash"))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        (Multimodal.videoFramesNearDupPairs(sframes, cfg.maxHamming,
+            cfg.nBands, cfg.minSimE4).select("idA", "idB"),
+          () => sframes.unpersist(): Unit)
+      },
+      semantic = Some(videoSemantic(cfg)),
+      writeIndex = (run, adm, _) =>
+        if (run.haveState)
+          Multimodal.appendVideoFrames(run.spark, run.path("video"), adm,
+            run.batchId)
+        else
+          Multimodal.writeVideoFrameIndex(run.spark, adm,
+            run.path("video"), cfg.nBands, run.batchId),
+      project = _.select("id"),
+      cfg.stateBloomBits, cfg.stateBloomAuto)
+
+  /** Embedding: the exact key is the vector's e6 fixed-point canonical
+    * string (vector identity at the documented resolution); signatures
+    * are the NON-ZERO vectors — zero-norm rows pass the semantic stages
+    * (cosine undefined, they can never pair) and are never indexed, but
+    * their exact keys ARE state. Near-dup is cosine ≥ thresholdE4
+    * within shared cells of the FROZEN centroid set: the stored set, or
+    * at bootstrap the md5 sample of the batch's exact-surviving
+    * vectors, which the bootstrap index write draws identically and
+    * pins for every later batch.
+    */
+  private def embeddingFamily(cfg: EmbeddingIncrementConfig): MediaFamily =
+    MediaFamily(EmbeddingLayout, unsigned = None,
+      decode = batch => {
+        val keyed = graft.core.Ops.widen(batch)
+          .select(col("id").cast("long").as("id"), col("v"))
+          .withColumn("__md5", md5(concat_ws(",",
+            transform(col("v"),
+              x => graft.core.Ops.fixedPoint(x, 6).cast("string")))))
+          .withColumn("__signed", lit(true))
+          .localCheckpoint(eager = true)
+        (keyed, nonzeroVectors(_).select("id", "v"))
+      },
+      nearVsState = (run, vecs) =>
+        Curation.semNearDupAgainstIndex(run.spark, run.path("sem"), vecs,
+          cfg.thresholdE4, excludeBatch = Some(run.batchId),
+          bloomBits = run.bloomBits),
+      within = (run, vecs) => {
+        // at bootstrap there is no state stage, so `vecs` are all the
+        // exact survivors — the set the index write samples again
+        val centroids =
+          if (run.haveState) storedCentroids(run.spark, run.path("sem"))
+          else Curation.semCentroidSample(vecs, cfg.centroidEvery)
+            .localCheckpoint(eager = true)
+        val pm = graft.operators.Similarity.ivfNearDupPairsManaged(vecs,
+          centroids, cfg.thresholdE4 / 10000.0, cfg.nassign)
+        (pm.df.select("idA", "idB"), () => pm.close())
+      },
+      semantic = None,
+      writeIndex = (run, adm, exact) =>
+        if (run.haveState)
+          Curation.appendSemVectors(run.spark, run.path("sem"), adm,
+            run.batchId)
+        else
+          Curation.writeSemIndex(adm,
+            Curation.semCentroidSample(exact, cfg.centroidEvery),
+            run.path("sem"), cfg.centroidEvery, cfg.nassign, run.batchId),
+      project = _.select("id"),
+      cfg.stateBloomBits, cfg.stateBloomAuto)
+
+  /** The one driver every media-shaped increment runs: decode once →
+    * unsigned rows rejected → exact dedup (against committed keys —
+    * dup_of is the stored key's canonical — then within the batch,
+    * min id) → near-dup against committed state (min old parent) →
+    * within-batch components (min-id canonicals) → optional semantic
+    * stage → commit (keys → ledger → metrics → sem sub-state → family
+    * index, whose meta is the marker, LAST). Retry and torn-batch
+    * contracts as in [[curateIncrement]]: every against-state read
+    * excludes the batch's own partitions, so a retry recomputes
+    * identical verdicts and replaces its partitions bit-identically.
+    */
+  private def runFamily(fam: MediaFamily, batch: DataFrame,
+                        stateDir: String, batchId: String,
+                        caller: String): IncrementResult = {
+    val spark = batch.sparkSession
+    val haveState = prologue(spark, stateDir, batchId, fam.layout.marker,
+      caller)
+    val led = new LedgerBuilder(caller)
+    val (keys, signatures) = fam.decode(batch)
+    // the ingest and signed counts in one job
+    val n = keys.agg(count(lit(1)), count(when(col("__signed"), true)))
+      .head()
+    led.stage("ingest", n.getLong(0))
+    for ((stageName, reason) <- fam.unsigned) {
+      led.stage(stageName, n.getLong(1))
+      led.reject(keys.filter(!col("__signed"))
+        .select(col("id"), lit(null).cast("long").as("__dup_of")), reason)
+    }
+    val decoded = keys.filter(col("__signed")).drop("__signed")
+    val run = Run(spark, stateDir, batchId, haveState,
+      bloomDial(spark, stateDir, haveState, fam.bloomBits, fam.bloomAuto,
+        led.ingested))
+
+    val exact = exactDedup(led, run, fam.layout.marker, decoded,
+      keys => bloomPrune(keys, col("key"), decoded.select("__md5"),
+        col("__md5"), run.bloomBits))
+
+    // ---- near-dup: against state (min old parent), then within batch ---
+    val afterOld =
+      if (!haveState) exact
+      else led.dropMatches(exact, fam.nearVsState(run, signatures(exact)),
+        "near_dup")
+    val (edges, release) = fam.within(run, signatures(afterOld))
+    val afterNear = led.dropComponents(afterOld, edges, "near_dup",
+      release)
+    led.stage("near_dup", afterNear.count())
+
+    val sem = for (s <- fam.semantic; th <- s.thresholdE4)
+      yield semanticStage(led, run, fam.layout.marker, afterNear, th,
+        s.dim, s.dimLabel, s.centroidEvery, s.nassign)(pool =>
+        // embed ONLY the surviving pool (never re-decode rejects)
+        s.embed(asMedia(batch.join(pool.select(col("id").as("media_id")),
+          Seq("media_id"), "left_semi"))))
+    val admitted = sem.fold(afterNear)(_.admitted)
+    val ledger = led.admit(admitted)
+    commit(run, admitted, admitted.select(col("__md5").as("key"),
+        col("id")), ledger, led.stageCounts, sem)(
+      fam.writeIndex(run, signatures(admitted), signatures(exact)))
+    IncrementResult(ledger, fam.project(admitted), led.stageCounts)
+  }
+
+  /** Seed a family's state from an ALREADY-CURATED corpus under batch id
+    * "base": the exact keys of the rows with a signature (the others
+    * can never pair), the sem sub-state when the semantic stage is
+    * enabled — so the first increment dedups semantically against the
+    * full history — and the family index LAST (its meta is the
+    * marker). The caller asserts the corpus is internally deduplicated.
+    */
+  private def seedFamily(fam: MediaFamily, curated: DataFrame,
+                         stateDir: String, caller: String): Unit = {
+    val spark = curated.sparkSession
+    require(!markerExists(spark, stateDir, fam.layout.marker),
+      s"$caller: state already exists at $stateDir")
+    claimFamily(spark, stateDir, fam.layout.marker, caller)
+    val (keys, signatures) = fam.decode(curated)
+    val seeded = keys.filter(col("__signed"))
+    writeExactKeyRows(seeded.select(col("__md5").as("key"), col("id")),
+      stateDir, "base")
+    for (s <- fam.semantic; _ <- s.thresholdE4) {
+      val vecs = nonzeroVectors(s.embed(asMedia(curated)))
+        .localCheckpoint(eager = true)
+      Curation.writeSemIndex(vecs,
+        Curation.semCentroidSample(vecs, s.centroidEvery),
+        s"$stateDir/sem", s.centroidEvery, s.nassign, "base")
+    }
+    val sigs = signatures(seeded)
+    fam.writeIndex(Run(spark, stateDir, "base", haveState = false,
+      bloomBits = None), sigs, sigs)
+  }
+
+  /** Seed image state from an ALREADY-CURATED media corpus: exact
+    * payload-md5 keys + pHash index under batch id "base" (undecodable
+    * payloads excluded — they can never pair), plus the sem sub-state
+    * when `cfg` enables the semantic stage.
+    */
+  def initImageStateFromCurated(spark: SparkSession, stateDir: String,
+                                curated: Dataset[MediaRecord],
+                                cfg: ImageIncrementConfig =
+                                  ImageIncrementConfig()): Unit =
+    seedFamily(imageFamily(cfg), curated.toDF(), stateDir,
+      "initImageStateFromCurated")
+
+  /** Seed AUDIO state from an ALREADY-CURATED media corpus — the audio
+    * member of the [[initStateFromCurated]] family: exact payload-md5
+    * keys + fingerprint index under batch id "base" (unprintable clips
+    * excluded), plus the sem sub-state when the config enables the
+    * semantic stage.
+    */
+  def initAudioStateFromCurated(spark: SparkSession, stateDir: String,
+                                curated: Dataset[MediaRecord],
+                                cfg: AudioIncrementConfig =
+                                  AudioIncrementConfig()): Unit =
+    seedFamily(audioFamily(cfg), curated.toDF(), stateDir,
+      "initAudioStateFromCurated")
+
+  /** Seed VIDEO state from an ALREADY-CURATED media corpus: exact
+    * payload-md5 keys + keyframe index under batch id "base" (frameless
+    * clips excluded), plus the sem sub-state when enabled.
+    */
+  def initVideoStateFromCurated(spark: SparkSession, stateDir: String,
+                                curated: Dataset[MediaRecord],
+                                cfg: VideoIncrementConfig =
+                                  VideoIncrementConfig()): Unit =
+    seedFamily(videoFamily(cfg), curated.toDF(), stateDir,
+      "initVideoStateFromCurated")
+
+  /** Seed EMBEDDING state from an ALREADY-CURATED (id, v) corpus: e6
+    * fixed-point exact keys + the sem index (centroids drawn by the
+    * replayable md5 rule from the corpus's non-zero vectors, pinned for
+    * every later [[curateEmbeddingIncrement]]) under batch "base".
+    */
+  def initSemStateFromCurated(spark: SparkSession, stateDir: String,
+                              curated: DataFrame,
+                              cfg: EmbeddingIncrementConfig =
+                                EmbeddingIncrementConfig()): Unit =
+    seedFamily(embeddingFamily(cfg), curated, stateDir,
+      "initSemStateFromCurated")
+
+  /** The image increment: a new media batch curated against the
+    * accumulated pHash + exact-payload state — decode ONCE, verdicts in
+    * the [[CurateImages.run]] order (undecodable → exact vs state →
+    * exact within batch → pHash near-dup vs state with min-old-parent →
+    * within-batch components → optional SemDeDup over block-mean
+    * embeddings), admitted signatures appended under `batchId` with the
+    * pHash META partition as the increment's commit marker.
+    */
+  def curateImageIncrement(batch: Dataset[MediaRecord], stateDir: String,
+                           batchId: String,
+                           cfg: ImageIncrementConfig = ImageIncrementConfig())
+      : IncrementResult =
+    runFamily(imageFamily(cfg), batch.toDF(), stateDir, batchId,
+      "curateImageIncrement")
+
+  /** The audio increment: verdict order no_fingerprint → exact payload
+    * key vs state then within batch → fingerprint near-dup vs committed
+    * state with min-old-parent → within-batch pairs + components →
+    * optional SemDeDup over pooled energy-profile embeddings (the
+    * RESAMPLED re-encode regime the fixed-window fingerprint misses);
+    * admitted fingerprints append under `batchId` with the audio META
+    * partition as the commit marker.
+    */
+  def curateAudioIncrement(batch: Dataset[MediaRecord], stateDir: String,
+                           batchId: String,
+                           cfg: AudioIncrementConfig = AudioIncrementConfig())
+      : IncrementResult =
+    runFamily(audioFamily(cfg), batch.toDF(), stateDir, batchId,
+      "curateAudioIncrement")
+
+  /** The video increment: verdict order no_frames → exact payload key
+    * vs state then within batch → keyframe near-dup vs committed state
+    * with min-old-parent → within-batch pairs + components → optional
+    * SemDeDup over pooled keyframe embeddings (the RE-GRAINED regime
+    * per-frame pHash misses); admitted frame rows append under
+    * `batchId` with the video META partition as the commit marker.
+    */
+  def curateVideoIncrement(batch: Dataset[MediaRecord], stateDir: String,
+                           batchId: String,
+                           cfg: VideoIncrementConfig = VideoIncrementConfig())
+      : IncrementResult =
+    runFamily(videoFamily(cfg), batch.toDF(), stateDir, batchId,
+      "curateVideoIncrement")
+
+  /** The embedding increment: a new snapshot of (id, v) rows curated
+    * against the accumulated semantic state. Verdict order: exact dedup
+    * (vector identity at e6 fixed-point — vs state then within batch) →
+    * semantic near-dup (cosine ≥ threshold within shared cells of the
+    * FROZEN [[graft.operators.Curation.semCentroidSample]] centroid set
+    * — vs committed state with min-old-parent, then within-batch
+    * components). Admitted non-zero vectors append under `batchId` with
+    * the sem META partition as the commit marker.
+    */
+  def curateEmbeddingIncrement(batch: DataFrame, stateDir: String,
+      batchId: String,
+      cfg: EmbeddingIncrementConfig = EmbeddingIncrementConfig())
+      : IncrementResult =
+    runFamily(embeddingFamily(cfg), batch, stateDir, batchId,
+      "curateEmbeddingIncrement")
+
+
+  // ---- backfills: retroactive coverage for stages enabled late ----------
+
+  /** Run `body` over the committed admitted history (id, batch_id) of
+    * the family whose marker is `marker` — LOUD coverage first: every
+    * committed admitted id must appear in `corpusIds`, or this throws.
+    */
+  private def withAdmittedHistory[A](spark: SparkSession, stateDir: String,
+                                     marker: String, corpusIds: DataFrame,
+                                     caller: String)(
+      body: DataFrame => A): A = {
+    val admittedIds = spark.read.parquet(s"$stateDir/ledger")
+      .filter(col("admitted"))
+      .join(broadcast(committedBatches(spark, stateDir, marker)),
+        Seq("batch_id"), "left_semi")
+      .select(col("id"), col("batch_id"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val missing = admittedIds.join(corpusIds, Seq("id"), "left_anti")
+        .count()
+      require(missing == 0L,
+        s"$caller: $missing admitted ids absent from the supplied " +
+          "corpus — backfill needs the full admitted history")
+      body(admittedIds)
+    } finally admittedIds.unpersist()
+  }
+
+  /** The shared sem backfill: `embed` maps the admitted history to
+    * (id, v) vectors; the non-zero ones are indexed under each doc's
+    * ORIGINAL ledger batch id, so the serving-side restriction to
+    * marker-committed batches holds unchanged. Each batch commits via
+    * its own sem meta partition (written last); a rerun skips
+    * already-committed batches and finishes the rest. Centroids are
+    * drawn once from the FULL admitted non-zero corpus by the
+    * replayable md5 rule, so a retried bootstrap draws the identical
+    * set; an existing (partial) sub-state pins its dials. Returns the
+    * number of vectors indexed by THIS call.
+    */
+  private def backfillSem(spark: SparkSession, stateDir: String,
+                          marker: String, corpusIds: DataFrame,
+                          caller: String, semDim: Int,
+                          semCentroidEvery: Int, semNassign: Int)(
+      embed: DataFrame => DataFrame): Long =
+    withAdmittedHistory(spark, stateDir, marker, corpusIds, caller) {
+      admittedIds =>
+        import spark.implicits._
+        def haveSem = semStateExists(spark, stateDir)
+        val (ce, na) =
+          if (!haveSem) (semCentroidEvery, semNassign)
+          else {
+            val (pce, pna, dim) = Curation.readSemMeta(spark,
+              s"$stateDir/sem")
+            require(dim == 0 || dim == semDim,
+              s"$caller: semDim $semDim != pinned dim $dim")
+            (pce, pna)
+          }
+        val nonzero = nonzeroVectors(embed(admittedIds))
+          .join(admittedIds, Seq("id"))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          nonzero.count()
+          // bounded: ledger batch ids (compaction keeps this small)
+          val batches = admittedIds.select("batch_id").distinct()
+            .as[String].collect().sorted
+          val done: Set[String] =
+            if (!haveSem) Set.empty
+            else spark.read.parquet(s"$stateDir/sem/meta")
+              .select("batch_id").distinct().as[String].collect().toSet
+          var indexed = 0L
+          batches.filterNot(done).foreach { b =>
+            val vecs = nonzero.filter(col("batch_id") === b)
+              .select("id", "v")
+            if (!haveSem)
+              Curation.writeSemIndex(vecs,
+                Curation.semCentroidSample(nonzero.select("id", "v"), ce),
+                s"$stateDir/sem", ce, na, batchId = b)
+            else Curation.appendSemVectors(spark, s"$stateDir/sem", vecs, b)
+            indexed += vecs.count()
+          }
+          indexed
+        } finally nonzero.unpersist()
+    }
 
   /** Retroactive semantic coverage for a text state whose earlier
     * increments ran WITHOUT the semantic stage: embeds every
@@ -2211,6 +1853,20 @@ object Increment {
     * bootstrap draws the identical set. Returns the number of vectors
     * indexed by THIS call.
     */
+  def semBackfill(spark: SparkSession, stateDir: String,
+                  admittedCorpus: DataFrame, idCol: String, textCol: String,
+                  semDim: Int = 64, semCentroidEvery: Int = 25,
+                  semNassign: Int = 2): Long = {
+    require(stateExists(spark, stateDir),
+      s"semBackfill: no committed state at $stateDir")
+    val corpus = textCorpus(admittedCorpus, idCol, textCol)
+    backfillSem(spark, stateDir, TextLayout.marker, corpus.select("id"),
+      "semBackfill", semDim, semCentroidEvery, semNassign)(admittedIds =>
+      TextStats.hashEmbedVectors(
+        corpus.join(admittedIds.select("id"), Seq("id"), "left_semi"),
+        "id", "text", semDim))
+  }
+
   /** Retroactive SUBSTRING-DEDUP coverage — [[semBackfill]]'s twin for
     * the `windows` claims table: embeds every already-admitted doc's
     * w-token window hashes under its ORIGINAL ledger batch id so the
@@ -2228,19 +1884,9 @@ object Increment {
                      textCol: String, w: Int): Long = {
     require(stateExists(spark, stateDir),
       s"windowBackfill: no committed state at $stateDir")
-    val committed = Dedup.minhashCommitted(spark, s"$stateDir/minhash")
-    val admittedIds = spark.read.parquet(s"$stateDir/ledger")
-      .filter(col("admitted"))
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
-      .select(col("id"), col("batch_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val corpus = graft.core.Ops.widen(admittedCorpus)
-        .select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
-      val missing = admittedIds.join(corpus, Seq("id"), "left_anti").count()
-      require(missing == 0L,
-        s"windowBackfill: $missing admitted ids absent from the supplied " +
-          "corpus — backfill needs the full admitted history")
+    val corpus = textCorpus(admittedCorpus, idCol, textCol)
+    withAdmittedHistory(spark, stateDir, TextLayout.marker,
+        corpus.select("id"), "windowBackfill") { admittedIds =>
       val claims = Curation.windowClaims(
           corpus.join(admittedIds.select("id"), Seq("id"), "left_semi"),
           "id", "text", w)
@@ -2251,233 +1897,66 @@ object Increment {
         .option("partitionOverwriteMode", "dynamic")
         .parquet(s"$stateDir/windows")
       claims.count()
-    } finally admittedIds.unpersist()
-  }
-
-  def semBackfill(spark: SparkSession, stateDir: String,
-                  admittedCorpus: DataFrame, idCol: String, textCol: String,
-                  semDim: Int = 64, semCentroidEvery: Int = 25,
-                  semNassign: Int = 2): Long = {
-    import spark.implicits._
-    require(stateExists(spark, stateDir),
-      s"semBackfill: no committed state at $stateDir")
-    val committed = Dedup.minhashCommitted(spark, s"$stateDir/minhash")
-    val admittedIds = spark.read.parquet(s"$stateDir/ledger")
-      .filter(col("admitted"))
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
-      .select(col("id"), col("batch_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val corpus = graft.core.Ops.widen(admittedCorpus)
-        .select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
-      val missing = admittedIds.join(corpus, Seq("id"), "left_anti").count()
-      require(missing == 0L,
-        s"semBackfill: $missing admitted ids absent from the supplied " +
-          s"corpus — backfill needs the full admitted history")
-      // dials: an existing (partial) sub-state pins them
-      val (ce, na) =
-        if (!semStateExists(spark, stateDir))
-          (semCentroidEvery, semNassign)
-        else {
-          val (pce, pna, dim) = Curation.readSemMeta(spark, s"$stateDir/sem")
-          require(dim == 0 || dim == semDim,
-            s"semBackfill: semDim $semDim != pinned dim $dim")
-          (pce, pna)
-        }
-      val nonzero = TextStats.hashEmbedVectors(
-          corpus.join(admittedIds.select("id"), Seq("id"), "left_semi"),
-          "id", "text", semDim)
-        .filter(expr("aggregate(v, 0D, (a, x) -> a + x * x)") > lit(0.0))
-        .join(admittedIds, Seq("id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        nonzero.count()
-        // bounded: ledger batch ids (compaction keeps this small)
-        val batches = admittedIds.select("batch_id").distinct()
-          .as[String].collect().sorted
-        val done: Set[String] =
-          if (!semStateExists(spark, stateDir)) Set.empty
-          else spark.read.parquet(s"$stateDir/sem/meta")
-            .select("batch_id").distinct().as[String].collect().toSet
-        var indexed = 0L
-        batches.filterNot(done).foreach { b =>
-          val vecs = nonzero.filter(col("batch_id") === b)
-            .select("id", "v")
-          if (!semStateExists(spark, stateDir)) {
-            val cents = Curation.semCentroidSample(
-              nonzero.select("id", "v"), ce)
-            Curation.writeSemIndex(vecs, cents, s"$stateDir/sem", ce, na,
-              batchId = b)
-          } else Curation.appendSemVectors(spark, s"$stateDir/sem", vecs, b)
-          indexed += vecs.count()
-        }
-        indexed
-      } finally nonzero.unpersist()
-    } finally admittedIds.unpersist()
-  }
-
-  /** The embedding increment — the FIFTH content twin of
-    * [[curateIncrement]] and the modality siblings: a new snapshot of
-    * (id, v) embedding rows curated against the accumulated semantic
-    * state. Verdict order: exact dedup (vector identity at e6
-    * fixed-point — vs state then within batch) → semantic near-dup
-    * (cosine >= threshold within shared cells of the FROZEN
-    * [[graft.operators.Curation.semCentroidSample]] centroid set — vs
-    * committed state with min-old-parent, then within-batch components).
-    * Zero-norm vectors pass the semantic stages (cosine undefined — they
-    * can never pair) and are never indexed, but their exact keys ARE
-    * state (identical zero vectors dedup exactly). Admitted non-zero
-    * vectors append under `batchId` with the sem META partition as the
-    * increment's commit marker; the first increment draws the centroid
-    * set from its own exact-surviving non-zero vectors (the replayable
-    * md5 rule) and pins it for every later batch. Retry/torn contracts
-    * as in the siblings.
-    */
-  def curateEmbeddingIncrement(batch: DataFrame, stateDir: String,
-      batchId: String,
-      cfg: EmbeddingIncrementConfig = EmbeddingIncrementConfig())
-      : IncrementResult = {
-    require(batchId.nonEmpty && batchId != "base" &&
-        batchId != "__HIVE_DEFAULT_PARTITION__",
-      s"curateEmbeddingIncrement: invalid batch id '$batchId'")
-    val spark = batch.sparkSession
-    requireBatchNotFolded(spark, stateDir, batchId, "curateEmbeddingIncrement")
-    import spark.implicits._
-    writeFamilySentinel(spark, stateDir, "sem")
-    val haveState = semStateExists(spark, stateDir)
-    val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val led = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def stage(name: String, c: Long): Unit = counts += ((name, c))
-    def rejectPiece(ids: DataFrame, reason: String): Unit =
-      led += ids.select(col("id").cast("long").as("id"),
-          lit(false).as("admitted"), lit(reason).as("reason"),
-          coalesce(col("__dup_of"), col("id")).cast("long").as("dup_of"))
-        .localCheckpoint(eager = true)
-
-    // exact key: e6 fixed-point canonical string of the vector (vector
-    // identity at the documented resolution)
-    val keyed = graft.core.Ops.widen(batch)
-      .select(col("id").cast("long").as("id"), col("v"))
-      .withColumn("__md5", md5(concat_ws(",",
-        transform(col("v"),
-          x => graft.core.Ops.fixedPoint(x, 6).cast("string")))))
-      .localCheckpoint(eager = true)
-    stage("ingest", keyed.count())
-    // effective Bloom dial (manual bits win; see IncrementConfig)
-    val effBloomBits = cfg.stateBloomBits.orElse(
-      if (cfg.stateBloomAuto && haveState)
-        decideStateBloom(spark, stateDir, counts.head._2)
-      else None)
-
-    // exact dedup: against state, then within batch
-    val afterExactState =
-      if (!haveState) keyed
-      else {
-        val stateKeys = readMarkedExactKeys(spark, stateDir, "sem",
-          batchId,
-          effBloomBits.map(m => (keyed.select("__md5"), m)))
-        val hits = keyed.join(
-            stateKeys.select(col("key").as("__md5"),
-              col("id").as("__dup_of")), Seq("__md5"))
-          .localCheckpoint(eager = true)
-        rejectPiece(hits.select(col("id"), col("__dup_of")), "exact_dup")
-        keyed.join(hits.select("id"), Seq("id"), "left_anti")
-      }
-    val keeper = afterExactState.groupBy("__md5")
-      .agg(min(col("id")).as("__keep"))
-    val withKeep = afterExactState.join(keeper, Seq("__md5"))
-      .localCheckpoint(eager = true)
-    rejectPiece(withKeep.filter(col("id") =!= col("__keep"))
-      .select(col("id"), col("__keep").as("__dup_of")), "exact_dup")
-    val exact = withKeep.filter(col("id") === col("__keep"))
-      .select("id", "v", "__md5").localCheckpoint(eager = true)
-    stage("exact_dedup", exact.count())
-    val nonzero = exact
-      .filter(expr("aggregate(v, 0D, (a, x) -> a + x * x)") > lit(0.0))
-      .localCheckpoint(eager = true)
-
-    // the frozen centroid rule: stored set, or (bootstrap) the md5
-    // sample of this batch's exact-surviving non-zero vectors
-    val centroids =
-      if (haveState)
-        spark.read.parquet(s"$stateDir/sem/centroids")
-          .select(col("cid").as("id"), col("cv").as("v"))
-      else
-        Curation.semCentroidSample(nonzero.select("id", "v"),
-          cfg.centroidEvery).localCheckpoint(eager = true)
-
-    // semantic near-dup: against state, then within batch
-    val afterOld =
-      if (!haveState) exact
-      else {
-        val hits = Curation.semNearDupAgainstIndex(spark,
-            s"$stateDir/sem",
-            nonzero.select(col("id"), col("v")), cfg.thresholdE4,
-            excludeBatch = Some(batchId),
-            bloomBits = effBloomBits)
-          .groupBy("id_new").agg(min(col("id_old")).as("__dup_of"))
-          .select(col("id_new").as("id"), col("__dup_of"))
-          .localCheckpoint(eager = true)
-        rejectPiece(hits, "near_dup")
-        exact.join(hits.select("id"), Seq("id"), "left_anti")
-          .localCheckpoint(eager = true)
-      }
-    val survNonzero = nonzero.join(afterOld.select("id"), Seq("id"),
-      "left_semi")
-    val pairsM = graft.operators.Similarity.ivfNearDupPairsManaged(
-      survNonzero.select("id", "v"), centroids,
-      cfg.thresholdE4 / 10000.0, cfg.nassign)
-    val compM = Dedup.connectedComponentsManaged(
-      pairsM.df.select("idA", "idB"))
-    val victims = compM.df.filter(col("id") =!= col("label"))
-      .select(col("id"), col("label").as("__dup_of"))
-      .localCheckpoint(eager = true)
-    compM.close(); pairsM.close()
-    rejectPiece(victims, "near_dup")
-    val admitted = afterOld
-      .join(victims.select("id"), Seq("id"), "left_anti")
-      .localCheckpoint(eager = true)
-    stage("near_dup", admitted.count())
-    led += admitted.select(col("id"), lit(true).as("admitted"),
-        lit("admitted").as("reason"), col("id").as("dup_of"))
-      .localCheckpoint(eager = true)
-
-    // persist: keys -> ledger -> metrics -> sem index (meta = marker)
-    val ledger = led.reduce(_ unionByName _)
-      .select(col("id"), col("admitted"), col("reason"), col("dup_of"))
-      .localCheckpoint(eager = true)
-    val nLed = ledger.count()
-    require(nLed == counts.head._2,
-      s"curateEmbeddingIncrement: ledger rows $nLed != " +
-        s"batch ${counts.head._2}")
-    def writer(df: DataFrame, path: String): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic").parquet(path)
-    if (haveState || admitted.head(1).nonEmpty) {
-      writeExactKeyRows(admitted.select(col("__md5").as("key"), col("id")),
-        s"$stateDir/exact", batchId)
-      writer(ledger, s"$stateDir/ledger")
-      writer(counts.toSeq.toDF("stage", "rows"), s"$stateDir/metrics")
-      val admNonzero = nonzero
-        .join(admitted.select("id"), Seq("id"), "left_semi")
-        .select("id", "v")
-      if (haveState)
-        Curation.appendSemVectors(spark, s"$stateDir/sem", admNonzero,
-          batchId)
-      else
-        Curation.writeSemIndex(admNonzero, centroids, s"$stateDir/sem",
-          cfg.centroidEvery, cfg.nassign, batchId)
     }
-    IncrementResult(ledger, admitted.select("id"), counts.toSeq)
   }
+
+  /** [[semBackfill]] for a media family's root: the root must be the
+    * family's (sentinel) and committed; `sem` embeds the supplied
+    * payload corpus.
+    */
+  private def mediaSemBackfill(spark: SparkSession, stateDir: String,
+                               layout: StateLayout, sem: Semantic,
+                               corpus: Dataset[MediaRecord],
+                               caller: String): Long = {
+    val pinned = stateFamily(spark, stateDir)
+    require(pinned.contains(layout.marker),
+      s"$caller: state at $stateDir is " +
+        s"'${pinned.getOrElse("<none>")}', expected '${layout.marker}'")
+    require(markerExists(spark, stateDir, layout.marker),
+      s"$caller: no committed ${layout.marker} state at $stateDir")
+    backfillSem(spark, stateDir, layout.marker,
+      corpus.toDF().select(col("media_id").as("id")), caller, sem.dim,
+      sem.centroidEvery, sem.nassign)(_ => sem.embed(corpus))
+  }
+
+  /** Retroactive semantic coverage for an IMAGE state whose earlier
+    * increments ran without the semantic stage — [[semBackfill]]'s
+    * image twin: embeds every already-admitted image from the supplied
+    * payload corpus and seeds/completes the sem sub-state per
+    * committed batch, so the next [[curateImageIncrement]] with
+    * `semDedupThresholdE4` set dedups against the FULL history instead
+    * of post-enablement batches only. Idempotent per batch (already-
+    * present sem batches are skipped); a torn backfill completes on
+    * rerun. Returns the number of vectors indexed.
+    */
+  def imageSemBackfill(spark: SparkSession, stateDir: String,
+                       corpus: Dataset[MediaRecord],
+                       cfg: ImageIncrementConfig = ImageIncrementConfig())
+      : Long =
+    mediaSemBackfill(spark, stateDir, ImageLayout, imageSemantic(cfg),
+      corpus, "imageSemBackfill")
+
+  /** [[imageSemBackfill]] for an AUDIO state (pooled energy-profile
+    * embeddings, [[graft.operators.Multimodal.audioEmbeddings]]).
+    */
+  def audioSemBackfill(spark: SparkSession, stateDir: String,
+                       corpus: Dataset[MediaRecord],
+                       cfg: AudioIncrementConfig = AudioIncrementConfig())
+      : Long =
+    mediaSemBackfill(spark, stateDir, AudioLayout, audioSemantic(cfg),
+      corpus, "audioSemBackfill")
+
+  /** [[imageSemBackfill]] for a VIDEO state (pooled keyframe block-mean
+    * embeddings, [[graft.operators.Multimodal.videoEmbeddings]]).
+    */
+  def videoSemBackfill(spark: SparkSession, stateDir: String,
+                       corpus: Dataset[MediaRecord],
+                       cfg: VideoIncrementConfig = VideoIncrementConfig())
+      : Long =
+    mediaSemBackfill(spark, stateDir, VideoLayout, videoSemantic(cfg),
+      corpus, "videoSemBackfill")
 
   // ---- retraction (right-to-be-forgotten) --------------------------------
-
-  private val RetractableTables = Seq(
-    "exact/keys", "minhash/shingles", "minhash/bands", "sem/assigned",
-    "windows", "phash/sigs", "audio/fps", "audio/sizes", "video/frames",
-    "video/sizes")
 
   /** Remove documents/media from the ACCUMULATED increment state — the
     * deletion request a production corpus must honor (a retracted doc
@@ -2508,8 +1987,9 @@ object Increment {
     val idsN = ids.select(col(ids.columns.head).cast("long").as("id"))
       .distinct().localCheckpoint(eager = true)
     val f = fs(spark, stateDir)
-    for (sub <- RetractableTables)
-      retractRows(spark, f, s"$stateDir/$sub", idsN)
+    for (sub <- StateBloomHeavyTables)
+      rewritePartitionsHolding(spark, f, s"$stateDir/$sub", idsN)(
+        _.join(idsN, Seq("id"), "left_anti"))
     // the frozen centroid set stores FULL embedding vectors of sampled
     // docs (cid = doc id) — a deletion request covers that derived copy
     // too. Dropping a centroid narrows future candidate routing (stored
@@ -2529,93 +2009,45 @@ object Increment {
         kept.write.mode("overwrite").parquet(centPath)
       }
     }
-    markLedgerRetracted(spark, f, s"$stateDir/ledger", idsN)
+    rewritePartitionsHolding(spark, f, s"$stateDir/ledger", idsN)(
+      _.join(idsN.withColumn("__r", lit(true)), Seq("id"), "left_outer")
+        .select(col("id"),
+          when(col("__r"), lit(false)).otherwise(col("admitted"))
+            .as("admitted"),
+          when(col("__r"), lit("retracted")).otherwise(col("reason"))
+            .as("reason"),
+          when(col("__r"), col("id")).otherwise(col("dup_of")).as("dup_of"),
+          col("batch_id")))
   }
 
-  /** Drop `ids` rows from one batch_id-partitioned state table IN
-    * PLACE: rewrite only the partitions holding them, delete the ones
-    * the retraction empties. The rewritten frame is eagerly
-    * materialized BEFORE the overwrite (the write would otherwise
-    * re-scan files it is replacing).
+  /** Rewrite IN PLACE only the partitions of one batch_id-partitioned
+    * state table that hold any of `ids`: `rewrite` maps their rows to
+    * the new rows, eagerly materialized BEFORE the overwrite (the write
+    * would otherwise re-scan files it is replacing).
     */
-  private def retractRows(spark: SparkSession,
-                          f: org.apache.hadoop.fs.FileSystem,
-                          path: String, ids: DataFrame): Unit = {
+  private def rewritePartitionsHolding(spark: SparkSession,
+                                       f: org.apache.hadoop.fs.FileSystem,
+                                       path: String, ids: DataFrame)(
+      rewrite: DataFrame => DataFrame): Unit = {
     if (!f.exists(new org.apache.hadoop.fs.Path(path))) return
     val tbl = spark.read.parquet(path)
     val affected = tbl.join(ids, Seq("id"), "left_semi")
       .select("batch_id").distinct().collect().map(_.getString(0))
     if (affected.isEmpty) return
-    val rewritten = tbl
-      .filter(col("batch_id").isInCollection(affected.toSeq))
-      .join(ids, Seq("id"), "left_anti")
+    val rewritten = rewrite(tbl
+        .filter(col("batch_id").isInCollection(affected.toSeq)))
       .localCheckpoint(eager = true)
     val still = rewritten.select("batch_id").distinct()
       .collect().map(_.getString(0)).toSet
     rewritten.write.mode("overwrite").partitionBy("batch_id")
       .option("partitionOverwriteMode", "dynamic").parquet(path)
-    // a partition the retraction EMPTIES is not present in `rewritten`,
+    // a partition the rewrite EMPTIES is not present in `rewritten`,
     // so dynamic overwrite leaves its old files live — replace it with a
     // zero-row schema-ful parquet (NOT a bare dir delete: an all-empty
     // table directory would fail schema inference on the next read)
     for (b <- affected if !still.contains(b))
       rewritten.drop("batch_id").limit(0)
         .write.mode("overwrite").parquet(s"$path/batch_id=$b")
-  }
-
-  private def markLedgerRetracted(spark: SparkSession,
-                                  f: org.apache.hadoop.fs.FileSystem,
-                                  path: String, ids: DataFrame): Unit = {
-    if (!f.exists(new org.apache.hadoop.fs.Path(path))) return
-    val tbl = spark.read.parquet(path)
-    val affected = tbl.join(ids, Seq("id"), "left_semi")
-      .select("batch_id").distinct().collect().map(_.getString(0))
-    if (affected.isEmpty) return
-    val rewritten = tbl
-      .filter(col("batch_id").isInCollection(affected.toSeq))
-      .join(ids.withColumn("__r", lit(true)), Seq("id"), "left_outer")
-      .select(col("id"),
-        when(col("__r"), lit(false)).otherwise(col("admitted"))
-          .as("admitted"),
-        when(col("__r"), lit("retracted")).otherwise(col("reason"))
-          .as("reason"),
-        when(col("__r"), col("id")).otherwise(col("dup_of")).as("dup_of"),
-        col("batch_id"))
-      .localCheckpoint(eager = true)
-    rewritten.write.mode("overwrite").partitionBy("batch_id")
-      .option("partitionOverwriteMode", "dynamic").parquet(path)
-  }
-
-  /** Per-family heavy data tables an increment state accumulates one
-    * batch_id partition per increment in — the compaction targets.
-    */
-  private def foldTables(family: String): Seq[String] = family match {
-    case "minhash" => Seq("exact/keys", "windows", "minhash/bands",
-      "minhash/shingles")
-    case "phash" => Seq("exact/keys", "phash/sigs")
-    case "audio" => Seq("exact/keys", "audio/fps", "audio/sizes")
-    case "video" => Seq("exact/keys", "video/frames", "video/sizes")
-    case "sem" => Seq("exact/keys", "sem/assigned")
-    case other => throw new IllegalArgumentException(
-      s"compactStateTo: unknown state family '$other'")
-  }
-
-  /** Per-family trees compaction copies VERBATIM (audit tables keep
-    * their batch ids; a text funnel's `sem/` SUB-state serves through
-    * its own meta ∩ the marker's committed set, both preserved; an
-    * embedding root's centroid table is unpartitioned; the `decontam/`
-    * benchmark family owns its OWN meta marker and its batch ids are
-    * eval-set registrations, not increments — folding them would
-    * destroy the per-benchmark retraction provenance).
-    */
-  private def copyTrees(family: String): Seq[String] = family match {
-    // text/image/audio/video funnel states can carry a sem SUB-state
-    // (its own meta ∩ the marker's committed set governs serving — both
-    // survive because the dest marker keeps every original batch id)
-    case "minhash" | "phash" | "audio" | "video" =>
-      Seq("ledger", "metrics", "sem", "decontam")
-    case "sem" => Seq("ledger", "metrics", "sem/centroids", "decontam")
-    case _ => Seq("ledger", "metrics", "decontam")
   }
 
   /** Compact an increment state: after N increments every data table
@@ -2656,6 +2088,9 @@ object Increment {
       throw new IllegalArgumentException(
         s"compactStateTo: $srcDir has no _family sentinel — not an " +
           "increment state root"))
+    val layout = Layouts.find(_.marker == family).getOrElse(
+      throw new IllegalArgumentException(
+        s"compactStateTo: unknown state family '$family'"))
     val f = fs(spark, destDir)
     val metaRel = s"$family/meta"
     require(!f.exists(new org.apache.hadoop.fs.Path(s"$destDir/$metaRel")),
@@ -2663,8 +2098,8 @@ object Increment {
     val meta = spark.read.parquet(s"$srcDir/$metaRel")
     val committed = meta.select("batch_id").distinct()
       .localCheckpoint(eager = true)
-    writeFamilySentinel(spark, destDir, family)
-    for (rel <- foldTables(family)
+    claimFamily(spark, destDir, family, "compactStateTo")
+    for (rel <- "exact/keys" +: layout.heavy
          if fs(spark, srcDir).exists(
            new org.apache.hadoop.fs.Path(s"$srcDir/$rel"))) {
       spark.read.parquet(s"$srcDir/$rel")
@@ -2673,7 +2108,7 @@ object Increment {
         .write.mode("overwrite").partitionBy("batch_id")
         .parquet(s"$destDir/$rel")
     }
-    for (rel <- copyTrees(family)
+    for (rel <- Seq("ledger", "metrics") ++ layout.verbatim :+ "decontam"
          if fs(spark, srcDir).exists(
            new org.apache.hadoop.fs.Path(s"$srcDir/$rel"))) {
       val src = new org.apache.hadoop.fs.Path(s"$srcDir/$rel")
@@ -2690,7 +2125,8 @@ object Increment {
         org.apache.spark.sql.Encoders.STRING)
       .collectAsList().asScala.toSeq.filter(_ != "base") ++
       readFoldedSentinel(spark, srcDir)).distinct
-    writeFoldedSentinel(spark, destDir, foldedIds)
+    writeRootFile(spark, destDir, "_folded",
+      foldedIds.sorted.mkString("\n"))
     // marker LAST: original committed rows verbatim + the base row. The
     // payload (banding / nBands / dials) is pinned identical across
     // batches by the append paths, so the base row reuses it.

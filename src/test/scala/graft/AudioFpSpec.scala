@@ -107,6 +107,9 @@ class AudioFpSpec extends SparkSpec {
     assert(m1(2L) == ((false, "exact_dup", 1L)))
     assert(m1(3L) == ((true, "admitted", 3L)))
     assert(m1(9L) == ((false, "no_fingerprint", 9L)))
+    // the full stage sequence: names, order and counts
+    assert(r1.stageCounts == Seq("ingest" -> 4L, "fingerprint" -> 3L,
+      "exact_dedup" -> 2L, "near_dup" -> 2L))
     // b2: 10 byte-identical to stored 1 (exact vs state); 11 gain-2
     // re-encode of stored 3 (near vs state, not exact); 20/21 a
     // within-batch near pair (gain twins); 30 fresh
@@ -117,11 +120,16 @@ class AudioFpSpec extends SparkSpec {
       c20,
       clip(21L, 24, gain = 2, src = 20L),
       clip(30L, 24))
-    def runB2() = Increment.curateAudioIncrement(b2.toDS(), dir, "b2", cfg)
+    def curateB2() = Increment.curateAudioIncrement(b2.toDS(), dir, "b2", cfg)
+    def verdicts(r: graft.pipeline.IncrementResult) = r
       .ledger.select("id", "admitted", "reason", "dup_of")
       .as[(Long, Boolean, String, Long)].collect()
       .map(v => v._1 -> ((v._2, v._3, v._4))).toMap
-    val m2 = runB2()
+    def runB2() = verdicts(curateB2())
+    val r2 = curateB2()
+    assert(r2.stageCounts == Seq("ingest" -> 5L, "fingerprint" -> 5L,
+      "exact_dedup" -> 4L, "near_dup" -> 2L))
+    val m2 = verdicts(r2)
     assert(m2(10L) == ((false, "exact_dup", 1L)))
     assert(m2(11L) == ((false, "near_dup", 3L)))
     assert(m2(20L) == ((true, "admitted", 20L)))

@@ -46,6 +46,9 @@ class ImageIncrementSpec extends SparkSpec {
     assert(v1(2L) == ((false, "exact_dup", 1L)))
     assert(v1(3L) == ((true, "admitted", 3L)))
     assert(v1(9L) == ((false, "undecodable", 9L)))
+    // the full stage sequence: names, order and counts
+    assert(r1.stageCounts == Seq("ingest" -> 4L, "decode" -> 3L,
+      "exact_dedup" -> 2L, "near_dup" -> 2L))
     // b2 against state: 10 exact-dup of stored 1; 11 pHash near-dup of
     // stored 3; 20/21 within-batch near pair; 30 fresh
     val b2 = Seq(
@@ -61,6 +64,8 @@ class ImageIncrementSpec extends SparkSpec {
     assert(v2(20L) == ((true, "admitted", 20L)))
     assert(v2(21L) == ((false, "near_dup", 20L)))
     assert(v2(30L) == ((true, "admitted", 30L)))
+    assert(r2.stageCounts == Seq("ingest" -> 5L, "decode" -> 5L,
+      "exact_dedup" -> 4L, "near_dup" -> 2L))
     // retry of b2: identical verdicts, partitions replaced not doubled
     val again = verdictMap(
       Increment.curateImageIncrement(b2.toDS(), dir, "b2").ledger)
@@ -93,6 +98,42 @@ class ImageIncrementSpec extends SparkSpec {
     assert(m.map(_._1) == Set("b1", "b2", "b3", "b5"))
     assert(m.contains(("b1", "ingest", 4L)) &&
       m.contains(("b1", "near_dup", 2L)))
+  }
+
+  test("an increment refuses a state root another family owns: audio " +
+      "on an image root throws and leaves the image ledger and keys") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_img_incr_owner").toString
+    val shared = png(1, 0)
+    Increment.curateImageIncrement(Seq(
+      MediaRecord(1L, shared, "image/png"),
+      MediaRecord(2L, shared, "image/png"),
+      MediaRecord(3L, png(3, 0), "image/png"),
+      MediaRecord(9L, Array[Byte](7), "image/png")).toDS(), dir, "b1")
+    def committed() = (
+      Increment.readLedger(spark, dir)
+        .select("batch_id", "id", "admitted", "reason", "dup_of")
+        .as[(String, Long, Boolean, String, Long)].collect().toSet,
+      spark.read.parquet(s"$dir/exact/keys")
+        .select("batch_id", "key", "id")
+        .as[(String, String, Long)].collect().toSet)
+    val before = committed()
+    assert(before._1.filter(_._3).map(_._2) == Set(1L, 3L))
+    assert(before._2.map(_._3) == Set(1L, 3L))
+    // two fingerprintable clips: 30 windows of 50 distinct-valued frames
+    def tone(id: Long) = MediaRecord(id, Multimodal.encodePcm16Wav(8000, 1,
+      Array.tabulate[Short](1500)(i =>
+        (mix(id, (i / 50).toLong) * 3 + 1).toShort)), "audio/wav")
+    val audio = Seq(tone(100L), tone(101L)).toDS()
+    val e = intercept[IllegalArgumentException] {
+      Increment.curateAudioIncrement(audio, dir, "b1")
+    }
+    assert(e.getMessage.contains("'phash'"), e.getMessage)
+    intercept[IllegalArgumentException] {
+      Increment.initAudioStateFromCurated(spark, dir, audio)
+    }
+    assert(committed() == before)
+    assert(Increment.stateFamily(spark, dir).contains("phash"))
   }
 
   // the ImageSemDedupSpec re-grain fixture: plane-wave scenes + per-id

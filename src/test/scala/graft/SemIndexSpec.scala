@@ -111,6 +111,9 @@ class SemIndexSpec extends SparkSpec {
     assert(m1(1L) == ((true, "admitted", 1L)))
     assert(m1(2L) == ((false, "exact_dup", 1L)))
     assert(m1(3L) == ((true, "admitted", 3L)))
+    // the full stage sequence: names, order and counts
+    assert(r1.stageCounts == Seq("ingest" -> 3L, "exact_dedup" -> 2L,
+      "near_dup" -> 2L))
     // b2: 10 identical to stored 1 (exact vs state); 11 near stored 3;
     // 20/21 within-batch near pair (fresh axis); 30 fresh axis; 40/41
     // zero-norm pair (exact within batch, then admitted unindexed)
@@ -118,11 +121,16 @@ class SemIndexSpec extends SparkSpec {
     val b2 = vdf(Seq(10L -> vec(0, 0.01), 11L -> vec(1, 0.02),
       20L -> vec(2, 0.01), 21L -> vec(2, 0.02), 30L -> vec(3, 0.01),
       40L -> zero, 41L -> zero))
-    def runB2() = Increment.curateEmbeddingIncrement(b2, dir, "b2")
+    def curateB2() = Increment.curateEmbeddingIncrement(b2, dir, "b2")
+    def verdicts(r: graft.pipeline.IncrementResult) = r
       .ledger.select("id", "admitted", "reason", "dup_of")
       .as[(Long, Boolean, String, Long)].collect()
       .map(v => v._1 -> ((v._2, v._3, v._4))).toMap
-    val m2 = runB2()
+    def runB2() = verdicts(curateB2())
+    val r2 = curateB2()
+    assert(r2.stageCounts == Seq("ingest" -> 7L, "exact_dedup" -> 5L,
+      "near_dup" -> 3L))
+    val m2 = verdicts(r2)
     assert(m2(10L) == ((false, "exact_dup", 1L)))
     assert(m2(11L) == ((false, "near_dup", 3L)))
     assert(m2(20L) == ((true, "admitted", 20L)))

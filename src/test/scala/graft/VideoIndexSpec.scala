@@ -111,6 +111,9 @@ class VideoIndexSpec extends SparkSpec {
     assert(m1(2L) == ((false, "exact_dup", 1L)))
     assert(m1(3L) == ((true, "admitted", 3L)))
     assert(m1(9L) == ((false, "no_frames", 9L)))
+    // the full stage sequence: names, order and counts
+    assert(r1.stageCounts == Seq("ingest" -> 4L, "keyframes" -> 3L,
+      "exact_dedup" -> 2L, "near_dup" -> 2L))
     // b2: 10 byte-identical to stored 1 (exact vs state); 11 a near
     // re-encode of stored 3 (near vs state, not exact); 20/21 a
     // within-batch near pair; 30 fresh
@@ -120,11 +123,16 @@ class VideoIndexSpec extends SparkSpec {
       vid(20L, 20L, 0),
       vid(21L, 20L, 1),
       vid(30L, 30L, 0))
-    def runB2() = Increment.curateVideoIncrement(b2.toDS(), dir, "b2")
+    def curateB2() = Increment.curateVideoIncrement(b2.toDS(), dir, "b2")
+    def verdicts(r: graft.pipeline.IncrementResult) = r
       .ledger.select("id", "admitted", "reason", "dup_of")
       .as[(Long, Boolean, String, Long)].collect()
       .map(v => v._1 -> ((v._2, v._3, v._4))).toMap
-    val m2 = runB2()
+    def runB2() = verdicts(curateB2())
+    val r2 = curateB2()
+    assert(r2.stageCounts == Seq("ingest" -> 5L, "keyframes" -> 5L,
+      "exact_dedup" -> 4L, "near_dup" -> 2L))
+    val m2 = verdicts(r2)
     assert(m2(10L) == ((false, "exact_dup", 1L)))
     assert(m2(11L) == ((false, "near_dup", 3L)))
     assert(m2(20L) == ((true, "admitted", 20L)))
