@@ -114,45 +114,10 @@ object Bench {
       passBuf += selected.map { case (name, fn) => name -> runOnce(fn) }.toMap
       writeArtifact(renderLine(selected, passBuf.toSeq, p, sfDir, nRuns))
     }
-    val passTimes: Seq[Map[String, Option[Double]]] = passBuf.toSeq
-    val allTimes: Seq[(String, Seq[Double])] = selected.map { case (name, _) =>
-      name -> passTimes.flatMap(_.getOrElse(name, None)).sorted
-    }
-    // median of successful runs; all-failed -> -1 marker
-    val results = allTimes.map { case (name, times) =>
-      name -> (if (times.isEmpty) -1.0 else times(times.size / 2))
-    }.toMap
-    // best run per query — the regression gate's input (see scaladoc)
-    val best = allTimes.collect {
-      case (name, times) if times.nonEmpty => name -> times.head
-    }.toMap
-    val baseline = readBaseline()
-    val boxFactor = computeBoxFactor(allTimes, baseline)
-    // one gate computation; both renderings (file + compact stdout) derive
-    // from these triples so the thresholds cannot drift apart
-    val regTriples = results.toSeq.sorted.collect {
-      case (q, sec) if sec >= 0 && baseline.get(q).exists { b0 =>
-          val b = b0 * boxFactor
-          best(q) > 2 * b && best(q) - b > 0.3
-        } => (q, sec, baseline(q))
-    }
-    regTriples.foreach { case (q, sec, b) =>
+    val g = gate(selected.map(_._1), passBuf.toSeq, readBaseline())
+    g.regressions.foreach { case (q, sec, b) =>
       System.err.println(s"BENCH REGRESSION: $q ${num(sec, 2)}s vs baseline ${num(b, 2)}s")
     }
-    // Median-based exceedances — INFORMATIONAL, not a gate. Best-of-n
-    // gating is deliberately contention-tolerant, which leaves a blind
-    // spot: a query whose best run squeaks under 2× while its median sits
-    // well over (round 6's q91 at 3.03× median) never appears in the
-    // artifact. This list makes that visible without re-introducing the
-    // round-5 false-flag bounce: same 2×-of-box-normalized-baseline and
-    // +0.3 s thresholds, applied to the MEDIAN.
-    val medTriples = results.toSeq.sorted.collect {
-      case (q, sec) if sec >= 0 && baseline.get(q).exists { b0 =>
-          val b = b0 * boxFactor
-          sec > 2 * b && sec - b > 0.3
-        } => (q, sec, baseline(q))
-    }
-    val total = results.values.filter(_ >= 0).sum
 
     // Compact stdout form. Round 7 proved the per-query map does not fit:
     // at 111 queries the shortened map alone is ~1450 chars, and the r7
@@ -168,19 +133,17 @@ object Bench {
       (items.take(cap) ++
         (if (items.size > cap) Seq(s"""{"truncated":${items.size - cap}}""") else Nil))
         .mkString("[", ",", "]")
-    val regAll = regTriples.map { case (q, sec, b) =>
+    val regAll = g.regressions.map { case (q, sec, b) =>
       s"""{"q":"${short(q)}","sec":${num(sec, 2)},"base":${num(b, 2)}}"""
     }
     // failed names shortened and capped: a catastrophic all-fail run must
     // still produce a parseable line
-    val failedShort = results.toSeq.sorted.collect {
-      case (k, v) if v < 0 => "\"" + short(k) + "\""
-    }
-    val medAll = medTriples.map { case (q, sec, b) =>
+    val failedShort = g.failed.map(k => "\"" + short(k) + "\"")
+    val medAll = g.medianExceedances.map { case (q, sec, b) =>
       s"""{"q":"${short(q)}","sec":${num(sec, 2)},"base":${num(b, 2)}}"""
     }
-    val nOk = results.values.count(_ >= 0)
-    val compact = s"""{"metric":"total","value":${num(total, 2)},"unit":"sec","n_queries":${results.size},"n_ok":$nOk,"n_failed":${failedShort.size},"sf":"$sfDir","runs":$nRuns,"action":"noop-write","box_factor":${num(boxFactor, 2)},"failed":${capped(failedShort, 10)},"regressions":${capped(regAll, 8)},"median_exceedances":${capped(medAll, 4)},"detail":"target/bench.json"}"""
+    val nOk = g.results.values.count(_ >= 0)
+    val compact = s"""{"metric":"total","value":${num(g.total, 2)},"unit":"sec","n_queries":${g.results.size},"n_ok":$nOk,"n_failed":${failedShort.size},"sf":"$sfDir","runs":$nRuns,"action":"noop-write","box_factor":${num(g.boxFactor, 2)},"failed":${capped(failedShort, 10)},"regressions":${capped(regAll, 8)},"median_exceedances":${capped(medAll, 4)},"detail":"target/bench.json"}"""
     spark.stop()
     println(compact)
   }
@@ -221,44 +184,74 @@ object Bench {
     }
   }
 
+  /** The regression gate over the passes completed so far: per query
+    * the MEDIAN of its successful runs (−1 when every run failed), the
+    * box factor, the best-run regressions and the median exceedances,
+    * each as (query, median s, baseline s) in query order. Both
+    * renderings (the `target/bench.json` line and the compact stdout
+    * summary) read this one computation, so their thresholds cannot
+    * drift apart.
+    */
+  private[graft] case class Gate(results: Map[String, Double],
+                                 boxFactor: Double,
+                                 regressions: Seq[(String, Double, Double)],
+                                 medianExceedances: Seq[(String, Double, Double)]) {
+    def failed: Seq[String] =
+      results.toSeq.sorted.collect { case (k, v) if v < 0 => k }
+    def total: Double = results.values.filter(_ >= 0).sum
+  }
+
+  private[graft] def gate(names: Seq[String],
+                          passes: Seq[Map[String, Option[Double]]],
+                          baseline: Map[String, Double]): Gate = {
+    val allTimes: Seq[(String, Seq[Double])] = names.map { name =>
+      name -> passes.flatMap(_.getOrElse(name, None)).sorted
+    }
+    // median of successful runs; all-failed -> -1 marker
+    val results = allTimes.map { case (name, times) =>
+      name -> (if (times.isEmpty) -1.0 else times(times.size / 2))
+    }.toMap
+    // best run per query — the regression gate's input (see scaladoc)
+    val best = allTimes.collect {
+      case (name, times) if times.nonEmpty => name -> times.head
+    }.toMap
+    val boxFactor = computeBoxFactor(allTimes, baseline)
+    // 2× the box-normalized baseline AND +0.3 s over it, applied to the
+    // best run (the gate) or to the median (informational)
+    def over(q: String, sec: Double): Boolean = {
+      val b = baseline(q) * boxFactor
+      sec > 2 * b && sec - b > 0.3
+    }
+    def flagged(pick: (String, Double) => Double) =
+      results.toSeq.sorted.collect {
+        case (q, sec) if sec >= 0 && baseline.contains(q) &&
+            over(q, pick(q, sec)) => (q, sec, baseline(q))
+      }
+    // Median-based exceedances — INFORMATIONAL, not a gate. Best-of-n
+    // gating is deliberately contention-tolerant, which leaves a blind
+    // spot: a query whose best run squeaks under 2× while its median sits
+    // well over (round 6's q91 at 3.03× median) never appears in the
+    // artifact. This list makes that visible without re-introducing the
+    // round-5 false-flag bounce: same thresholds, applied to the MEDIAN.
+    Gate(results, boxFactor, flagged((q, _) => best(q)),
+      flagged((_, sec) => sec))
+  }
+
   /** The full-precision per-query artifact line from the passes completed
-    * so far — the same gate arithmetic as the final stdout summary, plus
-    * a `passes_done` marker so a partial artifact is self-describing.
+    * so far — the same [[gate]] as the final stdout summary, plus a
+    * `passes_done` marker so a partial artifact is self-describing.
     */
   private def renderLine(selected: Seq[(String, _)],
                          passes: Seq[Map[String, Option[Double]]],
                          passesDone: Int, sfDir: String,
                          nRuns: Int): String = {
-    val allTimes: Seq[(String, Seq[Double])] = selected.map { case (name, _) =>
-      name -> passes.flatMap(_.getOrElse(name, None)).sorted
-    }
-    val results = allTimes.map { case (name, times) =>
-      name -> (if (times.isEmpty) -1.0 else times(times.size / 2))
-    }.toMap
-    val best = allTimes.collect {
-      case (name, times) if times.nonEmpty => name -> times.head
-    }.toMap
-    val baseline = readBaseline()
-    val boxFactor = computeBoxFactor(allTimes, baseline)
-    val regressions = results.toSeq.sorted.collect {
-      case (q, sec) if sec >= 0 && baseline.get(q).exists { b0 =>
-          val b = b0 * boxFactor
-          best(q) > 2 * b && best(q) - b > 0.3
-        } => s"""{"q":"$q","sec":$sec,"baseline":${baseline(q)}}"""
-    }
-    val medianExceed = results.toSeq.sorted.collect {
-      case (q, sec) if sec >= 0 && baseline.get(q).exists { b0 =>
-          val b = b0 * boxFactor
-          sec > 2 * b && sec - b > 0.3
-        } => s"""{"q":"$q","sec":$sec,"baseline":${baseline(q)}}"""
-    }
-    val failed = results.toSeq.sorted.collect {
-      case (k, v) if v < 0 => "\"" + k + "\""
-    }
-    val qs = results.toSeq.sorted.map { case (k, v) => s"\"" + k + "\":" + v }
+    val g = gate(selected.map(_._1), passes, readBaseline())
+    def triple(t: (String, Double, Double)) =
+      s"""{"q":"${t._1}","sec":${t._2},"baseline":${t._3}}"""
+    val failed = g.failed.map(k => "\"" + k + "\"")
+    val qs = g.results.toSeq.sorted.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = results.values.filter(_ >= 0).sum
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$nRuns,"passes_done":$passesDone,"action":"noop-write","box_factor":${num(boxFactor, 3)},"failed":${failed.mkString("[", ",", "]")},"regressions":${regressions.mkString("[", ",", "]")},"median_exceedances":${medianExceed.mkString("[", ",", "]")}}"""
+    s"""{"metric":"total","value":${g.total},"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$nRuns,"passes_done":$passesDone,"action":"noop-write","box_factor":${num(g.boxFactor, 3)},"failed":${failed.mkString("[", ",", "]")},"regressions":${g.regressions.map(triple).mkString("[", ",", "]")},"median_exceedances":${g.medianExceedances.map(triple).mkString("[", ",", "]")}}"""
   }
 
   private def writeArtifact(line: String): Unit = {

@@ -3,18 +3,19 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Pure-column Bloom filter for semi-join pruning — the classic 100 TB
-  * shuffle cutter. When the dim side is too big to broadcast as a hash
-  * relation but its KEY SET fits a few megabits, build a Bloom filter over
-  * the dim keys once (one bounded aggregate job), ship it to every task as
-  * a literal array, and drop non-matching fact rows BEFORE the semi-join
-  * shuffle. The exact semi join afterwards removes the false positives, so
-  * the composed operator is exact; the Bloom only cuts shuffle volume.
+/** Pure-column Bloom filter behind [[bloomSemiJoin]], the exact semi
+  * join with a Bloom prefilter on the fact side (probe q63). When the
+  * dim side is too big to broadcast as a hash relation but its KEY SET
+  * fits a few megabits, build a Bloom filter over the dim keys once (one
+  * bounded aggregate job), ship it to every task as a literal array, and
+  * drop non-matching fact rows BEFORE the semi-join shuffle. The exact
+  * semi join afterwards removes the false positives, so the composed
+  * operator is exact; the Bloom only cuts shuffle volume.
   *
   * Spark's own InjectRuntimeFilter does this automatically, but only under
   * its thresholds (creation-side size, broadcast-only shapes); this is the
-  * explicit, tunable form. Everything is public-API Column algebra —
-  * `xxhash64` for the k-hash family, `bit_or` aggregation for the build,
+  * explicit form. Everything is public-API Column algebra — `xxhash64`
+  * for the k-hash family, `bit_or` aggregation for the build,
   * `element_at`/`shiftright` bit tests on the probe side — so the probe
   * filter stays inside whole-stage codegen (no UDF, no lambda).
   *
@@ -41,8 +42,8 @@ object Bloom {
     buildCol(dim, col(dimKey), numBits, numHashes)
 
   /** [[build]] over an arbitrary key COLUMN — structs work too
-    * (`xxhash64` hashes every field), so composite keys like the LSH
-    * band tables' `(band, bh)` need no concatenation round-trip.
+    * (`xxhash64` hashes every field), so composite keys need no
+    * concatenation round-trip.
     */
   def buildCol(dim: DataFrame, dimKey: Column,
                numBits: Long = 1L << 20, numHashes: Int = 5): Array[Long] = {
@@ -58,54 +59,6 @@ object Bloom {
     words.foreach(r => arr(r.getInt(0)) = r.getLong(1))
     arr
   }
-
-  /** Build SEVERAL filters from ONE pass over a shared input frame —
-    * the amortization the incremental-curation state scans need: a
-    * composed increment prunes 3+ state tables (exact keys, band keys,
-    * window claims) with filters over DIFFERENT key derivations of the
-    * SAME batch, and building each filter as its own job re-pays the
-    * batch scan per family (the r16 SCALE finding that kept the
-    * composed increment net-negative). Each entry maps a filter name
-    * to an ARRAY-of-keys column (wrap scalar keys in `array(...)`;
-    * heterogeneous key types are fine — keys reduce to hash positions
-    * inside the per-filter projection, so nothing mixes). One
-    * explode → groupBy(filter, word) → bit_or job; one bounded collect.
-    */
-  def buildMany(input: DataFrame, keys: Seq[(String, Column)],
-                numBits: Long = 1L << 20, numHashes: Int = 5)
-      : Map[String, Array[Long]] = {
-    require(numBits % 64 == 0 && numBits > 0,
-      s"numBits must be a positive multiple of 64, got $numBits")
-    require(keys.map(_._1).distinct.size == keys.size,
-      s"buildMany: duplicate filter names in ${keys.map(_._1)}")
-    val nWords = (numBits / 64).toInt
-    val perFilter = keys.zipWithIndex.map { case ((_, arr), i) =>
-      struct(lit(i).as("f"),
-        flatten(transform(arr,
-          k => array(positions(k, numBits, numHashes): _*))).as("ps"))
-    }
-    val words = input
-      .select(explode(array(perFilter: _*)).as("s"))
-      .select(col("s.f").as("f"), explode(col("s.ps")).as("pos"))
-      .select(col("f"), (col("pos") / 64).cast("int").as("word"),
-        expr("shiftleft(1L, cast(pos % 64 as int))").as("bit"))
-      .groupBy("f", "word").agg(expr("bit_or(bit)").as("bits"))
-      .collect()
-    val out = keys.map(_._1 -> new Array[Long](nWords)).toMap
-    words.foreach(r =>
-      out(keys(r.getInt(0))._1)(r.getInt(1)) = r.getLong(2))
-    out
-  }
-
-  /** Prune `large` with a PREBUILT filter (from [[buildCol]] /
-    * [[buildMany]]) — the composed-pipeline half of [[pruneByKeys]]:
-    * callers that amortized several builds into one pass apply each
-    * filter here without re-touching the build side.
-    */
-  def pruneByFilter(large: DataFrame, largeKey: Column,
-                    filter: Array[Long], numBits: Long = 1L << 20,
-                    numHashes: Int = 5): DataFrame =
-    large.filter(mightContain(filter, largeKey, numBits, numHashes))
 
   /** Membership test column: true iff every hash position's bit is set.
     * No false negatives; false positives at the sized fpp. The filter
@@ -135,21 +88,5 @@ object Bloom {
     fact
       .filter(mightContain(filter, col(factKey), numBits, numHashes))
       .join(dim.select(col(dimKey).as(factKey)), Seq(factKey), "left_semi")
-  }
-
-  /** Prune `large` to rows whose `largeKey` MIGHT appear among
-    * `small[smallKey]` — the one-sided half of [[bloomSemiJoin]] for
-    * callers that follow with their own exact join (which removes the
-    * false positives, so composing this in front of any equi join on the
-    * same key leaves results bit-identical). The incremental-curation
-    * state scans use this: the accumulated table is `large`, the new
-    * batch's keys are `small`, and state rows that cannot match drop at
-    * the scan instead of riding the corpus-sized shuffle.
-    */
-  def pruneByKeys(large: DataFrame, largeKey: Column,
-                  small: DataFrame, smallKey: Column,
-                  numBits: Long = 1L << 20, numHashes: Int = 5): DataFrame = {
-    val filter = buildCol(small, smallKey, numBits, numHashes)
-    large.filter(mightContain(filter, largeKey, numBits, numHashes))
   }
 }

@@ -634,8 +634,7 @@ object Curation {
                              dir: String, newVectors: DataFrame,
                              thresholdE4: Long = 9000L,
                              excludeBatch: Option[String] = None,
-                             restrictTo: Option[DataFrame] = None,
-                             bloomBits: Option[Long] = None)
+                             restrictTo: Option[DataFrame] = None)
       : DataFrame = {
     require(thresholdE4 >= 0 && thresholdE4 <= 10000,
       s"semNearDupAgainstIndex: thresholdE4 ($thresholdE4)")
@@ -666,17 +665,8 @@ object Curation {
         .withColumn("cscore", Similarity.cosine("v", "cv")),
       "id_new", "v", nassign)
       .select(col("id_new"), col("v").as("vn"), col("cid"))
-    // with bloomBits set, stored assignments are pruned at the scan by
-    // a Bloom over the BATCH's routed cell ids — the assigned rows
-    // carry full vectors, so dropping never-routed cells before the
-    // shuffle is the dominant saving; the cid equi join below is exact,
-    // so the pair set is bit-identical
-    val ob0 = spark.read.parquet(s"$dir/assigned")
+    val ob = spark.read.parquet(s"$dir/assigned")
       .join(broadcast(committed), Seq("batch_id"), "left_semi")
-    val ob = bloomBits
-      .map(m => graft.core.Bloom.pruneByKeys(ob0, col("cid"),
-        nb, col("cid"), m))
-      .getOrElse(ob0)
       .select(col("id").as("id_old"), col("v").as("vo"), col("cid"))
     nb.join(ob, Seq("cid"))
       .filter(col("id_new") =!= col("id_old"))

@@ -141,26 +141,6 @@ object Dedup {
       .select(col(idCol), col("bb.band").as("band"), col("bb.bh").as("bh"))
   }
 
-  /** Per-row BAND-KEY array — the [[lshBands]] construction without the
-    * explode, over a pre-projected base-hash array column (`hv` must be
-    * its OWN attribute, the [[shingleHashes]] multi-reference
-    * discipline): one struct(band, bh) per band, empty for docs with no
-    * shingles (they can never band-match). For Bloom builds over a
-    * batch's band keys ([[graft.core.Bloom.buildMany]]) without paying
-    * the banding pipeline a second time inside the filter job.
-    */
-  private[graft] def bandKeyArrayFromHv(hv: Column, bands: Int,
-                                        rowsPerBand: Int): Column = {
-    val sigs = (0 until bands * rowsPerBand).map(h => minhashSig(hv, h))
-    val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws("|", sigs.slice(b * rowsPerBand, (b + 1) * rowsPerBand): _*)
-          .as("bh"))
-    }
-    when(size(hv) > 0, array(bandStructs: _*))
-      .otherwise(array().cast(s"array<struct<band:int,bh:string>>"))
-  }
-
   /** Near-dup candidate pairs via the LSH bucket join, verified with exact
     * Jaccard over distinct 3-shingle sets. Returns (idA, idB, jacc_e4) with
     * idA < idB, jacc_e4 = floor(jaccard·10⁴ + 0.5) as BIGINT (fixed-point —
@@ -339,17 +319,7 @@ object Dedup {
   def nearDupAgainstIndex(spark: org.apache.spark.sql.SparkSession,
                           dir: String, newDocs: DataFrame, idCol: String,
                           textCol: String,
-                          excludeBatch: Option[String] = None,
-                          bloomBits: Option[Long] = None,
-                          // PREBUILT band-key filter (the
-                          // [[graft.core.Bloom.buildMany]] amortized
-                          // pass over struct(band, bh) keys of a
-                          // SUPERSET of newDocs) — skips the internal
-                          // band-filter build job; the candidate-id
-                          // shingle filter is data-dependent and always
-                          // builds here. Only read when bloomBits is
-                          // set.
-                          bandFilter: Option[Array[Long]] = None)
+                          excludeBatch: Option[String] = None)
       : graft.core.Managed = {
     val (bands, rowsPerBand) = readMinhashMeta(spark, dir)
     val shRaw = shingleSets(newDocs, idCol, textCol)
@@ -361,40 +331,16 @@ object Dedup {
       .getOrElse(committed0)
     val nb = lshBands(sh, idCol, bands, rowsPerBand)
       .select(col(idCol).as("id_new"), col("band"), col("bh"))
-    // with bloomBits set, the accumulated band table is pruned at the
-    // scan by a Bloom filter over the BATCH's (band, bh) keys, and the
-    // corpus-sized shingle table by one over the candidate old ids —
-    // false positives only feed extra rows to the exact joins below, so
-    // the pair set is bit-identical (spec-pinned); what changes is that
-    // both state-side shuffles become batch-proportional. The candidate
-    // table is persisted in that mode (it is both the shingle filter's
-    // build side and a join input) and handed back via Managed.
-    val ob0 = spark.read.parquet(s"$dir/bands")
+    val ob = spark.read.parquet(s"$dir/bands")
       .join(broadcast(committed), Seq("batch_id"), "left_semi")
-    val ob = bloomBits
-      .map(m => bandFilter match {
-        case Some(f) => graft.core.Bloom.pruneByFilter(ob0,
-          struct(col("band"), col("bh")), f, m)
-        case None => graft.core.Bloom.pruneByKeys(ob0,
-          struct(col("band"), col("bh")), nb,
-          struct(col("band"), col("bh")), m)
-      })
-      .getOrElse(ob0)
       .select(col("id").as("id_old"), col("band"), col("bh"))
-    val cand0 = nb.join(ob, Seq("band", "bh"))
+    val cand = nb.join(ob, Seq("band", "bh"))
       .filter(col("id_new") =!= col("id_old"))
       .select("id_new", "id_old").distinct()
-    val cand = bloomBits
-      .map(_ => cand0.persist(StorageLevel.MEMORY_AND_DISK))
-      .getOrElse(cand0)
     val newSets = sh.select(col(idCol).as("id_new"),
       array_distinct(col("sh")).as("sa"))
-    val oldSets0 = spark.read.parquet(s"$dir/shingles")
+    val oldSets = spark.read.parquet(s"$dir/shingles")
       .join(broadcast(committed), Seq("batch_id"), "left_semi")
-    val oldSets = bloomBits
-      .map(m => graft.core.Bloom.pruneByKeys(oldSets0, col("id"),
-        cand, col("id_old"), m))
-      .getOrElse(oldSets0)
       .select(col("id").as("id_old"), col("shd").as("sb"))
     val inter = size(array_intersect(col("sa"), col("sb")))
     val jacc = graft.core.Ops.fixedPoint(inter * lit(1.0) /
@@ -403,8 +349,7 @@ object Dedup {
       .join(newSets, "id_new")
       .join(oldSets, "id_old")
       .select(col("id_new"), col("id_old"), jacc.as("jacc_e4"))
-    graft.core.Managed(out,
-      if (bloomBits.isDefined) Seq(shRaw, cand) else Seq(shRaw))
+    graft.core.Managed(out, Seq(shRaw))
   }
 
   /** Connected components over near-dup pairs — the step that turns a pair

@@ -868,8 +868,7 @@ object Multimodal {
   private[graft] def phashSigsNearDupAgainstIndex(
       spark: org.apache.spark.sql.SparkSession,
       dir: String, newSigs: DataFrame, maxHamming: Int = 3,
-      excludeBatch: Option[String] = None,
-      bloomBits: Option[Long] = None): DataFrame = {
+      excludeBatch: Option[String] = None): DataFrame = {
     val nBands = readPhashMeta(spark, dir)
     require(maxHamming < nBands,
       s"phashNearDupAgainstIndex: pigeonhole over $nBands bands is exact " +
@@ -882,17 +881,9 @@ object Multimodal {
     val nb = phashBandRows(newSigs, nBands)
       .select(col("id_new"), col("phash").as("h_new"),
         col("band"), col("bits"))
-    // with bloomBits set, state band rows are pruned before the shuffle
-    // by a Bloom filter over the batch's (band, bits) keys — the exact
-    // equi join drops false positives, so pairs are bit-identical
-    val ob0 = phashBandRows(spark.read.parquet(s"$dir/sigs")
+    val ob = phashBandRows(spark.read.parquet(s"$dir/sigs")
         .join(broadcast(committed), Seq("batch_id"), "left_semi")
         .select(col("id").as("id_old"), col("phash")), nBands)
-    val ob = bloomBits
-      .map(m => graft.core.Bloom.pruneByKeys(ob0,
-        struct(col("band"), col("bits")), nb,
-        struct(col("band"), col("bits")), m))
-      .getOrElse(ob0)
       .select(col("id_old"), col("phash").as("h_old"),
         col("band"), col("bits"))
     nb.join(ob, Seq("band", "bits"))
@@ -1481,8 +1472,7 @@ object Multimodal {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       newFps: DataFrame, minMatchE4: Long = 5000L,
       maxFpDocFreq: Long = 1000L,
-      excludeBatch: Option[String] = None,
-      bloomBits: Option[Long] = None): DataFrame = {
+      excludeBatch: Option[String] = None): DataFrame = {
     val committed0 = spark.read.parquet(s"$dir/meta")
       .select("batch_id").distinct()
     val committed = excludeBatch
@@ -1491,18 +1481,8 @@ object Multimodal {
     val nfps = newFps
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // with bloomBits set, state fp rows are pruned at the scan by a
-      // Bloom filter over the batch's fps. Exactness: the bit test is
-      // deterministic per fp VALUE, so every row of a surviving fp
-      // survives — the per-fp doc-frequency counts behind the hot-fp
-      // cap stay exact for every fp the batch can intersect, and false
-      // positives only add non-intersecting fps that the equi join drops
-      val ofps0 = spark.read.parquet(s"$dir/fps")
+      val ofps = spark.read.parquet(s"$dir/fps")
         .join(broadcast(committed), Seq("batch_id"), "left_semi")
-      val ofps = bloomBits
-        .map(m => graft.core.Bloom.pruneByKeys(ofps0, col("fp"),
-          nfps, col("fp"), m))
-        .getOrElse(ofps0)
         .select(col("id").as("id_old"), col("fp"))
       val keep = ofps.groupBy("fp").agg(count(lit(1)).as("df"))
         .filter(col("df") <= maxFpDocFreq).select("fp")
@@ -2317,8 +2297,7 @@ object Multimodal {
   private[graft] def videoFramesNearDupAgainstIndex(
       spark: SparkSession, dir: String, newFrames: DataFrame,
       maxHamming: Int = 3, minSimE4: Long = 5000L,
-      excludeBatch: Option[String] = None,
-      bloomBits: Option[Long] = None): DataFrame = {
+      excludeBatch: Option[String] = None): DataFrame = {
     val nBands = readVideoMeta(spark, dir)
     require(maxHamming < nBands,
       s"videoNearDupAgainstIndex: pigeonhole over $nBands bands is exact " +
@@ -2334,17 +2313,10 @@ object Multimodal {
       val nb = phashBandRows(nfr, nBands)
         .select(col("id_new"), col("frame_idx").as("fi_new"),
           col("phash").as("h_new"), col("band"), col("bits"))
-      // see phashSigsNearDupAgainstIndex: state frame band rows pruned
-      // by a Bloom over the batch's (band, bits) keys before the shuffle
-      val ob0 = phashBandRows(spark.read.parquet(s"$dir/frames")
+      val ob = phashBandRows(spark.read.parquet(s"$dir/frames")
           .join(broadcast(committed), Seq("batch_id"), "left_semi")
           .select(col("id").as("id_old"), col("frame_idx"), col("phash")),
           nBands)
-      val ob = bloomBits
-        .map(m => graft.core.Bloom.pruneByKeys(ob0,
-          struct(col("band"), col("bits")), nb,
-          struct(col("band"), col("bits")), m))
-        .getOrElse(ob0)
         .select(col("id_old"), col("frame_idx").as("fi_old"),
           col("phash").as("h_old"), col("band"), col("bits"))
       val framePairs = nb.join(ob, Seq("band", "bits"))

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import graft.operators.{Curation, Dedup, Multimodal, TextStats}
 import graft.operators.Multimodal.MediaRecord
@@ -74,30 +75,7 @@ case class IncrementConfig(
     // benchmark-decontamination gram size; active only when
     // curateIncrement is given a benchmark frame (the funnel's terminal
     // gate, same position: after every dedup stage, before admission)
-    decontamGramN: Int = 8,
-    // Bloom-prune the accumulated-state scans (exact keys, window
-    // claims, minhash bands + shingles, sem cell assignments) with
-    // filters built over the
-    // BATCH side's keys: state rows that cannot match drop at the scan,
-    // before the state-side shuffle, so each increment's join cost is
-    // batch-proportional instead of corpus-proportional. Size at ~10
-    // bits per batch key for <1% false positives (e.g. 1<<23 for a
-    // ~1M-doc batch) — false positives only pass extra rows to the
-    // exact joins, results are bit-identical (spec-pinned). None = off;
-    // at small state sizes the extra build jobs cost more than the
-    // pruned shuffle saves (measured crossover in SCALE.md), so this is
-    // the at-scale dial, not a default.
-    stateBloomBits: Option[Long] = None,
-    // AUTO-dial the Bloom pruning (r16 verdict #3): when true and
-    // stateBloomBits is None, each increment decides per batch from
-    // the committed state's heavy-table BYTES vs the batch's row count
-    // ([[Increment.decideStateBloom]] — the measured SCALE.md crossover
-    // as the threshold) and sizes the filter from the batch. The
-    // operator stops hand-tuning: small states keep bloom off (the
-    // build jobs would cost more than the pruned shuffle saves), and
-    // the dial flips exactly when the state-scan volume dominates.
-    // stateBloomBits set = manual override, auto never consulted.
-    stateBloomAuto: Boolean = false)
+    decontamGramN: Int = 8)
 
 /** `ledger` — one [[graft.streaming.CurateStream.GateVerdict]]-shaped
   * row PER BATCH DOC (id, admitted, reason, dup_of); `admitted` — the
@@ -353,107 +331,25 @@ object Increment {
     writeBatch(keys.select(col("key"), col("id")),
       s"$stateDir/exact/keys", batchId)
 
-  /** Bloom-prune `state` rows by `stateKey` against the batch-side key
-    * set when `bits` is set — the [[graft.core.Bloom.pruneByKeys]]
-    * composition every accumulated-state read below shares. Identity
-    * when off.
-    */
-  private def bloomPrune(state: DataFrame, stateKey: Column,
-                         batchKeys: DataFrame, batchKey: Column,
-                         bits: Option[Long]): DataFrame =
-    bits.map(m => graft.core.Bloom.pruneByKeys(state, stateKey,
-      batchKeys, batchKey, m)).getOrElse(state)
-
   /** Every family's heavy data tables, relative to a state root —
     * absent paths contribute nothing, so one list serves text AND the
-    * modality increments. Shared with the
-    * [[graft.pipeline.Maintain.decideAll]] bloom ADVISORY so the
-    * operational report can never silently drift from what the
-    * increments' auto dial actually measures; [[retract]] sweeps the
-    * same list.
+    * modality increments. [[retract]] sweeps this list and
+    * [[stateHeavyBytes]] sizes it.
     */
-  val StateBloomHeavyTables: Seq[String] =
+  val StateHeavyTables: Seq[String] =
     "exact/keys" +: Layouts.flatMap(_.heavy)
 
-  /** [[decideStateBloom]]'s default activation floor (absolute
-    * committed heavy-table bytes) and per-batch-row guard — the single
-    * definition both the increments and the Maintain advisory read.
-    */
-  val StateBloomMinStateBytes: Long = 256L << 20
-  val StateBloomMinBytesPerBatchRow: Long = 4096L
-
-  /** Minimum BATCH rows before the auto dial will enable (r18 verdict
-    * #3 measurement): Bloom pruning saves state-side SHUFFLE, and the
-    * state side only shuffles when the batch's keyed frames exceed the
-    * broadcast threshold — below that the batch broadcasts, the state
-    * streams through the join unshuffled, and the filter build + the
-    * per-state-row probe are pure overhead. Measured (SCALE.md
-    * round-18): net-NEGATIVE (+27–45%) at EVERY cell of a
-    * {178, 1.8k, 5.3k, 16.8k} batch-rows × {3 MB … 350 MB} state-bytes
-    * grid, INCLUDING past the 256 MiB byte floor — the batch side
-    * broadcast in all of them. 256k rows ≈ where band/key frames pass
-    * the 10 MB spark.sql.autoBroadcastJoinThreshold at ~40–60 B/row;
-    * the dial stays provably off everywhere the loss was measured and
-    * arms only in the genuinely shuffle-bound regime (multi-million-row
-    * production snapshots).
-    */
-  val StateBloomMinBatchRows: Long = 262144L
-
   /** Committed heavy-table bytes under `stateDir` — one bounded
-    * `getContentSummary` walk over [[StateBloomHeavyTables]], no Spark
+    * `getContentSummary` walk over [[StateHeavyTables]], no Spark
     * job.
     */
   def stateHeavyBytes(spark: SparkSession, stateDir: String): Long = {
     val f = fs(spark, stateDir)
-    StateBloomHeavyTables
+    StateHeavyTables
       .map(rel => new org.apache.hadoop.fs.Path(s"$stateDir/$rel"))
       .filter(f.exists)
       .map(p => f.getContentSummary(p).getLength)
       .sum
-  }
-
-
-  /** The auto-dial behind [[IncrementConfig.stateBloomAuto]]: Bloom
-    * pruning pays one filter-build job per pruned family plus a probe
-    * filter per state row, and saves (1 − selectivity) of the
-    * state-side shuffle — net-positive only when the committed state
-    * is much larger than the batch. The r17 paired sweeps pin the
-    * crossover as ABSOLUTE state volume, not the state/batch ratio
-    * (both sides scale together in a steady-state ingest, so the
-    * ratio is flat): the r17 paired sweeps measured break-even around
-    * ~100 MB of heavy tables; the r18 past-floor grid (SCALE.md
-    * round-18) then showed the byte floor alone is NOT sufficient —
-    * with a broadcastable batch the state side never shuffles and
-    * bloom lost 27–45% at every measured cell up to 350 MB of state,
-    * so the dial additionally requires `minBatchRows` (see
-    * [[StateBloomMinBatchRows]] — the shuffle-regime condition). Rule:
-    * enable iff batch rows ≥ `minBatchRows` AND committed heavy-table
-    * bytes ≥ `minStateBytes` (default 256 MiB) AND ≥
-    * `minStateBytesPerBatchRow` (default 4 KiB) per batch row (the
-    * huge-batch-tiny-state guard). Filter sized at ~16 bits per batch
-    * row, clamped to [2^20, 2^27] (<1% fpp, ≤16 MiB literal).
-    * Heavy-table bytes come from one bounded `getContentSummary` walk
-    * — no Spark job. Returns the bits to use, or None = keep bloom
-    * off.
-    */
-  def decideStateBloom(spark: SparkSession, stateDir: String,
-                       batchRows: Long,
-                       minStateBytes: Long = StateBloomMinStateBytes,
-                       minStateBytesPerBatchRow: Long =
-                         StateBloomMinBytesPerBatchRow,
-                       minBatchRows: Long = StateBloomMinBatchRows)
-      : Option[Long] = {
-    val stateBytes = stateHeavyBytes(spark, stateDir)
-    if (batchRows < minBatchRows ||
-        stateBytes < minStateBytes ||
-        stateBytes < minStateBytesPerBatchRow * math.max(1L, batchRows))
-      None
-    else {
-      val want = java.lang.Long.highestOneBit(
-        math.max(1L << 20, math.min(1L << 27,
-          16L * math.max(1L, batchRows))))
-      Some(want)
-    }
   }
 
   /** Exact dedup of a keyed pool (id, __md5, …): against the committed
@@ -461,25 +357,19 @@ object Increment {
     * batch (min id per key). Returns the survivors, checkpointed, with
     * the pool's columns. The state side reads committed batches only
     * (keys commit before the marker, so a torn increment's keys never
-    * read) minus the batch's own partitions; `prune` is its Bloom prune
-    * (identity when off). State keys canonicalize to min(id): under the
-    * contract a key is admitted once ever, so this is a no-op — it pins
-    * ONE dup_of per key even if a seeded corpus violated the
-    * curated-input contract.
+    * read) minus the batch's own partitions. State keys canonicalize to
+    * min(id): under the contract a key is admitted once ever, so this is
+    * a no-op — it pins ONE dup_of per key even if a seeded corpus
+    * violated the curated-input contract.
     */
   private def exactDedup(led: LedgerBuilder, run: Run, marker: String,
-                         pool: DataFrame,
-                         prune: DataFrame => DataFrame): DataFrame = {
+                         pool: DataFrame): DataFrame = {
     val afterState =
       if (!run.haveState) pool
       else {
         val committed = committedBatches(run.spark, run.stateDir, marker)
           .filter(col("batch_id") =!= run.batchId)
-        // prune BEFORE the per-key min aggregate: dropping every row of
-        // a key the batch cannot carry leaves surviving keys' groups
-        // intact, so min(id) per surviving key — the only keys the exact
-        // join can hit — is unchanged
-        val stateKeys = prune(run.spark.read.parquet(run.path("exact/keys")))
+        val stateKeys = run.spark.read.parquet(run.path("exact/keys"))
           .join(broadcast(committed), Seq("batch_id"), "left_semi")
           .groupBy(col("key").as("__md5"))
           .agg(min(col("id")).as("__dup_of"))
@@ -508,22 +398,14 @@ object Increment {
     * stage's enable-from-batch-N semantics.
     */
   private def readWindowClaims(spark: SparkSession, stateDir: String,
-                               excludeBatch: String,
-                               batchWindows: Option[(DataFrame, Long)] =
-                                 None): DataFrame = {
+                               excludeBatch: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(s"$stateDir/windows")
     if (!fs(spark, stateDir).exists(p))
       spark.range(0).select(lit("").as("h"))
     else {
       val committed = Dedup.minhashCommitted(spark, s"$stateDir/minhash")
         .filter(col("batch_id") =!= excludeBatch)
-      val claims = spark.read.parquet(s"$stateDir/windows")
-      val pruned = batchWindows match {
-        case Some((b, m)) => bloomPrune(claims, col("h"), b, col("h"),
-          Some(m))
-        case None => claims
-      }
-      pruned
+      spark.read.parquet(s"$stateDir/windows")
         .join(broadcast(committed), Seq("batch_id"), "left_semi")
         .select("h")
     }
@@ -613,10 +495,9 @@ object Increment {
   /** Eval-set rotation: purge a retired benchmark's grams from the
     * family. Victim rows are keyed by the benchmark docs' text md5
     * (the provenance [[writeDecontamState]] recorded); only partitions
-    * holding a victim rewrite (dynamic overwrite — emptied partitions
-    * become zero-row schema-ful parquet, the [[Shards.retract]]
-    * discipline); meta markers are untouched so family visibility
-    * never changes. A gram SHARED with a still-registered benchmark
+    * holding a victim rewrite ([[rewritePartitionsHolding]], the
+    * retraction sweep's protocol); meta markers are untouched so family
+    * visibility never changes. A gram SHARED with a still-registered benchmark
     * survives through that benchmark's own rows. Returns purged rows.
     */
   def retractDecontamBenchmark(spark: SparkSession, stateDir: String,
@@ -629,42 +510,23 @@ object Increment {
     val keys = graft.core.Ops.widen(benchmark)
       .select(md5(col(benchTextCol).cast("string")).as("bench_key"))
       .distinct().localCheckpoint(eager = true)
-    val tbl = spark.read.schema(decontamGramsSchema).parquet(gramsPath)
-    val hit = tbl.join(broadcast(keys), Seq("bench_key"), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nPurged = hit.count()
-      if (nPurged == 0L) 0L
-      else {
-        val affected = hit.select("batch_id").distinct()
-          .localCheckpoint(eager = true)
-        val keep = tbl
-          .join(broadcast(affected), Seq("batch_id"), "left_semi")
-          .join(broadcast(keys), Seq("bench_key"), "left_anti")
-          .localCheckpoint(eager = true)
-        keep.write.mode("overwrite").partitionBy("batch_id")
-          .option("partitionOverwriteMode", "dynamic").parquet(gramsPath)
-        val emptied = affected.join(keep.select("batch_id").distinct(),
-          Seq("batch_id"), "left_anti").collect()
-        for (r <- emptied)
-          keep.drop("batch_id").limit(0).write.mode("overwrite")
-            .parquet(s"$gramsPath/batch_id=${r.getString(0)}")
-        nPurged
-      }
-    } finally hit.unpersist()
+    val nPurged = spark.read.schema(decontamGramsSchema).parquet(gramsPath)
+      .join(broadcast(keys), Seq("bench_key"), "left_semi").count()
+    if (nPurged > 0L)
+      rewritePartitionsHolding(spark, fs(spark, stateDir), gramsPath, keys,
+          "bench_key", Some(decontamGramsSchema))(
+        _.join(broadcast(keys), Seq("bench_key"), "left_anti"))
+    nPurged
   }
-
 
   // ---- the increment skeleton every family shares -----------------------
 
   /** One increment run as its stages see it: the state root, the batch
     * id every write lands under, whether the family's commit marker
-    * exists (false = this run bootstraps the state) and the effective
-    * Bloom dial.
+    * exists (false = this run bootstraps the state).
     */
   private case class Run(spark: SparkSession, stateDir: String,
-                         batchId: String, haveState: Boolean,
-                         bloomBits: Option[Long]) {
+                         batchId: String, haveState: Boolean) {
     def path(sub: String): String = s"$stateDir/$sub"
   }
 
@@ -683,16 +545,6 @@ object Increment {
     claimFamily(spark, stateDir, marker, caller)
     markerExists(spark, stateDir, marker)
   }
-
-  /** The effective Bloom dial: manual bits win; otherwise the auto
-    * decision from committed-state bytes vs batch rows (r16 #3).
-    */
-  private def bloomDial(spark: SparkSession, stateDir: String,
-                        haveState: Boolean, manual: Option[Long],
-                        auto: Boolean, batchRows: Long): Option[Long] =
-    manual.orElse(
-      if (auto && haveState) decideStateBloom(spark, stateDir, batchRows)
-      else None)
 
   /** One increment's verdict ledger and stage counts. Reject pieces
     * checkpoint as each stage decides them; [[admit]] adds the admitted
@@ -840,8 +692,7 @@ object Increment {
           semDir, vectors.select("id", "v"), thresholdE4,
           excludeBatch = Some(run.batchId),
           restrictTo = Some(committedBatches(run.spark, run.stateDir,
-            marker)),
-          bloomBits = run.bloomBits), "sem_dup")
+            marker))), "sem_dup")
     val pm = graft.operators.Similarity.ivfNearDupPairsManaged(
       vectors.join(afterState.select("id"), Seq("id"), "left_semi")
         .select("id", "v"),
@@ -901,15 +752,13 @@ object Increment {
     val spark = batch.sparkSession
     val haveState = prologue(spark, stateDir, batchId, TextLayout.marker,
       "curateIncrement")
+    val run = Run(spark, stateDir, batchId, haveState)
     val led = new LedgerBuilder("curateIncrement")
 
     // ---- stateless gates (the batch funnel's exprs verbatim) -----------
     var input = textCorpus(batch, idCol, textCol)
       .localCheckpoint(eager = true)
     led.stage("ingest", input.count())
-    val run = Run(spark, stateDir, batchId, haveState,
-      bloomDial(spark, stateDir, haveState, cfg.stateBloomBits,
-        cfg.stateBloomAuto, led.ingested))
     if (cfg.c4Clean) {
       val pre = input
       input = Curation.c4Clean(input, "id", "text")
@@ -982,10 +831,7 @@ object Increment {
     for (w <- cfg.dedupWindowsW) {
       val claims =
         if (!haveState) None
-        else Some(readWindowClaims(spark, stateDir, batchId,
-          run.bloomBits.map(m =>
-            (Curation.windowClaims(filtered, "id", "text", w)
-              .select("h"), m))))
+        else Some(readWindowClaims(spark, stateDir, batchId))
       val cleaned = claims match {
         case None =>
           Curation.removeDuplicateSpans(filtered, "id", "text", w)
@@ -1002,36 +848,7 @@ object Increment {
     // ---- exact dedup: against state, then within batch -----------------
     val hashed = filtered.withColumn("__md5", md5(col("text")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // ONE shared filter-build pass for the exact-key AND band-key
-    // prunes (r16 #3's amortization): both key sets derive from the
-    // final batch text, so one buildMany job replaces two per-family
-    // builds. The band filter is built over the PRE-exact-dedup pool —
-    // a superset of the probing `kept` keys, so pruning stays
-    // conservative-correct. The window-claims filter above cannot
-    // join this pass (its keys hash the PRE-rewrite text).
-    val sharedFilters: Option[(Map[String, Array[Long]], Long)] =
-      run.bloomBits.filter(_ => haveState).map { m =>
-        val (sb, srp) = Dedup.readMinhashMeta(spark,
-          s"$stateDir/minhash")
-        // normalizeWords PROJECTED as its own attribute before the
-        // shingle window (the shingleSets two-step discipline):
-        // shingles3 references its input at three offsets inside a
-        // transform lambda, so handing it the raw regex+split pipeline
-        // would re-evaluate the normalization per shingle element —
-        // the O(len²)-per-row trap shingleSets documents
-        val keyed = hashed
-          .select(col("__md5"), Dedup.normalizeWords(col("text")).as("__w"))
-          .select(array(col("__md5")).as("__ek"),
-            Dedup.shingleHashes(Dedup.shingles3(col("__w"))).as("__hv"))
-          .select(col("__ek"),
-            Dedup.bandKeyArrayFromHv(col("__hv"), sb, srp).as("__bk"))
-        (graft.core.Bloom.buildMany(keyed,
-          Seq("exact" -> col("__ek"), "bands" -> col("__bk")), m), m)
-      }
-    val kept = exactDedup(led, run, TextLayout.marker, hashed,
-        keys => sharedFilters.fold(keys) { case (fm, m) =>
-          graft.core.Bloom.pruneByFilter(keys, col("key"), fm("exact"), m)
-        })
+    val kept = exactDedup(led, run, TextLayout.marker, hashed)
       .drop("__md5")
     hashed.unpersist()
 
@@ -1041,9 +858,7 @@ object Increment {
       else {
         val pairsM = Dedup.nearDupAgainstIndex(spark,
           s"$stateDir/minhash", kept, "id", "text",
-          excludeBatch = Some(batchId),
-          bloomBits = run.bloomBits,
-          bandFilter = sharedFilters.map(_._1("bands")))
+          excludeBatch = Some(batchId))
         led.dropMatches(kept,
           pairsM.df.filter(col("jacc_e4") >= cfg.nearDupThresholdE4),
           "near_dup", () => pairsM.close())
@@ -1173,10 +988,6 @@ object Increment {
     */
   case class ImageIncrementConfig(maxPixels: Long = 64L << 20,
                                   maxHamming: Int = 3, nBands: Int = 4,
-                                  // [[IncrementConfig.stateBloomBits]]:
-                                  // prunes the exact-key and pHash band
-                                  // state scans batch-proportional
-                                  stateBloomBits: Option[Long] = None,
                                   // optional SEMANTIC stage: SemDeDup
                                   // over block-mean embeddings
                                   // ([[graft.operators.Multimodal
@@ -1190,9 +1001,7 @@ object Increment {
                                   semDedupThresholdE4: Option[Long] = None,
                                   semGrid: Int = 8,
                                   semCentroidEvery: Int = 25,
-                                  semNassign: Int = 2,
-                                  // [[IncrementConfig.stateBloomAuto]]
-                                  stateBloomAuto: Boolean = false)
+                                  semNassign: Int = 2)
 
   /** Image state exists iff the pHash index has a meta commit marker. */
   def imageStateExists(spark: SparkSession, stateDir: String): Boolean =
@@ -1205,12 +1014,6 @@ object Increment {
                                   stride: Int = 1, quantE4: Long = 1L,
                                   minMatchE4: Long = 5000L,
                                   maxFpDocFreq: Long = 1000L,
-                                  // [[IncrementConfig.stateBloomBits]]:
-                                  // prunes the exact-key and fp state
-                                  // scans batch-proportional
-                                  stateBloomBits: Option[Long] = None,
-                                  // [[IncrementConfig.stateBloomAuto]]
-                                  stateBloomAuto: Boolean = false,
                                   // optional SEMANTIC stage: SemDeDup
                                   // over pooled energy-profile
                                   // embeddings ([[graft.operators
@@ -1237,12 +1040,6 @@ object Increment {
     */
   case class VideoIncrementConfig(maxHamming: Int = 3, nBands: Int = 4,
                                   minSimE4: Long = 5000L,
-                                  // [[IncrementConfig.stateBloomBits]]:
-                                  // prunes the exact-key and frame state
-                                  // scans batch-proportional
-                                  stateBloomBits: Option[Long] = None,
-                                  // [[IncrementConfig.stateBloomAuto]]
-                                  stateBloomAuto: Boolean = false,
                                   // optional SEMANTIC stage: SemDeDup
                                   // over pooled keyframe block-mean
                                   // embeddings ([[graft.operators
@@ -1267,13 +1064,7 @@ object Increment {
     */
   case class EmbeddingIncrementConfig(thresholdE4: Long = 9000L,
                                       centroidEvery: Int = 25,
-                                      nassign: Int = 2,
-                                      // [[IncrementConfig.stateBloomBits]]:
-                                      // prunes the exact-key state scan
-                                      // batch-proportional
-                                      stateBloomBits: Option[Long] = None,
-                                      // [[IncrementConfig.stateBloomAuto]]
-                                      stateBloomAuto: Boolean = false)
+                                      nassign: Int = 2)
 
   /** Semantic state exists iff the sem index has its meta marker. */
   def semStateExists(spark: SparkSession, stateDir: String): Boolean =
@@ -1310,8 +1101,7 @@ object Increment {
       within: (Run, DataFrame) => (DataFrame, () => Unit),
       semantic: Option[Semantic],
       writeIndex: (Run, DataFrame, DataFrame) => Unit,
-      project: DataFrame => DataFrame,
-      bloomBits: Option[Long], bloomAuto: Boolean)
+      project: DataFrame => DataFrame)
 
   /** A media family's embedding for the semantic stage, seeding and
     * backfill: `embed` maps payloads to (id, v) vectors of dimension
@@ -1377,8 +1167,7 @@ object Increment {
         Multimodal.phashSigsNearDupAgainstIndex(run.spark,
           run.path("phash"),
           sigs.select(col("id").as("id_new"), col("phash")),
-          cfg.maxHamming, excludeBatch = Some(run.batchId),
-          bloomBits = run.bloomBits),
+          cfg.maxHamming, excludeBatch = Some(run.batchId)),
       within = (_, sigs) => {
         val pm = Multimodal.phashBandNearDupPairsOf(
           sigs.select(col("id").as("media_id"), col("phash").as("ahash")),
@@ -1393,8 +1182,7 @@ object Increment {
         else
           Multimodal.writePhashSigIndex(run.spark, adm, run.path("phash"),
             cfg.nBands, run.batchId),
-      project = _.select("id", "phash"),
-      cfg.stateBloomBits, cfg.stateBloomAuto)
+      project = _.select("id", "phash"))
 
   private def audioSemantic(cfg: AudioIncrementConfig): Semantic =
     Semantic(cfg.semDedupThresholdE4,
@@ -1421,7 +1209,7 @@ object Increment {
         Multimodal.audioSigsNearDupAgainstIndex(run.spark,
           run.path("audio"), fps.select(col("id").as("id_new"), col("fp")),
           cfg.minMatchE4, cfg.maxFpDocFreq,
-          excludeBatch = Some(run.batchId), bloomBits = run.bloomBits),
+          excludeBatch = Some(run.batchId)),
       within = (_, fps) => {
         // the audioNearDupPairs algebra on the survivors' fingerprints
         val sfps = fps.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1450,8 +1238,7 @@ object Increment {
         else
           Multimodal.writeAudioFpIndex(run.spark, adm, run.path("audio"),
             cfg.windowFrames, cfg.k, cfg.stride, cfg.quantE4, run.batchId),
-      project = _.select("id"),
-      cfg.stateBloomBits, cfg.stateBloomAuto)
+      project = _.select("id"))
 
   private def videoSemantic(cfg: VideoIncrementConfig): Semantic =
     Semantic(cfg.semDedupThresholdE4,
@@ -1480,8 +1267,7 @@ object Increment {
           run.path("video"),
           frames.select(col("id").as("id_new"), col("frame_idx"),
             col("phash")),
-          cfg.maxHamming, cfg.minSimE4, excludeBatch = Some(run.batchId),
-          bloomBits = run.bloomBits),
+          cfg.maxHamming, cfg.minSimE4, excludeBatch = Some(run.batchId)),
       within = (_, frames) => {
         // the videoNearDupPairs algebra on the survivors' frame hashes
         val sframes = frames.select(col("id").as("media_id"),
@@ -1499,8 +1285,7 @@ object Increment {
         else
           Multimodal.writeVideoFrameIndex(run.spark, adm,
             run.path("video"), cfg.nBands, run.batchId),
-      project = _.select("id"),
-      cfg.stateBloomBits, cfg.stateBloomAuto)
+      project = _.select("id"))
 
   /** Embedding: the exact key is the vector's e6 fixed-point canonical
     * string (vector identity at the documented resolution); signatures
@@ -1526,8 +1311,7 @@ object Increment {
       },
       nearVsState = (run, vecs) =>
         Curation.semNearDupAgainstIndex(run.spark, run.path("sem"), vecs,
-          cfg.thresholdE4, excludeBatch = Some(run.batchId),
-          bloomBits = run.bloomBits),
+          cfg.thresholdE4, excludeBatch = Some(run.batchId)),
       within = (run, vecs) => {
         // at bootstrap there is no state stage, so `vecs` are all the
         // exact survivors — the set the index write samples again
@@ -1548,8 +1332,7 @@ object Increment {
           Curation.writeSemIndex(adm,
             Curation.semCentroidSample(exact, cfg.centroidEvery),
             run.path("sem"), cfg.centroidEvery, cfg.nassign, run.batchId),
-      project = _.select("id"),
-      cfg.stateBloomBits, cfg.stateBloomAuto)
+      project = _.select("id"))
 
   /** The one driver every media-shaped increment runs: decode once →
     * unsigned rows rejected → exact dedup (against committed keys —
@@ -1568,6 +1351,7 @@ object Increment {
     val spark = batch.sparkSession
     val haveState = prologue(spark, stateDir, batchId, fam.layout.marker,
       caller)
+    val run = Run(spark, stateDir, batchId, haveState)
     val led = new LedgerBuilder(caller)
     val (keys, signatures) = fam.decode(batch)
     // the ingest and signed counts in one job
@@ -1580,13 +1364,8 @@ object Increment {
         .select(col("id"), lit(null).cast("long").as("__dup_of")), reason)
     }
     val decoded = keys.filter(col("__signed")).drop("__signed")
-    val run = Run(spark, stateDir, batchId, haveState,
-      bloomDial(spark, stateDir, haveState, fam.bloomBits, fam.bloomAuto,
-        led.ingested))
 
-    val exact = exactDedup(led, run, fam.layout.marker, decoded,
-      keys => bloomPrune(keys, col("key"), decoded.select("__md5"),
-        col("__md5"), run.bloomBits))
+    val exact = exactDedup(led, run, fam.layout.marker, decoded)
 
     // ---- near-dup: against state (min old parent), then within batch ---
     val afterOld =
@@ -1637,8 +1416,8 @@ object Increment {
         s"$stateDir/sem", s.centroidEvery, s.nassign, "base")
     }
     val sigs = signatures(seeded)
-    fam.writeIndex(Run(spark, stateDir, "base", haveState = false,
-      bloomBits = None), sigs, sigs)
+    fam.writeIndex(Run(spark, stateDir, "base", haveState = false), sigs,
+      sigs)
   }
 
   /** Seed image state from an ALREADY-CURATED media corpus: exact
@@ -1965,8 +1744,8 @@ object Increment {
     * state sub-table present under `stateDir` (text, image, audio,
     * video, semantic — they share the id + batch_id-partition layout):
     * only the partitions actually holding the ids rewrite (dynamic
-    * overwrite), partitions the retraction empties are deleted, and
-    * everything else — including the commit markers — is untouched, so
+    * overwrite), partitions the retraction empties become zero-row
+    * parquet, and everything else — including the commit markers — is untouched, so
     * batch visibility never changes. The LEDGER keeps its one-row-per-
     * submission accounting: retracted ids' rows flip to
     * (admitted = false, reason = "retracted") instead of vanishing.
@@ -1987,7 +1766,7 @@ object Increment {
     val idsN = ids.select(col(ids.columns.head).cast("long").as("id"))
       .distinct().localCheckpoint(eager = true)
     val f = fs(spark, stateDir)
-    for (sub <- StateBloomHeavyTables)
+    for (sub <- StateHeavyTables)
       rewritePartitionsHolding(spark, f, s"$stateDir/$sub", idsN)(
         _.join(idsN, Seq("id"), "left_anti"))
     // the frozen centroid set stores FULL embedding vectors of sampled
@@ -2021,17 +1800,21 @@ object Increment {
   }
 
   /** Rewrite IN PLACE only the partitions of one batch_id-partitioned
-    * state table that hold any of `ids`: `rewrite` maps their rows to
-    * the new rows, eagerly materialized BEFORE the overwrite (the write
-    * would otherwise re-scan files it is replacing).
+    * state table that hold any of `keys` (one `key` column): `rewrite`
+    * maps their rows to the new rows, eagerly materialized BEFORE the
+    * overwrite (the write would otherwise re-scan files it is
+    * replacing). `schema` reads the table with an explicit schema
+    * instead of inferring one.
     */
   private def rewritePartitionsHolding(spark: SparkSession,
                                        f: org.apache.hadoop.fs.FileSystem,
-                                       path: String, ids: DataFrame)(
+                                       path: String, keys: DataFrame,
+                                       key: String = "id",
+                                       schema: Option[StructType] = None)(
       rewrite: DataFrame => DataFrame): Unit = {
     if (!f.exists(new org.apache.hadoop.fs.Path(path))) return
-    val tbl = spark.read.parquet(path)
-    val affected = tbl.join(ids, Seq("id"), "left_semi")
+    val tbl = schema.fold(spark.read)(spark.read.schema).parquet(path)
+    val affected = tbl.join(keys, Seq(key), "left_semi")
       .select("batch_id").distinct().collect().map(_.getString(0))
     if (affected.isEmpty) return
     val rewritten = rewrite(tbl

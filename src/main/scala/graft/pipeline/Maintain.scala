@@ -662,35 +662,7 @@ object Maintain {
       (has("centroids") && has("assigned") && has("meta") &&
         !has("codebook"), () => semDecision(spark, root, mb)))
       .collect { case (true, d) => d() }
-    // funnel roots additionally surface the STATE-BLOOM dial (r16 #3):
-    // the same bytes-threshold rule the increments' stateBloomAuto
-    // applies per batch, reported here so the operational loop sees
-    // WHY bloom is on/off without running an increment. Metric =
-    // committed heavy-table bytes; threshold = the decision floor; the
-    // per-batch ratio guard still applies inside the increment (batch
-    // size is not known here). Advisory by nature — the increment
-    // config acts on it, not an executor.
-    val bloom =
-      if (!funnel) Seq.empty
-      else {
-        // the SAME constants/walk the increments' auto dial uses
-        // (Increment.decideStateBloom) — one definition, no drift
-        val floor = graft.pipeline.Increment.StateBloomMinStateBytes
-        val stateBytes =
-          graft.pipeline.Increment.stateHeavyBytes(spark, root)
-        Seq(Decision("bloom",
-          if (stateBytes >= floor) "enable" else "none",
-          stateBytes, floor,
-          if (stateBytes >= floor)
-            "state bytes past the bloom floor — stateBloomAuto will " +
-              "arm for shuffle-regime batches (>= " +
-              s"${graft.pipeline.Increment.StateBloomMinBatchRows} " +
-              "rows; smaller batches broadcast and the dial stays off)"
-          else
-            "below the crossover: filter builds would cost more than " +
-              "the pruned shuffles save", advisory = true))
-      }
-    (if (funnel) ds.map(_.copy(advisory = true)) else ds) ++ bloom
+    if (funnel) ds.map(_.copy(advisory = true)) else ds
   }
 
   /** One execution attempt per db: the decision that drove it, the

@@ -708,13 +708,6 @@ object Scale {
             concat(col("text"), lit(" zz tail")).as("text"))
         run("mh_incr_1pct", n)(
           Dedup.nearDupAgainstIndex(spark, dir, batch, "doc_id", "text"))
-        // same query with the batch-keyed Bloom prune on the state band
-        // + shingle scans: the win grows with the STATE (the pruned
-        // shuffles are corpus-sized without it), so the 10x row is the
-        // one that argues the 100 TB case
-        run("mh_incr_1pct_bloom", n)(
-          Dedup.nearDupAgainstIndex(spark, dir, batch, "doc_id", "text",
-            bloomBits = Some(1L << 20)))
       }
       // --- round-15: incremental batch CURATION against persisted state
       // (Increment.curateIncrement) vs re-curating the whole union — the
@@ -742,16 +735,6 @@ object Scale {
         run("incr_curate_3pct", n)(graft.core.Managed(
           graft.pipeline.Increment.curateIncrement(batchI, "doc_id",
             "text", sdir, "sweep").ledger
-            .groupBy("reason").agg(count(lit(1)).as("docs")),
-          Seq.empty))
-        // the same increment with stateBloomBits: reusing the batch id
-        // makes this the RETRY shape against the identical pre-batch
-        // state view, so the delta vs the row above is the Bloom prune
-        run("incr_curate_3pct_bloom", n)(graft.core.Managed(
-          graft.pipeline.Increment.curateIncrement(batchI, "doc_id",
-            "text", sdir, "sweep",
-            graft.pipeline.IncrementConfig(
-              stateBloomBits = Some(1L << 20))).ledger
             .groupBy("reason").agg(count(lit(1)).as("docs")),
           Seq.empty))
         run("recurate_publish", n) {
@@ -789,18 +772,13 @@ object Scale {
             comp.pinned)
         }
       }
-      // --- round-18 (VERDICT r17 #3): the Bloom auto dial PAST its
-      // 256 MiB floor. The steady-state rows above scale the batch WITH
-      // the state (a 3% slice of the Nx corpus), which pins the
-      // crossover as absolute bytes but can never trip the
-      // per-batch-row guard (the state/batch ratio is flat by
-      // construction). Production increments are the OTHER shape: a
-      // FIXED-size snapshot against a state that grows without bound —
-      // batch fixed at the x1 slice, state at Nx. Past ~x80 the
-      // committed heavy tables pass the floor and decideStateBloom
-      // flips bloom ON; the paired rows measure that flip's sign, and
-      // the SCALEMETA line records the measured bytes + decision so the
-      // SCALE.md row shows where the dial actually sat.
+      // --- round-18: a FIXED-size batch against a growing state. The
+      // steady-state rows above scale the batch WITH the state (a 3%
+      // slice of the Nx corpus); production increments are the other
+      // shape: a fixed-size snapshot against a state that grows without
+      // bound — batch at the x{1, 10, 30, N} slice, state at Nx. The
+      // SCALEMETA line records the committed heavy-table bytes and the
+      // batch rows behind each row.
       if (onlyRows.forall(_.exists(p =>
           p.startsWith("incr_fixedbatch") ||
             "incr_fixedbatch".startsWith(p)))) {
@@ -808,11 +786,6 @@ object Scale {
           .createTempDirectory(s"graft_scale_incrfb_$n").toString
         graft.pipeline.Increment.initStateFromCurated(
           spark, sdir, d, "doc_id", "text")
-        // batch-size grid: bloom's win requires the state side to
-        // actually SHUFFLE, which only happens when the batch side's
-        // keyed frames exceed the broadcast threshold — a tiny batch
-        // broadcasts and bloom is pure overhead at ANY state size
-        // (measured: +25% at 178 rows vs 350 MB state)
         for (bf <- (Seq(1, 10, 30) :+ factor).distinct
              if onlyRows.forall(_.exists(p =>
                p.startsWith(s"incr_fixedbatch_b$bf") ||
@@ -832,18 +805,10 @@ object Scale {
           val nb = batchF.count()
           println(s"SCALEMETA incr_fixedbatch_b$bf x$n heavyBytes=" +
             graft.pipeline.Increment.stateHeavyBytes(spark, sdir) +
-            s" batchRows=$nb decide=" +
-            graft.pipeline.Increment.decideStateBloom(spark, sdir, nb))
+            s" batchRows=$nb")
           run(s"incr_fixedbatch_b$bf", n)(graft.core.Managed(
             graft.pipeline.Increment.curateIncrement(batchF, "doc_id",
               "text", sdir, "sweep").ledger
-              .groupBy("reason").agg(count(lit(1)).as("docs")),
-            Seq.empty))
-          run(s"incr_fixedbatch_b${bf}_bloom", n)(graft.core.Managed(
-            graft.pipeline.Increment.curateIncrement(batchF, "doc_id",
-              "text", sdir, "sweep",
-              graft.pipeline.IncrementConfig(
-                stateBloomBits = Some(1L << 20))).ledger
               .groupBy("reason").agg(count(lit(1)).as("docs")),
             Seq.empty))
         }

@@ -62,28 +62,6 @@ class ExtOperatorsSpec extends SparkSpec {
     assert(got2.contains((20L, 10L)), got2.toString)
   }
 
-  test("nearDupAgainstIndex with bloomBits returns the identical pair " +
-      "set (the state band + shingle scans only get PRUNED)") {
-    val old = (0L until 40L).map(i => (i, s"$docA salt$i"))
-      .toDF("doc_id", "text")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_mh_idx_bloom").toString
-    Dedup.writeMinhashIndex(old, "doc_id", "text", dir)
-    val fresh = Seq((100L, docA + " salt7 tail"), (101L, docC))
-      .toDF("doc_id", "text")
-    def pairs(bits: Option[Long]) = {
-      val m = Dedup.nearDupAgainstIndex(spark, dir, fresh, "doc_id",
-        "text", bloomBits = bits)
-      val r = m.df.select("id_new", "id_old", "jacc_e4")
-        .as[(Long, Long, Long)].collect().toSet
-      m.close(); r
-    }
-    val off = pairs(None)
-    // a tiny, HIGH-fpp filter still must not change the result
-    val on = pairs(Some(1L << 10))
-    assert(on == off && off.nonEmpty, s"$on vs $off")
-  }
-
   test("simhash16 is equal for identical text, in [0, 2^16)") {
     val df = Seq((1L, docA), (2L, docA), (3L, docC)).toDF("doc_id", "text")
       .withColumn("wh", Dedup.tokenHashes(Dedup.normalizeWords(col("text"))))

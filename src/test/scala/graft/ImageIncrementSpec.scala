@@ -195,41 +195,4 @@ class ImageIncrementSpec extends SparkSpec {
       Increment.curateImageIncrement(b2.toDS(), dir2, "b2").ledger)
     assert(off.values.forall(_._2 == "admitted"), off.toString)
   }
-
-  test("stateBloomBits parity: exact-key and pHash band state scans " +
-      "prune without changing any image verdict") {
-    val shared = png(1, 0)
-    val b1 = Seq(
-      MediaRecord(1L, shared, "image/png"),
-      MediaRecord(3L, png(3, 0), "image/png"))
-    val b2 = Seq(
-      MediaRecord(10L, shared, "image/png"),       // exact dup of state 1
-      MediaRecord(11L, png(3, 7), "image/png"),    // near-dup of state 3
-      MediaRecord(30L, png(30, 0), "image/png"))   // fresh
-    def run(bits: Option[Long]) = {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_img_incr_bloom").toString
-      val cfg = ImageIncrementConfig(stateBloomBits = bits)
-      Increment.curateImageIncrement(b1.toDS(), dir, "b1", cfg)
-      Increment.curateImageIncrement(b2.toDS(), dir, "b2", cfg)
-      verdictMap(Increment.readLedger(spark, dir))
-    }
-    val off = run(None)
-    val on = run(Some(1L << 12))
-    assert(on == off, s"image verdicts diverged: $on vs $off")
-    assert(on(10L) == ((false, "exact_dup", 1L)))
-    assert(on(11L) == ((false, "near_dup", 3L)))
-    assert(on(30L) == ((true, "admitted", 30L)))
-    // the auto dial (spec-sized state → decision OFF) is verdict-
-    // identical too — the modality increments share decideStateBloom
-    val auto = {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_img_incr_auto").toString
-      val cfg = ImageIncrementConfig(stateBloomAuto = true)
-      Increment.curateImageIncrement(b1.toDS(), dir, "b1", cfg)
-      Increment.curateImageIncrement(b2.toDS(), dir, "b2", cfg)
-      verdictMap(Increment.readLedger(spark, dir))
-    }
-    assert(auto == off, s"auto-dial verdicts diverged: $auto vs $off")
-  }
 }

@@ -358,9 +358,8 @@ class IncrementSpec extends SparkSpec {
       s"retracted claims must stop stripping: $gotC")
   }
 
-  test("stateBloomBits prunes the state scans without changing a single " +
-      "verdict, claim, or admitted text (bit-identical parity)") {
-    import graft.operators.Curation
+  test("window, exact and near stages against state in one increment: " +
+      "claimed spans strip first, then exact and MinHash dedup") {
     val passage = (1 to 10).map(i => s"q$i").mkString(" ")
     val a = Seq(
       1L -> (goodText("one") + " " + passage),
@@ -372,78 +371,25 @@ class IncrementSpec extends SparkSpec {
       12L -> goodText("two"),                   // exact dup of state 2
       13L -> (goodText("three") + " " + passage), // claimed passage strips
       14L -> goodText("four"))                  // fresh → admitted
-    def run(bits: Option[Long]): (Map[Long, (Boolean, String, Long)],
-        Map[Long, String], Long) = {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_incr_bloom").toString
-      val cfg = IncrementConfig(minQualityE4 = 0, dedupWindowsW = Some(8),
-        semDedupThresholdE4 = Some(9500L), semDim = 16,
-        stateBloomBits = bits)
-      Increment.curateIncrement(a.toDF("doc_id", "text"),
-        "doc_id", "text", dir, "b1", cfg)
-      val rb = Increment.curateIncrement(b.toDF("doc_id", "text"),
-        "doc_id", "text", dir, "b2", cfg)
-      val texts = rb.admitted.select("id", "text").as[(Long, String)]
-        .collect().toMap
-      val claims = spark.read.parquet(s"$dir/windows").count()
-      (verdictMap(Increment.readLedger(spark, dir)), texts, claims)
-    }
-    // a deliberately TINY filter (high fpp) still yields identical
-    // results — false positives only re-feed the exact joins
-    val (ledOff, txtOff, clOff) = run(None)
-    val (ledOn, txtOn, clOn) = run(Some(1L << 12))
-    assert(ledOn == ledOff, s"ledger diverged: $ledOn vs $ledOff")
-    assert(txtOn == txtOff, s"admitted texts diverged")
-    assert(clOn == clOff, s"window claims diverged: $clOn vs $clOff")
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_incr_window").toString
+    val cfg = IncrementConfig(minQualityE4 = 0, dedupWindowsW = Some(8),
+      semDedupThresholdE4 = Some(9500L), semDim = 16)
+    Increment.curateIncrement(a.toDF("doc_id", "text"),
+      "doc_id", "text", dir, "b1", cfg)
+    val rb = Increment.curateIncrement(b.toDF("doc_id", "text"),
+      "doc_id", "text", dir, "b2", cfg)
+    val txt = rb.admitted.select("id", "text").as[(Long, String)]
+      .collect().toMap
+    val led = verdictMap(Increment.readLedger(spark, dir))
     // the window stage runs FIRST, so state-claimed content strips
     // before exact/minhash (11's goodText("two") prefix is claimed by
     // state doc 2 — its remnant admits; 10 and 12 strip to twin
-    // remnants and exact-dedup within batch); direct state-near-dup
-    // bloom parity is pinned in ExtOperatorsSpec
-    assert(ledOn(11L)._2 == "admitted")
-    assert(ledOn.values.count(_._2 == "exact_dup") >= 1)
-    assert(ledOn(14L)._2 == "admitted")
-    assert(!txtOn(13L).contains("q1"), "claimed passage must strip")
-  }
-
-  test("stateBloomAuto: the dial decides from state bytes vs batch " +
-      "rows — OFF below the crossover (tiny states never pay the build " +
-      "jobs), sized+clamped above it, manual bits always win; auto " +
-      "increments stay verdict-identical") {
-    // the decision rule itself
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_incr_auto").toString
-    Increment.curateIncrement(
-      Seq(1L -> goodText("one"), 2L -> goodText("two"))
-        .toDF("doc_id", "text"), "doc_id", "text", dir, "b1")
-    // a spec-sized state is far below the 64 MiB floor → off
-    assert(Increment.decideStateBloom(spark, dir, 100L).isEmpty)
-    // r18 shuffle-regime condition: a broadcastable batch keeps the
-    // dial OFF even with every byte floor lowered (measured: bloom
-    // lost at every cell with a broadcast batch side, SCALE.md r18)
-    assert(Increment.decideStateBloom(spark, dir, 16790L,
-      minStateBytes = 1L, minStateBytesPerBatchRow = 0L).isEmpty)
-    // floors lowered + shuffle-regime batch: flips on, sized from batch
-    val bits = Increment.decideStateBloom(spark, dir, 1000L,
-      minStateBytes = 1L, minStateBytesPerBatchRow = 0L,
-      minBatchRows = 0L)
-    assert(bits.contains(1L << 20), bits.toString) // floor clamp
-    assert(Increment.decideStateBloom(spark, dir, 300000L,
-      minStateBytes = 1L, minStateBytesPerBatchRow = 0L)
-      .contains(1L << 22)) // 16·300k ≈ 4.8M → highestOneBit = 2^22
-    assert(Increment.decideStateBloom(spark, dir, 1L << 40,
-      minStateBytes = 1L, minStateBytesPerBatchRow = 0L)
-      .contains(1L << 27)) // ceiling clamp
-    // end-to-end: auto-on increments (decision = off here) are
-    // verdict-identical to plain ones
-    val b = Seq(10L -> goodText("one"),
-      11L -> (goodText("two") + " appended"), 12L -> goodText("three"))
-      .toDF("doc_id", "text")
-    val auto = verdictMap(Increment.curateIncrement(b, "doc_id", "text",
-      dir, "b2", IncrementConfig(stateBloomAuto = true)).ledger)
-    assert(auto(10L) == ((false, "exact_dup", 1L)))
-    assert(auto(11L) == ((false, "near_dup", 2L)))
-    assert(auto(12L) == ((true, "admitted", 12L)))
+    // remnants and exact-dedup within batch)
+    assert(led(11L)._2 == "admitted")
+    assert(led.values.count(_._2 == "exact_dup") >= 1)
+    assert(led(14L)._2 == "admitted")
+    assert(!txt(13L).contains("q1"), "claimed passage must strip")
   }
 
   test("the funnel's stateless gates (gopher, classifier, arpa, " +

@@ -331,13 +331,8 @@ class MaintainSpec extends SparkSpec {
       "b1", IncrementConfig(minQualityE4 = 0,
         semDedupThresholdE4 = Some(9500L)))
     val ds = Maintain.decideAll(spark, dir)
-    assert(ds.map(_.index).toSet == Set("minhash", "sem", "bloom"),
-      s"$ds")
+    assert(ds.map(_.index).toSet == Set("minhash", "sem"), s"$ds")
     assert(ds.forall(_.action == "none"), s"$ds")
-    // the bloom dial reports the bytes rule: a spec-sized state sits
-    // far below the crossover floor, so the advice is OFF
-    val bd = ds.find(_.index == "bloom").get
-    assert(bd.advisory && bd.metric < bd.threshold, s"$bd")
     // funnel sub-states are ADVISORY: the warehouse executors do not
     // apply under an increment root (rewriting a sub-index's batch ids
     // to `base` would break the minhash-committed serving intersection)
