@@ -574,8 +574,7 @@ object Curation {
   private def writeSemParts(vectors: DataFrame, dir: String, nassign: Int,
                             centroidEvery: Int, pinnedDim: Int,
                             overwrite: Boolean, batchId: String): Unit = {
-    require(batchId.nonEmpty && batchId != "__HIVE_DEFAULT_PARTITION__",
-      s"sem index: invalid batch id '$batchId'")
+    graft.core.BatchTables.requireBatchId(batchId, "sem index")
     val spark = vectors.sparkSession
     val measured = vectorDim(vectors)
     measured.foreach(d => require(pinnedDim <= 0 || d == pinnedDim,
@@ -584,11 +583,6 @@ object Curation {
     // re-state the pinned dim (or adopt the measured one when the index
     // was created empty) so every committed batch agrees
     val dim = if (pinnedDim > 0) pinnedDim else measured.getOrElse(0)
-    def writer(d: DataFrame) =
-      d.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("batch_id")
-        .option("partitionOverwriteMode",
-          if (overwrite) "static" else "dynamic")
     val cent = broadcast(spark.read.parquet(s"$dir/centroids"))
     val assigned = Similarity.topCells(
       graft.core.Ops.widen(vectors.select(col("id"), col("v")))
@@ -596,29 +590,32 @@ object Curation {
         .withColumn("cscore", Similarity.cosine("v", "cv")),
       "id", "v", nassign)
       .select("id", "v", "cid")
-    writer(assigned).parquet(s"$dir/assigned")
-    writer(spark.range(1)
-        .select(lit(centroidEvery).as("centroid_every"),
-          lit(nassign).as("nassign"), lit(dim).as("dim")))
-      .parquet(s"$dir/meta")
+    graft.core.BatchTables.write(assigned, s"$dir/assigned", batchId,
+      overwrite)
+    graft.core.BatchTables.write(semMetaRow(spark, centroidEvery, nassign,
+      dim), s"$dir/meta", batchId, overwrite)
   }
+
+  /** One sem meta row: the pinned (centroid_every, nassign, dim). */
+  private[graft] def semMetaRow(spark: org.apache.spark.sql.SparkSession,
+                                centroidEvery: Int, nassign: Int,
+                                dim: Int): DataFrame =
+    spark.range(1).select(lit(centroidEvery).as("centroid_every"),
+      lit(nassign).as("nassign"), lit(dim).as("dim"))
 
   /** (centroid_every, nassign, dim); dim 0 = created empty, unpinned
     * until the first non-empty batch adopts one.
     */
   private[graft] def readSemMeta(spark: org.apache.spark.sql.SparkSession,
                                  dir: String): (Int, Int, Int) = {
-    val rows = spark.read.parquet(s"$dir/meta")
-      .select("centroid_every", "nassign").distinct().collect()
-    require(rows.length == 1,
-      s"sem index at $dir: inconsistent parameters across batches " +
-        s"(${rows.length} distinct meta rows)")
+    val r = graft.core.BatchTables.pinnedMeta(spark, dir,
+      Seq("centroid_every", "nassign"), "sem index")
     val dims = spark.read.parquet(s"$dir/meta")
       .select("dim").distinct().collect().map(_.getInt(0)).sorted
     require(dims.length == 1 || (dims.length == 2 && dims.head == 0),
       s"sem index at $dir: inconsistent dims across batches " +
         s"(${dims.mkString(", ")})")
-    (rows(0).getInt(0), rows(0).getInt(1), dims.last)
+    (r.getInt(0), r.getInt(1), dims.last)
   }
 
   /** Semantic near-dup pairs of NEW vectors against the indexed corpus:
@@ -644,18 +641,15 @@ object Curation {
         .foreach(d => require(d == dim,
           s"semNearDupAgainstIndex: index at $dir pins dim $dim; " +
             s"query batch carries dim $d"))
-    val committed1 = spark.read.parquet(s"$dir/meta")
-      .select("batch_id").distinct()
     // restrictTo: when this index is a SUB-state of a funnel whose
     // authoritative commit marker lives elsewhere (the text increment's
     // minhash meta), intersect with that marker's committed set so a
     // torn increment's sem rows never serve (the r14 torn-kNN lesson)
-    val committed0 = restrictTo
-      .map(r => committed1.join(r.select("batch_id").distinct(),
+    val committed0 =
+      graft.core.BatchTables.committed(spark, dir, excludeBatch)
+    val committed = restrictTo
+      .map(r => committed0.join(r.select("batch_id").distinct(),
         Seq("batch_id"), "left_semi"))
-      .getOrElse(committed1)
-    val committed = excludeBatch
-      .map(b => committed0.filter(col("batch_id") =!= b))
       .getOrElse(committed0)
     val cent = broadcast(spark.read.parquet(s"$dir/centroids"))
     val nb = Similarity.topCells(
@@ -665,8 +659,8 @@ object Curation {
         .withColumn("cscore", Similarity.cosine("v", "cv")),
       "id_new", "v", nassign)
       .select(col("id_new"), col("v").as("vn"), col("cid"))
-    val ob = spark.read.parquet(s"$dir/assigned")
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
+    val ob = graft.core.BatchTables
+      .readCommitted(spark, s"$dir/assigned", committed)
       .select(col("id").as("id_old"), col("v").as("vo"), col("cid"))
     nb.join(ob, Seq("cid"))
       .filter(col("id_new") =!= col("id_old"))

@@ -256,51 +256,31 @@ object Dedup {
                                 textCol: String, dir: String, bands: Int,
                                 rowsPerBand: Int, overwrite: Boolean,
                                 batchId: String): Unit = {
-    require(batchId.nonEmpty && batchId != "__HIVE_DEFAULT_PARTITION__",
-      s"minhash index: invalid batch id '$batchId'")
-    // overwrite mode pinned per-write (never inherited from the session):
-    // a host session running partitionOverwriteMode=dynamic globally must
-    // not turn a full rebuild into a base-partition-only replace that
-    // leaves stale batch partitions (and their commit markers) live.
-    def writer(d: DataFrame) = {
-      d.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("batch_id")
-        .option("partitionOverwriteMode",
-          if (overwrite) "static" else "dynamic")
-    }
+    graft.core.BatchTables.requireBatchId(batchId, "minhash index")
+    def write(d: DataFrame, table: String): Unit =
+      graft.core.BatchTables.write(d, s"$dir/$table", batchId, overwrite)
     val shRaw = shingleSets(df, idCol, textCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val sh = shRaw.filter(size(col("sh")) > 0)
-    writer(sh.select(col(idCol).as("id"), array_distinct(col("sh")).as("shd")))
-      .parquet(s"$dir/shingles")
-    writer(lshBands(sh, idCol, bands, rowsPerBand)
-        .select(col(idCol).as("id"), col("band"), col("bh")))
-      .parquet(s"$dir/bands")
+    write(sh.select(col(idCol).as("id"), array_distinct(col("sh")).as("shd")),
+      "shingles")
+    write(lshBands(sh, idCol, bands, rowsPerBand)
+        .select(col(idCol).as("id"), col("band"), col("bh")), "bands")
     // the commit marker — also re-states the banding so EVERY committed
     // batch pins the same (bands, rows_per_band); checked on read
-    writer(df.sparkSession.range(1)
-        .select(lit(bands).as("bands"), lit(rowsPerBand).as("rows_per_band")))
-      .parquet(s"$dir/meta")
+    write(df.sparkSession.range(1)
+        .select(lit(bands).as("bands"), lit(rowsPerBand).as("rows_per_band")),
+      "meta")
     shRaw.unpersist(false)
   }
 
   private[graft] def readMinhashMeta(
       spark: org.apache.spark.sql.SparkSession,
       dir: String): (Int, Int) = {
-    val rows = spark.read.parquet(s"$dir/meta")
-      .select("bands", "rows_per_band").distinct().collect()
-    require(rows.length == 1,
-      s"minhash index at $dir: inconsistent banding across batches " +
-        s"(${rows.length} distinct (bands, rows_per_band) rows)")
-    (rows(0).getAs[Int]("bands"), rows(0).getAs[Int]("rows_per_band"))
+    val r = graft.core.BatchTables.pinnedMeta(spark, dir,
+      Seq("bands", "rows_per_band"), "minhash index")
+    (r.getInt(0), r.getInt(1))
   }
-
-  /** Committed batch ids of a minhash index (meta partitions — the
-    * commit markers); bounded by batch count.
-    */
-  private[graft] def minhashCommitted(spark: org.apache.spark.sql.SparkSession,
-                                      dir: String): DataFrame =
-    spark.read.parquet(s"$dir/meta").select("batch_id").distinct()
 
   /** Near-dup pairs of NEW docs against an indexed old snapshot:
     * (id_new, id_old, jacc_e4). The new batch shingles and bands ONCE
@@ -325,22 +305,20 @@ object Dedup {
     val shRaw = shingleSets(newDocs, idCol, textCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val sh = shRaw.filter(size(col("sh")) > 0)
-    val committed0 = minhashCommitted(spark, dir)
-    val committed = excludeBatch
-      .map(b => committed0.filter(col("batch_id") =!= b))
-      .getOrElse(committed0)
+    val committed =
+      graft.core.BatchTables.committed(spark, dir, excludeBatch)
     val nb = lshBands(sh, idCol, bands, rowsPerBand)
       .select(col(idCol).as("id_new"), col("band"), col("bh"))
-    val ob = spark.read.parquet(s"$dir/bands")
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
+    val ob = graft.core.BatchTables
+      .readCommitted(spark, s"$dir/bands", committed)
       .select(col("id").as("id_old"), col("band"), col("bh"))
     val cand = nb.join(ob, Seq("band", "bh"))
       .filter(col("id_new") =!= col("id_old"))
       .select("id_new", "id_old").distinct()
     val newSets = sh.select(col(idCol).as("id_new"),
       array_distinct(col("sh")).as("sa"))
-    val oldSets = spark.read.parquet(s"$dir/shingles")
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
+    val oldSets = graft.core.BatchTables
+      .readCommitted(spark, s"$dir/shingles", committed)
       .select(col("id").as("id_old"), col("shd").as("sb"))
     val inter = size(array_intersect(col("sa"), col("sb")))
     val jacc = graft.core.Ops.fixedPoint(inter * lit(1.0) /

@@ -418,8 +418,7 @@ object KnnGraph {
                        dir: String, newVectors: DataFrame, batchId: String,
                        beamWidth: Int = 20, rounds: Int = 3,
                        numEntries: Int = 4, batchIters: Int = 1): Unit = {
-    require(batchId.nonEmpty && batchId != "__HIVE_DEFAULT_PARTITION__",
-      s"appendToKnnIndex: invalid batch id '$batchId'")
+    graft.core.BatchTables.requireBatchId(batchId, "appendToKnnIndex")
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     require(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/meta")),

@@ -771,23 +771,17 @@ object Multimodal {
                                 stride: Int, quantE4: Long,
                                 overwrite: Boolean,
                                 batchId: String): Unit = {
-    require(batchId.nonEmpty && batchId != "__HIVE_DEFAULT_PARTITION__",
-      s"audio index: invalid batch id '$batchId'")
-    def writer(d: DataFrame) =
-      d.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("batch_id")
-        .option("partitionOverwriteMode",
-          if (overwrite) "static" else "dynamic")
+    graft.core.BatchTables.requireBatchId(batchId, "audio index")
+    def write(d: DataFrame, table: String): Unit =
+      graft.core.BatchTables.write(d, s"$dir/$table", batchId, overwrite)
     val fps = fps0.select(col("id"), col("fp"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      writer(fps).parquet(s"$dir/fps")
-      writer(fps.groupBy("id").agg(count(lit(1)).as("nfp")))
-        .parquet(s"$dir/sizes")
-      writer(spark.range(1)
+      write(fps, "fps")
+      write(fps.groupBy("id").agg(count(lit(1)).as("nfp")), "sizes")
+      write(spark.range(1)
           .select(lit(windowFrames).as("window_frames"), lit(k).as("k"),
-            lit(stride).as("stride"), lit(quantE4).as("quant_e4")))
-        .parquet(s"$dir/meta")
+            lit(stride).as("stride"), lit(quantE4).as("quant_e4")), "meta")
     } finally fps.unpersist()
   }
 
@@ -813,34 +807,22 @@ object Multimodal {
                                  dir: String, nBands: Int,
                                  overwrite: Boolean,
                                  batchId: String): Unit = {
-    require(batchId.nonEmpty && batchId != "__HIVE_DEFAULT_PARTITION__",
-      s"phash index: invalid batch id '$batchId'")
+    graft.core.BatchTables.requireBatchId(batchId, "phash index")
     require(nBands > 0 && 64 % nBands == 0,
       s"phash index: band count ($nBands) must divide 64")
-    // overwrite mode pinned per-write (the minhash-writer discipline): a
-    // session-global dynamic mode must not turn a rebuild into a
-    // base-only replace that leaves stale batch partitions live
-    def writer(d: DataFrame) =
-      d.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("batch_id")
-        .option("partitionOverwriteMode",
-          if (overwrite) "static" else "dynamic")
-    writer(sigs.select(col("id"), col("phash"))).parquet(s"$dir/sigs")
+    graft.core.BatchTables.write(sigs.select(col("id"), col("phash")),
+      s"$dir/sigs", batchId, overwrite)
     // commit marker — re-states n_bands so every committed batch pins
     // the same banding; checked on read
-    writer(spark.range(1).select(lit(nBands).as("n_bands")))
-      .parquet(s"$dir/meta")
+    graft.core.BatchTables.write(
+      spark.range(1).select(lit(nBands).as("n_bands")), s"$dir/meta",
+      batchId, overwrite)
   }
 
   private[graft] def readPhashMeta(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Int = {
-    val rows = spark.read.parquet(s"$dir/meta")
-      .select("n_bands").distinct().collect()
-    require(rows.length == 1,
-      s"phash index at $dir: inconsistent banding across batches " +
-        s"(${rows.length} distinct n_bands rows)")
-    rows(0).getAs[Int]("n_bands")
-  }
+      spark: org.apache.spark.sql.SparkSession, dir: String): Int =
+    graft.core.BatchTables.pinnedMeta(spark, dir, Seq("n_bands"),
+      "phash index").getInt(0)
 
   /** Near-dup pairs of NEW images against the indexed corpus:
     * (id_new, id_old, hamming). The batch decodes and hashes ONCE; the
@@ -873,16 +855,13 @@ object Multimodal {
     require(maxHamming < nBands,
       s"phashNearDupAgainstIndex: pigeonhole over $nBands bands is exact " +
         s"only for maxHamming ($maxHamming) < n_bands")
-    val committed0 = spark.read.parquet(s"$dir/meta")
-      .select("batch_id").distinct()
-    val committed = excludeBatch
-      .map(b => committed0.filter(col("batch_id") =!= b))
-      .getOrElse(committed0)
+    val committed =
+      graft.core.BatchTables.committed(spark, dir, excludeBatch)
     val nb = phashBandRows(newSigs, nBands)
       .select(col("id_new"), col("phash").as("h_new"),
         col("band"), col("bits"))
-    val ob = phashBandRows(spark.read.parquet(s"$dir/sigs")
-        .join(broadcast(committed), Seq("batch_id"), "left_semi")
+    val ob = phashBandRows(graft.core.BatchTables
+        .readCommitted(spark, s"$dir/sigs", committed)
         .select(col("id").as("id_old"), col("phash")), nBands)
       .select(col("id_old"), col("phash").as("h_old"),
         col("band"), col("bits"))
@@ -1432,14 +1411,9 @@ object Multimodal {
 
   private[graft] def readAudioMeta(spark: org.apache.spark.sql.SparkSession,
                                    dir: String): (Int, Int, Int, Long) = {
-    val rows = spark.read.parquet(s"$dir/meta")
-      .select("window_frames", "k", "stride", "quant_e4")
-      .distinct().collect()
-    require(rows.length == 1,
-      s"audio index at $dir: inconsistent fingerprinting across batches " +
-        s"(${rows.length} distinct meta rows)")
-    (rows(0).getInt(0), rows(0).getInt(1), rows(0).getInt(2),
-      rows(0).getLong(3))
+    val r = graft.core.BatchTables.pinnedMeta(spark, dir,
+      Seq("window_frames", "k", "stride", "quant_e4"), "audio index")
+    (r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3))
   }
 
   /** Near-dup pairs of NEW clips against the indexed corpus
@@ -1473,16 +1447,13 @@ object Multimodal {
       newFps: DataFrame, minMatchE4: Long = 5000L,
       maxFpDocFreq: Long = 1000L,
       excludeBatch: Option[String] = None): DataFrame = {
-    val committed0 = spark.read.parquet(s"$dir/meta")
-      .select("batch_id").distinct()
-    val committed = excludeBatch
-      .map(b => committed0.filter(col("batch_id") =!= b))
-      .getOrElse(committed0)
+    val committed =
+      graft.core.BatchTables.committed(spark, dir, excludeBatch)
     val nfps = newFps
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val ofps = spark.read.parquet(s"$dir/fps")
-        .join(broadcast(committed), Seq("batch_id"), "left_semi")
+      val ofps = graft.core.BatchTables
+        .readCommitted(spark, s"$dir/fps", committed)
         .select(col("id").as("id_old"), col("fp"))
       val keep = ofps.groupBy("fp").agg(count(lit(1)).as("df"))
         .filter(col("df") <= maxFpDocFreq).select("fp")
@@ -1491,8 +1462,8 @@ object Multimodal {
         .filter(col("id_new") =!= col("id_old")) // retried/served batch ≠ itself
         .groupBy("id_new", "id_old").agg(count(lit(1)).as("ninter"))
       val nsz = nfps.groupBy("id_new").agg(count(lit(1)).as("na"))
-      val osz = spark.read.parquet(s"$dir/sizes")
-        .join(broadcast(committed), Seq("batch_id"), "left_semi")
+      val osz = graft.core.BatchTables
+        .readCommitted(spark, s"$dir/sizes", committed)
         .select(col("id").as("id_old"), col("nfp").as("nb"))
       inter.join(nsz, "id_new").join(osz, "id_old")
         .select(col("id_new"), col("id_old"), graft.core.Ops.fixedPoint(
@@ -2241,34 +2212,23 @@ object Multimodal {
                                    dir: String, nBands: Int,
                                    overwrite: Boolean,
                                    batchId: String): Unit = {
-    require(batchId.nonEmpty && batchId != "__HIVE_DEFAULT_PARTITION__",
-      s"video index: invalid batch id '$batchId'")
+    graft.core.BatchTables.requireBatchId(batchId, "video index")
     require(nBands > 0 && 64 % nBands == 0,
       s"video index: band count ($nBands) must divide 64")
-    def writer(d: DataFrame) =
-      d.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("batch_id")
-        .option("partitionOverwriteMode",
-          if (overwrite) "static" else "dynamic")
+    def write(d: DataFrame, table: String): Unit =
+      graft.core.BatchTables.write(d, s"$dir/$table", batchId, overwrite)
     val frames = frames0.select(col("id"), col("frame_idx"), col("phash"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      writer(frames).parquet(s"$dir/frames")
-      writer(frames.groupBy("id").agg(count(lit(1)).as("nf")))
-        .parquet(s"$dir/sizes")
-      writer(spark.range(1).select(lit(nBands).as("n_bands")))
-        .parquet(s"$dir/meta")
+      write(frames, "frames")
+      write(frames.groupBy("id").agg(count(lit(1)).as("nf")), "sizes")
+      write(spark.range(1).select(lit(nBands).as("n_bands")), "meta")
     } finally frames.unpersist()
   }
 
-  private[graft] def readVideoMeta(spark: SparkSession, dir: String): Int = {
-    val rows = spark.read.parquet(s"$dir/meta")
-      .select("n_bands").distinct().collect()
-    require(rows.length == 1,
-      s"video index at $dir: inconsistent banding across batches " +
-        s"(${rows.length} distinct n_bands rows)")
-    rows(0).getAs[Int]("n_bands")
-  }
+  private[graft] def readVideoMeta(spark: SparkSession, dir: String): Int =
+    graft.core.BatchTables.pinnedMeta(spark, dir, Seq("n_bands"),
+      "video index").getInt(0)
 
   /** Near-dup pairs of NEW videos against the indexed corpus:
     * (id_new, id_old, matched_new, matched_old, sim_e4) — the
@@ -2302,19 +2262,16 @@ object Multimodal {
     require(maxHamming < nBands,
       s"videoNearDupAgainstIndex: pigeonhole over $nBands bands is exact " +
         s"only for maxHamming ($maxHamming) < n_bands")
-    val committed0 = spark.read.parquet(s"$dir/meta")
-      .select("batch_id").distinct()
-    val committed = excludeBatch
-      .map(b => committed0.filter(col("batch_id") =!= b))
-      .getOrElse(committed0)
+    val committed =
+      graft.core.BatchTables.committed(spark, dir, excludeBatch)
     val nfr = newFrames
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val nb = phashBandRows(nfr, nBands)
         .select(col("id_new"), col("frame_idx").as("fi_new"),
           col("phash").as("h_new"), col("band"), col("bits"))
-      val ob = phashBandRows(spark.read.parquet(s"$dir/frames")
-          .join(broadcast(committed), Seq("batch_id"), "left_semi")
+      val ob = phashBandRows(graft.core.BatchTables
+          .readCommitted(spark, s"$dir/frames", committed)
           .select(col("id").as("id_old"), col("frame_idx"), col("phash")),
           nBands)
         .select(col("id_old"), col("frame_idx").as("fi_old"),
@@ -2328,8 +2285,8 @@ object Multimodal {
         .agg(countDistinct(col("fi_new")).as("matched_new"),
           countDistinct(col("fi_old")).as("matched_old"))
       val nsz = nfr.groupBy("id_new").agg(count(lit(1)).as("na"))
-      val osz = spark.read.parquet(s"$dir/sizes")
-        .join(broadcast(committed), Seq("batch_id"), "left_semi")
+      val osz = graft.core.BatchTables
+        .readCommitted(spark, s"$dir/sizes", committed)
         .select(col("id").as("id_old"), col("nf").as("nb"))
       agg.join(nsz, "id_new").join(osz, "id_old")
         .withColumn("sim_e4", graft.core.Ops.fixedPoint(

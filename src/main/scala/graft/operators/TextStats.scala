@@ -1818,20 +1818,11 @@ object TextStats {
   private def writeBm25Parts(docs: org.apache.spark.sql.DataFrame,
                              idCol: String, textCol: String, dir: String,
                              overwrite: Boolean, batchId: String): Unit = {
-    require(batchId.nonEmpty && batchId != "__HIVE_DEFAULT_PARTITION__",
-      s"bm25 index: invalid batch id '$batchId'")
-    // build clobbers the whole index (static overwrite drops every
-    // partition); append replaces ONLY this batch's partition (dynamic).
-    // Both modes are pinned per-write: rebuild semantics must not depend
-    // on a host session's global partitionOverwriteMode (a session-wide
-    // `dynamic` would make rebuild keep stale batch partitions — and
-    // their meta commit markers — silently double-counting the index).
-    def writer(df: org.apache.spark.sql.DataFrame) = {
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("batch_id")
-        .option("partitionOverwriteMode",
-          if (overwrite) "static" else "dynamic")
-    }
+    graft.core.BatchTables.requireBatchId(batchId, "bm25 index")
+    // build clobbers the whole index; append replaces ONLY this batch's
+    // partition ([[graft.core.BatchTables.write]] pins the mode)
+    def write(df: org.apache.spark.sql.DataFrame, table: String): Unit =
+      graft.core.BatchTables.write(df, s"$dir/$table", batchId, overwrite)
     val words = graft.core.Ops.widen(docs)
       .select(col(idCol).as("id"),
         graft.operators.Dedup.normalizeWords(col(textCol)).as("__w"))
@@ -1842,15 +1833,13 @@ object TextStats {
       .groupBy(col("id"), col("dl"), col("term"))
       .agg(count(lit(1)).as("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    writer(tf).parquet(s"$dir/postings")
-    writer(tf.groupBy("term").agg(count(lit(1)).as("df_part")))
-      .parquet(s"$dir/terms")
+    write(tf, "postings")
+    write(tf.groupBy("term").agg(count(lit(1)).as("df_part")), "terms")
     // coalesce: an empty batch writes (0, 0), not (0, NULL) — serving
     // sums the partials and a NULL would poison the whole meta read.
     // Meta lands LAST: its batch_id partition is the commit marker.
-    writer(words.agg(count(lit(1)).as("n_part"),
-        coalesce(sum(size(col("__w"))), lit(0L)).as("dlsum_part")))
-      .parquet(s"$dir/meta")
+    write(words.agg(count(lit(1)).as("n_part"),
+        coalesce(sum(size(col("__w"))), lit(0L)).as("dlsum_part")), "meta")
     tf.unpersist(false); words.unpersist(false)
   }
 
@@ -1872,9 +1861,8 @@ object TextStats {
     // from a batch whose meta partition never landed are dead weight from
     // an interrupted append — excluded by a batch-count-bounded semi join
     // (doubles as partition pruning on the batch_id layout)
-    val metaAll = spark.read.parquet(s"$dir/meta")
-    val committed = metaAll.select("batch_id").distinct()
-    val meta = metaAll
+    val committed = graft.core.BatchTables.committed(spark, dir)
+    val meta = spark.read.parquet(s"$dir/meta")
       .agg(sum("n_part").as("n"), sum("dlsum_part").as("dlsum")).head()
     // retraction tombstones ([[graft.pipeline.Maintain.retract]]): the
     // per-batch n/dlsum partials live in the meta COMMIT MARKER and are
@@ -1882,10 +1870,8 @@ object TextStats {
     // compensated here instead (dedup by id: a crash-rerun may append a
     // duplicate tombstone row). Postings/terms rows are already purged
     // physically, so df needs no adjustment.
-    val rfs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
     val (rN, rDl) =
-      if (!rfs.exists(new org.apache.hadoop.fs.Path(s"$dir/retracted")))
+      if (!graft.core.BatchTables.exists(spark, s"$dir/retracted"))
         (0L, 0L)
       else {
         val r = spark.read.parquet(s"$dir/retracted")
@@ -1900,12 +1886,12 @@ object TextStats {
     val qterms = queries
       .select(col(qidCol).as("qid"), col(qtermCol).as("term")).distinct()
     val qtermSet = qterms.select("term").distinct()
-    val dfT = spark.read.parquet(s"$dir/terms")
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
+    val dfT = graft.core.BatchTables
+      .readCommitted(spark, s"$dir/terms", committed)
       .join(qtermSet, Seq("term"))
       .groupBy("term").agg(sum("df_part").as("df"))
-    val cand = spark.read.parquet(s"$dir/postings")
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
+    val cand = graft.core.BatchTables
+      .readCommitted(spark, s"$dir/postings", committed)
       .join(qtermSet, Seq("term"))
       .join(dfT, Seq("term"))
       .withColumn("idf_e6", floor(

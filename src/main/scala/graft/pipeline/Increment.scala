@@ -2,8 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
+import graft.core.BatchTables
 import graft.operators.{Curation, Dedup, Multimodal, TextStats}
 import graft.operators.Multimodal.MediaRecord
 
@@ -133,7 +133,13 @@ case class IncrementResult(ledger: DataFrame, admitted: DataFrame,
   * One skeleton, five families. A state root belongs to ONE family,
   * named by its `_family` sentinel (the sub-index whose meta is the
   * commit marker: `minhash`, `phash`, `audio`, `video` or `sem`); an
-  * increment or seed of any other family refuses the root. The image,
+  * increment or seed of any other family refuses the root. The
+  * families are the entries of the one family table
+  * [[Maintain.MarkerFamilies]], which also drives maintenance: each
+  * state layout (heavy tables, verbatim copies, the compacted marker's
+  * restated meta) derives from its entry, and every state table reads
+  * and writes through the shared batch-partitioned contract
+  * ([[graft.core.BatchTables]]). The image,
   * audio, video and embedding increments are thin bindings of a
   * private `MediaFamily` value built from their config — decode, the
   * near-dup join against committed state, the within-batch edges, the
@@ -149,10 +155,6 @@ case class IncrementResult(ledger: DataFrame, admitted: DataFrame,
   */
 object Increment {
 
-  private def fs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** A small sentinel file at a state root, read to EOF — a single
     * read() may return short on remote filesystems, which would
     * truncate a family name and make the marker path silently miss.
@@ -160,7 +162,7 @@ object Increment {
     */
   private def readRootFile(spark: SparkSession, stateDir: String,
                            name: String): Option[String] = {
-    val f = fs(spark, stateDir)
+    val f = BatchTables.fs(spark, stateDir)
     val p = new org.apache.hadoop.fs.Path(s"$stateDir/$name")
     if (!f.exists(p)) None
     else {
@@ -171,7 +173,7 @@ object Increment {
 
   private def writeRootFile(spark: SparkSession, stateDir: String,
                             name: String, content: String): Unit = {
-    val out = fs(spark, stateDir).create(
+    val out = BatchTables.fs(spark, stateDir).create(
       new org.apache.hadoop.fs.Path(s"$stateDir/$name"), true)
     try out.write(content.getBytes("UTF-8")) finally out.close()
   }
@@ -233,53 +235,46 @@ object Increment {
 
   private def markerExists(spark: SparkSession, stateDir: String,
                            marker: String): Boolean =
-    fs(spark, stateDir).exists(
-      new org.apache.hadoop.fs.Path(s"$stateDir/$marker/meta"))
-
-  /** The batch ids `marker`'s meta has committed — the set every state
-    * read semi-joins, so a torn increment's rows never serve.
-    */
-  private def committedBatches(spark: SparkSession, stateDir: String,
-                               marker: String): DataFrame =
-    spark.read.parquet(s"$stateDir/$marker/meta").select("batch_id")
-      .distinct()
+    BatchTables.exists(spark, s"$stateDir/$marker/meta")
 
   /** State exists iff the minhash index has a meta commit marker. */
   def stateExists(spark: SparkSession, stateDir: String): Boolean =
     markerExists(spark, stateDir, TextLayout.marker)
 
-  /** One state family's on-disk shape: the sub-index whose meta is the
-    * commit marker, the heavy batch_id-partitioned tables it
-    * accumulates one partition per increment in (besides the shared
-    * `exact/keys`) — the compaction fold targets — and the trees
-    * compaction copies VERBATIM besides the audit tables (`ledger`,
-    * `metrics`, which keep their batch ids) and `decontam/` (the
-    * benchmark family owns its OWN meta marker and its batch ids are
-    * eval-set registrations, not increments — folding them would
-    * destroy the per-benchmark retraction provenance). A funnel
-    * family's `sem/` SUB-state copies whole: its own meta ∩ the
+  /** One state family's on-disk shape, from its entry in the one
+    * family table ([[Maintain.MarkerFamilies]]): the sub-index whose
+    * meta is the commit marker, the heavy batch_id-partitioned tables
+    * it accumulates one partition per increment in (besides the shared
+    * `exact/keys`; text adds its `windows` claims) — the compaction fold
+    * targets — and the trees compaction copies VERBATIM besides the
+    * audit tables (`ledger`, `metrics`, which keep their batch ids) and
+    * `decontam/` (the benchmark family owns its OWN meta marker and its
+    * batch ids are eval-set registrations, not increments — folding
+    * them would destroy the per-benchmark retraction provenance). A
+    * funnel family's `sem/` SUB-state copies whole: its own meta ∩ the
     * marker's committed set governs serving, and both survive because
     * the compacted marker keeps every original batch id; an embedding
-    * root folds its `sem/assigned` and copies its unpartitioned
-    * centroid table.
+    * root folds its `sem/assigned` and copies its frozen centroid
+    * table.
     */
-  private case class StateLayout(marker: String, heavy: Seq[String],
-                                 verbatim: Seq[String])
-
-  private val TextLayout = StateLayout("minhash",
-    Seq("windows", "minhash/bands", "minhash/shingles"), Seq("sem"))
-  private val ImageLayout = StateLayout("phash", Seq("phash/sigs"),
-    Seq("sem"))
-  private val AudioLayout = StateLayout("audio",
-    Seq("audio/fps", "audio/sizes"), Seq("sem"))
-  private val VideoLayout = StateLayout("video",
-    Seq("video/frames", "video/sizes"), Seq("sem"))
-  private val EmbeddingLayout = StateLayout("sem", Seq("sem/assigned"),
-    Seq("sem/centroids"))
+  private case class StateLayout(family: Maintain.MarkerFamily,
+                                 own: Seq[String]) {
+    def marker: String = family.name
+    def heavy: Seq[String] = own ++ family.tables.map(t => s"$marker/$t")
+    def verbatim: Seq[String] =
+      if (family.frozen.nonEmpty) family.frozen.map(t => s"$marker/$t")
+      else Seq("sem")
+  }
 
   /** Every family, in the legacy (pre-sentinel) marker-discovery order. */
-  private val Layouts = Seq(TextLayout, ImageLayout, AudioLayout,
-    VideoLayout, EmbeddingLayout)
+  private val Layouts = Maintain.MarkerFamilies.map(f =>
+    StateLayout(f, if (f.name == "minhash") Seq("windows") else Nil))
+  private def layout(marker: String) = Layouts.find(_.marker == marker).get
+  private val TextLayout = layout("minhash")
+  private val ImageLayout = layout("phash")
+  private val AudioLayout = layout("audio")
+  private val VideoLayout = layout("video")
+  private val EmbeddingLayout = layout("sem")
 
   /** Seed the state from an ALREADY-CURATED corpus (e.g. the admitted
     * output of a [[Curate.run]] over the historical pool): exact keys +
@@ -303,7 +298,7 @@ object Increment {
       // stage — without them, passages of the seeded corpus would be
       // invisible to cfg.dedupWindowsW until re-claimed by an increment
       for (w <- claimsW)
-        writeBatch(Curation.windowClaims(docs, "id", "text", w),
+        BatchTables.write(Curation.windowClaims(docs, "id", "text", w),
           s"$stateDir/windows", "base")
       Dedup.writeMinhashParts(docs, "id", "text", s"$stateDir/minhash",
         bands, rowsPerBand, overwrite = true, batchId = "base")
@@ -316,19 +311,9 @@ object Increment {
     graft.core.Ops.widen(df)
       .select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
 
-  /** Write `df` as `batchId`'s partition of a batch_id-partitioned
-    * state table — dynamic overwrite, so a retry replaces the partition
-    * and never doubles it.
-    */
-  private def writeBatch(df: DataFrame, path: String,
-                         batchId: String): Unit =
-    df.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").partitionBy("batch_id")
-      .option("partitionOverwriteMode", "dynamic").parquet(path)
-
   private def writeExactKeyRows(keys: DataFrame, stateDir: String,
                                 batchId: String): Unit =
-    writeBatch(keys.select(col("key"), col("id")),
+    BatchTables.write(keys.select(col("key"), col("id")),
       s"$stateDir/exact/keys", batchId)
 
   /** Every family's heavy data tables, relative to a state root —
@@ -344,7 +329,7 @@ object Increment {
     * job.
     */
   def stateHeavyBytes(spark: SparkSession, stateDir: String): Long = {
-    val f = fs(spark, stateDir)
+    val f = BatchTables.fs(spark, stateDir)
     StateHeavyTables
       .map(rel => new org.apache.hadoop.fs.Path(s"$stateDir/$rel"))
       .filter(f.exists)
@@ -367,10 +352,9 @@ object Increment {
     val afterState =
       if (!run.haveState) pool
       else {
-        val committed = committedBatches(run.spark, run.stateDir, marker)
-          .filter(col("batch_id") =!= run.batchId)
-        val stateKeys = run.spark.read.parquet(run.path("exact/keys"))
-          .join(broadcast(committed), Seq("batch_id"), "left_semi")
+        val stateKeys = BatchTables.readCommitted(run.spark,
+            run.path("exact/keys"), BatchTables.committed(run.spark,
+              run.path(marker), Some(run.batchId)))
           .groupBy(col("key").as("__md5"))
           .agg(min(col("id")).as("__dup_of"))
         val hits = pool.join(stateKeys, Seq("__md5"))
@@ -399,14 +383,12 @@ object Increment {
     */
   private def readWindowClaims(spark: SparkSession, stateDir: String,
                                excludeBatch: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$stateDir/windows")
-    if (!fs(spark, stateDir).exists(p))
+    if (!BatchTables.exists(spark, s"$stateDir/windows"))
       spark.range(0).select(lit("").as("h"))
     else {
-      val committed = Dedup.minhashCommitted(spark, s"$stateDir/minhash")
-        .filter(col("batch_id") =!= excludeBatch)
-      spark.read.parquet(s"$stateDir/windows")
-        .join(broadcast(committed), Seq("batch_id"), "left_semi")
+      BatchTables.readCommitted(spark, s"$stateDir/windows",
+          BatchTables.committed(spark, s"$stateDir/minhash",
+            Some(excludeBatch)))
         .select("h")
     }
   }
@@ -451,12 +433,12 @@ object Increment {
                          benchmark: DataFrame, benchTextCol: String,
                          n: Int = 8, batchId: String = "base"): Unit = {
     require(n >= 1, s"writeDecontamState: n ($n)")
-    require(batchId.nonEmpty && batchId != "__HIVE_DEFAULT_PARTITION__",
-      s"writeDecontamState: invalid batch id '$batchId'")
+    BatchTables.requireBatchId(batchId, "writeDecontamState")
     import spark.implicits._
-    writeBatch(decontamGramRows(benchmark, benchTextCol, n),
+    BatchTables.write(decontamGramRows(benchmark, benchTextCol, n),
       s"$stateDir/decontam/grams", batchId)
-    writeBatch(Seq(n).toDF("n"), s"$stateDir/decontam/meta", batchId)
+    BatchTables.write(Seq(n).toDF("n"), s"$stateDir/decontam/meta",
+      batchId)
   }
 
   /** Read-side schema for `decontam/grams` — explicit so a ZERO-ROW
@@ -475,10 +457,9 @@ object Increment {
     */
   def readDecontamGrams(spark: SparkSession,
                         stateDir: String): Option[(DataFrame, Int)] = {
-    val metaP = new org.apache.hadoop.fs.Path(s"$stateDir/decontam/meta")
-    if (!fs(spark, stateDir).exists(metaP)) None
+    if (!BatchTables.exists(spark, s"$stateDir/decontam/meta")) None
     else {
-      val meta = spark.read.parquet(metaP.toString)
+      val meta = spark.read.parquet(s"$stateDir/decontam/meta")
       val ns = meta.select("n").distinct().collect()
       require(ns.length == 1,
         s"decontam family at $stateDir: inconsistent gram size across " +
@@ -495,7 +476,7 @@ object Increment {
   /** Eval-set rotation: purge a retired benchmark's grams from the
     * family. Victim rows are keyed by the benchmark docs' text md5
     * (the provenance [[writeDecontamState]] recorded); only partitions
-    * holding a victim rewrite ([[rewritePartitionsHolding]], the
+    * holding a victim rewrite ([[BatchTables.rewritePartitions]], the
     * retraction sweep's protocol); meta markers are untouched so family
     * visibility never changes. A gram SHARED with a still-registered benchmark
     * survives through that benchmark's own rows. Returns purged rows.
@@ -504,8 +485,7 @@ object Increment {
                                benchmark: DataFrame,
                                benchTextCol: String): Long = {
     val gramsPath = s"$stateDir/decontam/grams"
-    require(fs(spark, stateDir).exists(
-        new org.apache.hadoop.fs.Path(gramsPath)),
+    require(BatchTables.exists(spark, gramsPath),
       s"retractDecontamBenchmark: no decontam family at $stateDir")
     val keys = graft.core.Ops.widen(benchmark)
       .select(md5(col(benchTextCol).cast("string")).as("bench_key"))
@@ -513,8 +493,9 @@ object Increment {
     val nPurged = spark.read.schema(decontamGramsSchema).parquet(gramsPath)
       .join(broadcast(keys), Seq("bench_key"), "left_semi").count()
     if (nPurged > 0L)
-      rewritePartitionsHolding(spark, fs(spark, stateDir), gramsPath, keys,
-          "bench_key", Some(decontamGramsSchema))(
+      BatchTables.rewritePartitions(spark, gramsPath,
+          schema = Some(decontamGramsSchema))(
+        BatchTables.holding(keys, Seq("bench_key")),
         _.join(broadcast(keys), Seq("bench_key"), "left_anti"))
     nPurged
   }
@@ -691,8 +672,8 @@ object Increment {
       else led.dropMatches(pool, Curation.semNearDupAgainstIndex(run.spark,
           semDir, vectors.select("id", "v"), thresholdE4,
           excludeBatch = Some(run.batchId),
-          restrictTo = Some(committedBatches(run.spark, run.stateDir,
-            marker))), "sem_dup")
+          restrictTo = Some(BatchTables.committed(run.spark,
+            run.path(marker)))), "sem_dup")
     val pm = graft.operators.Similarity.ivfNearDupPairsManaged(
       vectors.join(afterState.select("id"), Seq("id"), "left_semi")
         .select("id", "v"),
@@ -715,9 +696,9 @@ object Increment {
     import run.spark.implicits._
     if (run.haveState || admitted.head(1).nonEmpty) {
       writeExactKeyRows(keys, run.stateDir, run.batchId)
-      writeBatch(ledger, run.path("ledger"), run.batchId)
-      writeBatch(stageCounts.toDF("stage", "rows"), run.path("metrics"),
-        run.batchId)
+      BatchTables.write(ledger, run.path("ledger"), run.batchId)
+      BatchTables.write(stageCounts.toDF("stage", "rows"),
+        run.path("metrics"), run.batchId)
       for (p <- sem) {
         // semi-join the FINAL admitted set, not the sem stage's: a doc
         // rejected after sem must not leave vectors in the state
@@ -926,7 +907,7 @@ object Increment {
       // content entering the corpus; lands BEFORE the minhash marker
       // (same dynamic-partition retry contract as every state table)
       for (w <- cfg.dedupWindowsW)
-        writeBatch(Curation.windowClaims(admitted, "id", "text", w),
+        BatchTables.write(Curation.windowClaims(admitted, "id", "text", w),
           s"$stateDir/windows", batchId)
       if (haveState)
         Dedup.appendToMinhashIndex(spark, s"$stateDir/minhash", admitted,
@@ -976,7 +957,7 @@ object Increment {
     marker match {
       case None => tbl.limit(0)
       case Some(m) =>
-        tbl.join(broadcast(committedBatches(spark, stateDir, m)),
+        tbl.join(broadcast(BatchTables.committed(spark, s"$stateDir/$m")),
           Seq("batch_id"), "left_semi")
     }
   }
@@ -1539,10 +1520,9 @@ object Increment {
                                      marker: String, corpusIds: DataFrame,
                                      caller: String)(
       body: DataFrame => A): A = {
-    val admittedIds = spark.read.parquet(s"$stateDir/ledger")
+    val admittedIds = BatchTables.readCommitted(spark,
+        s"$stateDir/ledger", BatchTables.committed(spark, s"$stateDir/$marker"))
       .filter(col("admitted"))
-      .join(broadcast(committedBatches(spark, stateDir, marker)),
-        Seq("batch_id"), "left_semi")
       .select(col("id"), col("batch_id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1594,8 +1574,8 @@ object Increment {
             .as[String].collect().sorted
           val done: Set[String] =
             if (!haveSem) Set.empty
-            else spark.read.parquet(s"$stateDir/sem/meta")
-              .select("batch_id").distinct().as[String].collect().toSet
+            else BatchTables.committed(spark, s"$stateDir/sem")
+              .as[String].collect().toSet
           var indexed = 0L
           batches.filterNot(done).foreach { b =>
             val vecs = nonzero.filter(col("batch_id") === b)
@@ -1765,30 +1745,14 @@ object Increment {
               ids: DataFrame): Unit = {
     val idsN = ids.select(col(ids.columns.head).cast("long").as("id"))
       .distinct().localCheckpoint(eager = true)
-    val f = fs(spark, stateDir)
     for (sub <- StateHeavyTables)
-      rewritePartitionsHolding(spark, f, s"$stateDir/$sub", idsN)(
-        _.join(idsN, Seq("id"), "left_anti"))
+      BatchTables.purge(spark, s"$stateDir/$sub", idsN)
     // the frozen centroid set stores FULL embedding vectors of sampled
     // docs (cid = doc id) — a deletion request covers that derived copy
-    // too. Dropping a centroid narrows future candidate routing (stored
-    // vectors in its cell pair only through their OTHER cells) until a
-    // semRetrain re-draws the set from the post-retraction corpus — run
-    // one after retracting centroid members; correctness (no retracted
-    // content served) holds immediately.
-    val centPath = s"$stateDir/sem/centroids"
-    if (f.exists(new org.apache.hadoop.fs.Path(centPath))) {
-      val cents = spark.read.parquet(centPath)
-      val hit = cents.join(idsN.select(col("id").as("cid")), Seq("cid"),
-        "left_semi").limit(1).count() > 0
-      if (hit) {
-        val kept = cents.join(idsN.select(col("id").as("cid")),
-            Seq("cid"), "left_anti")
-          .localCheckpoint(eager = true)
-        kept.write.mode("overwrite").parquet(centPath)
-      }
-    }
-    rewritePartitionsHolding(spark, f, s"$stateDir/ledger", idsN)(
+    // too; run a semRetrain after retracting centroid members
+    Maintain.retractCentroids(spark, s"$stateDir/sem/centroids", idsN)
+    BatchTables.rewritePartitions(spark, s"$stateDir/ledger")(
+      BatchTables.holding(idsN),
       _.join(idsN.withColumn("__r", lit(true)), Seq("id"), "left_outer")
         .select(col("id"),
           when(col("__r"), lit(false)).otherwise(col("admitted"))
@@ -1797,40 +1761,6 @@ object Increment {
             .as("reason"),
           when(col("__r"), col("id")).otherwise(col("dup_of")).as("dup_of"),
           col("batch_id")))
-  }
-
-  /** Rewrite IN PLACE only the partitions of one batch_id-partitioned
-    * state table that hold any of `keys` (one `key` column): `rewrite`
-    * maps their rows to the new rows, eagerly materialized BEFORE the
-    * overwrite (the write would otherwise re-scan files it is
-    * replacing). `schema` reads the table with an explicit schema
-    * instead of inferring one.
-    */
-  private def rewritePartitionsHolding(spark: SparkSession,
-                                       f: org.apache.hadoop.fs.FileSystem,
-                                       path: String, keys: DataFrame,
-                                       key: String = "id",
-                                       schema: Option[StructType] = None)(
-      rewrite: DataFrame => DataFrame): Unit = {
-    if (!f.exists(new org.apache.hadoop.fs.Path(path))) return
-    val tbl = schema.fold(spark.read)(spark.read.schema).parquet(path)
-    val affected = tbl.join(keys, Seq(key), "left_semi")
-      .select("batch_id").distinct().collect().map(_.getString(0))
-    if (affected.isEmpty) return
-    val rewritten = rewrite(tbl
-        .filter(col("batch_id").isInCollection(affected.toSeq)))
-      .localCheckpoint(eager = true)
-    val still = rewritten.select("batch_id").distinct()
-      .collect().map(_.getString(0)).toSet
-    rewritten.write.mode("overwrite").partitionBy("batch_id")
-      .option("partitionOverwriteMode", "dynamic").parquet(path)
-    // a partition the rewrite EMPTIES is not present in `rewritten`,
-    // so dynamic overwrite leaves its old files live — replace it with a
-    // zero-row schema-ful parquet (NOT a bare dir delete: an all-empty
-    // table directory would fail schema inference on the next read)
-    for (b <- affected if !still.contains(b))
-      rewritten.drop("batch_id").limit(0)
-        .write.mode("overwrite").parquet(s"$path/batch_id=$b")
   }
 
   /** Compact an increment state: after N increments every data table
@@ -1874,32 +1804,19 @@ object Increment {
     val layout = Layouts.find(_.marker == family).getOrElse(
       throw new IllegalArgumentException(
         s"compactStateTo: unknown state family '$family'"))
-    val f = fs(spark, destDir)
     val metaRel = s"$family/meta"
-    require(!f.exists(new org.apache.hadoop.fs.Path(s"$destDir/$metaRel")),
+    require(!BatchTables.exists(spark, s"$destDir/$metaRel"),
       s"compactStateTo: $destDir already has a committed state")
     val meta = spark.read.parquet(s"$srcDir/$metaRel")
     val committed = meta.select("batch_id").distinct()
       .localCheckpoint(eager = true)
+    // the payload every committed batch pinned, restated by the
+    // family's own rule (sem: an empty first batch's dim 0 gives way)
+    val payload = layout.family.restate(spark, s"$srcDir/$family")
     claimFamily(spark, destDir, family, "compactStateTo")
-    for (rel <- "exact/keys" +: layout.heavy
-         if fs(spark, srcDir).exists(
-           new org.apache.hadoop.fs.Path(s"$srcDir/$rel"))) {
-      spark.read.parquet(s"$srcDir/$rel")
-        .join(broadcast(committed), Seq("batch_id"), "left_semi")
-        .drop("batch_id").withColumn("batch_id", lit("base"))
-        .write.mode("overwrite").partitionBy("batch_id")
-        .parquet(s"$destDir/$rel")
-    }
     for (rel <- Seq("ledger", "metrics") ++ layout.verbatim :+ "decontam"
-         if fs(spark, srcDir).exists(
-           new org.apache.hadoop.fs.Path(s"$srcDir/$rel"))) {
-      val src = new org.apache.hadoop.fs.Path(s"$srcDir/$rel")
-      val dst = new org.apache.hadoop.fs.Path(s"$destDir/$rel")
-      if (f.exists(dst)) f.delete(dst, true) // idempotent rerun
-      org.apache.hadoop.fs.FileUtil.copy(fs(spark, srcDir), src, f, dst,
-        false, spark.sparkContext.hadoopConfiguration)
-    }
+         if BatchTables.exists(spark, s"$srcDir/$rel"))
+      BatchTables.copyTree(spark, s"$srcDir/$rel", s"$destDir/$rel")
     // folded-batch sentinel BEFORE the marker: the ids whose rows now
     // live under `base` (plus any ids already folded in the source by a
     // prior compaction) — the entry points refuse retries of these
@@ -1910,17 +1827,10 @@ object Increment {
       readFoldedSentinel(spark, srcDir)).distinct
     writeRootFile(spark, destDir, "_folded",
       foldedIds.sorted.mkString("\n"))
-    // marker LAST: original committed rows verbatim + the base row. The
-    // payload (banding / nBands / dials) is pinned identical across
-    // batches by the append paths, so the base row reuses it.
-    val payload = meta.drop("batch_id").distinct()
-    require(payload.count() == 1L,
-      s"compactStateTo: inconsistent meta payload across batches in " +
-        s"$srcDir/$metaRel")
-    val destMeta = meta
-      .unionByName(payload.withColumn("batch_id", lit("base")))
-      .localCheckpoint(eager = true)
-    destMeta.write.mode("overwrite").partitionBy("batch_id")
-      .parquet(s"$destDir/$metaRel")
+    // heavy tables fold under `base`, then the marker LAST: original
+    // committed rows verbatim + the base row
+    BatchTables.fold(spark, srcDir, destDir, "exact/keys" +: layout.heavy,
+      committed, meta.unionByName(payload.withColumn("batch_id",
+        lit("base"))), metaRel)
   }
 }

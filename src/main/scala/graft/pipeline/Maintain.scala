@@ -1,8 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Similarity, TextStats}
+import graft.core.BatchTables
+import graft.operators.{Curation, Similarity}
 
 /** Index lifecycle maintenance — the consumer of the drift/fragmentation
   * signals the index families RECORD but (before round 11) nothing read:
@@ -18,13 +20,22 @@ import graft.operators.{Dedup, Similarity, TextStats}
   *    [[Restore.publishVersionedDir]] commit-marker path — serving
   *    resolves the marker, so readers never see a half-built index and
   *    the superseded version stays readable through the GC grace window.
-  *  - BM25 / MinHash: appends accumulate batch partitions (postings/
-  *    terms/meta, shingles/bands/meta). Serving stays correct at any
-  *    batch count (partials sum), but every query pays a per-batch
-  *    file-listing and semi-join constant — [[bm25Decision]] /
-  *    [[minhashDecision]] trigger on committed-batch count and the
-  *    compactors merge all committed batches into one `base` batch in a
-  *    new published version, bit-identical serving (spec-pinned).
+  *  - BM25 and the meta-marker families: appends accumulate batch
+  *    partitions under the [[graft.core.BatchTables]] contract. Serving
+  *    stays correct at any batch count, but every query pays a
+  *    per-batch file-listing and semi-join constant, so each family
+  *    decides `compact` on its committed-batch count and its compactor
+  *    folds every committed batch into one `base` batch in a new
+  *    published version, bit-identical serving (spec-pinned).
+  *
+  * The five meta-marker families (minhash, pHash, audio, video, sem)
+  * are ONE table, [[MarkerFamilies]]: each entry names its batch tables
+  * and restates its pinned meta. Their decisions, compactions,
+  * [[decideAll]] layout detection, [[executeAll]] dispatch and
+  * [[retract]] sweeps all run over that table, and
+  * [[graft.pipeline.Increment]] derives its state layouts from it.
+  * BM25 (summed meta partials), IVF/IVF-PQ (drift ledgers) and the kNN
+  * graph (`vectors_batches` is its marker) keep their own executors.
   *
   * Decisions are DATA (a [[Decision]] row, metric vs threshold), so a
   * scheduler can log/alert on them; `run = false` previews an execute.
@@ -45,60 +56,201 @@ object Maintain {
                       threshold: Long, detail: String,
                       advisory: Boolean = false)
 
+  /** The current version of a warehouse db, or a loud failure. */
+  private def current(spark: SparkSession, warehouse: String, db: String,
+                      caller: String): Path =
+    Restore.resolveVersioned(spark, warehouse, db)
+      .getOrElse(throw new IllegalStateException(
+        s"$caller: no current version of $db under $warehouse"))
+
+  // ---- the meta-marker families -------------------------------------------
+
+  /** One meta-marker index family: `name` is its index name and its
+    * sub-directory under an increment state root; `tables` are its
+    * batch_id-partitioned data tables (compaction folds them,
+    * retraction purges them by `id`); `restate` reads the one meta row
+    * every committed batch pins, as the fold re-writes it; `decide` is
+    * its maintenance decision; `frozen` are its unpartitioned tables
+    * (the sem centroids: copied verbatim by compaction, and a centroid
+    * whose `cid` is a retracted doc is dropped).
+    */
+  private[pipeline] case class MarkerFamily(
+      name: String, tables: Seq[String],
+      restate: (SparkSession, String) => DataFrame,
+      decide: (SparkSession, String, Int) => Decision,
+      frozen: Seq[String] = Nil)
+
+  /** The batch-count decision: compact over `maxBatches` committed
+    * batches (serving is correct at ANY count; the trigger is the
+    * per-query per-batch listing/semi-join constant).
+    */
+  private def countDecision(index: String)(spark: SparkSession, dir: String,
+                                           maxBatches: Int): Decision = {
+    val n = BatchTables.committed(spark, dir).count()
+    Decision(index, if (n > maxBatches) "compact" else "none", n,
+      maxBatches, s"$n committed batches")
+  }
+
+  /** The pinned meta row, restated as a one-row frame. */
+  private def pinnedRow(what: String)(spark: SparkSession,
+                                      dir: String): DataFrame = {
+    val schema = spark.read.parquet(s"$dir/meta").drop("batch_id").schema
+    spark.createDataFrame(java.util.List.of[Row](BatchTables.pinnedMeta(
+      spark, dir, schema.fieldNames.toSeq, what)), schema)
+  }
+
+  private def family(name: String, tables: String*): MarkerFamily =
+    MarkerFamily(name, tables, pinnedRow(s"$name index"),
+      countDecision(name))
+
+  /** Every meta-marker family, in the legacy (pre-sentinel) increment
+    * marker-discovery order. sem restates its meta by the
+    * [[Curation.readSemMeta]] rule: an index created empty pins dim 0,
+    * which gives way to the first real batch's dim.
+    */
+  private[pipeline] val MarkerFamilies: Seq[MarkerFamily] = Seq(
+    family("minhash", "bands", "shingles"),
+    family("phash", "sigs"),
+    family("audio", "fps", "sizes"),
+    family("video", "frames", "sizes"),
+    MarkerFamily("sem", Seq("assigned"),
+      (spark, dir) => {
+        val (ce, na, dim) = Curation.readSemMeta(spark, dir)
+        Curation.semMetaRow(spark, ce, na, dim)
+      },
+      semDecision(_, _, _), frozen = Seq("centroids")))
+
+  private val byName = MarkerFamilies.map(f => f.name -> f).toMap
+
+  /** A root layout (a warehouse db, or any dir holding one family's
+    * tables) holds `fam` when its batch tables, unpartitioned tables
+    * and meta are all present. A root sem index shares centroids,
+    * assigned and meta with IVF-PQ, so an IVF-PQ codebook rules it out
+    * (plain IVF has no meta).
+    */
+  private def atRoot(fam: MarkerFamily, has: String => Boolean): Boolean =
+    (fam.tables ++ fam.frozen :+ "meta").forall(has) && !has("codebook")
+
+  /** Merge every committed batch of `fam` into one `base` batch in a
+    * freshly published version: data rows pass through verbatim (ids
+    * are disjoint across batches by the append contract), frozen tables
+    * copy unchanged, and the meta — written last — restates what the
+    * committed batches pinned. Bit-identical serving, spec-pinned (the
+    * near-dup joins derive bands from the stored signatures, so there
+    * is nothing else to merge).
+    */
+  private def compact(fam: MarkerFamily, spark: SparkSession,
+                      warehouse: String, db: String,
+                      token: String): Path = {
+    val cur = current(spark, warehouse, db, s"${fam.name}Compact").toString
+    val committed = BatchTables.committed(spark, cur)
+    val meta = fam.restate(spark, cur).withColumn("batch_id", lit("base"))
+    Restore.publishVersionedDir(spark, warehouse, db, token) { vdir =>
+      for (t <- fam.frozen)
+        BatchTables.copyTree(spark, s"$cur/$t", s"$vdir/$t")
+      BatchTables.fold(spark, cur, vdir.toString, fam.tables, committed,
+        meta)
+    }
+  }
+
+  def minhashDecision(spark: SparkSession, dir: String,
+                      maxBatches: Int = 16): Decision =
+    byName("minhash").decide(spark, dir, maxBatches)
+
+  def minhashCompact(spark: SparkSession, warehouse: String, db: String,
+                     token: String): Path =
+    compact(byName("minhash"), spark, warehouse, db, token)
+
+  def phashDecision(spark: SparkSession, dir: String,
+                    maxBatches: Int = 16): Decision =
+    byName("phash").decide(spark, dir, maxBatches)
+
+  def phashCompact(spark: SparkSession, warehouse: String, db: String,
+                   token: String): Path =
+    compact(byName("phash"), spark, warehouse, db, token)
+
+  def audioDecision(spark: SparkSession, dir: String,
+                    maxBatches: Int = 16): Decision =
+    byName("audio").decide(spark, dir, maxBatches)
+
+  def audioCompact(spark: SparkSession, warehouse: String, db: String,
+                   token: String): Path =
+    compact(byName("audio"), spark, warehouse, db, token)
+
+  def videoDecision(spark: SparkSession, dir: String,
+                    maxBatches: Int = 16): Decision =
+    byName("video").decide(spark, dir, maxBatches)
+
+  def videoCompact(spark: SparkSession, warehouse: String, db: String,
+                   token: String): Path =
+    compact(byName("video"), spark, warehouse, db, token)
+
+  def semCompact(spark: SparkSession, warehouse: String, db: String,
+                 token: String): Path =
+    compact(byName("sem"), spark, warehouse, db, token)
+
   // ---- IVF: drift-triggered retrain --------------------------------------
 
-  /** [[Similarity.appendToIvfIndex]] + RECORD: the batch's per-cell
-    * drift report lands in the index's `drift` ledger under `batchId`.
-    * BOTH halves are retry-idempotent per batch id (dynamic partition
-    * replace): the vector append replaces its own (batch, cell)
-    * partitions and the ledger its own batch partition — a retried
-    * append never doubles vectors OR drift rows. Returns the report.
+  /** An append plus its RECORD: the batch's per-cell drift report lands
+    * in the index's `drift` ledger under `batchId`. BOTH halves are
+    * retry-idempotent per batch id (dynamic partition replace): the
+    * vector append replaces its own (batch, cell) partitions and the
+    * ledger its own batch partition — a retried append never doubles
+    * vectors OR drift rows. Returns the report.
     */
-  def appendIvfRecorded(spark: SparkSession, dir: String,
-                        newVectors: DataFrame, batchId: String): DataFrame = {
-    require(batchId.nonEmpty && batchId != "__HIVE_DEFAULT_PARTITION__",
-      s"ivf drift ledger: invalid batch id '$batchId'")
-    val drift = Similarity.appendToIvfIndex(spark, dir, newVectors, batchId)
-    drift.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").partitionBy("batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(s"$dir/drift")
+  private def recorded(what: String, dir: String, batchId: String)(
+      append: => DataFrame): DataFrame = {
+    BatchTables.requireBatchId(batchId, s"$what drift ledger")
+    val drift = append
+    BatchTables.write(drift, s"$dir/drift", batchId)
     drift
   }
 
-  /** Retrain decision from the drift ledger: the n-weighted mean
-    * appended-vector cosine (e4) across all recorded batches under
-    * `minMeanCscoreE4` → retrain. An index with no ledger (never
-    * appended, or freshly retrained) decides `none`. Bounded read: the
-    * ledger holds one row per (batch, touched cell).
+  /** [[Similarity.appendToIvfIndex]], recorded ([[recorded]]). */
+  def appendIvfRecorded(spark: SparkSession, dir: String,
+                        newVectors: DataFrame, batchId: String): DataFrame =
+    recorded("ivf", dir, batchId)(
+      Similarity.appendToIvfIndex(spark, dir, newVectors, batchId))
+
+  /** The drift ledger's total appended count and the given n-weighted
+    * sums, or why there is nothing to decide on: no ledger (never
+    * appended, or freshly retrained), a ledger dir with no readable
+    * parquet, or no appended vectors. Bounded read: the ledger holds
+    * one row per (batch, touched cell).
     */
-  def ivfDecision(spark: SparkSession, dir: String,
-                  minMeanCscoreE4: Long = 8500L): Decision = {
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/drift")))
-      return Decision("ivf", "none", 10000L, minMeanCscoreE4,
-        "no drift ledger (no appends since build/retrain)")
-    // a ledger dir with no readable parquet (every recorded append was
-    // empty) decides none instead of crashing schema inference
+  private def driftTotals(spark: SparkSession, dir: String,
+                          sums: Column*): Either[String, Row] = {
+    if (!BatchTables.exists(spark, s"$dir/drift"))
+      return Left("no drift ledger (no appends since build/retrain)")
     val ledger =
       try spark.read.parquet(s"$dir/drift")
       catch {
         case _: org.apache.spark.sql.AnalysisException =>
-          return Decision("ivf", "none", 10000L, minMeanCscoreE4,
-            "drift ledger holds no committed files (empty appends only)")
+          return Left("drift ledger holds no committed files " +
+            "(empty appends only)")
       }
-    val r = ledger
-      .agg(sum(col("n_added")).as("n"),
-        sum(col("n_added") * col("mean_cscore_e4")).as("s")).head()
-    if (r.isNullAt(0) || r.getLong(0) == 0L)
-      return Decision("ivf", "none", 10000L, minMeanCscoreE4,
-        "empty drift ledger")
-    val mean = math.floor(r.getLong(1).toDouble / r.getLong(0) + 0.5).toLong
-    Decision("ivf", if (mean < minMeanCscoreE4) "retrain" else "none",
-      mean, minMeanCscoreE4,
-      s"${r.getLong(0)} appended vectors, n-weighted mean cscore_e4 $mean")
+    val r = ledger.agg(sum(col("n_added")), sums: _*).head()
+    if (r.isNullAt(0) || r.getLong(0) == 0L) Left("empty drift ledger")
+    else Right(r)
   }
+
+  /** Retrain decision from the drift ledger: the n-weighted mean
+    * appended-vector cosine (e4) across all recorded batches under
+    * `minMeanCscoreE4` → retrain. Nothing to decide on → `none`.
+    */
+  def ivfDecision(spark: SparkSession, dir: String,
+                  minMeanCscoreE4: Long = 8500L): Decision =
+    driftTotals(spark, dir,
+        sum(col("n_added") * col("mean_cscore_e4"))) match {
+      case Left(why) =>
+        Decision("ivf", "none", 10000L, minMeanCscoreE4, why)
+      case Right(r) =>
+        val mean =
+          math.floor(r.getLong(1).toDouble / r.getLong(0) + 0.5).toLong
+        Decision("ivf", if (mean < minMeanCscoreE4) "retrain" else "none",
+          mean, minMeanCscoreE4,
+          s"${r.getLong(0)} appended vectors, n-weighted mean cscore_e4 $mean")
+    }
 
   /** Execute an IVF retrain: re-fit centroids ([[Similarity.buildIvf]])
     * to the FULL stored corpus (original + every appended batch, read
@@ -109,10 +261,8 @@ object Maintain {
     */
   def ivfRetrain(spark: SparkSession, warehouse: String, db: String,
                  token: String, numCells: Int = 0, iters: Int = 1)
-      : org.apache.hadoop.fs.Path = {
-    val cur = Restore.resolveVersioned(spark, warehouse, db)
-      .getOrElse(throw new IllegalStateException(
-        s"ivfRetrain: no current version of $db under $warehouse"))
+      : Path = {
+    val cur = current(spark, warehouse, db, "ivfRetrain")
     val vectors = spark.read.parquet(s"$cur/assigned")
       .select(col("other_id").as("id"), col("vb").as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -126,24 +276,15 @@ object Maintain {
 
   // ---- IVF-PQ: codebook-drift-triggered retrain --------------------------
 
-  /** [[Similarity.appendToIvfPqIndex]] + RECORD — the [[appendIvfRecorded]]
-    * discipline for the compressed index family. The per-cell report
-    * carries BOTH drift axes (centroid cosine + codebook quantization
-    * error); a retried append overwrites its own batch partitions in
-    * both the assigned table and the ledger.
+  /** [[Similarity.appendToIvfPqIndex]], recorded ([[recorded]]): the
+    * per-cell report carries BOTH drift axes (centroid cosine +
+    * codebook quantization error).
     */
   def appendIvfPqRecorded(spark: SparkSession, dir: String,
                           newVectors: DataFrame,
-                          batchId: String): DataFrame = {
-    require(batchId.nonEmpty && batchId != "__HIVE_DEFAULT_PARTITION__",
-      s"ivfpq drift ledger: invalid batch id '$batchId'")
-    val drift = Similarity.appendToIvfPqIndex(spark, dir, newVectors, batchId)
-    drift.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").partitionBy("batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(s"$dir/drift")
-    drift
-  }
+                          batchId: String): DataFrame =
+    recorded("ivfpq", dir, batchId)(
+      Similarity.appendToIvfPqIndex(spark, dir, newVectors, batchId))
 
   /** Retrain decision for an IVF-PQ index, EITHER axis sufficient:
     *
@@ -156,30 +297,18 @@ object Maintain {
     *  - centroid fit: the [[ivfDecision]] criterion on the same ledger.
     *
     * A pre-stats index (no `stats` table) decides on the centroid axis
-    * alone; no ledger → `none`.
+    * alone; nothing to decide on → `none`.
     */
   def ivfPqDecision(spark: SparkSession, dir: String,
                     maxQerrRatioE4: Long = 15000L,
                     minMeanCscoreE4: Long = 8500L): Decision = {
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/drift")))
-      return Decision("ivfpq", "none", 0L, maxQerrRatioE4,
-        "no drift ledger (no appends since build/retrain)")
-    val ledger = // the [[ivfDecision]] empty-ledger guard
-      try spark.read.parquet(s"$dir/drift")
-      catch {
-        case _: org.apache.spark.sql.AnalysisException =>
-          return Decision("ivfpq", "none", 0L, maxQerrRatioE4,
-            "drift ledger holds no committed files (empty appends only)")
-      }
-    val r = ledger
-      .agg(sum(col("n_added")).as("n"),
-        sum(col("n_added") * col("mean_cscore_e4")).as("cs"),
-        sum(col("n_added") * col("mean_qerr_e4")).as("qs")).head()
-    if (r.isNullAt(0) || r.getLong(0) == 0L)
-      return Decision("ivfpq", "none", 0L, maxQerrRatioE4,
-        "empty drift ledger")
+    val r = driftTotals(spark, dir,
+        sum(col("n_added") * col("mean_cscore_e4")),
+        sum(col("n_added") * col("mean_qerr_e4"))) match {
+      case Left(why) =>
+        return Decision("ivfpq", "none", 0L, maxQerrRatioE4, why)
+      case Right(r) => r
+    }
     val n = r.getLong(0)
     val meanCs = math.floor(r.getLong(1).toDouble / n + 0.5).toLong
     val meanQ = math.floor(r.getLong(2).toDouble / n + 0.5).toLong
@@ -219,10 +348,8 @@ object Maintain {
   def ivfPqRetrain(spark: SparkSession, warehouse: String, db: String,
                    token: String, numCodes: Int, pqIters: Int = 3,
                    numCells: Int = 0, ivfIters: Int = 1)
-      : org.apache.hadoop.fs.Path = {
-    val cur = Restore.resolveVersioned(spark, warehouse, db)
-      .getOrElse(throw new IllegalStateException(
-        s"ivfPqRetrain: no current version of $db under $warehouse"))
+      : Path = {
+    val cur = current(spark, warehouse, db, "ivfPqRetrain")
     val (m, subDim) =
       Similarity.pqDims(spark.read.parquet(s"$cur/codebook"))
     val residual =
@@ -258,19 +385,12 @@ object Maintain {
 
   // ---- BM25: batch compaction --------------------------------------------
 
-  private def committedBatches(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/meta").select("batch_id").distinct()
-
-  /** Compaction decision: committed batch count over `maxBatches` →
-    * compact (serving is correct at ANY count; the trigger is the
-    * per-query per-batch listing/semi-join constant).
+  /** The meta-marker families' batch-count decision over the BM25 meta
+    * partitions.
     */
   def bm25Decision(spark: SparkSession, dir: String,
-                   maxBatches: Int = 16): Decision = {
-    val n = committedBatches(spark, dir).count()
-    Decision("bm25", if (n > maxBatches) "compact" else "none", n,
-      maxBatches, s"$n committed batches")
-  }
+                   maxBatches: Int = 16): Decision =
+    countDecision("bm25")(spark, dir, maxBatches)
 
   /** Merge every COMMITTED batch into one `base` batch in a freshly
     * published version. Postings rows pass through verbatim (ids are
@@ -285,35 +405,27 @@ object Maintain {
     * commit-marker-within-the-dir discipline of the original writer.
     */
   def bm25Compact(spark: SparkSession, warehouse: String, db: String,
-                  token: String): org.apache.hadoop.fs.Path = {
-    val cur = Restore.resolveVersioned(spark, warehouse, db)
-      .getOrElse(throw new IllegalStateException(
-        s"bm25Compact: no current version of $db under $warehouse"))
-    val committed = committedBatches(spark, cur.toString)
-    val postings = spark.read.parquet(s"$cur/postings")
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
+                  token: String): Path = {
+    val cur = current(spark, warehouse, db, "bm25Compact")
+    val postings = BatchTables.readCommitted(spark, s"$cur/postings",
+        BatchTables.committed(spark, cur.toString))
       .select("id", "dl", "term", "tf")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       Restore.publishVersionedDir(spark, warehouse, db, token) { vdir =>
-        def writer(df: DataFrame) =
-          df.withColumn("batch_id", lit("base"))
-            .write.mode("overwrite").partitionBy("batch_id")
-            .option("partitionOverwriteMode", "static")
-        writer(postings).parquet(s"$vdir/postings")
-        writer(postings.groupBy("term")
-          .agg(count(lit(1)).as("df_part"))).parquet(s"$vdir/terms")
+        def write(df: DataFrame, table: String): Unit =
+          BatchTables.write(df, s"$vdir/$table", "base", overwrite = true)
+        write(postings, "postings")
+        write(postings.groupBy("term").agg(count(lit(1)).as("df_part")),
+          "terms")
         // meta IS the commit marker, so every meta row is committed —
         // sum the partials directly (no semi join needed). Retraction
         // tombstones ([[retract]]) BAKE IN here: the compacted n/dlsum
         // subtract the retracted submissions and the fresh version
         // carries no `retracted` table — compaction is where the bm25
         // family's physical erasure completes.
-        val rfs = new org.apache.hadoop.fs.Path(cur.toString)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
         val (rN, rDl) =
-          if (!rfs.exists(
-              new org.apache.hadoop.fs.Path(s"$cur/retracted"))) (0L, 0L)
+          if (!BatchTables.exists(spark, s"$cur/retracted")) (0L, 0L)
           else {
             val r = spark.read.parquet(s"$cur/retracted")
               .groupBy("id").agg(max("dl").as("dl"))
@@ -321,193 +433,16 @@ object Maintain {
                 coalesce(sum("dl"), lit(0L)).as("rdl")).head()
             (r.getLong(0), r.getLong(1))
           }
-        writer(spark.read.parquet(s"$cur/meta")
+        write(spark.read.parquet(s"$cur/meta")
           .agg((coalesce(sum(col("n_part")), lit(0L)) - lit(rN))
               .as("n_part"),
             (coalesce(sum(col("dlsum_part")), lit(0L)) - lit(rDl))
-              .as("dlsum_part"))).parquet(s"$vdir/meta")
+              .as("dlsum_part")), "meta")
       }
     } finally postings.unpersist()
   }
 
-  // ---- MinHash: batch compaction -----------------------------------------
-
-  /** Same trigger as [[bm25Decision]] over the minhash meta partitions. */
-  def minhashDecision(spark: SparkSession, dir: String,
-                      maxBatches: Int = 16): Decision = {
-    val n = committedBatches(spark, dir).count()
-    Decision("minhash", if (n > maxBatches) "compact" else "none", n,
-      maxBatches, s"$n committed batches")
-  }
-
-  /** Merge committed minhash batches into one `base` batch in a new
-    * published version: shingles and band rows pass through verbatim;
-    * the meta re-states the (bands, rows_per_band) the committed
-    * batches pinned (they are required identical on read). Bit-identical
-    * serving, spec-pinned.
-    */
-  def minhashCompact(spark: SparkSession, warehouse: String, db: String,
-                     token: String): org.apache.hadoop.fs.Path = {
-    val cur = Restore.resolveVersioned(spark, warehouse, db)
-      .getOrElse(throw new IllegalStateException(
-        s"minhashCompact: no current version of $db under $warehouse"))
-    val committed = committedBatches(spark, cur.toString)
-    val metaRows = spark.read.parquet(s"$cur/meta")
-      .select("bands", "rows_per_band").distinct().collect()
-    require(metaRows.length == 1,
-      s"minhashCompact: inconsistent banding across batches at $cur")
-    val (bands, rowsPerBand) = (metaRows(0).getInt(0), metaRows(0).getInt(1))
-    val shingles = spark.read.parquet(s"$cur/shingles")
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
-      .select("id", "shd")
-    val bandRows = spark.read.parquet(s"$cur/bands")
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
-      .select("id", "band", "bh")
-    Restore.publishVersionedDir(spark, warehouse, db, token) { vdir =>
-      def writer(df: DataFrame) =
-        df.withColumn("batch_id", lit("base"))
-          .write.mode("overwrite").partitionBy("batch_id")
-          .option("partitionOverwriteMode", "static")
-      writer(shingles).parquet(s"$vdir/shingles")
-      writer(bandRows).parquet(s"$vdir/bands")
-      writer(spark.range(1)
-        .select(lit(bands).as("bands"),
-          lit(rowsPerBand).as("rows_per_band"))).parquet(s"$vdir/meta")
-    }
-  }
-
-  // ---- pHash: batch compaction -------------------------------------------
-
-  /** Same trigger as [[bm25Decision]] over the pHash meta partitions. */
-  def phashDecision(spark: SparkSession, dir: String,
-                    maxBatches: Int = 16): Decision = {
-    val n = committedBatches(spark, dir).count()
-    Decision("phash", if (n > maxBatches) "compact" else "none", n,
-      maxBatches, s"$n committed batches")
-  }
-
-  /** Merge committed pHash batches into one `base` batch in a new
-    * published version: signature rows pass through verbatim (ids are
-    * disjoint across batches by the append contract); the meta
-    * re-states the n_bands the committed batches pinned. Bit-identical
-    * serving, spec-pinned ([[graft.operators.Multimodal.phashNearDupAgainstIndex]]
-    * derives bands from signatures, so there is nothing else to merge).
-    */
-  def phashCompact(spark: SparkSession, warehouse: String, db: String,
-                   token: String): org.apache.hadoop.fs.Path = {
-    val cur = Restore.resolveVersioned(spark, warehouse, db)
-      .getOrElse(throw new IllegalStateException(
-        s"phashCompact: no current version of $db under $warehouse"))
-    val committed = committedBatches(spark, cur.toString)
-    val nBands =
-      graft.operators.Multimodal.readPhashMeta(spark, cur.toString)
-    val sigs = spark.read.parquet(s"$cur/sigs")
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
-      .select("id", "phash")
-    Restore.publishVersionedDir(spark, warehouse, db, token) { vdir =>
-      def writer(df: DataFrame) =
-        df.withColumn("batch_id", lit("base"))
-          .write.mode("overwrite").partitionBy("batch_id")
-          .option("partitionOverwriteMode", "static")
-      writer(sigs).parquet(s"$vdir/sigs")
-      writer(spark.range(1).select(lit(nBands).as("n_bands")))
-        .parquet(s"$vdir/meta")
-    }
-  }
-
-  // ---- audio fingerprints: batch compaction -------------------------------
-
-  /** Same trigger as [[phashDecision]] over the audio-index meta
-    * partitions.
-    */
-  def audioDecision(spark: SparkSession, dir: String,
-                    maxBatches: Int = 16): Decision = {
-    val n = committedBatches(spark, dir).count()
-    Decision("audio", if (n > maxBatches) "compact" else "none", n,
-      maxBatches, s"$n committed batches")
-  }
-
-  /** Merge committed audio-fingerprint batches into one `base` batch in
-    * a new published version: fp and size rows pass through verbatim
-    * (ids are disjoint across batches by the append contract); the meta
-    * re-states the fingerprinting the committed batches pinned.
-    * Bit-identical serving, spec-pinned.
-    */
-  def audioCompact(spark: SparkSession, warehouse: String, db: String,
-                   token: String): org.apache.hadoop.fs.Path = {
-    val cur = Restore.resolveVersioned(spark, warehouse, db)
-      .getOrElse(throw new IllegalStateException(
-        s"audioCompact: no current version of $db under $warehouse"))
-    val committed = committedBatches(spark, cur.toString)
-    val (wf, k, st, q) =
-      graft.operators.Multimodal.readAudioMeta(spark, cur.toString)
-    val fps = spark.read.parquet(s"$cur/fps")
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
-      .select("id", "fp")
-    val sizes = spark.read.parquet(s"$cur/sizes")
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
-      .select("id", "nfp")
-    Restore.publishVersionedDir(spark, warehouse, db, token) { vdir =>
-      def writer(df: DataFrame) =
-        df.withColumn("batch_id", lit("base"))
-          .write.mode("overwrite").partitionBy("batch_id")
-          .option("partitionOverwriteMode", "static")
-      writer(fps).parquet(s"$vdir/fps")
-      writer(sizes).parquet(s"$vdir/sizes")
-      writer(spark.range(1)
-          .select(lit(wf).as("window_frames"), lit(k).as("k"),
-            lit(st).as("stride"), lit(q).as("quant_e4")))
-        .parquet(s"$vdir/meta")
-    }
-  }
-
-  // ---- video keyframes: batch compaction ----------------------------------
-
-  /** Same trigger as [[phashDecision]] over the video-index meta
-    * partitions.
-    */
-  def videoDecision(spark: SparkSession, dir: String,
-                    maxBatches: Int = 16): Decision = {
-    val n = committedBatches(spark, dir).count()
-    Decision("video", if (n > maxBatches) "compact" else "none", n,
-      maxBatches, s"$n committed batches")
-  }
-
-  /** Merge committed video-keyframe batches into one `base` batch in a
-    * new published version: frame and size rows pass through verbatim
-    * (ids are disjoint across batches by the append contract); the meta
-    * re-states the n_bands the committed batches pinned. Bit-identical
-    * serving, spec-pinned ([[graft.operators.Multimodal
-    * .videoNearDupAgainstIndex]] derives bands from signatures, so
-    * there is nothing else to merge).
-    */
-  def videoCompact(spark: SparkSession, warehouse: String, db: String,
-                   token: String): org.apache.hadoop.fs.Path = {
-    val cur = Restore.resolveVersioned(spark, warehouse, db)
-      .getOrElse(throw new IllegalStateException(
-        s"videoCompact: no current version of $db under $warehouse"))
-    val committed = committedBatches(spark, cur.toString)
-    val nBands =
-      graft.operators.Multimodal.readVideoMeta(spark, cur.toString)
-    val frames = spark.read.parquet(s"$cur/frames")
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
-      .select("id", "frame_idx", "phash")
-    val sizes = spark.read.parquet(s"$cur/sizes")
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
-      .select("id", "nf")
-    Restore.publishVersionedDir(spark, warehouse, db, token) { vdir =>
-      def writer(df: DataFrame) =
-        df.withColumn("batch_id", lit("base"))
-          .write.mode("overwrite").partitionBy("batch_id")
-          .option("partitionOverwriteMode", "static")
-      writer(frames).parquet(s"$vdir/frames")
-      writer(sizes).parquet(s"$vdir/sizes")
-      writer(spark.range(1).select(lit(nBands).as("n_bands")))
-        .parquet(s"$vdir/meta")
-    }
-  }
-
-  // ---- semantic (embedding) index: compaction + centroid retrain --------
+  // ---- semantic (embedding) index: centroid retrain ----------------------
 
   /** Two axes, the kNN-graph discipline: RETRAIN when appended mass
     * exceeds `maxAppendFracE4` of the base (appended vectors were
@@ -519,33 +454,34 @@ object Maintain {
     */
   def semDecision(spark: SparkSession, dir: String, maxBatches: Int = 16,
                   maxAppendFracE4: Long = 2500): Decision = {
-    // an index created EMPTY has an assigned dir with no readable
-    // parquet — decide none instead of crashing schema inference (the
-    // ivfDecision empty-ledger precedent)
-    val assigned0 =
+    // an index created EMPTY before its writer left a zero-row file has
+    // an assigned dir with no readable parquet — decide none instead of
+    // crashing schema inference (the drift-ledger precedent)
+    val assigned =
       try spark.read.parquet(s"$dir/assigned")
       catch {
         case _: org.apache.spark.sql.AnalysisException =>
           return Decision("sem", "none", 0L, maxAppendFracE4,
             "empty assigned table (index created with no vectors)")
       }
-    val assigned = assigned0
-      .join(broadcast(committedBatches(spark, dir)), Seq("batch_id"),
-        "left_semi")
-    // "base" = the largest committed batch (the bootstrap increment or
-    // the last compaction/retrain result — increments bootstrap under
-    // their own batch id, so the name "base" is not guaranteed);
-    // appended mass = everything since. Bounded: one row per batch.
-    val perBatch = assigned.groupBy("batch_id")
-      .agg(countDistinct(col("id")).as("n")).collect()
-      .map(_.getLong(1)).sorted.reverse
+    // one row per committed batch (one read of the committed set): its
+    // distinct assigned ids, 0 for a batch that assigned none. "base" =
+    // the largest (the bootstrap increment or the last compaction/
+    // retrain result — increments bootstrap under their own batch id,
+    // so the name "base" is not guaranteed); appended mass = the rest.
+    val perBatch = BatchTables.committed(spark, dir)
+      .join(assigned.groupBy("batch_id")
+        .agg(countDistinct(col("id")).as("n")), Seq("batch_id"),
+        "left_outer")
+      .select(coalesce(col("n"), lit(0L))).collect()
+      .map(_.getLong(0)).sorted.reverse
     val base = perBatch.headOption.getOrElse(0L)
     val appended = perBatch.drop(1).sum
     // an EMPTY index (created, nothing appended) must decide none, not
     // loop retrain-forever in the operational poll
     val frac = if (base == 0) { if (appended == 0) 0L else 10000L }
                else math.round(appended * 10000.0 / base)
-    val nBatches = committedBatches(spark, dir).count()
+    val nBatches = perBatch.length.toLong
     if (frac > maxAppendFracE4)
       Decision("sem", "retrain", frac, maxAppendFracE4,
         s"appended $appended vs base $base (${frac}e-4)")
@@ -556,62 +492,26 @@ object Maintain {
       maxAppendFracE4, s"frac ${frac}e-4, $nBatches batches")
   }
 
-  /** Merge committed sem batches into one `base` batch in a new
-    * published version: assigned rows pass through verbatim (ids are
-    * disjoint by the append contract), centroids copy unchanged (the
-    * frozen rule), meta re-states the committed parameters.
-    * Bit-identical serving, spec-pinned.
-    */
-  def semCompact(spark: SparkSession, warehouse: String, db: String,
-                 token: String): org.apache.hadoop.fs.Path = {
-    val cur = Restore.resolveVersioned(spark, warehouse, db)
-      .getOrElse(throw new IllegalStateException(
-        s"semCompact: no current version of $db under $warehouse"))
-    val committed = committedBatches(spark, cur.toString)
-    val (ce, na, dim) =
-      graft.operators.Curation.readSemMeta(spark, cur.toString)
-    val assigned = spark.read.parquet(s"$cur/assigned")
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
-      .select("id", "v", "cid")
-    val cents = spark.read.parquet(s"$cur/centroids")
-    Restore.publishVersionedDir(spark, warehouse, db, token) { vdir =>
-      def writer(df: DataFrame) =
-        df.withColumn("batch_id", lit("base"))
-          .write.mode("overwrite").partitionBy("batch_id")
-          .option("partitionOverwriteMode", "static")
-      cents.write.mode("overwrite").parquet(s"$vdir/centroids")
-      writer(assigned).parquet(s"$vdir/assigned")
-      writer(spark.range(1)
-          .select(lit(ce).as("centroid_every"), lit(na).as("nassign"),
-            lit(dim).as("dim")))
-        .parquet(s"$vdir/meta")
-    }
-  }
-
   /** Re-draw the centroid set from the ACCUMULATED committed vectors
-    * (the same replayable [[graft.operators.Curation.semCentroidSample]]
+    * (the same replayable [[Curation.semCentroidSample]]
     * md5 rule — an id's membership never changes, so the new set is the
     * old one plus appended ids that pass the rule) and re-assign the
     * whole corpus against it in a fresh `base` — exactly a fresh
-    * [[graft.operators.Curation.writeSemIndex]] over the committed
+    * [[Curation.writeSemIndex]] over the committed
     * union, spec-pinned.
     */
   def semRetrain(spark: SparkSession, warehouse: String, db: String,
-                 token: String): org.apache.hadoop.fs.Path = {
-    val cur = Restore.resolveVersioned(spark, warehouse, db)
-      .getOrElse(throw new IllegalStateException(
-        s"semRetrain: no current version of $db under $warehouse"))
-    val committed = committedBatches(spark, cur.toString)
-    val (ce, na, _) =
-      graft.operators.Curation.readSemMeta(spark, cur.toString)
-    val vectors = spark.read.parquet(s"$cur/assigned")
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
+                 token: String): Path = {
+    val cur = current(spark, warehouse, db, "semRetrain")
+    val (ce, na, _) = Curation.readSemMeta(spark, cur.toString)
+    val vectors = BatchTables.readCommitted(spark, s"$cur/assigned",
+        BatchTables.committed(spark, cur.toString))
       .select("id", "v").distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val cents = graft.operators.Curation.semCentroidSample(vectors, ce)
+      val cents = Curation.semCentroidSample(vectors, ce)
       Restore.publishVersionedDir(spark, warehouse, db, token) { vdir =>
-        graft.operators.Curation.writeSemIndex(vectors, cents,
+        Curation.writeSemIndex(vectors, cents,
           vdir.toString, ce, na)
       }
     } finally vectors.unpersist()
@@ -628,10 +528,7 @@ object Maintain {
     */
   def decideAll(spark: SparkSession, root: String,
                 maxBatches: Int = 16): Seq[Decision] = {
-    val f = new org.apache.hadoop.fs.Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    def has(sub: String) =
-      f.exists(new org.apache.hadoop.fs.Path(s"$root/$sub"))
+    def has(sub: String) = BatchTables.exists(spark, s"$root/$sub")
     // a `_family` sentinel marks an increment state root: its
     // sub-indexes are owned by the funnel's commit protocol, so every
     // decision under it is ADVISORY (see [[Decision.advisory]]) — the
@@ -640,28 +537,16 @@ object Maintain {
     // consistently; per-family executors would desync the marker)
     val funnel = graft.pipeline.Increment.stateFamily(spark, root).isDefined
     val mb = maxBatches
-    val ds = Seq(
+    val ds =
       // funnel sub-dir layouts (increment state roots)
-      (has("minhash/meta"),
-        () => minhashDecision(spark, s"$root/minhash", mb)),
-      (has("phash/meta"), () => phashDecision(spark, s"$root/phash", mb)),
-      (has("audio/meta"), () => audioDecision(spark, s"$root/audio", mb)),
-      (has("video/meta"), () => videoDecision(spark, s"$root/video", mb)),
-      (has("sem/meta"), () => semDecision(spark, s"$root/sem", mb)),
+      MarkerFamilies.filter(fam => has(s"${fam.name}/meta"))
+        .map(fam => fam.decide(spark, s"$root/${fam.name}", mb)) ++
       // root layouts (versioned warehouse dbs — the executable shape)
-      (has("postings"), () => bm25Decision(spark, root, mb)),
-      (has("drift"), () => ivfDecision(spark, root)),
-      (has("vectors_batches"), () => knnDecision(spark, root, mb)),
-      (has("shingles") && has("bands") && has("meta"),
-        () => minhashDecision(spark, root, mb)),
-      (has("sigs") && has("meta"), () => phashDecision(spark, root, mb)),
-      (has("fps") && has("meta"), () => audioDecision(spark, root, mb)),
-      (has("frames") && has("meta"), () => videoDecision(spark, root, mb)),
-      // sem at root shares centroids/assigned with IVF-PQ — the
-      // codebook absence is the discriminator (plain IVF has no meta)
-      (has("centroids") && has("assigned") && has("meta") &&
-        !has("codebook"), () => semDecision(spark, root, mb)))
-      .collect { case (true, d) => d() }
+      Seq((has("postings"), () => bm25Decision(spark, root, mb)),
+        (has("drift"), () => ivfDecision(spark, root)),
+        (has("vectors_batches"), () => knnDecision(spark, root, mb)))
+        .collect { case (true, d) => d() } ++
+      MarkerFamilies.filter(atRoot(_, has)).map(_.decide(spark, root, mb))
     if (funnel) ds.map(_.copy(advisory = true)) else ds
   }
 
@@ -718,22 +603,14 @@ object Maintain {
                   ivfRetrain(spark, warehouse, db, token)
                 case ("bm25", "compact") =>
                   bm25Compact(spark, warehouse, db, token)
-                case ("minhash", "compact") =>
-                  minhashCompact(spark, warehouse, db, token)
-                case ("phash", "compact") =>
-                  phashCompact(spark, warehouse, db, token)
-                case ("audio", "compact") =>
-                  audioCompact(spark, warehouse, db, token)
-                case ("video", "compact") =>
-                  videoCompact(spark, warehouse, db, token)
-                case ("sem", "compact") =>
-                  semCompact(spark, warehouse, db, token)
                 case ("sem", "retrain") =>
                   semRetrain(spark, warehouse, db, token)
                 case ("knn", "compact") =>
                   knnCompact(spark, warehouse, db, token)
                 case ("knn", "retrain") =>
                   knnRetrain(spark, warehouse, db, token)
+                case (index, "compact") if byName.contains(index) =>
+                  compact(byName(index), spark, warehouse, db, token)
                 case other => throw new IllegalStateException(
                   s"executeAll: no executor for $other")
               }
@@ -804,10 +681,7 @@ object Maintain {
   def retract(spark: SparkSession, dir: String,
               ids: DataFrame): Seq[String] = {
     import spark.implicits._
-    val f = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    def has(sub: String) =
-      f.exists(new org.apache.hadoop.fs.Path(s"$dir/$sub"))
+    def has(sub: String) = BatchTables.exists(spark, s"$dir/$sub")
     val idsN = ids.select(col(ids.columns.head).cast("long").as("id"))
       .distinct().localCheckpoint(eager = true)
     val touched = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -823,8 +697,7 @@ object Maintain {
         .localCheckpoint(eager = true)
       if (tomb.head(1).nonEmpty) {
         tomb.write.mode("append").parquet(s"$dir/retracted")
-        purgeRows(spark, f, s"$dir/postings", idsN, Seq("batch_id"),
-          Seq("id"))
+        BatchTables.purge(spark, s"$dir/postings", idsN)
         touched += "bm25"
       }
       // terms: recompute the affected batches' df partials from the
@@ -837,22 +710,13 @@ object Maintain {
       if (has("retracted") && has("terms")) {
         val batches = spark.read.parquet(s"$dir/retracted")
           .select("batch_id").distinct().as[String].collect().toSeq
-          .filter(_.nonEmpty)
-        if (batches.nonEmpty) {
-          val fresh = spark.read.parquet(s"$dir/postings")
-            .filter(col("batch_id").isInCollection(batches))
-            .groupBy("batch_id", "term")
-            .agg(count(lit(1)).as("df_part"))
-            .localCheckpoint(eager = true)
-          fresh.write.mode("overwrite").partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(s"$dir/terms")
-          val still = fresh.select("batch_id").distinct()
-            .as[String].collect().toSet
-          for (b <- batches if !still.contains(b))
-            fresh.drop("batch_id").limit(0)
-              .write.mode("overwrite").parquet(s"$dir/terms/batch_id=$b")
-        }
+        def inBatches(t: DataFrame) =
+          t.filter(col("batch_id").isInCollection(batches))
+        if (batches.nonEmpty)
+          BatchTables.rewritePartitions(spark, s"$dir/terms")(inBatches,
+            _ => inBatches(spark.read.parquet(s"$dir/postings"))
+              .groupBy("batch_id", "term")
+              .agg(count(lit(1)).as("df_part")))
       }
     }
 
@@ -862,97 +726,45 @@ object Maintain {
         .select("id").distinct().localCheckpoint(eager = true)
       if (baseHit.head(1).nonEmpty)
         baseHit.write.mode("append").parquet(s"$dir/retracted")
-      purgeRows(spark, f, s"$dir/vectors_batches", idsN, Seq("batch_id"),
-        Seq("id"))
-      purgeRows(spark, f, s"$dir/edges_batches", idsN, Seq("batch_id"),
+      BatchTables.purge(spark, s"$dir/vectors_batches", idsN)
+      BatchTables.purge(spark, s"$dir/edges_batches", idsN,
         Seq("id", "nbr"))
       touched += "knn"
     }
 
-    // root-layout batch-partitioned doc-row families (the compacted
-    // warehouse shapes): one purge per table, hit col = the doc id
-    if (has("shingles") && has("bands")) {
-      purgeRows(spark, f, s"$dir/shingles", idsN, Seq("batch_id"),
-        Seq("id"))
-      purgeRows(spark, f, s"$dir/bands", idsN, Seq("batch_id"), Seq("id"))
-      touched += "minhash"
+    // the meta-marker families' root layouts (the compacted warehouse
+    // shapes): one purge per batch table, hit col = the doc id
+    for (fam <- MarkerFamilies if atRoot(fam, has)) {
+      for (t <- fam.tables) BatchTables.purge(spark, s"$dir/$t", idsN)
+      for (t <- fam.frozen) retractCentroids(spark, s"$dir/$t", idsN)
+      touched += fam.name
     }
-    if (has("sigs") && has("meta")) {
-      purgeRows(spark, f, s"$dir/sigs", idsN, Seq("batch_id"), Seq("id"))
-      touched += "phash"
-    }
-    if (has("fps") && has("sizes")) {
-      purgeRows(spark, f, s"$dir/fps", idsN, Seq("batch_id"), Seq("id"))
-      purgeRows(spark, f, s"$dir/sizes", idsN, Seq("batch_id"), Seq("id"))
-      touched += "audio"
-    }
-    if (has("frames") && has("sizes")) {
-      purgeRows(spark, f, s"$dir/frames", idsN, Seq("batch_id"),
-        Seq("id"))
-      purgeRows(spark, f, s"$dir/sizes", idsN, Seq("batch_id"), Seq("id"))
-      touched += "video"
-    }
-
-    if (has("centroids") && has("assigned")) {
-      if (has("meta") && !has("codebook")) {
-        // root-layout semantic index: the Increment.retract sem block
-        purgeRows(spark, f, s"$dir/assigned", idsN, Seq("batch_id"),
-          Seq("id"))
-        val cents = spark.read.parquet(s"$dir/centroids")
-        if (cents.join(broadcast(idsN.select(col("id").as("cid"))),
-            Seq("cid"), "left_semi").head(1).nonEmpty) {
-          val kept = cents.join(
-              broadcast(idsN.select(col("id").as("cid"))),
-              Seq("cid"), "left_anti")
-            .localCheckpoint(eager = true)
-          kept.write.mode("overwrite").parquet(s"$dir/centroids")
-        }
-        touched += "sem"
-      } else {
-        purgeRows(spark, f, s"$dir/assigned", idsN,
-          Seq("batch_id", "cid"),
-          Seq(if (has("codebook")) "id" else "other_id"))
-        touched += (if (has("codebook")) "ivfpq" else "ivf")
-      }
+    if (has("centroids") && has("assigned") &&
+        !atRoot(byName("sem"), has)) {
+      BatchTables.purge(spark, s"$dir/assigned", idsN,
+        Seq(if (has("codebook")) "id" else "other_id"),
+        Seq("batch_id", "cid"))
+      touched += (if (has("codebook")) "ivfpq" else "ivf")
     }
     touched.toSeq
   }
 
-  /** Drop victim rows from one partitioned index table IN PLACE —
-    * the [[graft.pipeline.Increment]] retraction discipline generalized
-    * to multi-level partitioning and multiple victim columns: only the
-    * partitions holding a victim (in ANY of `hitCols`) rewrite, and
-    * partitions the purge empties are replaced with zero-row schema-ful
-    * parquet (a bare dir delete would break schema inference).
+  /** Drop the centroid rows (table at `path`) whose `cid` is one of
+    * `ids`: a centroid stores its doc's full vector, so a deletion
+    * request covers that copy too. Dropping one narrows candidate
+    * routing (stored vectors in its cell pair only through their OTHER
+    * cells) until a [[semRetrain]] re-draws the set from the
+    * post-retraction corpus; no retracted content serves meanwhile.
     */
-  private def purgeRows(spark: SparkSession,
-                        f: org.apache.hadoop.fs.FileSystem, path: String,
-                        ids: DataFrame, partCols: Seq[String],
-                        hitCols: Seq[String]): Unit = {
-    if (!f.exists(new org.apache.hadoop.fs.Path(path))) return
-    val tbl = spark.read.parquet(path)
-    val idKey = ids.columns.head
-    val hits = hitCols.map(c =>
-        tbl.join(broadcast(ids.select(col(idKey).as(c))), Seq(c),
-          "left_semi"))
-      .reduce(_ unionByName _)
-    val affected = hits.select(partCols.map(col): _*).distinct()
-      .localCheckpoint(eager = true)
-    if (affected.head(1).isEmpty) return
-    val keep0 = tbl.join(broadcast(affected), partCols, "left_semi")
-    val keep = hitCols.foldLeft(keep0)((d, c) =>
-      d.join(broadcast(ids.select(col(idKey).as(c))), Seq(c), "left_anti"))
-      .localCheckpoint(eager = true)
-    keep.write.mode("overwrite").partitionBy(partCols: _*)
-      .option("partitionOverwriteMode", "dynamic").parquet(path)
-    val still = keep.select(partCols.map(col): _*).distinct()
-    val emptied = affected.join(still, partCols, "left_anti").collect()
-    for (r <- emptied) {
-      val sub = partCols.map(pc => s"$pc=${r.get(r.fieldIndex(pc))}")
-        .mkString("/")
-      keep.drop(partCols: _*).limit(0)
-        .write.mode("overwrite").parquet(s"$path/$sub")
-    }
+  private[pipeline] def retractCentroids(spark: SparkSession, path: String,
+                                         ids: DataFrame): Unit = {
+    if (!BatchTables.exists(spark, path)) return
+    val cents = spark.read.parquet(path)
+    val victims = broadcast(ids.select(col(ids.columns.head).as("cid")))
+    if (cents.join(victims, Seq("cid"), "left_semi").head(1).nonEmpty)
+      cents.join(victims, Seq("cid"), "left_anti")
+        .localCheckpoint(eager = true)
+        .write.mode("overwrite").parquet(path)
   }
 
   // ---- kNN graph: append-staleness retrain + degree compaction ----------
@@ -965,9 +777,7 @@ object Maintain {
     * themselves.
     */
   private def knnBatches(spark: SparkSession, dir: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/vectors_batches")))
+    if (BatchTables.exists(spark, s"$dir/vectors_batches"))
       spark.read.parquet(s"$dir/vectors_batches")
         .select("batch_id", "id")
     else spark.emptyDataFrame.withColumn("batch_id", lit(""))
@@ -1012,6 +822,16 @@ object Maintain {
     } finally b.unpersist()
   }
 
+  /** The stored k, the entry-ring size and the (persisted) merged
+    * vectors of a graph version — what both graph executors start from.
+    */
+  private def knnStored(spark: SparkSession,
+                        cur: Path): (Int, Int, DataFrame) =
+    (spark.read.parquet(s"$cur/meta").select(col("k")).head().getInt(0),
+      spark.read.parquet(s"$cur/entries").count().toInt,
+      graft.operators.KnnGraph.readKnnVectors(spark, cur.toString)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+
   /** Merge the batch-union graph into one flat index in a fresh
     * published version WITHOUT re-running NN-Descent: every node's edge
     * rows (base + new-node lists + reverse augments) re-cap to the
@@ -1021,16 +841,9 @@ object Maintain {
     * the merged n (the staleness fraction resets).
     */
   def knnCompact(spark: SparkSession, warehouse: String, db: String,
-                 token: String): org.apache.hadoop.fs.Path = {
-    val cur = Restore.resolveVersioned(spark, warehouse, db)
-      .getOrElse(throw new IllegalStateException(
-        s"knnCompact: no current version of $db under $warehouse"))
-    val k = spark.read.parquet(s"$cur/meta").select(col("k"))
-      .head().getInt(0)
-    val maxEntries = spark.read.parquet(s"$cur/entries").count().toInt
-    val vectors = graft.operators.KnnGraph
-      .readKnnVectors(spark, cur.toString)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                 token: String): Path = {
+    val cur = current(spark, warehouse, db, "knnCompact")
+    val (k, maxEntries, vectors) = knnStored(spark, cur)
     try {
       val edges = graft.operators.KnnGraph.readKnnEdges(spark, cur.toString)
         .withColumn("rnk", row_number().over(
@@ -1059,16 +872,9 @@ object Maintain {
     */
   def knnRetrain(spark: SparkSession, warehouse: String, db: String,
                  token: String, iters: Int = 2,
-                 warmCells: Int = 0): org.apache.hadoop.fs.Path = {
-    val cur = Restore.resolveVersioned(spark, warehouse, db)
-      .getOrElse(throw new IllegalStateException(
-        s"knnRetrain: no current version of $db under $warehouse"))
-    val k = spark.read.parquet(s"$cur/meta").select(col("k"))
-      .head().getInt(0)
-    val maxEntries = spark.read.parquet(s"$cur/entries").count().toInt
-    val vectors = graft.operators.KnnGraph
-      .readKnnVectors(spark, cur.toString)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                 warmCells: Int = 0): Path = {
+    val cur = current(spark, warehouse, db, "knnRetrain")
+    val (k, maxEntries, vectors) = knnStored(spark, cur)
     try Restore.publishVersionedDir(spark, warehouse, db, token) { vdir =>
       graft.operators.KnnGraph.writeKnnIndex(vectors, vdir.toString, k,
         iters, warmCells, maxEntries)
@@ -1094,22 +900,18 @@ object Maintain {
                     maxBatches: Int = 16): Seq[Execution] = {
     require(token.nonEmpty && !token.contains("/"),
       s"compactStates: invalid token '$token'")
-    val f = new org.apache.hadoop.fs.Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val kids = f.listStatus(new org.apache.hadoop.fs.Path(root))
+    val f = BatchTables.fs(spark, root)
+    val kids = f.listStatus(new Path(root))
       .filter(_.isDirectory).map(_.getPath).sortBy(_.getName)
     kids.toSeq.flatMap { p =>
       val name = p.getName
       graft.pipeline.Increment.stateFamily(spark, p.toString).map { fam =>
-        val metaPath = new org.apache.hadoop.fs.Path(
-          s"$p/$fam/meta")
-        if (!f.exists(metaPath))
+        if (!f.exists(new Path(s"$p/$fam/meta")))
           Execution(name, Decision(fam, "none", 0, maxBatches,
             "no committed marker — nothing to compact"), None,
             "uncommitted state — skipped")
         else {
-          val batches = spark.read.parquet(metaPath.toString)
-            .select("batch_id").distinct().count()
+          val batches = BatchTables.committed(spark, s"$p/$fam").count()
           if (batches <= maxBatches)
             Execution(name, Decision(fam, "none", batches, maxBatches,
               "within batch budget"), None, "no action needed")
@@ -1117,8 +919,7 @@ object Maintain {
             val dest = s"$destRoot/${name}_$token"
             val d = Decision(fam, "compact", batches, maxBatches,
               s"$batches committed batches > $maxBatches")
-            if (f.exists(new org.apache.hadoop.fs.Path(
-                s"$dest/$fam/meta")))
+            if (f.exists(new Path(s"$dest/$fam/meta")))
               Execution(name, d, Some(dest),
                 "already compacted — rerun skip")
             else {

@@ -31,8 +31,7 @@ object Shards {
                         numShards: Int = 16,
                         batchId: String = "base"): Unit = {
     require(numShards >= 1, s"writePackedShards: numShards ($numShards)")
-    require(batchId.nonEmpty && batchId != "__HIVE_DEFAULT_PARTITION__",
-      s"writePackedShards: invalid batch id '$batchId'")
+    graft.core.BatchTables.requireBatchId(batchId, "writePackedShards")
     val spark = packed.sparkSession
     val overwrite = batchId == "base"
     def writer(d: DataFrame, parts: Seq[String]) =
@@ -98,22 +97,10 @@ object Shards {
         val stats = perSeq.agg(count(lit(1)).as("ds"),
           coalesce(sum(col("__nt") - col("__vt")), lit(0L)).as("ct"))
           .head()
-        val affected = perSeq.select("batch_id", "shard").distinct()
-          .localCheckpoint(eager = true)
-        val keep = tbl
-          .join(broadcast(affected), Seq("batch_id", "shard"), "left_semi")
-          .join(broadcast(perSeq.select("batch_id", "shard", "seq_id")),
-            Seq("batch_id", "shard", "seq_id"), "left_anti")
-          .localCheckpoint(eager = true)
-        keep.write.mode("overwrite").partitionBy("batch_id", "shard")
-          .option("partitionOverwriteMode", "dynamic").parquet(seqsPath)
-        val still = keep.select("batch_id", "shard").distinct()
-        val emptied = affected.join(still, Seq("batch_id", "shard"),
-          "left_anti").collect()
-        for (r <- emptied)
-          keep.drop("batch_id", "shard").limit(0)
-            .write.mode("overwrite").parquet(
-              s"$seqsPath/batch_id=${r.getString(0)}/shard=${r.getInt(1)}")
+        graft.core.BatchTables.rewritePartitions(spark, seqsPath,
+            Seq("batch_id", "shard"))(_ => perSeq,
+          _.join(broadcast(perSeq.select("batch_id", "shard", "seq_id")),
+            Seq("batch_id", "shard", "seq_id"), "left_anti"))
         (stats.getLong(0), stats.getLong(1))
       }
     } finally hit.unpersist()
@@ -124,14 +111,10 @@ object Shards {
     * committed batches fail loudly.
     */
   def readPackedShards(spark: SparkSession, dir: String): DataFrame = {
-    val meta = spark.read.parquet(s"$dir/meta")
-    val ns = meta.select("num_shards").distinct().collect()
-    require(ns.length == 1,
-      s"packed shards at $dir: inconsistent num_shards across batches " +
-        s"(${ns.length} distinct)")
-    val committed = meta.select("batch_id").distinct()
-    spark.read.parquet(s"$dir/seqs")
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
+    graft.core.BatchTables.pinnedMeta(spark, dir, Seq("num_shards"),
+      "packed shards")
+    graft.core.BatchTables.readCommitted(spark, s"$dir/seqs",
+      graft.core.BatchTables.committed(spark, dir))
   }
 
   /** The training loader's per-epoch read plan over the COMMITTED

@@ -392,6 +392,44 @@ class MaintainSpec extends SparkSpec {
         (0L until 2L).map(i => (100L * b + i, vec(i.toInt, 0.02)))
           .toDF("id", "v"), s"b$b")
 
+    // families 4 and 5: audio fingerprints and video keyframes
+    import graft.operators.Multimodal
+    def clip(id: Long, src: Long, gain: Int) = {
+      def v(w: Int): Short = {
+        val hex = java.security.MessageDigest.getInstance("MD5")
+          .digest(s"$src:$w".getBytes("UTF-8")).take(4)
+          .map("%02x".format(_)).mkString
+        ((java.lang.Long.parseLong(hex, 16) % 997L) + 1L).toShort
+      }
+      Multimodal.MediaRecord(id, Multimodal.encodePcm16Wav(8000, 1,
+        Array.tabulate[Short](24 * 50)(i => (v(i / 50) * gain).toShort)),
+        "audio/wav")
+    }
+    def vid(id: Long, seed: Long, nudge: Int) =
+      Multimodal.MediaRecord(id, Multimodal.encodeSamplesMp4(1000, 3000,
+        (0 to 2).map(f => Multimodal.encodeGrayPixelsPng(16, 16,
+          Array.tabulate(256)(p => ((seed * 31 + f * 53 + p +
+            (p % 16) * 16 + (if (f == 0 && p == 0) nudge else 0))
+            % 256).toInt)))), "video/mp4")
+    Restore.publishVersionedDir(spark, wh, "au", "0") { vdir =>
+      Multimodal.writeAudioIndex(Seq(clip(1L, 1L, 1), clip(2L, 2L, 1))
+        .toDS(), vdir.toString, windowFrames = 50, k = 8)
+    }
+    def auDir = Restore.resolveVersioned(spark, wh, "au").get.toString
+    Restore.publishVersionedDir(spark, wh, "vd", "0") { vdir =>
+      Multimodal.writeVideoIndex(Seq(vid(1L, 1L, 0), vid(2L, 2L, 0))
+        .toDS(), vdir.toString, nBands = 4)
+    }
+    def vdDir = Restore.resolveVersioned(spark, wh, "vd").get.toString
+    for (b <- 1 to 3) {
+      Multimodal.appendToAudioIndex(spark, auDir,
+        Seq(clip(100L + b, 1L, 2), clip(200L + b, 10L + b, 1)).toDS(),
+        s"b$b")
+      Multimodal.appendToVideoIndex(spark, vdDir,
+        Seq(vid(100L + b, 1L, 9), vid(200L + b, 10L + b, 0)).toDS(),
+        s"b$b")
+    }
+
     // serving captures (pre-sweep)
     def serveMh(): Set[(Long, Long, Long)] = {
       val m = Dedup.nearDupAgainstIndex(spark, mhDir,
@@ -412,7 +450,20 @@ class MaintainSpec extends SparkSpec {
           thresholdE4 = 9000L)
         .select("id_new", "id_old")
         .as[(Long, Long)].collect().toSet
+    def serveAu(): Set[(Long, Long, Long)] =
+      Multimodal.audioNearDupAgainstIndex(spark, auDir,
+          Seq(clip(900L, 1L, 3), clip(901L, 12L, 2)).toDS())
+        .select("id_new", "id_old", "match_e4")
+        .as[(Long, Long, Long)].collect().toSet
+    def serveVd(): Set[(Long, Long, Long)] =
+      Multimodal.videoNearDupAgainstIndex(spark, vdDir,
+          Seq(vid(900L, 1L, 0), vid(901L, 12L, 9)).toDS())
+        .select("id_new", "id_old", "sim_e4")
+        .as[(Long, Long, Long)].collect().toSet
     val (mh0, bm0, sm0) = (serveMh(), serveBm(), serveSm())
+    val (au0, vd0) = (serveAu(), serveVd())
+    assert(au0.map(_._2) == Set(1L, 101L, 102L, 103L, 202L), s"$au0")
+    assert(vd0.map(_._2) == Set(1L, 101L, 102L, 103L, 202L), s"$vd0")
     assert(mh0.nonEmpty && bm0.nonEmpty && sm0.nonEmpty,
       s"probes must have content: $mh0 / $bm0 / $sm0")
 
@@ -422,8 +473,8 @@ class MaintainSpec extends SparkSpec {
       spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(wh, "bm__vt1"))
     intercept[IllegalArgumentException] {
-      Maintain.executeAll(spark, wh, Seq("mh", "bm", "sm"), "t1",
-        maxBatches = 2)
+      Maintain.executeAll(spark, wh, Seq("mh", "bm", "sm", "au", "vd"),
+        "t1", maxBatches = 2)
     }
     // mh landed, bm/sm did not
     assert(Maintain.minhashDecision(spark, mhDir, maxBatches = 2)
@@ -433,8 +484,8 @@ class MaintainSpec extends SparkSpec {
 
     // resume under a FRESH token: mh re-decides none (skipped), bm/sm
     // execute — the crash-safe re-decision contract
-    val resumed = Maintain.executeAll(spark, wh, Seq("mh", "bm", "sm"),
-      "t2", maxBatches = 2)
+    val resumed = Maintain.executeAll(spark, wh,
+      Seq("mh", "bm", "sm", "au", "vd"), "t2", maxBatches = 2)
     val byDb = resumed.groupBy(_.db)
     assert(byDb("mh").forall(_.note == "no action needed"),
       s"mh double-compacted: ${byDb("mh")}")
@@ -449,10 +500,20 @@ class MaintainSpec extends SparkSpec {
     assert(serveMh() == mh0, "minhash serving changed")
     assert(serveBm() == bm0, "bm25 serving changed")
     assert(serveSm() == sm0, "sem serving changed")
+    for (db <- Seq("au", "vd"))
+      assert(byDb(db).exists(e =>
+          e.note == "executed" && e.decision.action == "compact"),
+        s"${byDb(db)}")
+    assert(serveAu() == au0, "audio serving changed")
+    assert(serveVd() == vd0, "video serving changed")
+    assert(spark.read.parquet(s"$auDir/sizes").select("batch_id")
+      .distinct().as[String].collect().toSeq == Seq("base"))
+    assert(spark.read.parquet(s"$vdDir/frames").select("batch_id")
+      .distinct().as[String].collect().toSeq == Seq("base"))
 
     // a third sweep decides none everywhere; unknown db is skipped loudly
-    val idle = Maintain.executeAll(spark, wh, Seq("mh", "bm", "sm", "nope"),
-      "t3", maxBatches = 2)
+    val idle = Maintain.executeAll(spark, wh,
+      Seq("mh", "bm", "sm", "au", "vd", "nope"), "t3", maxBatches = 2)
     assert(idle.count(_.note == "executed") == 0, s"$idle")
     assert(idle.exists(e => e.db == "nope" &&
       e.note.contains("no current version")), s"$idle")

@@ -228,6 +228,53 @@ class RetractIndexSpec extends SparkSpec {
     val t2 = Maintain.retract(spark, phDir, Seq(10L).toDF("id"))
     assert(t2 == Seq("phash"), s"$t2")
     assert(phHits() == Set(11L))
+
+    // audio warehouse db: clip 21 is a 2x-gain re-encode of clip 20
+    val auDir = tmp("auroot")
+    def clip(id: Long, src: Long, gain: Int) = {
+      def v(w: Int): Short = {
+        val hex = java.security.MessageDigest.getInstance("MD5")
+          .digest(s"$src:$w".getBytes("UTF-8")).take(4)
+          .map("%02x".format(_)).mkString
+        ((java.lang.Long.parseLong(hex, 16) % 997L) + 1L).toShort
+      }
+      Multimodal.MediaRecord(id, Multimodal.encodePcm16Wav(8000, 1,
+        Array.tabulate[Short](24 * 50)(i => (v(i / 50) * gain).toShort)),
+        "audio/wav")
+    }
+    Multimodal.writeAudioIndex(Seq(clip(20L, 1L, 1), clip(21L, 1L, 2),
+      clip(22L, 2L, 1)).toDS(), auDir, windowFrames = 50, k = 8)
+    def auHits(): Set[Long] =
+      Multimodal.audioNearDupAgainstIndex(spark, auDir,
+          Seq(clip(700L, 1L, 3)).toDS())
+        .select("id_old").as[Long].collect().toSet
+    assert(auHits() == Set(20L, 21L))
+    val t3 = Maintain.retract(spark, auDir, Seq(20L).toDF("id"))
+    assert(t3 == Seq("audio"), s"$t3")
+    assert(auHits() == Set(21L))
+    assert(spark.read.parquet(s"$auDir/sizes")
+      .filter(col("id") === 20L).count() == 0L)
+
+    // video warehouse db: video 31 is a frame-0 nudge of video 30
+    val vdDir = tmp("vdroot")
+    def vid(id: Long, seed: Long, nudge: Int) =
+      Multimodal.MediaRecord(id, Multimodal.encodeSamplesMp4(1000, 3000,
+        (0 to 2).map(f => Multimodal.encodeGrayPixelsPng(16, 16,
+          Array.tabulate(256)(p => ((seed * 31 + f * 53 + p +
+            (p % 16) * 16 + (if (f == 0 && p == 0) nudge else 0))
+            % 256).toInt)))), "video/mp4")
+    Multimodal.writeVideoIndex(Seq(vid(30L, 1L, 0), vid(31L, 1L, 9),
+      vid(32L, 2L, 0)).toDS(), vdDir, nBands = 4)
+    def vdHits(): Set[Long] =
+      Multimodal.videoNearDupAgainstIndex(spark, vdDir,
+          Seq(vid(800L, 1L, 0)).toDS())
+        .select("id_old").as[Long].collect().toSet
+    assert(vdHits() == Set(30L, 31L))
+    val t4 = Maintain.retract(spark, vdDir, Seq(30L).toDF("id"))
+    assert(t4 == Seq("video"), s"$t4")
+    assert(vdHits() == Set(31L))
+    assert(spark.read.parquet(s"$vdDir/sizes")
+      .filter(col("id") === 30L).count() == 0L)
   }
 
   test("semantic root-layout index: retraction drops assigned rows and " +

@@ -188,4 +188,43 @@ class SemIndexSpec extends SparkSpec {
       edir, 2, 2)
     assert(Maintain.semDecision(spark, edir).action == "none")
   }
+
+  test("an embedding state whose first batch admits only zero-norm " +
+      "vectors keeps serving: the next batch curates normally and " +
+      "compaction folds and serves identically") {
+    import graft.pipeline.Increment
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_embed_zero").toString
+    val zero = Seq.fill(8)(0.0)
+    def verdicts(r: graft.pipeline.IncrementResult) = r
+      .ledger.select("id", "admitted", "reason", "dup_of")
+      .as[(Long, Boolean, String, Long)].collect()
+      .map(v => v._1 -> ((v._2, v._3, v._4))).toMap
+    // b1: the one admitted vector is zero-norm, so nothing is indexed
+    val m1 = verdicts(Increment.curateEmbeddingIncrement(
+      vdf(Seq(1L -> zero)), dir, "b1"))
+    assert(m1 == Map(1L -> ((true, "admitted", 1L))))
+    // b2: exact vs the stored zero key, an exact twin within the batch,
+    // two fresh axes. (b1 drew no centroids — its sample had no
+    // nonzero vector — so no vector routes to a cell and the near-dup
+    // stages find nothing; only exact verdicts are pinned here.)
+    val m2 = verdicts(Increment.curateEmbeddingIncrement(
+      vdf(Seq(10L -> zero, 11L -> vec(0, 0.01), 12L -> vec(0, 0.01),
+        13L -> vec(1, 0.01))), dir, "b2"))
+    assert(m2 == Map(10L -> ((false, "exact_dup", 1L)),
+      11L -> ((true, "admitted", 11L)), 12L -> ((false, "exact_dup", 11L)),
+      13L -> ((true, "admitted", 13L))))
+    // compaction folds b1 (dim 0) and b2 (dim 8) and serves identically
+    val dest = java.nio.file.Files
+      .createTempDirectory("graft_embed_zero_dst").toString + "/state"
+    Increment.compactStateTo(spark, dir, dest)
+    val b3 = vdf(Seq(20L -> vec(0, 0.01), 21L -> zero, 22L -> vec(5, 0.01),
+      23L -> vec(1, 0.01)))
+    val src3 = verdicts(Increment.curateEmbeddingIncrement(b3, dir, "b3"))
+    assert(src3 == Map(20L -> ((false, "exact_dup", 11L)),
+      21L -> ((false, "exact_dup", 1L)), 22L -> ((true, "admitted", 22L)),
+      23L -> ((false, "exact_dup", 13L))))
+    assert(verdicts(Increment.curateEmbeddingIncrement(b3, dest, "b3")) ==
+      src3)
+  }
 }
