@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,19 +11,9 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSeq) else None
     def selected(name: String): Boolean =
       only.forall(_.exists(name.startsWith))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.ts is INT64 TIMESTAMP(NANOS) parquet — read as long nanos
-      // (Tables.events normalizes to ms-truncated TIMESTAMP_NTZ).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = Sessions.builder()
       // NTZ-typed output parquet so the oracle compare sees naive timestamps.
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // loud single-line schema-drift report (round 7: a silent testdata

@@ -537,11 +537,25 @@ object Curation {
   def writeSemIndex(vectors: DataFrame, centroids: DataFrame, dir: String,
                     centroidEvery: Int = 25, nassign: Int = 2,
                     batchId: String = "base"): Unit = {
-    centroids.select(col("id").as("cid"), col("v").as("cv"))
-      .write.mode("overwrite").parquet(s"$dir/centroids")
+    writeCentroids(centroids, dir)
     writeSemParts(vectors, dir, nassign, centroidEvery, pinnedDim = 0,
       overwrite = true, batchId = batchId)
   }
+
+  private def writeCentroids(centroids: DataFrame, dir: String): Unit =
+    centroids.select(col("id").as("cid"), col("v").as("cv"))
+      .write.mode("overwrite").parquet(s"$dir/centroids")
+
+  /** An index whose batches so far held no nonzero vector stores an
+    * EMPTY centroid set: it is unpinned, and the first batch that routes
+    * by a drawn set (`centroids`, the sample its within-batch stage
+    * used) pins it here, before its [[appendSemVectors]]. A retry of
+    * that batch finds the set it drew. No-op once a set is pinned.
+    */
+  def pinSemCentroids(spark: org.apache.spark.sql.SparkSession,
+                      dir: String, centroids: DataFrame): Unit =
+    if (spark.read.parquet(s"$dir/centroids").head(1).isEmpty)
+      writeCentroids(centroids, dir)
 
   /** Fold a new batch's vectors into an existing index (append —
     * assignment against the STORED centroids, no old data rewritten).

@@ -613,11 +613,23 @@ object Increment {
   private def nonzeroVectors(df: DataFrame): DataFrame =
     df.filter(expr("aggregate(v, 0D, (a, x) -> a + x * x)") > lit(0.0))
 
-  /** A sem index's frozen centroid set as (id, v). */
-  private def storedCentroids(spark: SparkSession,
-                              semDir: String): DataFrame =
-    spark.read.parquet(s"$semDir/centroids")
-      .select(col("cid").as("id"), col("cv").as("v"))
+  /** The centroid set a batch routes by, as (id, v): the sem index's
+    * frozen set when `haveSem` and one is pinned; else — at bootstrap, or
+    * while every committed batch held only zero-norm vectors — the md5
+    * sample of `vectors`, which the batch's sem write then pins
+    * ([[graft.operators.Curation.pinSemCentroids]]).
+    */
+  private def routingCentroids(spark: SparkSession, semDir: String,
+                               haveSem: Boolean, vectors: DataFrame,
+                               centroidEvery: Int): DataFrame = {
+    val stored =
+      if (!haveSem) None
+      else Some(spark.read.parquet(s"$semDir/centroids")
+        .select(col("cid").as("id"), col("cv").as("v")))
+    stored.filter(_.head(1).nonEmpty).getOrElse(
+      Curation.semCentroidSample(vectors, centroidEvery)
+        .localCheckpoint(eager = true))
+  }
 
   /** The semantic stage's output: the survivors, the pool's non-zero
     * vectors and the centroid set (both needed by the commit), whether
@@ -663,10 +675,8 @@ object Increment {
         (pce, pna)
       }
     val vectors = nonzeroVectors(embed(pool)).localCheckpoint(eager = true)
-    val centroids =
-      if (haveSem) storedCentroids(run.spark, semDir)
-      else Curation.semCentroidSample(vectors.select("id", "v"), ce)
-        .localCheckpoint(eager = true)
+    val centroids = routingCentroids(run.spark, semDir, haveSem,
+      vectors.select("id", "v"), ce)
     val afterState =
       if (!haveSem) pool
       else led.dropMatches(pool, Curation.semNearDupAgainstIndex(run.spark,
@@ -705,10 +715,11 @@ object Increment {
         val vecs = p.vectors
           .join(admitted.select("id"), Seq("id"), "left_semi")
           .select("id", "v")
-        if (p.haveSem)
+        if (p.haveSem) {
+          Curation.pinSemCentroids(run.spark, run.path("sem"), p.centroids)
           Curation.appendSemVectors(run.spark, run.path("sem"), vecs,
             run.batchId)
-        else
+        } else
           Curation.writeSemIndex(vecs, p.centroids, run.path("sem"),
             p.centroidEvery, p.nassign, run.batchId)
       }
@@ -1294,22 +1305,23 @@ object Increment {
         Curation.semNearDupAgainstIndex(run.spark, run.path("sem"), vecs,
           cfg.thresholdE4, excludeBatch = Some(run.batchId)),
       within = (run, vecs) => {
-        // at bootstrap there is no state stage, so `vecs` are all the
-        // exact survivors — the set the index write samples again
-        val centroids =
-          if (run.haveState) storedCentroids(run.spark, run.path("sem"))
-          else Curation.semCentroidSample(vecs, cfg.centroidEvery)
-            .localCheckpoint(eager = true)
+        // while no centroid set is pinned the state stage found nothing
+        // (no nonzero vector is stored), so `vecs` are all the exact
+        // survivors — the set the index write samples again
+        val centroids = routingCentroids(run.spark, run.path("sem"),
+          run.haveState, vecs, cfg.centroidEvery)
         val pm = graft.operators.Similarity.ivfNearDupPairsManaged(vecs,
           centroids, cfg.thresholdE4 / 10000.0, cfg.nassign)
         (pm.df.select("idA", "idB"), () => pm.close())
       },
       semantic = None,
       writeIndex = (run, adm, exact) =>
-        if (run.haveState)
+        if (run.haveState) {
+          Curation.pinSemCentroids(run.spark, run.path("sem"),
+            Curation.semCentroidSample(exact, cfg.centroidEvery))
           Curation.appendSemVectors(run.spark, run.path("sem"), adm,
             run.batchId)
-        else
+        } else
           Curation.writeSemIndex(adm,
             Curation.semCentroidSample(exact, cfg.centroidEvery),
             run.path("sem"), cfg.centroidEvery, cfg.nassign, run.batchId),
@@ -1584,7 +1596,11 @@ object Increment {
               Curation.writeSemIndex(vecs,
                 Curation.semCentroidSample(nonzero.select("id", "v"), ce),
                 s"$stateDir/sem", ce, na, batchId = b)
-            else Curation.appendSemVectors(spark, s"$stateDir/sem", vecs, b)
+            else {
+              Curation.pinSemCentroids(spark, s"$stateDir/sem",
+                Curation.semCentroidSample(nonzero.select("id", "v"), ce))
+              Curation.appendSemVectors(spark, s"$stateDir/sem", vecs, b)
+            }
             indexed += vecs.count()
           }
           indexed

@@ -205,12 +205,14 @@ class SemIndexSpec extends SparkSpec {
       vdf(Seq(1L -> zero)), dir, "b1"))
     assert(m1 == Map(1L -> ((true, "admitted", 1L))))
     // b2: exact vs the stored zero key, an exact twin within the batch,
-    // two fresh axes. (b1 drew no centroids — its sample had no
-    // nonzero vector — so no vector routes to a cell and the near-dup
-    // stages find nothing; only exact verdicts are pinned here.)
-    val m2 = verdicts(Increment.curateEmbeddingIncrement(
+    // two fresh axes, and 14, a near twin of 11. b1 drew no centroids —
+    // its sample had no nonzero vector — so the set stays unpinned and
+    // b2 draws (and pins) its own: the within-batch near-dup fires.
+    val r2 = verdicts(Increment.curateEmbeddingIncrement(
       vdf(Seq(10L -> zero, 11L -> vec(0, 0.01), 12L -> vec(0, 0.01),
-        13L -> vec(1, 0.01))), dir, "b2"))
+        13L -> vec(1, 0.01), 14L -> vec(0, 0.02))), dir, "b2"))
+    assert(r2(14L) == ((false, "near_dup", 11L)))
+    val m2 = r2 - 14L
     assert(m2 == Map(10L -> ((false, "exact_dup", 1L)),
       11L -> ((true, "admitted", 11L)), 12L -> ((false, "exact_dup", 11L)),
       13L -> ((true, "admitted", 13L))))

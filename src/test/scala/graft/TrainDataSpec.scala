@@ -83,4 +83,40 @@ class TrainDataSpec extends SparkSpec {
     // the report-only chunk/pack tail does not run
     assert(res.stageCounts.last._1 == "decontaminated")
   }
+
+  test("buildShards: an identical rerun reuses its compiled classes " +
+      "(the session's codegen cache holds the build's working set)") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    // start cold whatever ran before in this JVM: drop every cached class
+    // (the cache and its class are private to Spark)
+    val getCache = CodeGenerator.getClass.getDeclaredMethod("cache")
+    getCache.setAccessible(true)
+    val cache = getCache.invoke(CodeGenerator)
+    cache.getClass.getMethod("invalidateAll").invoke(cache)
+    val docs = Seq(1L -> goodText("one"), 2L -> goodText("one"),
+      3L -> goodText("two"), 4L -> (goodText("two") + "."),
+      5L -> "junk").toDF("doc_id", "text")
+    val bench = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    def compiles(): Long = {
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft_traindata_codegen").toString
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      TrainData.buildShards(docs, "doc_id", "text", bench, "text", dir,
+        ShardBuildConfig(merges, seqLen = 7, numShards = 4,
+          curate = CurateConfig()))
+      spark.catalog.clearCache()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = compiles()
+    compiles()
+    val third = compiles()
+    // the build needs more classes than Spark's default cache (100)
+    // holds, so at that size every run compiles about as many again
+    assert(first > 100L, s"first run compiled $first classes")
+    // not 0: a per-run value that Spark inlines into generated code as
+    // a literal (the loader's inventory cutoff, now + 16 min, is one)
+    // mints a fresh class each run
+    assert(third <= 10L, s"third run compiled $third classes")
+  }
 }
