@@ -144,10 +144,7 @@ object Main {
     }
     val rows = files.map(f =>
       (f.getName, f.getAbsolutePath, fmt.format(new java.util.Date(f.lastModified))))
-    // asOf 16 min ahead: local files are complete by definition — the
-    // in-flight guard (cloud.py:130-133) protects cloud uploads only
-    Inventory.fromListing(spark, rows, new java.sql.Timestamp(
-      System.currentTimeMillis() + 16 * 60 * 1000L))
+    Inventory.fromLocalListing(spark, rows)
   }
 
   /** The exactly-one-member zip gate (cloud.py:215-264) + extension-

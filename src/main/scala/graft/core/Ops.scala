@@ -326,7 +326,7 @@ object Ops {
     * (keys, salt). Turns one hot key's single straggler task into
     * `saltFactor` parallel tasks.
     *
-    * Measured (tools/Scale --skew, 6M-row fact with 99% of rows on ONE
+    * Measured (SCALE.md §round-7 skew, 6M-row fact with 99% of rows on ONE
     * key, 15k-row dim, broadcast off): unsalted wall 2.4-2.7 s with a
     * 1.9-2.2 s straggler task against a 130-190 ms task p50 — AND AQE's
     * skew-join fix did NOT engage, because the hot partition (~50 MB)

@@ -28,40 +28,13 @@ object Journeys {
     * once and each user's step-typed events fold greedily in time order —
     * measured 2.5× faster than the k-pass form at 1× AND 10× (SCALE.md
     * round-10 row pair), and at 100 TB one scan vs k scans is the whole
-    * game. [[funnelStepsKPass]] is the join-form reference twin
-    * (bit-parity spec-pinned) for engines/settings where a per-user
-    * collect is unwelcome.
+    * game. The k-pass form (one filtered min-aggregate per step, joined
+    * back on the user) is q124's oracle SQL, which pins this chain
+    * hash-for-hash.
     */
   def funnelSteps(events: DataFrame, userCol: String, tsCol: String,
                   typeCol: String, steps: Seq[String]): DataFrame =
     funnelStepsOnePass(events, userCol, tsCol, typeCol, steps)
-
-  /** The k-pass join form of [[funnelSteps]]: one filtered min-aggregate
-    * per step + one user-keyed join back — k bounded shuffles, no
-    * per-user collect, but k scans of events. The sequential dependence
-    * (step k's window opens at step k-1's match) makes k passes this
-    * form's minimum work; each pass's step-type filter pushes to the
-    * scan.
-    */
-  def funnelStepsKPass(events: DataFrame, userCol: String, tsCol: String,
-                       typeCol: String, steps: Seq[String]): DataFrame = {
-    require(steps.nonEmpty, "funnelSteps: at least one step")
-    require(steps.distinct.size == steps.size,
-      "funnelSteps: repeated step types are ambiguous")
-    var cur = events.filter(col(typeCol) === steps.head)
-      .groupBy(userCol).agg(min(tsCol).as("t0"))
-    for (k <- 1 until steps.size) {
-      val tk = events.filter(col(typeCol) === steps(k))
-        .select(col(userCol), col(tsCol).as("__ts"))
-        .join(cur.select(col(userCol), col(s"t${k - 1}")), Seq(userCol))
-        .filter(col("__ts") > col(s"t${k - 1}"))
-        .groupBy(userCol).agg(min(col("__ts")).as(s"t$k"))
-      cur = cur.join(tk, Seq(userCol), "left_outer")
-    }
-    val reached = steps.indices.map(k =>
-      col(s"t$k").isNotNull.cast("long")).reduce(_ + _)
-    cur.withColumn("steps_reached", reached)
-  }
 
   /** [[funnelSteps]] in ONE pass over events (bit-parity spec-pinned):
     * collect each user's step-typed events, sort within the user, and

@@ -20,9 +20,6 @@ object TextStats {
     "beta" -> Seq("join", "merge", "window", "batch"),
     "gamma" -> Seq("stream", "filter", "sort", "query"))
 
-  private def inList(words: Seq[String]): String =
-    words.map(w => s"'$w'").mkString(", ")
-
   /** Count of tokens from `words` that appear in the marker set. */
   private def markerHits(words: Column, markers: Seq[String]): Column = {
     val set = array(markers.map(lit): _*)

@@ -33,10 +33,6 @@ object Archive {
                   broadcastLocalKeys: Boolean = true): DataFrame =
     Ops.antiJoinAppend(local, remote, MergeKeys, broadcastLocalKeys)
 
-  def mergeCounts(local: DataFrame, remote: DataFrame,
-                  broadcastLocalKeys: Boolean = true): DataFrame =
-    Ops.antiJoinAppend(local, remote, MergeKeys, broadcastLocalKeys)
-
   /** Typed variants for the fixture case classes. */
   def mergeEventsTyped(local: Dataset[OperationsEvent],
                        remote: Dataset[OperationsEvent]): Dataset[OperationsEvent] = {

@@ -140,7 +140,7 @@ case class CurateConfig(
   * `stageSeconds` — wall time attributed to each stage (count-to-count:
   * each stage's lazy plan executes at its funnel count, so the delta
   * between consecutive counts IS the stage's materialization cost — the
-  * per-stage rows tools/Scale sweeps at 1x/10x); `ledger` (when
+  * per-stage rows of SCALE.md's composed-pipeline sweeps); `ledger` (when
   * `cfg.emitLedger`) — one verdict row PER INPUT DOC: (id, admitted,
   * reason, dup_of), the [[graft.streaming.CurateStream.GateVerdict]]
   * schema. `reason` ∈ the stream's vocabulary for shared stages (c4,
@@ -181,8 +181,8 @@ case class CurateResult(chunks: DataFrame, stageCounts: Seq[(String, Long)],
   * Scale shape of the composed job: every stage is either a per-row map,
   * a hash-partitioned aggregate, or a bucketed equi join — CurateSpec
   * audits the final executed plans for cartesian products and
-  * single-partition exchanges (none), the same net PlanAudit casts over
-  * the probe corpus.
+  * single-partition exchanges (none), the same net PlanContractSpec casts
+  * over the probe corpus (SCALE.md, "Round-5 full-corpus plan audit").
   */
 object Curate {
 

@@ -995,10 +995,6 @@ object Increment {
                                   semCentroidEvery: Int = 25,
                                   semNassign: Int = 2)
 
-  /** Image state exists iff the pHash index has a meta commit marker. */
-  def imageStateExists(spark: SparkSession, stateDir: String): Boolean =
-    markerExists(spark, stateDir, ImageLayout.marker)
-
   /** The audio gate dials ([[graft.operators.Multimodal
     * .audioNearDupPairs]] parameters).
     */
@@ -1023,10 +1019,6 @@ object Increment {
                                   semCentroidEvery: Int = 25,
                                   semNassign: Int = 2)
 
-  /** Audio state exists iff the fingerprint index has its meta marker. */
-  def audioStateExists(spark: SparkSession, stateDir: String): Boolean =
-    markerExists(spark, stateDir, AudioLayout.marker)
-
   /** The video gate dials ([[graft.operators.Multimodal
     * .videoNearDupPairs]] parameters).
     */
@@ -1046,10 +1038,6 @@ object Increment {
                                   semGrid: Int = 8,
                                   semCentroidEvery: Int = 25,
                                   semNassign: Int = 2)
-
-  /** Video state exists iff the keyframe index has its meta marker. */
-  def videoStateExists(spark: SparkSession, stateDir: String): Boolean =
-    markerExists(spark, stateDir, VideoLayout.marker)
 
   /** The semantic gate dials ([[graft.operators.Curation
     * .semDedupVictimsFromVectorsManaged]] parameters).

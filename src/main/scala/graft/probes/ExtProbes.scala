@@ -1,7 +1,5 @@
 package graft.probes
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import graft.operators.Multimodal
 import ProbeShared.Q
 
 /** North-star LLM-pipeline extension probes (q27+): dedup family, similarity
@@ -15,8 +13,7 @@ import ProbeShared.Q
   * [[IoProbes]]; shared helpers in [[ProbeShared]]) — split from the
   * former 3.1 kLoC monolith (r8 verdict item 6). This object aggregates
   * the family registries (keys and oracle SQL unchanged) and re-exports
-  * the members external call sites use (PlanContractSpec, tools/Scale,
-  * tools/Profile).
+  * the probes PlanContractSpec names.
   */
 object ExtProbes {
   // ---- re-exports for external call sites -------------------------------
@@ -36,15 +33,6 @@ object ExtProbes {
   val q86: Q = AnnProbes.q86
   val q87: Q = AnnProbes.q87
   val q88: Q = DedupProbes.q88
-
-  def q82Media(docs: DataFrame): Dataset[Multimodal.MediaRecord] =
-    MultimodalProbes.q82Media(docs)
-  def q94Media(docs: DataFrame): Dataset[Multimodal.MediaRecord] =
-    MultimodalProbes.q94Media(docs)
-  def q103Media(docs: DataFrame): Dataset[Multimodal.MediaRecord] =
-    MultimodalProbes.q103Media(docs)
-  def q153Media(docs: DataFrame): Dataset[Multimodal.MediaRecord] =
-    MultimodalProbes.q153Media(docs)
 
   // ---- aggregated registry ----------------------------------------------
   val queries: Map[String, Q] =

@@ -43,14 +43,22 @@ object Inventory {
     parse(rows.toDF("file", "url", "modified_raw"), lit(asOf))
   }
 
-  /** The OP-2 scan filter over any (file, url, modified_raw) frame. The
-    * dash guard mirrors cloud.py:174-176 — a filename with no '-' has no
-    * derivable instance key and is skipped.
+  /** Local listing rows (name, path, modified-iso) → typed inventory, with
+    * no in-flight guard: a local file is complete by definition (the guard,
+    * cloud.py:130-133, protects cloud uploads only), and without a cutoff
+    * literal every listing shares one compiled filter.
+    */
+  def fromLocalListing(spark: SparkSession,
+                       rows: Seq[(String, String, String)]): DataFrame = {
+    import spark.implicits._
+    scan(rows.toDF("file", "url", "modified_raw"))
+  }
+
+  /** The OP-2 scan filter over any (file, url, modified_raw) frame, with
+    * the in-flight guard at `asOf`.
     */
   def parse(listing: DataFrame, asOf: Column): DataFrame =
-    listing
-      .withColumn("modified", to_timestamp(col("modified_raw"), TsFormat))
-      .filter(col("file").endsWith(".zip") && col("file").contains("-"))
+    scan(listing)
       // |asOf − modified| ≥ 15 min is KEPT, matching the reference's
       // abs-difference guard (cloud.py:132 skips only abs(now−mtime) < 900,
       // so the exact-900 s boundary is kept): a file whose timestamp is far
@@ -58,6 +66,15 @@ object Inventory {
       // only the open ±15 min window around "now" counts as in-flight.
       .filter(col("modified") <= asOf - expr("INTERVAL 15 MINUTES") ||
         col("modified") >= asOf + expr("INTERVAL 15 MINUTES"))
+
+  /** The OP-2 scan without the in-flight guard. The dash guard mirrors
+    * cloud.py:174-176 — a filename with no '-' has no derivable instance
+    * key and is skipped.
+    */
+  private def scan(listing: DataFrame): DataFrame =
+    listing
+      .withColumn("modified", to_timestamp(col("modified_raw"), TsFormat))
+      .filter(col("file").endsWith(".zip") && col("file").contains("-"))
       .withColumn("instance", instanceKey(col("file")))
       .drop("modified_raw")
 

@@ -1,16 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.pipeline.Archive
 
-/** Partitioned JDBC ingest (OP-7 production path): the reference's
-  * `dblink('<dsn>', 'select …')` federated scan becomes
-  * `spark.read.jdbc` with range partitioning — N concurrent connections
-  * each reading one stride of the key space, instead of one connection
-  * streaming everything through the driver.
+/** JDBC ingest (OP-7 production path): the reference's
+  * `dblink('<dsn>', 'select …')` federated scan becomes `spark.read.jdbc`
+  * over the url and properties [[dsnToJdbc]] builds (the archive command's
+  * remote read in [[graft.Main]]).
   *
-  * Untestable in this container (no database); the option-building logic is
-  * pure and spec-covered, the read call is the one-line standard API.
+  * The read itself needs a live database; the DSN translation is pure and
+  * spec-covered.
   */
 object Jdbc {
 
@@ -29,24 +27,5 @@ object Jdbc {
     (kv -- Seq("hostaddr", "host", "port", "dbname"))
       .foreach { case (k, v) => props.setProperty(k, v) }
     (s"jdbc:postgresql://$host:$port/$db", props)
-  }
-
-  /** Range-partitioned read over a numeric key: `numPartitions` parallel
-    * scans striding `[lower, upper]` on `partitionColumn`. NOTE Spark's
-    * bounds split the key space but do NOT filter rows — everything below
-    * `lower` lands in the first partition and everything above `upper` in
-    * the last (skewed, not excluded); add a real `WHERE` predicate to the
-    * table/query argument to restrict the scan.
-    */
-  def readPartitioned(spark: SparkSession, dsn: String, table: String,
-                      partitionColumn: String, lower: Long, upper: Long,
-                      numPartitions: Int): DataFrame = {
-    val (url, props) = dsnToJdbc(dsn)
-    spark.read
-      .option("partitionColumn", partitionColumn)
-      .option("lowerBound", lower)
-      .option("upperBound", upper)
-      .option("numPartitions", numPartitions)
-      .jdbc(url, table, props)
   }
 }

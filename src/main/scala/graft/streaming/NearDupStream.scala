@@ -177,13 +177,6 @@ object MinHashStream {
   case class Pending(votes: List[Vote])
   case class Verdict(id: Long, is_dup: Boolean, dup_of: Long)
 
-  /** Executor-side replica of `Dedup.normalizeWords` (lower, strip
-    * non-alphanumerics, split, drop empties).
-    */
-  def normalizeWordsLocal(text: String): Array[String] =
-    text.toLowerCase(java.util.Locale.ROOT)
-      .replaceAll("[^a-z0-9]+", " ").trim.split(" ").filter(_.nonEmpty)
-
   /** Executor-side replica of `Dedup.shingles3` (space-joined 3-windows). */
   def shingles3Local(words: Array[String]): Array[String] =
     if (words.length < 3) Array.empty
@@ -212,7 +205,8 @@ object MinHashStream {
     * and the parity spec.
     */
   def bandKeysFor(text: String, bands: Int, rowsPerBand: Int): Seq[BandKey] = {
-    val hv = shingles3Local(normalizeWordsLocal(text)).map(shingleHashLocal)
+    val hv = shingles3Local(graft.operators.Dedup.normalizeWordsLocal(text))
+      .map(shingleHashLocal)
     if (hv.isEmpty) Seq.empty
     else {
       val sigs = (0 until bands * rowsPerBand).map(h => minhashSigLocal(hv, h))
@@ -243,7 +237,7 @@ object MinHashStream {
     require(bands >= 1 && rowsPerBand >= 1)
     import docs.sparkSession.implicits._
     docs.flatMap { d =>
-      val sh = shingles3Local(normalizeWordsLocal(d.text))
+      val sh = shingles3Local(graft.operators.Dedup.normalizeWordsLocal(d.text))
       if (sh.isEmpty)
         Seq((BandKey(-1, ""), d.id, Array.empty[Long], 1))
       else {

@@ -50,13 +50,13 @@ object WindowDedupStream {
 
     // short docs never enter the claim state: verdict directly
     val shorts: Dataset[Verdict] = docs.flatMap { case (id, text) =>
-      val n = MinHashStream.normalizeWordsLocal(text).length
+      val n = graft.operators.Dedup.normalizeWordsLocal(text).length
       if (n < w) Some(Verdict(id, 0L, 0L, 0L)) else None
     }
 
     val occurrences: Dataset[(String, Occ)] = docs.flatMap {
       case (id, text) =>
-        val ws = MinHashStream.normalizeWordsLocal(text)
+        val ws = graft.operators.Dedup.normalizeWordsLocal(text)
         if (ws.length < w) Seq.empty[(String, Occ)]
         else (0 to ws.length - w).map(i =>
           (windowHashLocal(ws, i, w), Occ(id, i + 1)))

@@ -1,12 +1,13 @@
 package graft.tools
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
 /** ANN recall measurement (VERDICT r3 item 7): the IVF and RP-LSH paths are
   * oracle-exact on planted duplicates, but a user tunes `nprobe` and
   * `numPlanes` against recall — which was never measured. This tool reports,
-  * at 1x and Nx (the [[Scale]] replica corpus):
+  * at 1x and Nx (the [[scaledVecs]] replica corpus):
   *
   *  - IVF recall@10 vs [[Similarity.bruteForceTopK]] ground truth over a
   *    deterministic query sample (id % 50 == 0), per nprobe ∈ {1, 2, 4};
@@ -20,6 +21,31 @@ import graft.operators.Similarity
   * Usage: sbt "runMain graft.tools.Recall <sfDir> <factor>"
   */
 object Recall {
+
+  /** Nx embeddings: replica 0 is the original; replicas k>0 sign-flip
+    * each component on a (k, i)-keyed pattern — cosine between replicas
+    * of the same base vector drops to ~0, so cross-replica pairs don't
+    * pollute the near-dup counts. Planting (%13, x*1.05+0.001) applies
+    * over the scaled corpus.
+    */
+  private def scaledVecs(spark: SparkSession, sfDir: String,
+                         n: Int): DataFrame = {
+    val base = graft.Tables.embeddings(spark, sfDir)
+      .select(col("vec_id").as("id"),
+        Similarity.toDoubleVec(col("embedding")).as("v"))
+    val scaled = (0 until n).map { k =>
+      val v =
+        if (k == 0) col("v")
+        else expr(
+          s"transform(v, (x, i) -> x * CASE WHEN sin(1e4 * ($k * 64 + i + 1)) >= 0 THEN 1D ELSE -1D END)")
+      base.select((col("id") + lit(k * 1000000L)).as("id"), v.as("v"))
+    }.reduce(_ unionByName _)
+    val planted = scaled.filter(col("id") % 13 === 0)
+      .select((col("id") + 100000000L).as("id"),
+        expr("transform(v, x -> x * 1.05 + 0.001)").as("v"))
+    scaled.unionByName(planted)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val factor = if (args.length > 1) args(1).toInt else 10
@@ -39,7 +65,7 @@ object Recall {
       import graft.pipeline.{Maintain, Restore}
       val wh = java.nio.file.Files
         .createTempDirectory("graft_drift_wh").toString
-      val base = Scale.scaledVecs(spark, sfDir, 1)
+      val base = scaledVecs(spark, sfDir, 1)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       Restore.publishVersionedDir(spark, wh, "ivfidx", "0") { vdir =>
         Similarity.writeIvfIndex(base, Similarity.buildIvf(base, iters = 1),
@@ -48,7 +74,7 @@ object Recall {
       def curDir = Restore.resolveVersioned(spark, wh, "ivfidx").get.toString
       // the drifted corpus: replicas 1..factor−1 (sign-flip patterns —
       // near-zero cosine to anything replica 0's centroids learned)
-      val batch = Scale.scaledVecs(spark, sfDir, factor)
+      val batch = scaledVecs(spark, sfDir, factor)
         .filter(col("id") >= 1000000L && col("id") < 100000000L)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       Maintain.appendIvfRecorded(spark, curDir, batch, "b1")
@@ -95,7 +121,7 @@ object Recall {
       val wh = java.nio.file.Files
         .createTempDirectory("graft_pqdrift_wh").toString
       val (m, subDim, numCodes) = (8, 8, 16)
-      val base = Scale.scaledVecs(spark, sfDir, 1)
+      val base = scaledVecs(spark, sfDir, 1)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       Restore.publishVersionedDir(spark, wh, "pqidx", "0") { vdir =>
         Similarity.writeIvfPqIndex(base,
@@ -106,7 +132,7 @@ object Recall {
       def curDir = Restore.resolveVersioned(spark, wh, "pqidx").get.toString
       println(s"MAINTAIN pq base stats: " +
         s"${Similarity.readPqStats(spark, curDir)}")
-      val batch = Scale.scaledVecs(spark, sfDir, factor)
+      val batch = scaledVecs(spark, sfDir, factor)
         .filter(col("id") >= 1000000L && col("id") < 100000000L)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       Maintain.appendIvfPqRecorded(spark, curDir, batch, "b1")
@@ -169,7 +195,7 @@ object Recall {
             "CASE WHEN d = CAST(id % 64 AS INT) THEN 5.0 ELSE 0.0 END + " +
             "CAST(hash(id, d) AS DOUBLE) / 4.294967296E9 * 0.5)").as("v"))
       val corpora = Seq(
-        "uniform" -> ((n: Int) => Scale.scaledVecs(spark, sfDir, n)),
+        "uniform" -> ((n: Int) => scaledVecs(spark, sfDir, n)),
         "clustered" -> ((n: Int) => clustered(2154L * n)))
       val (m, subDim, numCodes) = (8, 8, 16)
       for ((tag, mk) <- corpora; n <- Seq(1, factor)) {
@@ -273,7 +299,7 @@ object Recall {
             "CASE WHEN d = CAST(id % 64 AS INT) THEN 5.0 ELSE 0.0 END + " +
             "CAST(hash(id, d) AS DOUBLE) / 4.294967296E9 * 0.5)").as("v"))
       val corpora = Seq(
-        "uniform" -> ((n: Int) => Scale.scaledVecs(spark, sfDir, n)),
+        "uniform" -> ((n: Int) => scaledVecs(spark, sfDir, n)),
         "clustered" -> ((n: Int) => clustered(2154L * n)))
       for ((tag, mk) <- corpora; n <- Seq(1, factor)) {
         val v = mk(n)
@@ -399,7 +425,7 @@ object Recall {
     }
 
     for (n <- Seq(1, factor)) {
-      val v = Scale.scaledVecs(spark, sfDir, n)
+      val v = scaledVecs(spark, sfDir, n)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val queries = v.filter(col("id") % 50 === 0)
 

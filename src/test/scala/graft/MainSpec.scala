@@ -79,6 +79,17 @@ class MainSpec extends SparkSpec {
     assert(runCli("ls")._1 == 2) // no source binding → required-args rc
   }
 
+  test("ls: a local zip modified 5 min in the future is listed, not " +
+    "held back as in-flight") {
+    // local files are complete by definition: the cloud in-flight guard
+    // (|now − mtime| < 15 min skipped) must not drop a skewed-clock mtime
+    val dir = Files.createTempDirectory("graft_cli_ls_future")
+    writeZip(dir, "OCG_KE1_NBO-Mon.zip", "a.csv", csvBody,
+      System.currentTimeMillis() + 5 * 60 * 1000L)
+    val (rc, lines) = runCli("ls", "-dir", dir.toString)
+    assert(rc == 0 && lines == Seq("OCG_KE1_NBO-Mon.zip"))
+  }
+
   test("restore -n then real: dry run reports and mutates nothing; " +
       "real run publishes, GCs, honors -no-clean semantics") {
     val dir = Files.createTempDirectory("graft_cli_restore")

@@ -110,6 +110,12 @@ class NearDupStreamSpec extends SparkSpec {
     assert(local.size == 12) // 3 docs × 4 bands
   }
 
+  test("MinHashStream: a null text has no band keys, as in the batch path") {
+    // the batch normalizeWords maps a null text to no words, hence no
+    // shingles and no bands; the stream side shares Dedup's local form
+    assert(graft.streaming.MinHashStream.bandKeysFor(null, 4, 3).isEmpty)
+  }
+
   test("MinHash stream gate: verdicts consistent with batch " +
       "minhashNearDupPairs on the same vectors, across batches") {
     import graft.streaming.MinHashStream
