@@ -24,36 +24,28 @@ object Journeys {
     * funnel broke — plus `steps_reached`). Only funnel ENTRANTS (users
     * with a step-0 event) appear; per-user rows are unique.
     *
-    * DEFAULT = the one-pass form ([[funnelStepsOnePass]]): events is read
-    * once and each user's step-typed events fold greedily in time order —
-    * measured 2.5× faster than the k-pass form at 1× AND 10× (SCALE.md
-    * round-10 row pair), and at 100 TB one scan vs k scans is the whole
-    * game. The k-pass form (one filtered min-aggregate per step, joined
-    * back on the user) is q124's oracle SQL, which pins this chain
-    * hash-for-hash.
-    */
-  def funnelSteps(events: DataFrame, userCol: String, tsCol: String,
-                  typeCol: String, steps: Seq[String]): DataFrame =
-    funnelStepsOnePass(events, userCol, tsCol, typeCol, steps)
-
-  /** [[funnelSteps]] in ONE pass over events (bit-parity spec-pinned):
-    * collect each user's step-typed events, sort within the user, and
-    * greedily fold the earliest chain — when a step-k event arrives in
-    * time order, it matches iff step k−1 already matched strictly
-    * earlier and k is still open. The greedy earliest chain IS the
-    * k-pass chain (each pass takes the min time after the previous
-    * match; processing ascending times matches the same minima).
+    * ONE pass over events: collect each user's step-typed events, sort
+    * within the user, and greedily fold the earliest chain — when a
+    * step-k event arrives in time order, it matches iff step k−1 already
+    * matched strictly earlier and k is still open. The greedy earliest
+    * chain IS the k-pass chain (one filtered min-aggregate per step,
+    * joined back on the user: each pass takes the min time after the
+    * previous match, and processing ascending times matches the same
+    * minima). The k-pass form is q124's oracle SQL, which pins this chain
+    * hash-for-hash, and JourneysSpec checks it against a plain-Scala
+    * k-pass reference.
     *
     * Trade against the k-pass form: events is READ ONCE (at 100 TB the
-    * k-fold scan is the k-pass form's dominant cost) for one user-keyed
+    * k-fold scan is the k-pass form's dominant cost; measured 2.5×
+    * faster at 1× AND 10×, SCALE.md round-10 row pair) for one user-keyed
     * shuffle carrying each user's step-typed events; the fold state is
     * |steps| timestamps. The per-user collect is bounded by that user's
     * STEP-TYPE events — the type filter still pushes to the scan — so
     * skew only matters for users with pathological step-event counts
     * (the k-pass form shuffles the same rows, k times).
     */
-  def funnelStepsOnePass(events: DataFrame, userCol: String, tsCol: String,
-                         typeCol: String, steps: Seq[String]): DataFrame = {
+  def funnelSteps(events: DataFrame, userCol: String, tsCol: String,
+                  typeCol: String, steps: Seq[String]): DataFrame = {
     require(steps.nonEmpty, "funnelSteps: at least one step")
     require(steps.distinct.size == steps.size,
       "funnelSteps: repeated step types are ambiguous")

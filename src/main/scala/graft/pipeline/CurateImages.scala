@@ -14,9 +14,10 @@ import graft.operators.{Dedup, Multimodal}
   *  1. `decode` — payloads whose DCT pHash is the −1 marker (undecodable
   *     bytes or a pixel-bomb claim over `maxPixels`) drop with reason
   *     "undecodable". Batch curation REJECTS what it cannot read —
-  *     unlike the streaming gate (`PhashStream.gate`), which admits
-  *     markers because an ingest gate must not silently discard; the
-  *     divergence is deliberate and spec-pinned.
+  *     unlike the streaming gate (`PhashStream.gate`), where a marker
+  *     routes to no band key and `BandGate` admits a keyless item,
+  *     because an ingest gate must not silently discard; the divergence
+  *     is deliberate and spec-pinned.
   *  2. `exact_dedup` — byte-identical payloads collapse to the min-id
   *     representative (md5 of the raw bytes; reason "exact_dup",
   *     `dup_of` = keeper).

@@ -22,7 +22,7 @@ import graft.operators.{Dedup, TextStats}
   *  - near-dup: [[MinHashStream.bandVotes]] → `admittedAppend` — band-key
   *    sharded state with per-bucket caps, the q27 signature.
   *
-  * Chain semantics for near-dups follow MinHashStream (transitive chains
+  * Chain semantics for near-dups follow [[BandGate]] (transitive chains
   * collapse; `dup_of` is a parent pointer). Quality-rejected and
   * exact-dup docs never reach the near-dup state — the stream analog of
   * the batch funnel ordering.
@@ -331,16 +331,12 @@ object CurateStream {
         dup_of = t._4))
 
     // ---- MinHash near-dup gate over exact-dedup survivors --------------
-    val verdicts = MinHashStream.admittedAppend(
+    val verdicts = BandGate.ledger(MinHashStream.admittedAppend(
       MinHashStream.bandVotes(
         tagged.filter(_._3)
           .map(t => MinHashStream.Doc(t._2._1, t._2._2)),
-        cfg.bands, cfg.rowsPerBand, cfg.thresholdE4, cfg.maxPerBucket))
-      .map(v =>
-        if (v.is_dup) GateVerdict(v.id, admitted = false,
-          reason = "near_dup", dup_of = v.dup_of)
-        else GateVerdict(v.id, admitted = true, reason = "admitted",
-          dup_of = v.id))
+        cfg.bands, cfg.rowsPerBand, cfg.thresholdE4, cfg.maxPerBucket)),
+      "near_dup")
 
     val always = qualityRejects.unionByName(exactRejects)
       .unionByName(verdicts)

@@ -1,21 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** Streaming SEMANTIC near-dup gate — the unbounded-stream half of the
-  * batch SemDeDup stage (`Curation.semDedupVictims`): admit a document
-  * iff no remembered document's embedding is within `thresholdE4` cosine.
+  * batch SemDeDup stage (`Curation.semDedupVictims`), bound to
+  * [[BandGate]]: admit a document iff no remembered document's embedding
+  * is within `thresholdE4` cosine.
   *
-  * Candidate routing is RP-LSH over the deterministic
-  * [[graft.operators.Similarity.hyperplanes]] (16 sign bits), banded
-  * 4×4 exactly like [[NearDupStream]]: two signatures within Hamming 3
-  * share a band by pigeonhole, so each doc only meets the vectors
-  * remembered in its 4 band buckets — per-group state is a capped vector
-  * list sharded on the band key, never a global list. Within a bucket the
-  * EXACT cosine verifies (admission is never decided by the sketch
-  * alone). Chain semantics, `dup_of` parent pointers, and the
-  * smaller-id-wins replay rule all follow [[NearDupStream]] verbatim;
+  * Routing keys: RP-LSH over the deterministic
+  * [[graft.operators.Similarity.hyperplanes]] (16 sign bits), banded 4×4
+  * by [[NearDupStream.bandKeys]] — two signatures within Hamming 3 share
+  * a band by pigeonhole. The entry is the doc's vector and closeness is
+  * the EXACT cosine (admission is never decided by the sketch alone);
   * state per bucket is `maxPerBucket` × dim doubles — size `dim` and the
   * cap together (a 64-dim bucket of 1024 is ~0.5 MiB; band keys shard
   * across the store).
@@ -26,10 +22,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object EmbedDupStream {
 
-  case class Doc(id: Long, v: Seq[Double])
-  case class BandKey(band: Int, bits: Int)
-  case class BandState(docs: List[Doc])
-  case class Vote(id: Long, dupOf: Long, isDup: Boolean)
+  case class Doc(id: Long, v: Seq[Double]) extends BandGate.Item
 
   /** 16 sign bits of `v` against the deterministic hyperplanes — the
     * stream twin of [[graft.operators.Similarity.rpLshBucket]]'s bit
@@ -48,75 +41,27 @@ object EmbedDupStream {
     if (na == 0 || nb == 0) None else Some(dot / (na * nb))
   }
 
-  private def bandKeys(sig: Long): Seq[BandKey] =
-    (0 until NearDupStream.NumBands).map { b =>
-      BandKey(b, ((sig >> (b * NearDupStream.BandBits)) &
-        ((1 << NearDupStream.BandBits) - 1)).toInt)
-    }
-
   /** Per-band votes for a stream of (id, embedding): route on the sign
-    * signature, verify by exact cosine ≥ thresholdE4/10⁴ against the
-    * bucket's remembered vectors. Zero-norm vectors carry no semantic
-    * content and are always admitted clean (the batch stage's
-    * exclusion), without occupying state.
+    * signature, verify by exact cosine ≥ thresholdE4/10⁴. Zero-norm
+    * vectors carry no semantic content (the batch stage's exclusion):
+    * they are filtered out before the gate and get no verdict here —
+    * the caller admits them.
     */
   def bandVotes(docs: Dataset[Doc], dim: Int, thresholdE4: Long = 9500L,
-                maxPerBucket: Int = 1024)(
-      implicit dEnc: Encoder[(BandKey, Doc)], kEnc: Encoder[BandKey],
-      sEnc: Encoder[BandState], vEnc: Encoder[Vote]): Dataset[Vote] = {
+                maxPerBucket: Int = 1024): Dataset[BandGate.Vote] = {
     require(thresholdE4 >= 0 && thresholdE4 <= 10000)
     val planes = graft.operators.Similarity.hyperplanes(16, dim)
     val th = thresholdE4 / 10000.0
-    docs.flatMap { d =>
-      if (d.v.forall(_ == 0.0)) Seq.empty // zero-norm: no buckets, no state
-      else bandKeys(signBits16(d.v, planes)).map(k => (k, d))
-    }
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[BandState, Vote](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: BandKey, rows: Iterator[(BandKey, Doc)],
-         state: GroupState[BandState]) =>
-          var seen = state.getOption.map(_.docs).getOrElse(Nil)
-          val out = rows.map(_._2).toSeq.sortBy(_.id).map { d =>
-            seen.find(p => cosine(p.v, d.v).exists(_ >= th)) match {
-              case Some(prior) => Vote(d.id, prior.id, isDup = true)
-              case None =>
-                seen = (d :: seen).take(maxPerBucket)
-                Vote(d.id, d.id, isDup = false)
-            }
-          }
-          state.update(BandState(seen))
-          out.iterator
-      }
+    BandGate.votes(docs.filter(d => !d.v.forall(_ == 0.0)), maxPerBucket)(
+      d => (NearDupStream.bandKeys(signBits16(d.v, planes)), d))(
+      (p, d) => cosine(p.v, d.v).exists(_ >= th))
   }
 
-  /** Combine band votes (the [[NearDupStream.admittedAppend]] shape):
-    * one row per doc, admitted iff NO band verified a close prior;
-    * `dup_of` = smallest dup-voting parent. Append-mode stateful
-    * combiner keyed by doc id — every doc emits exactly
-    * `NearDupStream.NumBands` votes (zero-norm docs emit none and are
-    * admitted upstream), so the state clears as soon as all arrive.
-    */
-  def admittedAppend(votes: Dataset[Vote])(
-      implicit kEnc: Encoder[Long], sEnc: Encoder[(Int, Boolean, Long)],
-      oEnc: Encoder[(Long, Boolean, Long)]): Dataset[(Long, Boolean, Long)] =
-    votes.groupByKey(_.id)
-      .flatMapGroupsWithState[(Int, Boolean, Long), (Long, Boolean, Long)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (id: Long, rows: Iterator[Vote],
-         state: GroupState[(Int, Boolean, Long)]) =>
-          var (n, dup, parent) =
-            state.getOption.getOrElse((0, false, Long.MaxValue))
-          for (v <- rows) {
-            n += 1
-            if (v.isDup) { dup = true; parent = math.min(parent, v.dupOf) }
-          }
-          if (n >= NearDupStream.NumBands) {
-            state.remove()
-            Iterator((id, !dup, if (dup) parent else id))
-          } else {
-            state.update((n, dup, parent))
-            Iterator.empty
-          }
-      }
+  /** [[BandGate.admittedAppend]] as (id, admitted, dup_of) rows. */
+  def admittedAppend(
+      votes: Dataset[BandGate.Vote]): Dataset[(Long, Boolean, Long)] = {
+    val spark = votes.sparkSession
+    import spark.implicits._
+    BandGate.admittedAppend(votes).map(v => (v.id, !v.is_dup, v.dup_of))
+  }
 }

@@ -44,8 +44,8 @@ object StatefulDedup {
         (key: K, rows: Iterator[(K, V)], state: GroupState[SeenId]) =>
           var first = state.getOption.map(_.firstId)
           // min-id-first within a batch: parity with the batch form, which
-          // keeps the smallest id per content group (MinHashStream sorts
-          // its batches the same way)
+          // keeps the smallest id per content group (BandGate sorts
+          // its buckets the same way)
           val out = rows.toSeq.sortBy(r => idOf(r._2)).map { case (_, v) =>
             first match {
               case Some(f) => (key, v, false, f)

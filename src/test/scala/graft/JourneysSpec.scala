@@ -48,15 +48,10 @@ class JourneysSpec extends SparkSpec {
       Journeys.funnelSteps(events, "user_id", "ts", "event_type",
         Seq("view", "view"))
     }
-    intercept[IllegalArgumentException] {
-      Journeys.funnelStepsOnePass(events, "user_id", "ts", "event_type",
-        Seq("view", "view"))
-    }
   }
 
-  test("funnelStepsOnePass ≡ funnelSteps: fixture edges and a randomized " +
-      "event soup") {
-    // the fixture from the k-pass test: ties, broken funnels, pre-step
+  test("funnelSteps ≡ a plain-Scala k-pass reference: fixture and soup") {
+    // the fixture from the ordering test: ties, broken funnels, pre-step
     // events, non-entrants
     val fixture = Seq(
       (1L, ts("2024-01-01 10:00:00"), "view"),
@@ -68,18 +63,29 @@ class JourneysSpec extends SparkSpec {
       (3L, ts("2024-01-03 10:00:00"), "purchase"),
       (4L, ts("2024-01-04 10:00:00"), "view"),
       (5L, ts("2024-01-05 10:00:00"), "view"),
-      (5L, ts("2024-01-05 10:00:00"), "click")
-    ).toDF("user_id", "ts", "event_type")
+      (5L, ts("2024-01-05 10:00:00"), "click"))
     val steps = Seq("view", "click", "purchase")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("user_id", "t0", "t1", "t2", "steps_reached")
+    def rows(events: Seq[(Long, Timestamp, String)]) =
+      Journeys.funnelSteps(events.toDF("user_id", "ts", "event_type"),
+          "user_id", "ts", "event_type", steps)
+        .select("user_id", "t0", "t1", "t2", "steps_reached")
         .as[(Long, Option[Timestamp], Option[Timestamp], Option[Timestamp],
           Long)].collect().toSet
-    assert(
-      rows(Journeys.funnelStepsOnePass(fixture, "user_id", "ts",
-        "event_type", steps)) ==
-      rows(Journeys.funnelSteps(fixture, "user_id", "ts", "event_type",
-        steps)))
+    // k passes per user: step k's match is the earliest step-k event
+    // strictly after step k−1's match; only step-0 entrants appear
+    def kPass(events: Seq[(Long, Timestamp, String)]) =
+      events.groupBy(_._1).toSeq.flatMap { case (u, es) =>
+        val m = steps.indices.foldLeft(Vector.empty[Option[Timestamp]]) {
+          (acc, k) =>
+            val prev = acc.lastOption.flatten
+            acc :+ (if (k > 0 && prev.isEmpty) None
+              else es.collect { case (_, t, e)
+                  if e == steps(k) && prev.forall(t.after) => t }
+                .minByOption(_.getTime))
+        }
+        m.head.map(_ => (u, m(0), m(1), m(2), m.count(_.isDefined).toLong))
+      }.toSet
+    assert(rows(fixture) == kPass(fixture))
 
     // deterministic pseudo-random soup: 40 users × 30 events over 4 types
     // (one type OUTSIDE the funnel), second-granularity times with heavy
@@ -92,12 +98,8 @@ class JourneysSpec extends SparkSpec {
           ts(f"2024-02-01 10:00:${rnd.nextInt(40)}%02d"),
           types(rnd.nextInt(types.size)))
       }
-    }.toDF("user_id", "ts", "event_type")
-    assert(
-      rows(Journeys.funnelStepsOnePass(soup, "user_id", "ts",
-        "event_type", steps)) ==
-      rows(Journeys.funnelSteps(soup, "user_id", "ts", "event_type",
-        steps)))
+    }
+    assert(rows(soup) == kPass(soup))
   }
 
   test("cohortRetention: week-0 full, later periods counted per cohort") {

@@ -87,6 +87,31 @@ class NearDupStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("maxPerBucket caps each bucket: an evicted prior no longer matches") {
+    def verdicts(cap: Int, name: String): Map[Long, (Boolean, Long)] = {
+      val input = MemoryStream[Doc](spark)
+      val q = NearDupStream.admittedAppend(NearDupStream.bandVotes(
+          input.toDS(), maxHamming = 3, maxPerBucket = cap))
+        .writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append()).start()
+      try {
+        input.addData(Doc(1L, 0x0000L))
+        q.processAllAvailable()
+        input.addData(Doc(2L, 0x00ffL)) // 8 bits from doc 1: admitted, and
+        q.processAllAvailable()         // at cap 1 evicts doc 1 from bands 2, 3
+        input.addData(Doc(3L, 0x0011L)) // 2 bits from doc 1, 6 from doc 2;
+        q.processAllAvailable()         // meets doc 1 only in bands 2, 3
+        spark.table(name)
+          .select("id", "is_dup", "dup_of").as[(Long, Boolean, Long)]
+          .collect().map(r => r._1 -> ((r._2, r._3))).toMap
+      } finally q.stop()
+    }
+    val capped = verdicts(1, "neardup_cap1")
+    assert(capped(2L) == ((false, 2L)))
+    assert(capped(3L) == ((false, 3L)), capped.toString)
+    assert(verdicts(1024, "neardup_cap_default")(3L) == ((true, 1L)))
+  }
+
   // ---- MinHash/LSH stream gate (the q27-grade signature) -----------------
 
   private val baseWords = (1 to 30).map(i => s"w$i").mkString(" ")
