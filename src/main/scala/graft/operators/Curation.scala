@@ -233,17 +233,12 @@ object Curation {
   }
 
   /** Word n-grams over a words-array column: `"a b c"`-style space-joined
-    * windows of `n` consecutive words; fewer than `n` words yields an empty
-    * array (not `[null]`).
+    * windows of `n` consecutive words; fewer than `n` words, or a null
+    * array, yields an empty array (not `[null]`). One native expression
+    * ([[graft.functions.WordNgrams]]).
     */
-  def wordNgrams(words: Column, n: Int): Column = {
-    require(n >= 1)
-    when(size(words) >= n,
-      transform(sequence(lit(1), size(words) - (n - 1)),
-        i => concat_ws(" ",
-          (0 until n).map(o => element_at(words, i + lit(o))): _*)))
-      .otherwise(array().cast("array<string>"))
-  }
+  def wordNgrams(words: Column, n: Int): Column =
+    graft.functions.WordNgrams(words, n)
 
   /** The C4 cleaning heuristics (Raffel et al. 2020 §2.2) — the ingest-
     * time line/page rules every public crawl pipeline applies before the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -22,17 +22,19 @@ import org.apache.spark.storage.StorageLevel
   */
 object Dedup {
 
-  /** lower, strip non-alphanumerics, split; drop empty tokens. */
+  /** lower, strip non-alphanumerics, split; drop empty tokens: the
+    * `[a-z0-9]` runs of Spark's `lower(text)` ([[graft.functions
+    * .NormalizeWords]]; null text gives null).
+    */
   def normalizeWords(text: Column): Column =
-    filter(split(trim(regexp_replace(lower(text), "[^a-z0-9]+", " ")), " "),
-      x => x =!= "")
+    graft.functions.NormalizeWords(lower(text))
 
-  /** Plain-JVM replica of [[normalizeWords]] for the executor-side /
+  /** Plain-JVM form of [[normalizeWords]] for the executor-side /
     * driver-side code paths that cannot use a Column (the streaming
-    * decontamination gate's broadcast-set membership test and its gram
-    * build). Lowercases with `Locale.ROOT` so the SAME helper produces
+    * gates). Lowercases with `Locale.ROOT` so the SAME helper produces
     * the SAME tokens on every JVM regardless of default locale — both
-    * sides of a gate built on this are self-consistent by construction.
+    * sides of a gate built on this are self-consistent by construction
+    * — then takes the runs with the batch kernel's own body.
     * Parity with the Spark expression ([[normalizeWords]]'s `lower()`):
     * identical wherever the lowercase mapping is locale-invariant —
     * all ASCII and almost all of Unicode; the known exceptions are the
@@ -42,30 +44,17 @@ object Dedup {
     * spec-pinned batch-equivalence claim).
     */
   def normalizeWordsLocal(text: String): Array[String] =
-    (if (text == null) "" else text)
-      .toLowerCase(java.util.Locale.ROOT)
-      .replaceAll("[^a-z0-9]+", " ").trim.split(" ")
-      .filter(_.nonEmpty)
+    graft.functions.NormalizeWords.runs(lowerLocal(text)).map(_.toString)
+
+  /** The stream side's lowercasing: `Locale.ROOT`, null as empty text. */
+  def lowerLocal(text: String): org.apache.spark.unsafe.types.UTF8String =
+    org.apache.spark.unsafe.types.UTF8String.fromString(
+      if (text == null) "" else text.toLowerCase(java.util.Locale.ROOT))
 
   /** k-word shingles (k fixed at 3 — the common near-dup choice). The
-    * n=3 case of [[Curation.wordNgrams]] — one windowing implementation
-    * to keep the empty-array-not-[null] subtlety in one place.
+    * n=3 case of [[Curation.wordNgrams]].
     */
   def shingles3(words: Column): Column = Curation.wordNgrams(words, 3)
-
-  /** Hash-once MinHash base: ONE md5 per shingle, reduced to a value in
-    * [0, [[MinhashP]]) by taking the first 8 hex chars as a 32-bit integer.
-    * The k signature functions then derive from this value by affine
-    * permutations `(a_h·v + b_h) mod p` — integer arithmetic instead of k
-    * salted md5 passes (the salted form cost `numHashes` md5 evaluations
-    * per shingle; at 12 hashes that was ~12× the hashing work, measured
-    * ~11.5 s → ~1 s for the signature stage at sf0.1). Spark's
-    * `conv(hex,16,10)` and DuckDB's `('0x'||hex)::BIGINT` parse the same 8
-    * chars to the same value, so the oracle stays bit-identical.
-    */
-  def shingleHashes(sh: Column): Column =
-    transform(sh, x =>
-      conv(substring(md5(x), 1, 8), 16, 10).cast("long") % lit(MinhashP))
 
   /** Affine-permutation modulus: the Mersenne prime 2³¹−1. Base values are
     * reduced mod p BEFORE the permutation, so `a·v + b ≤ 2²⁹·2³¹ + 2³¹ < 2⁶³`
@@ -84,62 +73,31 @@ object Dedup {
   /** Permutation offset for hash `h`, in [0, p). */
   def minhashB(h: Int): Long = (69069L * (h + 7)) % MinhashP
 
-  /** MinHash signature for hash `h` over a base-hash array (from
-    * [[shingleHashes]]): min of the affine permutation, folded with
-    * `aggregate` so no intermediate permuted array is materialized. The
-    * init value p is one more than the largest possible element, so an
-    * empty array yields p (callers filter empty shingle sets out first).
-    */
-  def minhashSig(hv: Column, h: Int): Column =
-    aggregate(hv, lit(MinhashP),
-      (acc, v) => least(acc, (lit(minhashA(h)) * v + lit(minhashB(h))) % lit(MinhashP)))
-
   /** (id, sh) shingle table — the materialization point of the LSH
     * pipeline. Widened before the per-row-heavy normalize/shingle work so a
     * one-row-group parquet input doesn't serialize onto one core.
     *
-    * The words array is projected as its OWN attribute before shingling:
-    * `shingles3` references its input at three offsets inside a `transform`
-    * lambda, and handing it the raw normalizeWords expression would embed
-    * (and re-evaluate) the regex+split pipeline per element — O(len·3)
-    * per row instead of O(1). Multi-referenced non-cheap aliases survive
-    * CollapseProject, so the two-step projection keeps one eval per row.
-    *
     * NOTE: no `size(sh) > 0` filter here — a filter over the computed array
-    * gets pushed below the exchange with the alias substituted, collapsing
-    * the whole pipeline into one mega-expression that re-evaluates the words
-    * array PER SHINGLE ELEMENT (measured 50× slowdown). Callers filter after
-    * the persist barrier instead.
+    * gets pushed below the exchange with the alias substituted, so the
+    * whole normalize/shingle pipeline would run a second time per row
+    * inside the filter. Callers filter after the persist barrier instead.
     */
   def shingleSets(df: DataFrame, idCol: String, textCol: String): DataFrame =
     graft.core.Ops.widen(df)
-      .select(col(idCol), normalizeWords(col(textCol)).as("w"))
-      .select(col(idCol), shingles3(col("w")).as("sh"))
+      .select(col(idCol), shingles3(normalizeWords(col(textCol))).as("sh"))
 
   /** LSH banding over a shingle table: compact rows (id, band, bandHash) —
-    * one row per band. numHashes = bands * rowsPerBand.
-    *
-    * The base-hash array is projected as its OWN attribute before the
-    * signature map: all `numHashes` signatures reference it, and a
-    * multi-referenced non-cheap alias survives CollapseProject, so the md5
-    * pass runs once per row (the `shingleSets` discipline). The band key is
-    * the plain `'|'`-joined signature triple — equality on it is equality
-    * on the triple; hashing it again (the old md5(concat) form) bought
-    * nothing but another digest pass.
+    * one row per band, numHashes = bands * rowsPerBand. The band key is
+    * the plain `'|'`-joined signature tuple ([[graft.functions
+    * .MinhashBands]]: one md5 per shingle, then the affine permutations) —
+    * equality on it is equality on the tuple.
     */
   def lshBands(shingled: DataFrame, idCol: String,
-               bands: Int = 4, rowsPerBand: Int = 3): DataFrame = {
-    val sigs = (0 until bands * rowsPerBand).map(h => minhashSig(col("hv"), h))
-    val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws("|", sigs.slice(b * rowsPerBand, (b + 1) * rowsPerBand): _*)
-          .as("bh"))
-    }
+               bands: Int = 4, rowsPerBand: Int = 3): DataFrame =
     shingled
-      .select(col(idCol), shingleHashes(col("sh")).as("hv"))
-      .select(col(idCol), explode(array(bandStructs: _*)).as("bb"))
-      .select(col(idCol), col("bb.band").as("band"), col("bb.bh").as("bh"))
-  }
+      .select(col(idCol), posexplode(
+        graft.functions.MinhashBands(col("sh"), bands, rowsPerBand)))
+      .select(col(idCol), col("pos").as("band"), col("col").as("bh"))
 
   /** Near-dup candidate pairs via the LSH bucket join, verified with exact
     * Jaccard over distinct 3-shingle sets. Returns (idA, idB, jacc_e4) with
@@ -338,11 +296,13 @@ object Dedup {
     * neighbors; converges in graph-diameter rounds (near-dup components
     * are shallow — duplicates of duplicates — so a handful of rounds).
     *
-    * Scale shape: each round is one equi-join (edges ⋈ labels on node id)
-    * plus a min-aggregate — all distributed; the driver only counts changed
-    * labels per round (one scalar). Labels are checkpointed per round —
+    * Scale shape: round one is one min-aggregate over the edges; each
+    * later round is one equi-join (edges ⋈ labels on node id) plus a
+    * min-aggregate — all distributed; the driver only reads the round's
+    * changed-label count (one scalar, observed on the checkpoint job
+    * itself). Labels are checkpointed per round —
     * NOT merely persisted: each round references the previous labels twice
-    * (the update join and the changed-count join), so without lineage
+    * (the update join and the left-outer label join), so without lineage
     * TRUNCATION the logical plan doubles per iteration and the driver OOMs
     * building plans near diameter ~24 (measured; a persist caches data but
     * keeps the full plan). `checkpointDir` selects the truncation flavor:
@@ -371,29 +331,47 @@ object Dedup {
     checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
     def truncated(df: DataFrame): DataFrame = // eager: materializes AND truncates
       if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
-    val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
-      .unionByName(pairs.select(col(idB).as("src"), col(idA).as("dst")))
+    // both directions from ONE scan of the pairs: a union of two selects
+    // would run the whole (lazy) pair pipeline once per branch
+    val edges = pairs
+      .select(explode(array(
+        struct(col(idA).as("src"), col(idB).as("dst")),
+        struct(col(idB).as("src"), col(idA).as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = truncated(edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")))
+    var labels: DataFrame = null
     var iters = 0
     var converged = false
     while (!converged && iters < maxIters) {
       // (convergence checked below; exhausting maxIters without it throws —
       // truncated labels would silently split one real component in two)
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("label")), Seq("dst"))
-        .groupBy(col("src").as("id"))
-        .agg(min(col("label")).as("nlabel"))
-      // the round's frame carries the previous label, so the change
-      // count scans the checkpoint instead of joining the old labels
-      val updated = truncated(labels
-        .join(nbrMin, Seq("id"), "left_outer")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nlabel"), col("label")))
-            .as("label"),
-          col("label").as("prev")))
-      val changed = updated.filter(col("label") < col("prev")).count()
+      // Each round's frame carries the previous label. Round one starts
+      // from every node labelled with its own id, so it is seeded directly
+      // from the edges (every node is a src): least of the id and its
+      // neighbours' ids.
+      val round =
+        if (labels == null)
+          edges.groupBy(col("src").as("id"))
+            .agg(min(col("dst")).as("nlabel"))
+            .select(col("id"), least(col("id"), col("nlabel")).as("label"),
+              col("id").as("prev"))
+        else {
+          val nbrMin = edges
+            .join(labels.select(col("id").as("dst"), col("label")), Seq("dst"))
+            .groupBy(col("src").as("id"))
+            .agg(min(col("label")).as("nlabel"))
+          labels
+            .join(nbrMin, Seq("id"), "left_outer")
+            .select(col("id"),
+              least(col("label"), coalesce(col("nlabel"), col("label")))
+                .as("label"),
+              col("label").as("prev"))
+        }
+      // the changed-label count rides on the checkpoint's own job
+      val changedObs = new Observation()
+      val updated = truncated(round.observe(changedObs,
+        count(when(col("label") < col("prev"), lit(1))).as("changed")))
+      val changed = changedObs.get("changed").asInstanceOf[Long]
       // (no unpersist: localCheckpoint blocks aren't CacheManager entries;
       // the ContextCleaner reclaims each round's as its RDD drops out of
       // reference — the standard iterative pattern)

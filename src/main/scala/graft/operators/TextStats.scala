@@ -20,11 +20,11 @@ object TextStats {
     "beta" -> Seq("join", "merge", "window", "batch"),
     "gamma" -> Seq("stream", "filter", "sort", "query"))
 
-  /** Count of tokens from `words` that appear in the marker set. */
-  private def markerHits(words: Column, markers: Seq[String]): Column = {
-    val set = array(markers.map(lit): _*)
-    size(filter(words, x => array_contains(set, x)))
-  }
+  /** Count of tokens from `words` that appear in the marker set
+    * ([[graft.functions.MarkerHits]]; null words give null).
+    */
+  private def markerHits(words: Column, markers: Seq[String]): Column =
+    graft.functions.MarkerHits(words, markers)
 
   /** Per-profile marker-hit count over a words array column. The legacy
     * single-arg form reads a column named `w` (probe shorthand).

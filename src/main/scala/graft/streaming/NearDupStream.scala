@@ -69,11 +69,11 @@ object NearDupStream {
   * bucket entry is the doc's distinct shingle-hash set, and closeness is
   * EXACT Jaccard ≥ `thresholdE4` ([[jaccE4]]), the batch verify step.
   * Word normalization, 3-shingles, the hash-once md5 base and the
-  * affine-permutation signatures (`Dedup.minhashA/minhashB/MinhashP`)
-  * replicate the batch column expressions in executor-side Scala — the
-  * spec pins band keys AND verdicts against the batch pipeline on shared
-  * vectors. Cardinality uses 31-bit hashes, so a distinct-string
-  * collision is theoretically visible but ~n²/2³¹-improbable. Docs with
+  * affine-permutation signatures run the batch kernels' own JVM bodies
+  * (`graft.functions`), after `Locale.ROOT` lowercasing — the spec pins
+  * band keys AND verdicts against the batch pipeline on shared vectors.
+  * Cardinality uses 31-bit hashes, so a distinct-string collision is
+  * theoretically visible but ~n²/2³¹-improbable. Docs with
   * NO shingles (< 3 normalized words) have no keys and always admit.
   */
 object MinHashStream {
@@ -84,42 +84,22 @@ object MinHashStream {
   type Vote = BandGate.Vote
   type Verdict = BandGate.Verdict
 
-  /** Executor-side replica of `Dedup.shingles3` (space-joined 3-windows). */
-  def shingles3Local(words: Array[String]): Array[String] =
-    if (words.length < 3) Array.empty
-    else Array.tabulate(words.length - 2)(i =>
-      words(i) + " " + words(i + 1) + " " + words(i + 2))
-
-  /** Executor-side replica of `Dedup.shingleHashes` for one shingle: first
-    * 8 hex chars of md5, mod p.
+  /** The doc's shingle base hashes through the batch kernels' own
+    * bodies: `Locale.ROOT` lowercasing, [[graft.functions.NormalizeWords]],
+    * 3-word [[graft.functions.WordNgrams]], one md5 per shingle
+    * ([[graft.functions.MinhashBands]]).
     */
-  def shingleHashLocal(s: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-    val hex8 = d.take(4).map(b => f"${b & 0xff}%02x").mkString
-    java.lang.Long.parseLong(hex8, 16) % graft.operators.Dedup.MinhashP
+  private def shingleHashes(text: String): Array[Long] = {
+    import graft.functions.{MinhashBands, NormalizeWords, WordNgrams}
+    MinhashBands.hashes(WordNgrams.ngrams(
+      NormalizeWords.words(graft.operators.Dedup.lowerLocal(text)), 3))
   }
-
-  /** Executor-side replica of `Dedup.minhashSig`. */
-  def minhashSigLocal(hv: Array[Long], h: Int): Long = {
-    val p = graft.operators.Dedup.MinhashP
-    val a = graft.operators.Dedup.minhashA(h)
-    val b = graft.operators.Dedup.minhashB(h)
-    hv.foldLeft(p)((acc, v) => math.min(acc, (a * v + b) % p))
-  }
-
-  private def shingleHashes(text: String): Array[Long] =
-    shingles3Local(graft.operators.Dedup.normalizeWordsLocal(text))
-      .map(shingleHashLocal)
 
   private def bandKeysOf(hv: Array[Long], bands: Int,
                          rowsPerBand: Int): Seq[BandKey] =
     if (hv.isEmpty) Seq.empty
-    else {
-      val sigs = (0 until bands * rowsPerBand).map(h => minhashSigLocal(hv, h))
-      (0 until bands).map(b => BandKey(b,
-        sigs.slice(b * rowsPerBand, (b + 1) * rowsPerBand).mkString("|")))
-    }
+    else graft.functions.MinhashBands.keys(hv, bands, rowsPerBand).toSeq
+      .zipWithIndex.map { case (k, b) => BandKey(b, k.toString) }
 
   /** The batch band keys for one doc's text (the parity spec's view). */
   def bandKeysFor(text: String, bands: Int, rowsPerBand: Int): Seq[BandKey] =

@@ -162,6 +162,35 @@ class ExtOperatorsSpec extends SparkSpec {
     assert(wrote > 0, s"no checkpoint files under $dir")
   }
 
+  test("connectedComponents: an empty edge set converges in one round") {
+    val none = Seq.empty[(Long, Long)].toDF("idA", "idB")
+    assert(Dedup.connectedComponents(none, maxIters = 1).count() == 0)
+    // self-loops only: round one changes no label, so it converges there
+    val loops = Seq((5L, 5L), (7L, 7L)).toDF("idA", "idB")
+    assert(Dedup.connectedComponents(loops, maxIters = 1)
+      .as[(Long, Long)].collect().toMap == Map(5L -> 5L, 7L -> 7L))
+  }
+
+  test("connectedComponents: a chain needing exactly maxIters rounds " +
+       "converges, one round fewer throws") {
+    // path 1-…-6: node 6 reaches label 1 in round 5, round 6 sees no change
+    val chain = (1L until 6L).map(i => (i, i + 1)).toDF("idA", "idB")
+    val labels = Dedup.connectedComponents(chain, maxIters = 6)
+      .as[(Long, Long)].collect().toMap
+    assert(labels == (1L to 6L).map(_ -> 1L).toMap)
+    intercept[IllegalStateException] {
+      Dedup.connectedComponents(chain, maxIters = 5)
+    }
+    // one pair: round one relabels node 2, round two confirms
+    val pair = Seq((1L, 2L)).toDF("idA", "idB")
+    intercept[IllegalStateException] {
+      Dedup.connectedComponents(pair, maxIters = 1)
+    }
+    assert(Dedup.connectedComponents(pair, maxIters = 2)
+      .as[(Long, Long)].collect().toMap == Map(1L -> 1L, 2L -> 1L))
+    spark.catalog.clearCache()
+  }
+
   test("packSequences: start-offset chunking per shard in id order") {
     import graft.operators.Curation
     // one shard: toks 100,100,100 with budget 256 → starts 0,100,200 →
